@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prod2vec_spark.sources.io import read_partials
+
 DEFAULT_DIM = 4096
 
 
@@ -155,16 +157,11 @@ def start_lang_score_stream(
 def read_lang_scores(spark, out_dir: str) -> DataFrame:
     """All committed per-batch label partitions; empty before the
     first commit, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [], "doc_id long, lang_pred string, lang_prob double"
-        )
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        read_partials(
+            spark,
+            out_dir,
+            "doc_id long, lang_pred string, lang_prob double",
+        )
         .drop("batch_id")
     )

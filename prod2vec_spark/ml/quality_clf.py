@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prod2vec_spark.sources.io import read_partials
+
 FEATURE_COLS = [
     "n_tokens",
     "avg_token_len",
@@ -153,16 +155,7 @@ def start_quality_score_stream(
 def read_quality_scores(spark, out_dir: str) -> DataFrame:
     """All committed per-batch score partitions; empty before the
     first commit, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [], "doc_id long, quality_prob double"
-        )
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        read_partials(spark, out_dir, "doc_id long, quality_prob double")
         .drop("batch_id")
     )

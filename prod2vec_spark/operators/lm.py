@@ -43,6 +43,7 @@ from prod2vec_spark.functions.arrays import bind
 from prod2vec_spark.functions.hashing import hash_unit
 from prod2vec_spark.functions.lineage import break_lineage as _break_lineage
 from prod2vec_spark.operators.text import tokens
+from prod2vec_spark.sources.io import read_partials
 
 DEFAULT_ALPHA = 0.4
 
@@ -300,19 +301,13 @@ def start_lm_score_stream(
 def read_lm_scores(spark, out_dir: str) -> DataFrame:
     """All committed per-batch score partitions as one frame.  Before
     the first commit: empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_pairs long, n_backoff long, "
-            "avg_nll double, ppl double",
-        )
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        read_partials(
+            spark,
+            out_dir,
+            "doc_id long, n_pairs long, n_backoff long, avg_nll double, "
+            "ppl double",
+        )
         .drop("batch_id")
     )
 
@@ -348,19 +343,13 @@ def start_kn_score_stream(
 def read_kn_scores(spark, out_dir: str) -> DataFrame:
     """All committed per-batch KN score partitions as one frame.
     Before the first commit: empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_pairs long, n_unseen long, "
-            "avg_nll double, ppl double",
-        )
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        read_partials(
+            spark,
+            out_dir,
+            "doc_id long, n_pairs long, n_unseen long, avg_nll double, "
+            "ppl double",
+        )
         .drop("batch_id")
     )
 
@@ -1526,19 +1515,13 @@ def start_kn3_score_stream(
 def read_kn3_scores(spark, out_dir: str) -> DataFrame:
     """All committed per-batch trigram-KN score partitions as one
     frame.  Before the first commit: empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
+    return (
+        read_partials(
+            spark,
+            out_dir,
             "doc_id long, n_triples long, n_bo1 long, n_bo2 long, "
             "avg_nll double, ppl double",
         )
-    return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
         .drop("batch_id")
     )
 
@@ -2016,18 +1999,12 @@ def start_knn_score_stream(
 def read_knn_scores(spark, out_dir: str) -> DataFrame:
     """All committed per-batch order-n KN score partitions as one
     frame.  Before the first commit: empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_grams long, n_bo long, "
-            "avg_nll double, ppl double",
-        )
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        read_partials(
+            spark,
+            out_dir,
+            "doc_id long, n_grams long, n_bo long, avg_nll double, "
+            "ppl double",
+        )
         .drop("batch_id")
     )

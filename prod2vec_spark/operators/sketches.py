@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from prod2vec_spark.functions.hashing import hex_prefix_long
+from prod2vec_spark.sources.io import read_partials
 
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
@@ -194,15 +195,8 @@ def read_cms(spark, out_dir: str, depth: int = CMS_DEPTH) -> DataFrame:
     """Merge the committed per-batch partials into the current sketch
     (counter-wise sum — the mergeability the unit test locks).  Before
     the first commit the sketch is empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame([], "depth int, bucket long, cnt long")
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        read_partials(spark, out_dir, "depth int, bucket long, cnt long")
         .groupBy("depth", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -304,15 +298,8 @@ def read_bottomk(spark, out_dir: str, k: int = BOTTOMK_K) -> DataFrame:
     """Merge committed per-batch partials into the current sketch
     (union + re-take, the exact merge law).  Empty before the first
     commit, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame([], "hkey string, v double")
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        read_partials(spark, out_dir, "hkey string, v double")
         .select("hkey", "v")
         .orderBy("hkey", "v")
         .limit(k)

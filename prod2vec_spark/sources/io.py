@@ -403,3 +403,27 @@ def compact_parquet(
     # partitioning, coalesce is a no-op and the write keeps them)
     df.coalesce(n_files).write.mode("overwrite").parquet(out_path)
     return n_files
+
+
+def has_partials(spark: SparkSession, dir_path: str) -> bool:
+    """True once ``dir_path`` holds a committed ``batch_id=N`` parquet
+    partial — the idempotent foreachBatch sink layout.  Lists through
+    the Hadoop FileSystem API, so ``file://``, ``s3a://`` and
+    ``hdfs://`` paths resolve like local ones."""
+    from prod2vec_spark.sources.artifacts import _fs_path
+
+    fs, hpath = _fs_path(spark, f"{dir_path}/batch_id=*/*.parquet")
+    return bool(fs.globStatus(hpath))
+
+
+def read_partials(spark: SparkSession, dir_path: str, schema) -> DataFrame:
+    """The union of the committed ``batch_id=N`` partials under
+    ``dir_path`` with their ``batch_id`` partition column.  Before the
+    first commit it is an empty frame of ``schema`` (DDL string or
+    StructType) plus ``batch_id`` — never a read error, and never a
+    directory created as a side effect."""
+    if has_partials(spark, dir_path):
+        return spark.read.option("basePath", dir_path).parquet(dir_path)
+    return spark.createDataFrame([], schema).withColumn(
+        "batch_id", F.lit(None).cast("long")
+    )

@@ -1,0 +1,143 @@
+"""The ONE streaming first-presenter gate behind the text, media and
+span dedup planes — every per-signature step a JVM expression, no
+Python state.
+
+The rule: each arriving row derives its signatures row-locally (LSH
+bands for text, perceptual-hash bands for media and spans); a
+signature is OWNED by the first row ever to present it — the minimum
+owner id within the earliest micro-batch that presented it — and
+ownership never changes, so a row colliding only with an earlier
+DROPPED row still drops.  Each plane folds ownership into keep/drop
+decisions with its own ``decide`` (text and media: kept iff it owns
+every signature it presented; spans: a verified foreign-claim count).
+
+The registry: one row per distinct signature — the key columns,
+``owner`` and one ``owner_<c>`` per ``carry`` column — stored as
+idempotent ``registry_dir/batch_id=N`` partials holding only the
+signatures first presented by batch N.  Decisions land the same way at
+``out_dir/batch_id=N``.  A batch reads the registry EXCLUDING its own
+batch id, so a replayed batch recomputes byte-identical partials
+(exactly-once under the foreachBatch recipe; the file-sink
+_spark_metadata log does not cover foreachBatch).  Rows that present
+no signature (too short to shingle, undecodable) get no decision row
+and are kept by the caller.
+
+Cost shape: per micro-batch one hash-agg over the signatures and one
+join against the committed registry — the right shape for
+availableNow drains with few large batches.  Reads go through the
+Hadoop FileSystem API, so ``file://``/``s3a://`` registries behave
+like local ones.
+"""
+
+from __future__ import annotations
+
+from typing import Callable, Sequence
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from prod2vec_spark.sources.artifacts import list_artifacts
+from prod2vec_spark.sources.io import has_partials, read_partials
+
+
+def start_first_presenter_gate(
+    stream: DataFrame,
+    signatures: Callable[[DataFrame], DataFrame],
+    key_cols: Sequence[str],
+    owner_col: str,
+    decide: Callable[[DataFrame], DataFrame],
+    registry_dir: str,
+    out_dir: str,
+    checkpoint: str,
+    carry: Sequence[str] = (),
+):
+    """Start the gate as an availableNow drain and return the query.
+
+    ``signatures(batch)`` maps a micro-batch to one row per presented
+    signature (``key_cols`` + ``owner_col`` + ``carry`` + whatever
+    ``decide`` reads); ``decide`` receives those rows joined with
+    their ``owner``/``owner_<c>`` columns and returns the batch's
+    decision rows.
+
+    Raises if ``checkpoint`` has committed batches but ``registry_dir``
+    holds no partial: resuming would silently re-own every signature
+    the lost registry held."""
+    keys = list(key_cols)
+    owned = ["owner"] + [f"owner_{c}" for c in carry]
+    spark = stream.sparkSession
+    if any(
+        n.isdigit() for n in list_artifacts(spark, f"{checkpoint}/commits")
+    ) and not has_partials(spark, registry_dir):
+        raise RuntimeError(
+            f"checkpoint {checkpoint} has committed batches but the "
+            f"registry {registry_dir} holds no batch_id=* partial; "
+            "restore the registry or start from a fresh checkpoint"
+        )
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # signatures feed two consumers (ownership agg + the decision
+        # fold): lazy lineage break so the derivation evaluates once
+        sigs = signatures(batch_df).localCheckpoint(eager=False)
+        batch_own = sigs.groupBy(*keys).agg(
+            F.min(owner_col).alias("_b_owner"),
+            *[F.min_by(c, owner_col).alias(f"_b_owner_{c}") for c in carry],
+        )
+        schema = T.StructType(
+            [sigs.schema[k] for k in keys]
+            + [
+                T.StructField(o, sigs.schema[c].dataType)
+                for o, c in zip(owned, [owner_col, *carry])
+            ]
+        )
+        old = (
+            read_partials(batch_df.sparkSession, registry_dir, schema)
+            .where(F.col("batch_id") != batch_id)
+            .select(*keys, *owned)
+        )
+        earlier = F.col("owner").isNotNull()
+        sig_owner = (
+            batch_own.join(old, keys, "left")
+            .select(
+                *keys,
+                *[
+                    F.when(earlier, F.col(o)).otherwise(F.col(f"_b_{o}")).alias(o)
+                    for o in owned
+                ],
+            )
+            .localCheckpoint(eager=False)  # read by decisions + new-sig legs
+        )
+        decide(sigs.join(sig_owner, keys)).write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}"
+        )
+        # register only FIRST-presented signatures: re-presented ones
+        # already have an earlier partial, and duplicate rows would
+        # grow the registry past its one-row-per-signature contract
+        sig_owner.join(old, keys, "left_anti").write.mode("overwrite").parquet(
+            f"{registry_dir}/batch_id={batch_id}"
+        )
+
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def owns_all(id_col: str) -> Callable[[DataFrame], DataFrame]:
+    """``decide`` for text and media: (id, keep) with keep = 1 iff the
+    row owns every signature it presented."""
+    return lambda rows: rows.groupBy(id_col).agg(
+        F.min((F.col("owner") == F.col(id_col)).cast("int")).alias("keep")
+    )
+
+
+def read_decisions(spark, out_dir: str, id_col: str = "doc_id") -> DataFrame:
+    """The accumulated (id, keep) decisions across all committed
+    batches — empty before the first commit, never a read error."""
+    return read_partials(spark, out_dir, f"{id_col} long, keep int").select(
+        id_col, "keep"
+    )
+

@@ -1,18 +1,19 @@
-"""Streaming media near-dedup (ENGINE scope): the media plane's
-first-presenter gate — the perceptual-hash counterpart of the text
-stream's MinHash/LSH gate (streaming/neardup.py), sharing its
-semantics, state shape, and sink recipe.
+"""Streaming media near-dedup (ENGINE scope): the media plane of the
+first-presenter gate (streaming/first_presenter.py) — the
+perceptual-hash counterpart of the text stream's MinHash/LSH gate
+(streaming/neardup.py), sharing its semantics, registry and sink
+recipe.
 
 Every arriving media row (mixed PNG/WAV/AVI blobs) computes its
 perceptual hash in the Arrow-batched decode pass
 (operators/phash.media_hashes — mapInPandas runs unchanged on a
 stream) and explodes the hash into the SAME ``bands`` disjoint
 (band, slice) signatures as the batch plane
-(operators/phash.band_structs).  A per-(modality, band, slice)
-GroupState records the first media id ever to present that
-signature; a row is KEPT iff it owns ALL of its bands.  Modality in
-the state key means an image hash can never collide with an audio
-hash — the batch plane's partition rule, held in state.
+(operators/phash.band_structs).  A (modality, band, slice) signature
+is owned by the first media id to present it; a row is KEPT iff it
+owns ALL of its bands.  Modality in the key means an image hash can
+never collide with an audio hash — the batch plane's partition rule,
+held in the registry.
 
 Conservatism contract (same as the text gate, documented not
 hidden): a band collision drops without the bit_count exact-verify
@@ -22,13 +23,9 @@ are pairwise disjoint — by pigeonhole, the kept set contains NO pair
 within Hamming distance < bands, so the batch
 ``media_neardup_pairs`` over the kept rows returns zero pairs.
 
-Undecodable blobs (NULL hash) present no bands, never touch the
-state store, and are trivially kept — the caller unions them back
-(the auditable-miss contract; the batch stage keeps them too).
-
-Scale notes: state is one long per distinct (modality, band, slice)
-signature, hash-distributed by the groupBy key; the decode runs once
-per arriving blob and only 16-byte signatures reach the shuffle.
+Undecodable blobs (NULL hash) present no bands, never reach the
+registry, and are trivially kept — the caller unions them back (the
+auditable-miss contract; the batch stage keeps them too).
 """
 
 from __future__ import annotations
@@ -37,24 +34,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.phash import band_structs, media_hashes
+from prod2vec_spark.streaming.first_presenter import (
+    owns_all,
+    start_first_presenter_gate,
+)
 
 BANDS = 4
 
 
-def streaming_media_band_owners(
+def media_signatures(
     media: DataFrame,
     id_col: str = "media_id",
     blob_col: str = "blob",
     bands: int = BANDS,
 ) -> DataFrame:
-    """(media_id, owner) per presented band signature: ``owner`` is
-    the first media row to have presented that (modality, band,
-    slice).  Stateful — applyInPandasWithState, state = one owner id
-    per signature."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    """(media_id, modality, band, slice): one row per band signature
+    of every decodable media row."""
     hashes = media_hashes(media, id_col=id_col, blob_col=blob_col)
-    sigs = (
+    return (
         hashes.where(F.col("mhash").isNotNull())
         .select(
             F.col(id_col).alias("media_id"),
@@ -69,61 +66,27 @@ def streaming_media_band_owners(
         )
     )
 
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
 
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-            state.remove()
-            return
-        ids = sorted({int(x) for pdf in pdfs for x in pdf["media_id"].tolist()})
-        if not ids:
-            return
-        owner = state.get[0] if state.exists else ids[0]
-        state.update((owner,))
-        yield pd.DataFrame({"media_id": ids, "owner": [owner] * len(ids)})
-
-    return sigs.groupBy("modality", "band", "slice").applyInPandasWithState(
-        update,
-        outputStructType="media_id long, owner long",
-        stateStructType="owner long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def start_media_near_dedup(owners: DataFrame, out_dir: str, checkpoint: str):
-    """Sink the ownership stream as per-row keep/drop decisions: a
-    row is kept iff it owns every band it presented.  All of a row's
-    band rows are emitted in the micro-batch that consumed it, so the
-    fold is a plain per-batch aggregate; foreachBatch overwrites
-    ``out_dir/batch_id=N`` so replays are idempotent-by-path (the
-    streaming/neardup.py recipe).  Returns the started availableNow
-    query."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decisions = batch_df.groupBy("media_id").agg(
-            F.min((F.col("owner") == F.col("media_id")).cast("int")).alias("keep")
-        )
-        decisions.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        owners.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_media_decisions(spark, out_dir: str) -> DataFrame:
-    """All committed keep/drop decisions; empty before the first
-    commit, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame([], "media_id long, keep int")
-    return (
-        spark.read.option("basePath", out_dir).parquet(out_dir).drop("batch_id")
+def start_media_near_dedup_registry(
+    media: DataFrame,
+    registry_dir: str,
+    out_dir: str,
+    checkpoint: str,
+    id_col: str = "media_id",
+    blob_col: str = "blob",
+    bands: int = BANDS,
+):
+    """Media first-presenter gate over a media stream: (media_id,
+    keep) decisions land at ``out_dir/batch_id=N`` (read them with
+    ``first_presenter.read_decisions(spark, out_dir, "media_id")``).
+    Returns the started availableNow query."""
+    return start_first_presenter_gate(
+        media,
+        lambda batch: media_signatures(batch, id_col, blob_col, bands),
+        ("modality", "band", "slice"),
+        "media_id",
+        owns_all("media_id"),
+        registry_dir,
+        out_dir,
+        checkpoint,
     )

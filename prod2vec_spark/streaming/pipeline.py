@@ -44,12 +44,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from prod2vec_spark.sources.io import read_partials
 from prod2vec_spark.streaming.events import (
     read_events_stream,
     streaming_dedup,
     streaming_sessions,
     write_stream_parquet,
 )
+from prod2vec_spark.streaming.first_presenter import read_decisions
 
 # schema of stage 1's parquet output (post read_events_stream: ts is a
 # real timestamp regardless of the landing layout) — stage 2 declares
@@ -330,10 +332,10 @@ class StreamingCorpusPipeline:
         decon-after-near-dedup ordering.
 
     Scale notes: digest state is one row per distinct content (the
-    same cardinality the batch digest shuffle carries); band-registry
-    state per streaming/neardup.py.  Unbounded deployments bound both
-    with TTLs (dropDuplicatesWithinWatermark / state_ttl_ms) at the
-    documented completeness cost."""
+    same cardinality the batch digest shuffle carries), bounded in
+    unbounded deployments by dropDuplicatesWithinWatermark at the
+    documented completeness cost; the band registry holds one row per
+    distinct band signature (streaming/first_presenter.py)."""
 
     def __init__(self, spark: SparkSession, cfg: StreamCorpusConfig):
         self.spark = spark
@@ -462,11 +464,6 @@ class StreamingCorpusPipeline:
         survivors = self._spread_stream(
             self.spark.readStream.schema(_EXACT_SCHEMA).parquet(src), src
         )
-        # round-17: the drain-style pipeline uses the REGISTRY variant
-        # of the first-presenter gate — identical keep/drop semantics
-        # (pytest-locked parity) with every per-signature step in JVM
-        # expressions; the GroupState variant stays the long-running
-        # many-small-batch deployment's shape (neardup.py docstrings)
         return start_near_dedup_registry(
             survivors,
             f"{self.cfg.work_dir}/band_registry",
@@ -691,18 +688,10 @@ class StreamingCorpusPipeline:
     def _decon_drop(self) -> DataFrame:
         """doc_ids the decontamination screen dropped, over the
         committed decision partials; empty before the first commit."""
-        import glob
-        import os
-
         from pyspark.sql import functions as F
 
-        out = self.cfg.decon_dir
-        os.makedirs(out, exist_ok=True)
-        if not glob.glob(os.path.join(out, "batch_id=*", "*.parquet")):
-            return self.spark.createDataFrame([], "doc_id long")
         return (
-            self.spark.read.option("basePath", out)
-            .parquet(out)
+            read_decisions(self.spark, self.cfg.decon_dir)
             .where(F.col("keep") == 0)
             .select("doc_id")
         )
@@ -752,21 +741,12 @@ class StreamingCorpusPipeline:
     def token_stats(self) -> "tuple[int, int]":
         """(n_docs, n_tokens) summed over the committed partials —
         0/0 before the first commit, never an error."""
-        import glob
-        import os
-
         from pyspark.sql import functions as F
 
-        out = self.cfg.tokenstats_dir
-        os.makedirs(out, exist_ok=True)
-        if not glob.glob(os.path.join(out, "batch_id=*", "*.parquet")):
-            return (0, 0)
+        schema = "n_docs long, n_tokens long"
         row = (
-            self.spark.read.option("basePath", out)
-            .parquet(out)
-            .agg(
-                F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t")
-            )
+            read_partials(self.spark, self.cfg.tokenstats_dir, schema)
+            .agg(F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t"))
             .first()
         )
         return (int(row["d"] or 0), int(row["t"] or 0))
@@ -775,18 +755,9 @@ class StreamingCorpusPipeline:
         """The LM gate's committed survivor rows (full _EXACT_SCHEMA
         columns) — the materialized output the near-dedup stage
         streams.  Empty typed frame before the first commit."""
-        import glob
-        import os
-
-        out = self.cfg.lmkept_dir
-        os.makedirs(out, exist_ok=True)
-        if not glob.glob(os.path.join(out, "batch_id=*", "*.parquet")):
-            return self.spark.createDataFrame([], _EXACT_SCHEMA)
-        return (
-            self.spark.read.option("basePath", out)
-            .parquet(out)
-            .drop("batch_id")
-        )
+        return read_partials(
+            self.spark, self.cfg.lmkept_dir, _EXACT_SCHEMA
+        ).drop("batch_id")
 
     def _segment_gate_drop(self, docs: DataFrame) -> DataFrame:
         """doc_ids whose fraction of boilerplate-estimated windows
@@ -825,8 +796,6 @@ class StreamingCorpusPipeline:
 
     def curated(self) -> DataFrame:
         from pyspark.sql import functions as F
-
-        from prod2vec_spark.streaming.neardup import read_decisions
 
         # base = the LM gate's materialized survivors when the gate is
         # on (near-dup decisions were computed over this same set —
@@ -876,7 +845,7 @@ class StreamingCorpusPipeline:
         survivors), and the stateful stages read their committed
         artifacts — the exact-dedup parquet (idempotent file-sink
         commits), the banded first-presenter decisions (idempotent
-        batch_id partitions, streaming/neardup.read_decisions), and
+        batch_id partitions, streaming/first_presenter.read_decisions), and
         the CMS partials behind the segment gate.
 
         Scale shape: id-only left-anti joins per boundary, probe side
@@ -901,8 +870,6 @@ class StreamingCorpusPipeline:
             gated = gated.join(F.broadcast(seg_drop), "doc_id", "left_anti")
             chain.append(("segment_gate", gated))
         if self.cfg.decon_gate:
-            from prod2vec_spark.streaming.neardup import read_decisions
-
             # near_dedup boundary = curated() WITHOUT the decon
             # subtraction; decon_gate then claims the final boundary
             neardup_kept = gated.join(

@@ -1,49 +1,38 @@
-"""Shared streaming span-gate implementation (ENGINE scope, round 15
-— VERDICT r14 ask #3): the ONE first-presenter gate behind the span
-triad's three streaming legs (video frames / image tiles / audio
-windows).
+"""Streaming span gate (ENGINE scope): the span plane of the
+first-presenter gate (streaming/first_presenter.py), behind the span
+triad's three streaming legs — video frames, image tiles, audio
+windows.  Each leg is a ``SpanPlane`` spec (unit hash function,
+composite id base, default min_shared); the signature derivation and
+the foreign-claim fold are written once, here.
 
-Rounds 12–13 shipped the three legs as near-identical modules
-(streaming/{video,image,audio}_span.py); round 14 then fixed a
-NameError in a shared expression that had drifted in exactly one of
-the three copies — the classic triplicate failure mode.  This module
-makes that class structurally impossible: the stateful ownership
-pass, the keep/drop sink and the decision reader are written ONCE,
-parameterized by a ``SpanPlane`` spec (unit hash function, composite
-id base, column names, default min_shared).  The three plane modules
-keep their public APIs as thin parameterizations, so every existing
-gate pytest runs unchanged.
-
-Semantics (unchanged from the per-plane modules; their docstrings
-carry the full conservatism rationale, which the image-tile module
-originated):
+Semantics:
 
 * every arriving blob decodes ONCE in the plane's Arrow-batched unit
   pass; each unit's 64-bit hash explodes into ``bands`` disjoint
   (band, slice) signatures — the batch plane's banding;
-* a per-(band, slice) GroupState records the FIRST composite unit id
-  (media·BASE + unit_idx) and its FULL hash (the verify side; min id
-  within a batch so single-batch ownership is deterministic);
+* a (band, slice) signature is owned by the FIRST composite unit id
+  (media·BASE + unit_idx; min id within a batch) and carries that
+  unit's FULL hash as ``owner_hash`` (the verify side);
 * a unit is foreign-claimed iff some signature of its is owned by a
-  DIFFERENT media's unit whose stored hash exact-verifies
+  DIFFERENT media's unit whose owner hash exact-verifies
   (bit_count(xor) ≤ max_distance) — claims are VERIFIED because span
   gates evaluate bands × many-units-per-media signatures, so
   unverified false collisions accumulate past any fixed min_shared
-  as state grows;
+  as the registry grows (measured on the tile plane: pure-noise
+  singletons dropped once it held ~5k signatures);
 * a media DROPS iff ≥ min_shared of its units are foreign-claimed —
   the streaming mirror of the batch plane's span_pairs min_shared
   cut; batch span_pairs over committed rows remains ground truth
   (the documented under-drop chain: a later media matching a KEPT
   media only through a hash-distant third presenter can survive);
-* undecodable blobs present no units, never touch the state store,
-  and are trivially kept — the caller unions them back (the
-  auditable-miss contract).
+* undecodable blobs present no units, never reach the registry, and
+  are trivially kept — the caller unions them back (the
+  auditable-miss contract).  Digital-silence audio windows are
+  skipped at the hash step, so the silence class presents nothing.
 
-Scale shape: state is two longs per distinct (band, slice) signature;
-only 16-byte signatures reach the shuffle; decode runs once per
-arriving blob; a degenerate half-constant signature holds ONE owner
-long no matter how many units present it (hot-bucket-proof by
-construction).
+Scale shape: the registry holds two longs per distinct (band, slice)
+signature; a degenerate half-constant signature holds ONE owner no
+matter how many units present it (hot-bucket-proof by construction).
 """
 
 from __future__ import annotations
@@ -54,7 +43,17 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prod2vec_spark.operators.phash import _composite_id, band_structs
+from prod2vec_spark.operators.phash import (
+    _FRAME_ID_BASE,
+    _TILE_ID_BASE,
+    _WIN_ID_BASE,
+    _composite_id,
+    audio_window_hashes,
+    band_structs,
+    frame_hashes,
+    image_tile_hashes,
+)
+from prod2vec_spark.streaming.first_presenter import start_first_presenter_gate
 
 DEFAULT_BANDS = 4
 
@@ -67,16 +66,22 @@ class SpanPlane:
     one row per decoded unit with ``idx_col`` (unit index within the
     media) and ``hash_col`` (the unit's 64-bit hash)."""
 
-    name: str  # "video" | "image" | "audio" (diagnostics only)
     hash_fn: Callable[..., DataFrame]
-    idx_col: str  # unit index column emitted by hash_fn
-    unit_col: str  # composite unit id column this gate emits
-    hash_col: str  # 64-bit unit hash column
-    id_base: int  # composite id = media_id * id_base + unit_idx
+    idx_col: str
+    hash_col: str
+    id_base: int  # composite unit id = media_id * id_base + unit_idx
     min_shared: int  # default drop threshold (units foreign-claimed)
 
 
-def streaming_band_owners(
+# video: AVI or animated-GIF frames sampled every ``every_ms``
+VIDEO_PLANE = SpanPlane(frame_hashes, "frame_idx", "fhash", _FRAME_ID_BASE, 2)
+# image: ``tile_px`` tiles at ``stride``
+IMAGE_PLANE = SpanPlane(image_tile_hashes, "tile_idx", "thash", _TILE_ID_BASE, 4)
+# audio: ``window_ms`` windows every ``hop_ms``
+AUDIO_PLANE = SpanPlane(audio_window_hashes, "win_idx", "whash", _WIN_ID_BASE, 2)
+
+
+def span_signatures(
     plane: SpanPlane,
     media: DataFrame,
     bands: int = DEFAULT_BANDS,
@@ -84,136 +89,69 @@ def streaming_band_owners(
     blob_col: str = "blob",
     **hash_kwargs,
 ) -> DataFrame:
-    """(media_id, <unit_col>, <hash_col>, owner, owner_hash) per
-    presented unit-band signature: ``owner`` is the composite unit id
-    of the first unit to have presented that (band, slice),
-    ``owner_hash`` its full 64-bit hash (the verify side).  Stateful —
-    applyInPandasWithState, state = (owner id, owner hash) per
-    signature."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    uh = plane.hash_fn(
-        media, id_col=id_col, blob_col=blob_col, **hash_kwargs
-    )
-    unit_col, hash_col = plane.unit_col, plane.hash_col
-    sigs = uh.select(
+    """(media_id, unit, hash, band, slice): one row per band signature
+    of every decoded unit; ``unit`` is the composite unit id."""
+    uh = plane.hash_fn(media, id_col=id_col, blob_col=blob_col, **hash_kwargs)
+    return uh.select(
         F.col(id_col).alias("media_id"),
-        _composite_id(id_col, F.col(plane.idx_col), plane.id_base).alias(
-            unit_col
-        ),
-        hash_col,
-        F.explode(F.array(*band_structs(F.col(hash_col), bands))).alias("bs"),
+        _composite_id(id_col, F.col(plane.idx_col), plane.id_base).alias("unit"),
+        F.col(plane.hash_col).alias("hash"),
+        F.explode(F.array(*band_structs(F.col(plane.hash_col), bands))).alias("bs"),
     ).select(
         "media_id",
-        unit_col,
-        hash_col,
+        "unit",
+        "hash",
         F.col("bs.band").alias("band"),
         F.col("bs.slice").alias("slice"),
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-            state.remove()
-            return
-        rows = [
-            (int(m), int(t), int(h))
-            for pdf in pdfs
-            for m, t, h in zip(
-                pdf["media_id"].tolist(),
-                pdf[unit_col].tolist(),
-                pdf[hash_col].tolist(),
-            )
-        ]
-        if not rows:
-            return
-        if state.exists:
-            owner, owner_hash = state.get
-        else:
-            # min composite id within the batch: lowest media id wins,
-            # so single-batch ownership is deterministic
-            _, owner, owner_hash = min(rows, key=lambda r: r[1])
-        state.update((owner, owner_hash))
-        yield pd.DataFrame(
-            {
-                "media_id": [m for m, _, _ in rows],
-                unit_col: [t for _, t, _ in rows],
-                hash_col: [h for _, _, h in rows],
-                "owner": [owner] * len(rows),
-                "owner_hash": [owner_hash] * len(rows),
-            }
-        )
-
-    return sigs.groupBy("band", "slice").applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"media_id long, {unit_col} long, {hash_col} long, "
-            "owner long, owner_hash long"
-        ),
-        stateStructType="owner long, owner_hash long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 def start_span_gate(
     plane: SpanPlane,
-    owners: DataFrame,
+    media: DataFrame,
+    registry_dir: str,
     out_dir: str,
     checkpoint: str,
     min_shared: "int | None" = None,
     max_distance: int = 3,
+    bands: int = DEFAULT_BANDS,
+    id_col: str = "media_id",
+    blob_col: str = "blob",
+    **hash_kwargs,
 ):
-    """Sink the ownership stream as per-media keep/drop decisions: a
-    media DROPS iff at least ``min_shared`` of its units are
-    foreign-claimed (a signature owned by another media's unit whose
-    stored hash exact-verifies within ``max_distance``).  All of a
-    media's signature rows are emitted in the micro-batch that
-    consumed it, so the fold is a plain per-batch aggregate;
-    foreachBatch overwrites ``out_dir/batch_id=N`` so replays are
-    idempotent-by-path (the streaming/media.py recipe)."""
+    """Span gate over a media stream: (media_id, keep) decisions land
+    at ``out_dir/batch_id=N`` — a media drops iff at least
+    ``min_shared`` (default: the plane's) of its units are
+    foreign-claimed.  ``hash_kwargs`` go to the plane's hash function.
+    Returns the started availableNow query."""
     ms = plane.min_shared if min_shared is None else min_shared
-    unit_col, hash_col, base = plane.unit_col, plane.hash_col, plane.id_base
+    base = plane.id_base
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def decide(rows: DataFrame) -> DataFrame:
         foreign_unit = (
             (F.expr(f"owner div {base}").cast("long") != F.col("media_id"))
             & (
-                F.bit_count(F.col(hash_col).bitwiseXOR(F.col("owner_hash")))
+                F.bit_count(F.col("hash").bitwiseXOR(F.col("owner_hash")))
                 <= F.lit(max_distance)
             )
         ).cast("int")
-        per_unit = batch_df.groupBy("media_id", unit_col).agg(
+        per_unit = rows.groupBy("media_id", "unit").agg(
             F.max(foreign_unit).alias("is_foreign")
         )
-        decisions = per_unit.groupBy("media_id").agg(
+        return per_unit.groupBy("media_id").agg(
             (F.sum("is_foreign") < F.lit(ms)).cast("int").alias("keep")
         )
-        decisions.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
 
-    return (
-        owners.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_span_decisions(spark, out_dir: str) -> DataFrame:
-    """All committed keep/drop decisions; empty before the first
-    commit, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame([], "media_id long, keep int")
-    return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
-        .drop("batch_id")
+    return start_first_presenter_gate(
+        media,
+        lambda batch: span_signatures(
+            plane, batch, bands, id_col, blob_col, **hash_kwargs
+        ),
+        ("band", "slice"),
+        "unit",
+        decide,
+        registry_dir,
+        out_dir,
+        checkpoint,
+        carry=("hash",),
     )

@@ -68,10 +68,14 @@ def pytest_collection_modifyitems(config, items):
     long e2e/replay/planted-family tests carry @pytest.mark.slow and
     are SKIPPED by default — the default `pytest tests/ -x -q` is the
     driver-budget suite.  SPARK_GRAFT_SLOW_TESTS=1 runs everything
-    (the full run is recorded per round in OPTIMIZATION_r*.md)."""
+    (the full run is recorded per round in OPTIMIZATION_r*.md), and a
+    ``-m`` expression naming ``slow`` (``pytest -m slow``) selects by
+    the marker instead of skipping."""
     import os
 
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
+        return
+    if "slow" in (config.getoption("markexpr") or ""):
         return
     skip = pytest.mark.skip(
         reason="slow suite (set SPARK_GRAFT_SLOW_TESTS=1 to run)"

@@ -1,5 +1,5 @@
-"""Streaming partial-audio gate (streaming/audio_span.py): the window
-plane's first-presenter contract checked against the batch span plane,
+"""Streaming partial-audio gate (streaming/span_gate.py, AUDIO_PLANE):
+the window plane's first-presenter contract checked against the batch span plane,
 plus idempotent restart and cross-batch ownership — the audio twin of
 test_streaming_image_span.py, completing the streaming leg of the
 span triad."""
@@ -17,11 +17,13 @@ from prod2vec_spark.operators.phash import (
     audio_span_pairs,
     audio_window_hashes,
 )
-from prod2vec_spark.streaming.audio_span import (
-    read_audio_span_decisions,
-    start_audio_span_gate,
-    streaming_audio_band_owners,
+from prod2vec_spark.streaming.first_presenter import read_decisions
+from prod2vec_spark.streaming.span_gate import (
+    AUDIO_PLANE,
+    span_signatures,
+    start_span_gate,
 )
+from tests.first_presenter_oracle import assert_gate_matches_oracle, span_keep
 
 import pytest
 
@@ -61,11 +63,12 @@ def _rows() -> list[tuple[int, bytearray]]:
 
 
 def _drain(spark, landing, out, ckpt):
+    """One availableNow drain; the registry sits next to ``out``."""
     stream = spark.readStream.schema("media_id long, blob binary").parquet(
         landing
     )
-    start_audio_span_gate(
-        streaming_audio_band_owners(stream, **KW), out, ckpt
+    start_span_gate(
+        AUDIO_PLANE, stream, f"{out}_registry", out, ckpt, **KW
     ).awaitTermination()
 
 
@@ -81,7 +84,7 @@ def test_audio_span_gate_invariants(spark, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     _drain(spark, landing, out, ckpt)
 
-    decisions = read_audio_span_decisions(spark, out).localCheckpoint()
+    decisions = read_decisions(spark, out, "media_id").localCheckpoint()
     windowed_ids = {
         r["media_id"]
         for r in audio_window_hashes(media, **KW).select("media_id").collect()
@@ -109,20 +112,22 @@ def test_audio_span_gate_restart_idempotent(spark, tmp_path):
     _drain(spark, landing, out, ckpt)
     first = {
         (r["media_id"], r["keep"])
-        for r in read_audio_span_decisions(spark, out).collect()
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     _drain(spark, landing, out, ckpt)  # no new input
     second = {
         (r["media_id"], r["keep"])
-        for r in read_audio_span_decisions(spark, out).collect()
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     assert first == second and first
 
 
 def test_audio_span_gate_cross_batch_ownership(spark, tmp_path):
     """A later batch's embed of an already-committed jingle drops:
-    signature state persists across drains (earliest batch wins) —
-    and the verify crosses the PCM→ADPCM boundary."""
+    the registry persists across drains (earliest batch wins), the
+    verify crosses the PCM→ADPCM boundary, and the registry and
+    decisions equal the sequential oracle's after the restart wave
+    and a no-input re-drain."""
     rows = _rows()
     landing = str(tmp_path / "landing")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -139,7 +144,27 @@ def test_audio_span_gate_cross_batch_ownership(spark, tmp_path):
 
     by_id = {
         r["media_id"]: r["keep"]
-        for r in read_audio_span_decisions(spark, out).collect()
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     assert by_id[0] == 1  # committed first presenter stays
     assert by_id[1] == 0  # later cross-codec embed drops
+
+    waves = [
+        span_signatures(
+            AUDIO_PLANE, spark.createDataFrame(w, "media_id long, blob binary"), **KW
+        )
+        for w in (rows[:1], rows[1:2])
+    ]
+
+    def check():
+        return assert_gate_matches_oracle(
+            spark, waves, ("band", "slice"), "unit", f"{out}_registry", out,
+            id_col="media_id", carry="hash",
+            keep=lambda rows, reg: span_keep(
+                rows, reg, AUDIO_PLANE.id_base, AUDIO_PLANE.min_shared
+            ),
+        )
+
+    assert check() == by_id
+    _drain(spark, landing, out, ckpt)  # no new input
+    assert check() == by_id

@@ -1,5 +1,5 @@
-"""Streaming partial-image gate (streaming/image_span.py): the tile
-plane's first-presenter contract checked against the batch span
+"""Streaming partial-image gate (streaming/span_gate.py, IMAGE_PLANE):
+the tile plane's first-presenter contract checked against the batch span
 plane, plus idempotent restart and cross-batch ownership — the
 image-span twin of test_streaming_media.py."""
 
@@ -10,11 +10,13 @@ from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.multimodal import encode_png_gray8
 from prod2vec_spark.operators.phash import image_span_pairs, image_tile_hashes
-from prod2vec_spark.streaming.image_span import (
-    read_image_span_decisions,
-    start_image_span_gate,
-    streaming_tile_band_owners,
+from prod2vec_spark.streaming.first_presenter import read_decisions
+from prod2vec_spark.streaming.span_gate import (
+    IMAGE_PLANE,
+    span_signatures,
+    start_span_gate,
 )
+from tests.first_presenter_oracle import assert_gate_matches_oracle, span_keep
 
 import pytest
 
@@ -53,11 +55,12 @@ def _rows() -> list[tuple[int, bytearray]]:
 
 
 def _drain(spark, landing, out, ckpt):
+    """One availableNow drain; the registry sits next to ``out``."""
     stream = spark.readStream.schema("media_id long, blob binary").parquet(
         landing
     )
-    start_image_span_gate(
-        streaming_tile_band_owners(stream, **KW), out, ckpt
+    start_span_gate(
+        IMAGE_PLANE, stream, f"{out}_registry", out, ckpt, **KW
     ).awaitTermination()
 
 
@@ -72,7 +75,7 @@ def test_image_span_gate_invariants(spark, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     _drain(spark, landing, out, ckpt)
 
-    decisions = read_image_span_decisions(spark, out).localCheckpoint()
+    decisions = read_decisions(spark, out, "media_id").localCheckpoint()
     tiled_ids = {
         r["media_id"]
         for r in image_tile_hashes(media, **KW).select("media_id").collect()
@@ -101,19 +104,21 @@ def test_image_span_gate_restart_idempotent(spark, tmp_path):
     _drain(spark, landing, out, ckpt)
     first = {
         (r["media_id"], r["keep"])
-        for r in read_image_span_decisions(spark, out).collect()
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     _drain(spark, landing, out, ckpt)  # no new input
     second = {
         (r["media_id"], r["keep"])
-        for r in read_image_span_decisions(spark, out).collect()
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     assert first == second and first
 
 
 def test_image_span_gate_cross_batch_ownership(spark, tmp_path):
     """A later batch's crop of an already-committed image drops:
-    signature state persists across drains (earliest batch wins)."""
+    the registry persists across drains (earliest batch wins) — and
+    the registry and decisions equal the sequential oracle's after
+    the restart wave and a no-input re-drain."""
     rows = _rows()
     landing = str(tmp_path / "landing")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -130,7 +135,27 @@ def test_image_span_gate_cross_batch_ownership(spark, tmp_path):
 
     by_id = {
         r["media_id"]: r["keep"]
-        for r in read_image_span_decisions(spark, out).collect()
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     assert by_id[0] == 1              # committed first presenter stays
     assert by_id[1] == 0 and by_id[2] == 0  # later crop/letterbox drop
+
+    waves = [
+        span_signatures(
+            IMAGE_PLANE, spark.createDataFrame(w, "media_id long, blob binary"), **KW
+        )
+        for w in (rows[:1], rows[1:3])
+    ]
+
+    def check():
+        return assert_gate_matches_oracle(
+            spark, waves, ("band", "slice"), "unit", f"{out}_registry", out,
+            id_col="media_id", carry="hash",
+            keep=lambda rows, reg: span_keep(
+                rows, reg, IMAGE_PLANE.id_base, IMAGE_PLANE.min_shared
+            ),
+        )
+
+    assert check() == by_id
+    _drain(spark, landing, out, ckpt)  # no new input
+    assert check() == by_id

@@ -16,11 +16,12 @@ from prod2vec_spark.operators.multimodal import (
     encode_png_gray8,
     encode_wav_pcm16,
 )
+from prod2vec_spark.streaming.first_presenter import read_decisions
 from prod2vec_spark.streaming.media import (
-    read_media_decisions,
-    start_media_near_dedup,
-    streaming_media_band_owners,
+    media_signatures,
+    start_media_near_dedup_registry,
 )
+from tests.first_presenter_oracle import assert_gate_matches_oracle
 
 import pytest
 
@@ -84,9 +85,10 @@ def _media_rows() -> list[tuple[int, bytearray]]:
 
 
 def _drain(spark, landing, out, ckpt):
+    """One availableNow drain; the registry sits next to ``out``."""
     stream = spark.readStream.schema("media_id long, blob binary").parquet(landing)
-    start_media_near_dedup(
-        streaming_media_band_owners(stream), out, ckpt
+    start_media_near_dedup_registry(
+        stream, f"{out}_registry", out, ckpt
     ).awaitTermination()
 
 
@@ -95,14 +97,14 @@ def test_media_first_presenter_gate_invariants(spark, tmp_path):
     the KEPT set yields ZERO batch near-dup pairs (pigeonhole: no
     shared band => no pair within distance < bands), each planted
     family keeps exactly its first presenter, and undecodable rows
-    never reach the state store."""
+    never reach the registry."""
     media = spark.createDataFrame(_media_rows(), "media_id long, blob binary")
     landing = str(tmp_path / "landing")
     media.coalesce(1).write.parquet(landing)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     _drain(spark, landing, out, ckpt)
 
-    decisions = read_media_decisions(spark, out).localCheckpoint()
+    decisions = read_decisions(spark, out, "media_id").localCheckpoint()
     hashed_ids = {
         r["media_id"]
         for r in PH.media_hashes(media).where(F.col("mhash").isNotNull()).collect()
@@ -136,18 +138,22 @@ def test_media_gate_no_input_restart_is_idempotent(spark, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     _drain(spark, landing, out, ckpt)
     first = {
-        (r["media_id"], r["keep"]) for r in read_media_decisions(spark, out).collect()
+        (r["media_id"], r["keep"])
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     _drain(spark, landing, out, ckpt)  # no new input
     second = {
-        (r["media_id"], r["keep"]) for r in read_media_decisions(spark, out).collect()
+        (r["media_id"], r["keep"])
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     assert first == second and first
 
 
 def test_media_gate_cross_batch_ownership(spark, tmp_path):
     """A later batch's near-dup of an already-committed row drops:
-    state persists across drains (earliest batch wins)."""
+    the registry persists across drains (earliest batch wins) — and
+    the registry and decisions equal the sequential oracle's after
+    the restart wave and a no-input re-drain."""
     import shutil
 
     rows = _media_rows()
@@ -168,10 +174,26 @@ def test_media_gate_cross_batch_ownership(spark, tmp_path):
     _drain(spark, landing, out, ckpt)
 
     by_id = {
-        r["media_id"]: r["keep"] for r in read_media_decisions(spark, out).collect()
+        r["media_id"]: r["keep"]
+        for r in read_decisions(spark, out, "media_id").collect()
     }
     assert by_id[0] == 1   # committed first presenter stays kept
     assert by_id[1] == 0 and by_id[2] == 0  # later near-dups drop
+
+    waves = [
+        media_signatures(spark.createDataFrame(w, "media_id long, blob binary"))
+        for w in (base[:1], base[1:])
+    ]
+
+    def check():
+        return assert_gate_matches_oracle(
+            spark, waves, ("modality", "band", "slice"), "media_id",
+            f"{out}_registry", out, id_col="media_id",
+        )
+
+    assert check() == by_id
+    _drain(spark, landing, out, ckpt)  # no new input
+    assert check() == by_id
 
 
 def test_incremental_media_pairs_equal_full_rebuild(spark, tmp_path):

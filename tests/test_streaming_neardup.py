@@ -1,6 +1,7 @@
 """Streaming MinHash/LSH near-dedup: first-presenter gate invariants,
-checked against the BATCH LSH operators as ground truth, plus
-cross-restart state persistence and idempotent re-drains.
+checked against the BATCH LSH operators and the sequential oracle as
+ground truth, plus cross-restart registry persistence and idempotent
+re-drains.
 """
 
 from __future__ import annotations
@@ -13,21 +14,18 @@ from pyspark.sql import functions as F
 from prod2vec_spark.operators.dedup import lsh_candidate_pairs, minhash_bands
 from prod2vec_spark.queries_r6 import amplify_documents
 from prod2vec_spark.sources.io import read_table
-from prod2vec_spark.streaming.neardup import (
-    read_decisions,
-    start_near_dedup,
-    streaming_band_owners,
-)
+from prod2vec_spark.streaming.first_presenter import read_decisions
+from prod2vec_spark.streaming.neardup import start_near_dedup_registry
 from tests.conftest import SF_SMOKE
+from tests.first_presenter_oracle import assert_gate_matches_oracle
 
 _DOCS_SCHEMA = "doc_id long, text string, lang string"
 
 
 def _drain(spark, landing, out, ckpt, **kw):
+    """One availableNow drain; the band registry sits next to ``out``."""
     stream = spark.readStream.schema(_DOCS_SCHEMA).parquet(landing)
-    q = start_near_dedup(
-        streaming_band_owners(stream, **kw), out, ckpt
-    )
+    q = start_near_dedup_registry(stream, f"{out}_registry", out, ckpt, **kw)
     q.awaitTermination()
 
 
@@ -87,7 +85,7 @@ def test_first_presenter_gate_invariants(spark, tmp_path):
 
 def test_state_persists_across_restarts(spark, tmp_path):
     """A near-dup arriving in a LATER drain must still be dropped: the
-    band registry lives in the checkpointed state store, not the
+    band registry lives in the committed registry partials, not the
     micro-batch."""
     base_text = " ".join(f"tok{i}" for i in range(30))
     novel_text = " ".join(f"other{i}" for i in range(30))
@@ -130,7 +128,7 @@ def test_state_persists_across_restarts(spark, tmp_path):
 
 
 def test_short_docs_bypass_state(spark, tmp_path):
-    """Docs under shingle_k tokens never enter the state store — no
+    """Docs under shingle_k tokens never enter the registry — no
     decision rows, trivially kept by the caller."""
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -346,19 +344,11 @@ def test_streaming_incremental_lsh_matches_batch(spark, tmp_path):
     assert bands.select("doc_id", "band_id").distinct().count() == bands.count()
 
 
-def _drain_registry(spark, landing, reg, out, ckpt, **kw):
-    from prod2vec_spark.streaming.neardup import start_near_dedup_registry
-
-    stream = spark.readStream.schema(_DOCS_SCHEMA).parquet(landing)
-    q = start_near_dedup_registry(stream, reg, out, ckpt, **kw)
-    q.awaitTermination()
-
-
-def test_registry_gate_matches_groupstate_gate(spark, tmp_path):
-    """Round-17 parity lock: the JVM-only registry gate (the drain
-    pipeline's shape) emits the EXACT decision table of the GroupState
-    gate on the same landing — per wave, across a restart wave, and
-    under an idempotent no-input re-drain."""
+def test_registry_gate_matches_sequential_oracle(spark, tmp_path):
+    """Parity lock for the drain pipeline's gate: the committed
+    registry (signature -> owner) and the decision table equal the
+    sequential first-presenter oracle's — per wave, across a restart
+    wave, and under an idempotent no-input re-drain."""
     import shutil
 
     docs = (
@@ -375,44 +365,39 @@ def test_registry_gate_matches_groupstate_gate(spark, tmp_path):
     for name, half in [("a", wave_a), ("b", wave_b)]:
         half.coalesce(1).write.parquet(str(tmp_path / f"st_{name}"))
 
-    gs_out, gs_ckpt = str(tmp_path / "gs_out"), str(tmp_path / "gs_ckpt")
-    rg_reg = str(tmp_path / "rg_registry")
-    rg_out, rg_ckpt = str(tmp_path / "rg_out"), str(tmp_path / "rg_ckpt")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
-    def both():
-        _drain(spark, str(landing), gs_out, gs_ckpt)
-        _drain_registry(spark, str(landing), rg_reg, rg_out, rg_ckpt)
-
-    def decisions(out):
-        return {
-            (r["doc_id"], r["keep"])
-            for r in read_decisions(spark, out).collect()
-        }
+    def check(waves):
+        return assert_gate_matches_oracle(
+            spark,
+            [minhash_bands(w) for w in waves],
+            ("band_id", "band_sig"),
+            "doc_id",
+            f"{out}_registry",
+            out,
+        )
 
     for f in (tmp_path / "st_a").glob("*.parquet"):
         shutil.copy(f, landing / "a.parquet")
-    both()
-    got_a = decisions(rg_out)
-    assert got_a == decisions(gs_out) and got_a
+    _drain(spark, str(landing), out, ckpt)
+    got_a = check([wave_a])
+    assert got_a
 
-    # second wave across a restart: earlier-batch owners must win in
-    # BOTH gates (registry partials vs the checkpointed state store)
+    # second wave across a restart: earlier-batch owners must win
+    # (the registry partials, not the micro-batch)
     for f in (tmp_path / "st_b").glob("*.parquet"):
         shutil.copy(f, landing / "b.parquet")
-    both()
-    got_ab = decisions(rg_out)
-    assert got_ab == decisions(gs_out) and len(got_ab) > len(got_a)
+    _drain(spark, str(landing), out, ckpt)
+    got_ab = check([wave_a, wave_b])
+    assert len(got_ab) > len(got_a)
 
-    # no-new-input re-drain: both decision tables unchanged
-    both()
-    assert decisions(rg_out) == got_ab == decisions(gs_out)
+    # no-new-input re-drain: registry and decisions unchanged
+    _drain(spark, str(landing), out, ckpt)
+    assert check([wave_a, wave_b]) == got_ab
 
     # one registry row per distinct presented signature (the registry
     # growth contract: re-presented signatures never re-register)
-    from prod2vec_spark.operators.dedup import minhash_bands
-    from prod2vec_spark.streaming.neardup import read_band_registry
-
-    reg = read_band_registry(spark, rg_reg)
+    reg = spark.read.parquet(f"{out}_registry")
     n_sigs = (
         minhash_bands(docs).select("band_id", "band_sig").distinct().count()
     )

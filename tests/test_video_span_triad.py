@@ -1,6 +1,6 @@
 """Round-13: the frame plane gains its incremental and streaming legs
-(frame_band_table / incremental_video_span_pairs,
-streaming/video_span.py) — the 3×3 span matrix (video/image/audio ×
+(frame_band_table / incremental_video_span_pairs, the VIDEO_PLANE of
+streaming/span_gate.py) — the 3×3 span matrix (video/image/audio ×
 batch/incremental/streaming) is complete.  Same planted-scene corpus
 shape as tests/test_video.py's span test, with an animated-GIF member
 so the cross-container door is exercised in both new legs."""
@@ -18,11 +18,13 @@ from prod2vec_spark.operators.phash import (
     incremental_video_span_pairs,
     video_span_pairs,
 )
-from prod2vec_spark.streaming.video_span import (
-    read_video_span_decisions,
-    start_video_span_gate,
-    streaming_frame_band_owners,
+from prod2vec_spark.streaming.first_presenter import read_decisions
+from prod2vec_spark.streaming.span_gate import (
+    VIDEO_PLANE,
+    span_signatures,
+    start_span_gate,
 )
+from tests.first_presenter_oracle import assert_gate_matches_oracle, span_keep
 
 W, H = 32, 24
 KW = dict(every_ms=250)
@@ -99,11 +101,12 @@ def test_video_span_gate_invariants(spark, tmp_path):
     stream = spark.readStream.schema("media_id long, blob binary").parquet(
         landing
     )
-    start_video_span_gate(
-        streaming_frame_band_owners(stream, **KW), out, ckpt
+    registry = str(tmp_path / "registry")
+    start_span_gate(
+        VIDEO_PLANE, stream, registry, out, ckpt, **KW
     ).awaitTermination()
 
-    decisions = read_video_span_decisions(spark, out).localCheckpoint()
+    decisions = read_decisions(spark, out, "media_id").localCheckpoint()
     framed_ids = {
         r["media_id"]
         for r in frame_hashes(media, **KW).select("media_id").collect()
@@ -120,3 +123,11 @@ def test_video_span_gate_invariants(spark, tmp_path):
     kept = decisions.filter(F.col("keep") == 1).select("media_id")
     kept_media = media.join(kept, "media_id", "left_semi")
     assert video_span_pairs(kept_media, min_shared=2, **KW).count() == 0
+
+    assert by_id == assert_gate_matches_oracle(
+        spark, [span_signatures(VIDEO_PLANE, media, **KW)], ("band", "slice"),
+        "unit", registry, out, id_col="media_id", carry="hash",
+        keep=lambda rows, reg: span_keep(
+            rows, reg, VIDEO_PLANE.id_base, VIDEO_PLANE.min_shared
+        ),
+    )
