@@ -26,38 +26,48 @@ Scale notes (100 TB design point):
   :func:`connected_components_star` (equivalence + rounds-bound
   pytest-locked on a 64-chain).
 * Each round is exactly 2 shuffles: propagate (join labels onto the
-  edge list) + re-label (min-agg per node).  The edge list is
-  re-used every round — at cluster scale persist it.
-* Lineage is broken per round with ``localCheckpoint`` — without it
-  the plan doubles every iteration and Catalyst analysis time
-  explodes (the classic iterative-algorithm trap).  On a real
+  edge list) + re-label (min-agg per node); round 1 starts from the
+  all-self labelling, so it is one min-agg over the edge list.  The
+  edge list is re-used every round — at cluster scale persist it.
+* Lineage is broken per round with an eager ``localCheckpoint`` —
+  without it the plan doubles every iteration and Catalyst analysis
+  time explodes (the classic iterative-algorithm trap).  On a real
   cluster prefer reliable ``checkpoint`` (HDFS) so a lost executor
   does not recompute the whole chain.
 * Convergence is detected with an order-insensitive label checksum
   (decimal(38,0) sum of xxhash64(node, comp) — overflow-free, so it
-  survives ANSI mode) — one lightweight agg job per round, no
-  driver-side collect of the label table.
+  survives ANSI mode), observed on the checkpoint's own pass over the
+  new labels: each round is ONE SQL execution, with no separate agg
+  job and no driver-side collect of the label table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from prod2vec_spark.functions.lineage import break_lineage
 
 
-def _label_checksum(labels: DataFrame) -> int:
-    """Order-insensitive checksum of the (node, comp) assignment.
+def _checksum_break(
+    df: DataFrame, checkpoint_dir: "str | None", *pairs: tuple[str, str]
+) -> tuple[DataFrame, list[int]]:
+    """Eagerly checkpoint ``df`` (see ``break_lineage``) and return it
+    with one order-insensitive checksum per column pair in ``pairs``,
+    observed on the checkpoint's own pass — one SQL execution in all.
 
     The per-row hashes are summed as decimal(38,0), NOT long: a long
     sum of xxhash64 values overflows almost immediately, which is a
     crash under ANSI mode (Spark 4's default) and silent wraparound
     otherwise.  decimal(38,0) holds ~10^19 rows of int64 headroom and
     is portable to ANSI-on clusters."""
-    row = labels.agg(
-        F.sum(F.xxhash64("node", "comp").cast("decimal(38,0)")).alias("s")
-    ).first()
-    return 0 if row["s"] is None else int(row["s"])
+    obs = Observation()
+    sums = [
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias(f"s{i}")
+        for i, cols in enumerate(pairs)
+    ]
+    out = break_lineage(df.observe(obs, *sums), checkpoint_dir, eager=True)
+    got = obs.get
+    return out, [int(got[f"s{i}"] or 0) for i in range(len(pairs))]
 
 
 def connected_components_with_rounds(
@@ -119,34 +129,36 @@ def connected_components_with_rounds(
     # one round trip of the loop re-reads e; keep it hot
     e = break_lineage(e, checkpoint_dir, eager=False)
 
-    labels = e.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("comp")
-    )
-    # lazy break — the checksum below materializes it (round 16)
-    labels = break_lineage(labels, checkpoint_dir, eager=False)
-    prev = _label_checksum(labels)
-
+    labels = None
     rounds = 0
     converged = False
     for _ in range(max_iter):
         # each node's new label: min over (its own label, labels of
         # all neighbors) — propagate across edges then min-agg
-        prop = e.join(labels, e["a"] == labels["node"]).select(
-            F.col("b").alias("node"), "comp"
-        )
-        # lazy break (round 16): the checkpoint's RDD materializes
-        # under the checksum action two lines down, so each round runs
-        # ONE job instead of an eager-checkpoint job plus the checksum
-        # job; the returned plan is already truncated either way.
-        labels = break_lineage(
-            prop.unionByName(labels)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp")),
-            checkpoint_dir,
-            eager=False,
-        )
+        if labels is None:
+            # every node starts labelled itself, so round 1 reads its
+            # labels straight off the (symmetric) edge list, and the
+            # initial labelling's checksum is observed on the same pass
+            labels, (prev, cur) = _checksum_break(
+                e.groupBy("a")
+                .agg(F.min("b").alias("m"))
+                .select(F.col("a").alias("node"), F.least("a", "m").alias("comp")),
+                checkpoint_dir,
+                ("node", "node"),
+                ("node", "comp"),
+            )
+        else:
+            prop = e.join(labels, e["a"] == labels["node"]).select(
+                F.col("b").alias("node"), "comp"
+            )
+            labels, (cur,) = _checksum_break(
+                prop.unionByName(labels)
+                .groupBy("node")
+                .agg(F.min("comp").alias("comp")),
+                checkpoint_dir,
+                ("node", "comp"),
+            )
         rounds += 1
-        cur = _label_checksum(labels)
         if cur == prev:
             converged = True
             break
@@ -199,8 +211,9 @@ def connected_components_star(
 
     Scale notes: each half-round is one groupBy-min + one equi-join —
     2 shuffles, the same budget as a propagation round; lineage breaks
-    per round (localCheckpoint); convergence via the overflow-free
-    decimal checksum.  Use this over propagation when the candidate
+    per round (eager localCheckpoint) and the overflow-free decimal
+    checksum is observed on that same pass — one SQL execution per
+    round.  Use this over propagation when the candidate
     graph is NOT a union of near-cliques (e.g. transitive similarity
     chains across a corpus); for LSH near-clique graphs propagation's
     ~2 rounds wins."""
@@ -229,8 +242,7 @@ def connected_components_star(
         )
         .distinct()
     )
-    # lazy break — the initial checksum below materializes it
-    e = break_lineage(e, checkpoint_dir, eager=False)
+    e, (prev,) = _checksum_break(e, checkpoint_dir, ("u", "v"))
     singletons = both.select(F.col("a").alias("node")).distinct()
 
     def _star(cur: DataFrame, large: bool) -> DataFrame:
@@ -265,21 +277,14 @@ def connected_components_star(
             out = nbrs.union(centers)
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    def _checksum(cur: DataFrame) -> int:
-        row = cur.agg(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s")
-        ).first()
-        return 0 if row["s"] is None else int(row["s"])
-
-    prev = _checksum(e)
     rounds = 0
     converged = False
     for _ in range(max_iter):
         e = _star(e, large=True)
-        # lazy break — the checksum materializes it (round 16)
-        e = break_lineage(_star(e, large=False), checkpoint_dir, eager=False)
+        e, (cur,) = _checksum_break(
+            _star(e, large=False), checkpoint_dir, ("u", "v")
+        )
         rounds += 1
-        cur = _checksum(e)
         if cur == prev:
             converged = True
             break

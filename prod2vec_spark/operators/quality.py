@@ -126,7 +126,18 @@ def assert_expectations(df: DataFrame, rules: Rules) -> None:
     """Reference-compatible behavior: raise on any failed rule (the
     engine's ``expect`` is the primary surface; this is the strict
     wrapper the pipeline runner uses)."""
-    failed = [r for r in expect(df, rules).collect() if not r["passed"]]
+    assert_suite([(df, rules)])
+
+
+def assert_suite(checks: list[tuple[DataFrame, Rules]]) -> None:
+    """``assert_expectations`` over several (frame, rules) pairs as ONE
+    Spark action: the lazy reports are unioned (the ``q_dq_suite``
+    shape) and collected once; the ValueError lists every failed rule."""
+    report = None
+    for df, rules in checks:
+        one = expect(df, rules)
+        report = one if report is None else report.unionByName(one)
+    failed = [r for r in report.collect() if not r["passed"]]
     if failed:
         msgs = ", ".join(f"{r['rule']}({r['col_name']})={r['metric']}" for r in failed)
         raise ValueError(f"data-quality expectations failed: {msgs}")

@@ -1173,12 +1173,9 @@ def semdedup(
         # aliased legs).  Callers with a work dir (the curation DAG)
         # materialize it once; plan-sensitive callers (the oracled
         # semdedup_audit entry) pass None and keep the stateless shape.
-        from prod2vec_spark.sources.io import write_parquet
+        from prod2vec_spark.sources.io import checkpoint
 
-        write_parquet(assigned, f"{staged_dir}/semdedup_assigned")
-        assigned = corpus.sparkSession.read.parquet(
-            f"{staged_dir}/semdedup_assigned"
-        )
+        assigned = checkpoint(assigned, f"{staged_dir}/semdedup_assigned")
     # zero-norm rows have null nvec: kept unconditionally, never paired
     pairable = assigned.where(F.col("nvec").isNotNull())
     if max_cluster is not None:

@@ -8,7 +8,9 @@ Stage graph (same shape as the reference's DAG):
 
 Stage handoff is parquet checkpoints under ``work_dir`` — the engine
 equivalent of the reference's every-task-rereads-S3 pattern, but
-columnar and resumable.  The branch (tune vs train) is plain Python —
+columnar and resumable.  Each hand-off is ``sources/io.checkpoint``:
+the read-back reuses the written schema, so no stage re-infers it
+from parquet footers.  The branch (tune vs train) is plain Python —
 Airflow's BranchPythonOperator collapses to an ``if`` (G2: the
 SageMaker process boundary disappears entirely; training is an
 in-cluster MLlib fit).
@@ -33,9 +35,9 @@ from prod2vec_spark.ml.prod2vec import (
 )
 from prod2vec_spark.ml.tuning import grid_tune, tuning_report
 from prod2vec_spark.operators.baskets import assemble_baskets, build_vocab
-from prod2vec_spark.operators.quality import Rules, assert_expectations
+from prod2vec_spark.operators.quality import Rules, assert_suite
 from prod2vec_spark.operators.skipgram import skipgram_pairs_array
-from prod2vec_spark.sources.io import read_table, write_parquet
+from prod2vec_spark.sources.io import checkpoint, read_table, write_parquet
 
 
 @dataclass
@@ -62,37 +64,47 @@ class Prod2VecPipeline:
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         self.spark = spark
         self.cfg = cfg
+        self._tables: dict[tuple[str, str], DataFrame] = {}  # _table cache
+
+    def _table(self, name: str) -> DataFrame:
+        """``read_table`` once per (sf_dir, table) on this instance, so
+        the stages share one open (one footer inference) per table."""
+        key = (self.cfg.sf_dir, name)
+        if key not in self._tables:
+            self._tables[key] = read_table(self.spark, *key)
+        return self._tables[key]
 
     # -- stage 1: E1 preprocess (data_prep.py:237-318 equivalent) ------
     def preprocess(self) -> dict[str, DataFrame]:
-        li = read_table(self.spark, self.cfg.sf_dir, "lineitem")
-        baskets = assemble_baskets(li, max_len=self.cfg.max_basket_length)
-        vocab = build_vocab(li, num_prods=self.cfg.num_prods)
-        pairs = skipgram_pairs_array(baskets, self.cfg.window_size)
-        write_parquet(baskets, f"{self.cfg.work_dir}/baskets")
-        write_parquet(vocab, f"{self.cfg.work_dir}/vocab")
-        write_parquet(pairs, f"{self.cfg.work_dir}/pairs")
-        return {
-            "baskets": self.spark.read.parquet(f"{self.cfg.work_dir}/baskets"),
-            "vocab": self.spark.read.parquet(f"{self.cfg.work_dir}/vocab"),
-            "pairs": self.spark.read.parquet(f"{self.cfg.work_dir}/pairs"),
-        }
+        li = self._table("lineitem")
+        wd = self.cfg.work_dir
+        baskets = checkpoint(
+            assemble_baskets(li, max_len=self.cfg.max_basket_length), f"{wd}/baskets"
+        )
+        vocab = checkpoint(build_vocab(li, num_prods=self.cfg.num_prods), f"{wd}/vocab")
+        # pairs expand the written baskets instead of grouping lineitem again
+        pairs = checkpoint(
+            skipgram_pairs_array(baskets, self.cfg.window_size), f"{wd}/pairs"
+        )
+        return {"baskets": baskets, "vocab": vocab, "pairs": pairs}
 
     # -- stage 2: Q1-Q5 gates (data_quality_checks.py:136-189) ---------
     def quality_gates(self) -> None:
-        li = read_table(self.spark, self.cfg.sf_dir, "lineitem")
-        part = read_table(self.spark, self.cfg.sf_dir, "part")
-        assert_expectations(
-            li,
-            Rules(
-                not_null=["l_orderkey", "l_partkey"],
-                distinct_between={"l_partkey": (1.0, 1e9)},
-                row_count_between=(1.0, 1e12),
-            ),
-        )
-        assert_expectations(
-            part,
-            Rules(not_null=["p_partkey"], unique_key=["p_partkey"], column_count=6),
+        assert_suite(
+            [
+                (
+                    self._table("lineitem"),
+                    Rules(
+                        not_null=["l_orderkey", "l_partkey"],
+                        distinct_between={"l_partkey": (1.0, 1e9)},
+                        row_count_between=(1.0, 1e12),
+                    ),
+                ),
+                (
+                    self._table("part"),
+                    Rules(not_null=["p_partkey"], unique_key=["p_partkey"], column_count=6),
+                ),
+            ]
         )
 
     # -- stage 3: train or tune (branch, DAG :215-219) ------------------
@@ -142,8 +154,10 @@ class Prod2VecPipeline:
             model = best["model"]
         else:
             model = fit_prod2vec(staged["baskets"], self.cfg.train)
+        # this run keeps the model in hand; the saved copy is what
+        # resume_postprocess reloads
         save_model(model, self.model_path)
-        return load_model(self.spark, self.model_path)
+        return model
 
     @property
     def model_path(self) -> str:
@@ -151,7 +165,7 @@ class Prod2VecPipeline:
 
     # -- stage 4: postprocess (post_process.py:14-103) -------------------
     def postprocess(self, model, staged: dict[str, DataFrame]) -> DataFrame:
-        part = read_table(self.spark, self.cfg.sf_dir, "part")
+        part = self._table("part")
         vectors = embedding_table(model)
         enriched = enrich_embeddings(vectors, part)
         write_parquet(
@@ -175,8 +189,7 @@ class Prod2VecPipeline:
             F.round("cosine_sim", 6).alias("cosine_sim"),
             "rank",
         )
-        write_parquet(neighbors, f"{self.cfg.work_dir}/neighbors")
-        persisted = self.spark.read.parquet(f"{self.cfg.work_dir}/neighbors")
+        persisted = checkpoint(neighbors, f"{self.cfg.work_dir}/neighbors")
         # F9: per-query '; '-joined neighbor names (model_train.py:48)
         write_parquet(
             neighbor_name_report(persisted), f"{self.cfg.work_dir}/neighbor_report"

@@ -6,15 +6,20 @@ The reference reads CSV from S3 into pandas
 columnar, splittable, predicate-pushdown-able — the only sane choice at
 100 TB.  CSV scan/sink are kept for the reference's CSV surface (S1/S4).
 
-Parquet is self-describing, so scans don't force a schema — Catalyst
-still prunes columns and pushes filters into the reader.  The *expected*
-schemas live in ``TABLES`` and feed the data-quality gates (Q3/Q4,
-operators/quality.py) rather than the reader.
+Parquet is self-describing, so scans of input tables don't force a
+schema — Catalyst still prunes columns and pushes filters into the
+reader.  The *expected* schemas live in ``TABLES`` and feed the
+data-quality gates (Q3/Q4, operators/quality.py) rather than the reader.
+
+Pipeline stage hand-offs use ``checkpoint``: the parquet sink plus a
+read-back that reuses the schema just written, so a stage never pays a
+footer-inference job to reopen its own output, and the write can
+observe row counts or other aggregates on the way out.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -204,11 +209,65 @@ def read_csv(
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Replaces the reference's pickle sink (S2, data_prep.py:204-234)."""
+    """Replaces the reference's pickle sink (S2, data_prep.py:204-234).
+    For a write the caller reads back, use ``checkpoint``."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` as a parquet scan reports it: every field, array element
+    and map value nullable (Spark's file sources read ``asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def checkpoint(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+    observe: list | None = None,
+):
+    """Write ``df`` to ``path`` as parquet and return a read-back frame
+    of what was written — the one stage hand-off of the pipelines.
+
+    The read-back carries the schema the write just used (data columns
+    first, then ``partition_by`` columns, all nullable — what a parquet
+    scan reports), so opening it runs no Spark job: a plain
+    ``spark.read.parquet`` would first run a one-task footer-inference
+    job on a file this process wrote moments ago.  Partition columns
+    keep their written type rather than the type partition discovery
+    would infer from the directory names, and an empty partitioned
+    write (no data file at all) reads back as an empty frame instead
+    of an inference error.
+
+    ``observe``: aggregate Columns, each aliased, evaluated on the
+    write itself through a ``pyspark.sql.Observation`` — a row count
+    or checksum of the checkpoint without a second action over it.
+    With ``observe`` the call returns ``(frame, {alias: value})``."""
+    metrics = None
+    if observe:
+        metrics = Observation()
+        df = df.observe(metrics, *observe)
+    write_parquet(df, path, partition_by)
+    parts = partition_by or []
+    schema = _nullable(
+        T.StructType(
+            [f for f in df.schema.fields if f.name not in parts]
+            + [df.schema[c] for c in parts]
+        )
+    )
+    out = df.sparkSession.read.schema(schema).parquet(path)
+    return out if metrics is None else (out, metrics.get)
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:

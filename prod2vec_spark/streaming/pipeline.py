@@ -354,11 +354,13 @@ class StreamingCorpusPipeline:
         thousands of files (or a long-lived stream started before its
         input exists, n == 0) keeps the shuffle-free plan — no extra
         exchange ships at scale, and the floor derives from the
-        session core count, never a constant."""
-        import glob
-        import os
+        session core count, never a constant.  Files are listed through
+        the Hadoop FS API, so a ``file://`` (or ``s3a://``) landing
+        counts like a local path."""
+        from prod2vec_spark.sources.artifacts import _fs_path
 
-        n = len(glob.glob(os.path.join(path, "*.parquet")))
+        fs, pattern = _fs_path(self.spark, f"{path}/*.parquet")
+        n = len(fs.globStatus(pattern) or [])
         floor = self.spark.sparkContext.defaultParallelism
         if 0 < n < floor:
             return df.repartition(floor)

@@ -131,6 +131,30 @@ def test_partitioned_parquet_layout(spark, tmp_path):
     assert back.filter(F.col("grp") == "a").count() == 2
 
 
+def test_stream_landing_uri_counts_files_for_parallelism_floor(spark, tmp_path):
+    """A drain over a landing of fewer parquet files than cores gets
+    the round-robin floor whether the landing is a plain path or a
+    ``file://`` URI: the files are listed through the Hadoop FS API,
+    not a local glob that reads a URI as an empty directory."""
+    from prod2vec_spark.streaming.pipeline import (
+        StreamCorpusConfig,
+        StreamingCorpusPipeline,
+    )
+
+    landing = tmp_path / "landing"
+    spark.createDataFrame(
+        [(1, "some text", "en")], "doc_id long, text string, lang string"
+    ).coalesce(1).write.parquet(str(landing))
+    assert spark.sparkContext.defaultParallelism > 1
+    for path in (str(landing), landing.as_uri()):
+        pipe = StreamingCorpusPipeline(
+            spark, StreamCorpusConfig(landing_dir=path, work_dir=str(tmp_path / "w"))
+        )
+        src = spark.readStream.schema("doc_id long, text string, lang string").parquet(path)
+        plan = pipe._spread_stream(src, path)._jdf.queryExecution().logical().toString()
+        assert "Repartition" in plan, path
+
+
 def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     """ORC sink/source roundtrip preserves data; filters reach the ORC
     scan as PushedFilters just like parquet."""
