@@ -212,12 +212,12 @@ def _flagship(spark, sf_dir):
 
 def _curation10x(spark, sf_dir):
     """10x-amplified exact-dedup → LSH → connected-components chain
-    (queries_r6.curation_stress) timed per-round so the curation
+    (queries/dedup.py curation_stress) timed per-round so the curation
     path's behavior at a ~10x denser candidate graph is a recorded
     number, not a claim (VERDICT r5 ask #6).  Runs ONCE per bench (a
     macro-benchmark: the CC loop's eager checkpoints dominate, and
     one run is representative)."""
-    from prod2vec_spark.queries_r6 import curation_stress
+    from prod2vec_spark.queries.dedup import curation_stress
 
     return curation_stress(spark, sf_dir, factor=10)
 

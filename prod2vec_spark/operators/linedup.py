@@ -30,7 +30,7 @@ key).  Documents whose every segment is boilerplate survive with
 empty text (left join back to the corpus) — dropping them outright is
 the caller's policy, not the operator's.
 
-DuckDB oracle (queries_r7.py): identical windows via list_slice over
+DuckDB oracle (queries/dedup.py): identical windows via list_slice over
 range(), count(DISTINCT doc_id), string_agg(... ORDER BY pos).
 """
 
@@ -245,7 +245,7 @@ def sentence_dedup(
     Spark plans a shuffle hash join on the same 8-byte key); one
     reassembly shuffle per doc_id.  No driver-side work, no UDFs.
 
-    DuckDB oracle (queries_r16): identical splits via the shared
+    DuckDB oracle (queries/dedup.py): identical splits via the shared
     lookaround-free SENTENCE_RE, positions via unnest(range()),
     count(DISTINCT doc_id), string_agg(... ORDER BY pos).
     """

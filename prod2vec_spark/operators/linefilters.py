@@ -23,7 +23,7 @@ column before applying the per-rule counts.
 
 DuckDB oracle equivalents evaluate the identical rules with
 list_filter / list_transform over the same line segmentation
-(queries_r9b.py).
+(queries/text.py).
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Temperature-scaled source mixing — COMPUTE the training-data
-recipe from corpus statistics (the companion to queries_r6's
+recipe from corpus statistics (the companion to queries/sampling.py's
 ``corpus_mix_sample``, which APPLIES a hand-specified recipe).
 
 ENGINE scope: the standard multilingual/multi-source rebalancing rule

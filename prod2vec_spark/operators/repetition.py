@@ -18,7 +18,7 @@ columns (``withColumn``) before passing them here — passing a
 ``split(...)`` expression directly would re-split the document once
 per distinct gram.
 
-DuckDB oracle equivalents (queries_r6b.py) evaluate the identical
+DuckDB oracle equivalents (queries/text.py) evaluate the identical
 formulas with list_transform / list_filter / list_slice.
 """
 

@@ -209,7 +209,7 @@ def normalize_text(text: Column, lowercase: bool = True, nfc: bool = False) -> C
     codec-boundary policy).
 
     Oracle (nfc=False): regexp_replace(...,'g') with the identical
-    patterns + lower()/trim (queries_r7.py text_normalize)."""
+    patterns + lower()/trim (queries/text.py text_normalize)."""
     if nfc:
         text = nfc_normalize(text)
     out = F.regexp_replace(text, r"[\x00-\x1F\x7F]", " ")

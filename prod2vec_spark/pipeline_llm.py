@@ -119,7 +119,7 @@ class CorpusConfig:
     work_dir: str
     quality_pct: float = 0.25  # drop the worst quartile
     quality_scope: str = "global"  # or "per_source": percentile within source
-    lsh_max_group: int = 64  # degenerate-band cap (queries_ext.py)
+    lsh_max_group: int = 64  # degenerate-band cap (queries/common.py LSH_MAX_GROUP)
     shingle_k: int = 3
     scrub_pii: bool = True
     scrub_cc: bool = False  # + Luhn-verified card redaction (pii.scrub_cc)

@@ -351,32 +351,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     return list(TABLES)
 
 
-def register_query_views(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> list[str]:
-    """SQL surface for the catalog: register driver-catalog queries as
-    temp views named ``q_<catalog_name>``, so users can
-    ``spark.sql("SELECT * FROM q_vocab")`` any operator the engine
-    ships.  Most entries are pure plan definitions (nothing executes
-    until queried, and Catalyst optimizes straight through them — a
-    filter composed on top in SQL pushes into the underlying parquet
-    scan exactly as in the DataFrame form).  The ML-backed audits
-    (word2vec_neighbors, kmeans_audit) and the checkpointing audits
-    (ann_recall, minhash_jaccard_audit) do their model fit /
-    materialization at DEFINITION time — pass ``names`` to register a
-    subset when that cost is unwanted.  ``names`` may reference ANY
-    superset query (including entries retired from the driver
-    catalog); the default registers exactly the driver catalog."""
-    from prod2vec_spark.queries import ALL_QUERIES, QUERIES
-
-    todo = list(QUERIES) if names is None else names
-    out = []
-    for name in todo:
-        ALL_QUERIES[name](spark, sf_dir).createOrReplaceTempView(f"q_{name}")
-        out.append(f"q_{name}")
-    return out
-
-
 def file_audit(
     spark: SparkSession, path: str, small_bytes: int = 32 * 1024 * 1024
 ) -> DataFrame:

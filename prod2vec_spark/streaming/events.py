@@ -37,17 +37,18 @@ def _events_ts_is_nanos_long(dir_path: str) -> bool:
     footers take the nanos branch too.  A directory with no readable
     top-level parquet footer raises instead of silently guessing µs:
     the stream schema is fixed at definition time, so a wrong silent
-    default would poison every late-arriving nanos file."""
-    import glob
-    import os
-
+    default would poison every late-arriving nanos file.  Files are
+    listed through the Hadoop FS API, so a ``file://`` directory reads
+    like a local path."""
     import pyarrow.parquet as pq
 
-    candidates = (
-        sorted(glob.glob(os.path.join(dir_path, "*.parquet")))
-        if os.path.isdir(dir_path)
-        else [dir_path]
-    )
+    from prod2vec_spark.sources.artifacts import _fs_path
+
+    spark = SparkSession.active()
+    fs, hpath = _fs_path(spark, dir_path)
+    if fs.isDirectory(hpath):
+        fs, hpath = _fs_path(spark, f"{dir_path}/*.parquet")
+    candidates = sorted(st.getPath().toString() for st in fs.globStatus(hpath) or [])
     for f in candidates:
         try:
             typ = pq.read_schema(f).field("ts").type

@@ -197,11 +197,8 @@ def test_audio_window_fixture_matches_codec_chain(spark):
     silently diverge from the codec."""
     import duckdb
 
-    from prod2vec_spark.queries_r13 import (
-        _audio_fixture_path,
-        rendered_window_hashes,
-        window_hash_rows,
-    )
+    from prod2vec_spark.queries.common import _audio_fixture_path
+    from prod2vec_spark.queries.media import rendered_window_hashes, window_hash_rows
 
     sample_ids = list(range(0, 500, 37)) + [499]
     fx = duckdb.sql(

@@ -193,7 +193,7 @@ def test_mmr_missing_embedding_and_null_rel_fail_loudly(spark):
 
 
 def test_mmr_entry_shape_and_determinism(spark):
-    from prod2vec_spark.queries_r11 import q_mmr_diverse_topk
+    from prod2vec_spark.queries.retrieval import q_mmr_diverse_topk
     from tests.conftest import SF_SMOKE
 
     out = q_mmr_diverse_topk(spark, SF_SMOKE)
@@ -209,7 +209,7 @@ def test_mmr_entry_shape_and_determinism(spark):
 def test_hybrid_rrf_entry_shape(spark):
     """The catalog-facing composition: 10 fused docs per keyword
     query, deterministic across runs."""
-    from prod2vec_spark.queries_r11 import q_hybrid_rrf_topk
+    from prod2vec_spark.queries.retrieval import q_hybrid_rrf_topk
     from tests.conftest import SF_SMOKE
 
     out = q_hybrid_rrf_topk(spark, SF_SMOKE)

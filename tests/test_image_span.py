@@ -110,11 +110,8 @@ def test_image_tile_fixture_matches_codec_chain(spark):
     silently diverge from the codec."""
     import duckdb
 
-    from prod2vec_spark.queries_r12 import (
-        _image_fixture_path,
-        rendered_tile_hashes,
-        tile_hash_rows,
-    )
+    from prod2vec_spark.queries.common import _image_fixture_path
+    from prod2vec_spark.queries.media import rendered_tile_hashes, tile_hash_rows
 
     sample_ids = list(range(0, 500, 37)) + [499]
     fx = duckdb.sql(

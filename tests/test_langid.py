@@ -144,7 +144,7 @@ def test_lang_id_learned_query_accuracy_bound(spark):
     """The rows-only superset entry is self-auditing: per-language
     held-out counts with total accuracy >= 0.9 on the planted corpus
     (the L-LANGID analog of ann_recall's checked number)."""
-    from prod2vec_spark.queries_r9 import q_lang_id_learned
+    from prod2vec_spark.queries.text import q_lang_id_learned
     from tests.conftest import SF_SMOKE
 
     rows = q_lang_id_learned(spark, SF_SMOKE).collect()

@@ -63,7 +63,7 @@ def test_repetition_discriminates_looped_text(spark):
 def test_repetition_gate_split_is_nontrivial_on_corpus(spark, duck):
     """The corpus gate must actually discriminate — an all-pass or
     all-fail threshold is untested code."""
-    from prod2vec_spark.queries_r6b import q_doc_repetition
+    from prod2vec_spark.queries.text import q_doc_repetition
     from tests.conftest import SF_ORACLE
 
     counts = {

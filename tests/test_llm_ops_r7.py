@@ -689,7 +689,7 @@ def test_lm_by_lang_models_are_independent(spark):
 
 
 def test_curriculum_buckets_are_balanced_quartiles(spark):
-    from prod2vec_spark.queries_r7 import q_curriculum_buckets
+    from prod2vec_spark.queries.lm import q_curriculum_buckets
 
     rows = q_curriculum_buckets(spark, SF_SMOKE).collect()
     n = len(rows)

@@ -687,7 +687,7 @@ def test_luhn_matches_python_reference_property(spark):
 
 def test_cc_report_counts_planted_cards(spark):
     from prod2vec_spark.operators.pii import cc_report
-    from prod2vec_spark.queries_r7b import CC_PLANTED
+    from prod2vec_spark.queries.text import CC_PLANTED
 
     df = spark.createDataFrame(CC_PLANTED, "doc_id long, text string")
     r = cc_report(F.col("text"))
@@ -778,7 +778,7 @@ def test_compression_profile_rows_only_contract(spark):
     # (name kept for the coverage matrix's history; the entry is
     # FULLY ORACLED since round 15 — see the golden-honesty test
     # below, which locks the fixture to the live codec)
-    from prod2vec_spark.queries_r7b import q_compression_profile
+    from prod2vec_spark.queries.text import q_compression_profile
     from tests.conftest import SF_SMOKE
 
     out = q_compression_profile(spark, SF_SMOKE)
@@ -832,7 +832,7 @@ def test_script_profile_golden_cases(spark, tmp_path):
     per-script counts."""
     import os
 
-    from prod2vec_spark.queries_r7b import q_script_profile
+    from prod2vec_spark.queries.text import q_script_profile
 
     rows = [
         (1, "plain english text here"),

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from prod2vec_spark.queries_r14 import _media_format_fixture_path
+from prod2vec_spark.queries.common import _media_format_fixture_path
 
 
 @pytest.fixture(scope="module")

@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 
 from prod2vec_spark.operators.multimodal import classify_media
-from prod2vec_spark.queries_r14 import _media_format_fixture_path
+from prod2vec_spark.queries.common import _media_format_fixture_path
 
 
 def test_fixture_golden_lock():
@@ -137,7 +137,7 @@ def test_media_format_golden_dims_match_live_parser():
     import pandas as pd
 
     from prod2vec_spark.operators.multimodal import decode_media
-    from prod2vec_spark.queries_r14 import _media_format_fixture_path
+    from prod2vec_spark.queries.common import _media_format_fixture_path
 
     df = pd.read_parquet(_media_format_fixture_path())
     for r in df.itertuples():

@@ -68,7 +68,7 @@ def test_nfc_null_and_ascii_passthrough(spark):
 def test_text_normalize_nfc_query_rows(spark):
     """The rows-only superset entry: one digest per document, every
     document covered."""
-    from prod2vec_spark.queries_r9 import q_text_normalize_nfc
+    from prod2vec_spark.queries.text import q_text_normalize_nfc
     from prod2vec_spark.sources.io import read_table
     from tests.conftest import SF_SMOKE
 
@@ -111,7 +111,7 @@ def test_nfc_oracle_parity_on_non_ascii(spark, tmp_path):
     }
     con = duckdb.connect()
     con.register("documents", pdf)
-    from prod2vec_spark.queries_r9 import _sql_text_normalize_nfc
+    from prod2vec_spark.queries.text import _sql_text_normalize_nfc
 
     want = {
         int(r[0]): r[1]

@@ -512,7 +512,7 @@ def test_connected_components_rounds_bound_on_lsh_graph(spark):
     4 propagation rounds (diameter + 1 confirmation round)."""
     from prod2vec_spark.operators import dedup as DD
     from prod2vec_spark.operators.graph import connected_components_with_rounds
-    from prod2vec_spark.queries_ext import LSH_MAX_GROUP
+    from prod2vec_spark.queries.common import LSH_MAX_GROUP
     from prod2vec_spark.sources.io import read_table
     from tests.conftest import SF_SMOKE
 

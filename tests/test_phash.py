@@ -146,7 +146,7 @@ def test_phash_neardup_query_recovers_planted_families(spark):
     """The rows-only catalog-superset entry: every emitted pair is
     within-family, and every within-family pair is emitted (pigeonhole
     recall at one-pixel perturbation)."""
-    from prod2vec_spark.queries_r7c import q_phash_neardup
+    from prod2vec_spark.queries.media import q_phash_neardup
     from tests.conftest import SF_SMOKE
 
     rows = q_phash_neardup(spark, SF_SMOKE).collect()
@@ -230,7 +230,7 @@ def test_phash_audio_neardup_planted_families(spark):
 
 
 def test_audio_neardup_query_recovers_planted_families(spark):
-    from prod2vec_spark.queries_r7c import q_audio_neardup
+    from prod2vec_spark.queries.media import q_audio_neardup
     from tests.conftest import SF_SMOKE
 
     rows = q_audio_neardup(spark, SF_SMOKE).collect()

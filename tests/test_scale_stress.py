@@ -24,7 +24,8 @@ from prod2vec_spark.operators.dedup import (
     text_digest,
 )
 from prod2vec_spark.operators.graph import connected_components_with_rounds
-from prod2vec_spark.queries_r6 import amplify_documents, curation_stress
+from prod2vec_spark.queries.common import amplify_documents
+from prod2vec_spark.queries.dedup import curation_stress
 from prod2vec_spark.sources.io import read_table
 from tests.conftest import SF_SMOKE
 
@@ -299,11 +300,8 @@ def test_image_span_plane_holds_at_10x_fixture(spark):
     2500 families recover under the cap; every pair is within-family.
     """
     from prod2vec_spark.operators import phash as PH
-    from prod2vec_spark.queries_r12 import (
-        MIN_SHARED,
-        _TILE_ID_BASE,
-        _image_fixture_path,
-    )
+    from prod2vec_spark.queries.common import _image_fixture_path
+    from prod2vec_spark.queries.media import MIN_SHARED, _TILE_ID_BASE
 
     tiles = spark.read.parquet(_image_fixture_path()).select(
         (F.col("doc_id") * F.lit(_TILE_ID_BASE) + F.col("tile_idx")).alias(
@@ -362,11 +360,8 @@ def test_audio_span_plane_holds_at_10x_fixture(spark):
     UNCAPPED.
     """
     from prod2vec_spark.operators import phash as PH
-    from prod2vec_spark.queries_r13 import (
-        AUDIO_MIN_SHARED,
-        _WIN_ID_BASE,
-        _audio_fixture_path,
-    )
+    from prod2vec_spark.queries.common import _audio_fixture_path
+    from prod2vec_spark.queries.media import AUDIO_MIN_SHARED, _WIN_ID_BASE
 
     wins = spark.read.parquet(_audio_fixture_path()).select(
         (F.col("doc_id") * F.lit(_WIN_ID_BASE) + F.col("win_idx")).alias(

@@ -91,8 +91,7 @@ def test_sentence_dedup_holds_on_10x_corpus(spark):
     same primitive (sentence boundaries are preserved under sentence
     removal: survivors are whole sentences joined by spaces)."""
     from prod2vec_spark.operators.text import sentences
-    from prod2vec_spark.queries_r6 import amplify_documents
-    from prod2vec_spark.queries_r16 import sentence_corpus
+    from prod2vec_spark.queries.common import amplify_documents, sentence_corpus
     from tests.conftest import SF_SMOKE
 
     docs = sentence_corpus(

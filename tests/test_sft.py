@@ -48,7 +48,7 @@ def test_sft_input_ids_loss_mask_golden(spark):
     input_ids, and the boundary equals the prompt_text token count
     under the same tokenizer."""
     from prod2vec_spark.operators.bpe import bpe_tokens, token_vocab
-    from prod2vec_spark.queries_r9 import BPE_FIXED_MERGES
+    from prod2vec_spark.queries.common import BPE_FIXED_MERGES
 
     ex = sft_examples(_docs(spark))
     vocab = token_vocab(ex, BPE_FIXED_MERGES, text_col="text")
@@ -82,7 +82,7 @@ def test_sft_prefix_property_under_tokenizer(spark):
     example (whitespace-word tokenizer + whitespace-boundary
     template)."""
     from prod2vec_spark.operators.bpe import bpe_tokens
-    from prod2vec_spark.queries_r9 import BPE_FIXED_MERGES
+    from prod2vec_spark.queries.common import BPE_FIXED_MERGES
 
     ex = sft_examples(_docs(spark))
     rows = ex.select(

@@ -217,7 +217,7 @@ def test_register_query_views_sql_surface(spark):
     sf0.001 includes the ML-backed audits' definition-time fits —
     cheap at smoke scale and part of the registration contract.)"""
     from prod2vec_spark.queries import ALL_QUERIES, QUERIES
-    from prod2vec_spark.sources.io import register_query_views
+    from prod2vec_spark.queries import register_query_views
 
     names = register_query_views(spark, SF_SMOKE)
     assert len(names) == len(QUERIES) == 50

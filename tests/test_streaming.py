@@ -254,3 +254,27 @@ def test_stream_starts_on_empty_dir_with_explicit_schema(spark, tmp_path):
 
     want = read_table(spark, SF_SMOKE, "events").select("event_type").distinct().count()
     assert spark.sql("select * from empty_start2").count() == want
+
+
+def test_events_footer_sniff_reads_file_uri(spark, events_dir, tmp_path):
+    """The ts-layout sniff lists files through the Hadoop FS API: a
+    ``file://`` URI of a seeded directory gives the plain path's answer
+    and drains the same stream, and an empty directory still raises in
+    both forms."""
+    from pathlib import Path
+
+    from prod2vec_spark.streaming.events import _events_ts_is_nanos_long
+
+    uri = Path(events_dir).as_uri()
+    assert _events_ts_is_nanos_long(uri) == _events_ts_is_nanos_long(events_dir)
+    for name, path in (("sniff_plain", events_dir), ("sniff_uri", uri)):
+        stream = windowed_event_counts(read_events_stream(spark, path))
+        run_to_memory(stream, name, output_mode="complete")
+    rows = {n: sorted(map(tuple, spark.table(n).collect())) for n in ("sniff_plain", "sniff_uri")}
+    assert rows["sniff_uri"] == rows["sniff_plain"] != []
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path in (str(empty), empty.as_uri()):
+        with pytest.raises(FileNotFoundError):
+            _events_ts_is_nanos_long(path)

@@ -13,7 +13,7 @@ from prod2vec_spark.operators.dedup import (
     minhash_bands,
     text_digest,
 )
-from prod2vec_spark.queries_r6 import amplify_documents
+from prod2vec_spark.queries.common import amplify_documents
 from prod2vec_spark.sources.io import read_table
 from prod2vec_spark.streaming.pipeline import (
     StreamCorpusConfig,

@@ -12,7 +12,7 @@ pytestmark = pytest.mark.slow  # e2e/replay file: driver-budget suite skips it (
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.dedup import lsh_candidate_pairs, minhash_bands
-from prod2vec_spark.queries_r6 import amplify_documents
+from prod2vec_spark.queries.common import amplify_documents
 from prod2vec_spark.sources.io import read_table
 from prod2vec_spark.streaming.first_presenter import read_decisions
 from prod2vec_spark.streaming.neardup import start_near_dedup_registry

@@ -180,10 +180,10 @@ def test_video_hash_fixture_matches_codec_chain(spark):
     → vhash_avi) produces — re-derived here for every sf0.01 doc_id,
     so the driver's full-hash oracle on the pair plane plus this gate
     together cover the whole original pipeline."""
-    from prod2vec_spark.queries_r9 import (
-        _video_fixture_path,
-        rendered_video_hashes,
+    from prod2vec_spark.queries.common import (
+        _video_vhash_fixture_path as _video_fixture_path,
     )
+    from prod2vec_spark.queries.media import rendered_video_hashes
     from prod2vec_spark.sources.io import read_table
     from tests.conftest import SF_ORACLE
 
@@ -221,7 +221,7 @@ def test_video_neardup_query_recovers_planted_families(spark):
     test_phash_neardup_query_recovers_planted_families."""
     import collections
 
-    from prod2vec_spark.queries_r9 import q_video_neardup
+    from prod2vec_spark.queries.media import q_video_neardup
     from prod2vec_spark.sources.io import read_table
     from tests.conftest import SF_SMOKE
 

@@ -13,11 +13,10 @@ def test_video_frame_fixture_matches_codec_chain(spark):
     decode+dHash) and the pure-Python recipe both match the fixture."""
     import duckdb
 
-    from prod2vec_spark.queries_r13 import (
-        _video_fixture_path,
-        frame_hash_rows,
-        rendered_frame_hashes,
+    from prod2vec_spark.queries.common import (
+        _video_frames_fixture_path as _video_fixture_path,
     )
+    from prod2vec_spark.queries.media import frame_hash_rows, rendered_frame_hashes
 
     sample_ids = list(range(0, 500, 37)) + [499]
     fx = duckdb.sql(

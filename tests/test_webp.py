@@ -429,7 +429,7 @@ def test_webp_crosscodec_neardup_query_self_audit(spark):
 
     import pyarrow.parquet as pq
 
-    from prod2vec_spark.queries_r15 import q_webp_crosscodec_neardup
+    from prod2vec_spark.queries.media import q_webp_crosscodec_neardup
     from tests.conftest import SF_SMOKE
 
     rows = q_webp_crosscodec_neardup(spark, SF_SMOKE).collect()

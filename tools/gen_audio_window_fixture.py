@@ -31,7 +31,7 @@ OUT = os.path.join(
 
 
 def _rows(doc_id: int):
-    from prod2vec_spark.queries_r13 import window_hash_rows
+    from prod2vec_spark.queries.media import window_hash_rows
 
     return window_hash_rows(doc_id)
 

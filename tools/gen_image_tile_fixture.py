@@ -33,7 +33,7 @@ def main() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from prod2vec_spark.queries_r12 import tile_hash_rows
+    from prod2vec_spark.queries.media import tile_hash_rows
 
     rows = [r for i in range(N_DOCS) for r in tile_hash_rows(i)]
     assert rows, "codec chain produced no tiles"

@@ -30,7 +30,7 @@ OUT = os.path.join(
 
 
 def _rows(doc_id: int):
-    from prod2vec_spark.queries_r13 import frame_hash_rows
+    from prod2vec_spark.queries.media import frame_hash_rows
 
     return frame_hash_rows(doc_id)
 

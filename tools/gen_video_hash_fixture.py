@@ -35,7 +35,7 @@ def main() -> None:
     import pyarrow.parquet as pq
 
     from prod2vec_spark.operators.phash import vhash_avi
-    from prod2vec_spark.queries_r9 import planted_clip
+    from prod2vec_spark.queries.media import planted_clip
 
     hashes = [vhash_avi(planted_clip(i)) for i in range(N_DOCS)]
     assert all(h is not None for h in hashes), "codec chain produced a NULL hash"
