@@ -185,33 +185,29 @@ class CorpusConfig:
     lm_gate: bool = False
     lm_drop_pct: float = 0.1
     lm_train_frac: float = 0.8
-    # round-12: smoothing family for the gate's bigram LM —
-    # "stupid_backoff" (Brants et al. 2007, the default) or
-    # "kneser_ney" (interpolated KN, Chen & Goodman 1998 — the
-    # continuation-count family; operators/lm.kn_perplexity).  Both
-    # share the md5-uniform split and the percentile-cut shape.
+    # smoothing family for the gate's LM — "stupid_backoff" (bigram,
+    # Brants et al. 2007, the default) or "kneser_ney" (interpolated
+    # KN, Chen & Goodman 1998 — the continuation-count family;
+    # operators/lm.fit_knn + score_docs_knn at lm_order).  Both share
+    # the md5-uniform split and the percentile-cut shape.
     lm_smoothing: str = "stupid_backoff"
-    # round-14 (VERDICT r13 ask #7): derive the KN absolute discount
-    # from the train split's counts-of-counts (Ney-Essen-Kneser
-    # D = n1/(n1+2·n2), operators/lm.estimate_discount) instead of the
-    # 0.75 default — one extra 1-row driver aggregate over the fitted
-    # pair table; only meaningful with lm_smoothing='kneser_ney'.
+    # derive the KN discounts from the fitted tables' counts-of-counts
+    # instead of the 0.75 default: at lm_order 2 one absolute D =
+    # n1/(n1+2·n2) (Ney-Essen-Kneser, operators/lm.estimate_discount);
+    # at lm_order >= 3 PER-LEVEL MODIFIED (D1, D2, D3+) triples
+    # (estimate_mkn_discounts, Chen & Goodman 1999 eq. 26) — bounded
+    # 1-row driver aggregates.  Only meaningful with 'kneser_ney'.
     lm_derive_discount: bool = False
-    # round-14: order of the KN gate's model — 2 (the bigram default)
-    # or >= 3 through the generic order-n chain (operators/lm.fit_knn;
-    # 5 = the production KenLM shape).  With lm_derive_discount, order
-    # >= 3 derives PER-LEVEL MODIFIED (D1, D2, D3+) triples from each
-    # level's counts-of-counts (estimate_mkn_discounts, Chen & Goodman
-    # 1999 eq. 26) — n-1 bounded 1-row aggregates.
+    # order of the KN gate's model — 2 (the bigram default) up to 5
+    # (the production KenLM shape).  Only meaningful with 'kneser_ney'.
     lm_order: int = 2
-    # round-15: per-level count floors for the order-n KN gate —
-    # KenLM's --prune semantic run END-TO-END in the DAG (the
-    # derived-discounts precedent): {level: min_count} floors applied
-    # via KNnModel.pruned before scoring; pruned probes back off
-    # through the same λ-chain as unseen grams, so the gate degrades
-    # gracefully while the persisted model shrinks where it is
+    # per-level count floors for the KN gate — KenLM's --prune
+    # semantic run END-TO-END in the DAG: {level: min_count} floors
+    # applied via KNnModel.pruned before scoring; pruned probes back
+    # off through the same λ-chain as unseen grams, so the gate
+    # degrades gracefully while the model shrinks where it is
     # actually big at web scale (the high-order tables).  None = full
-    # tables (the default).  Only meaningful at lm_order >= 3.
+    # tables (the default).  Only meaningful with 'kneser_ney'.
     lm_prune_min_counts: "dict[int, int] | None" = None
     # near-dup survivor policy: "min_id" (dedup_clusters default) or
     # "quality" (keep each cluster's best-quality member)
@@ -836,102 +832,68 @@ class CorpusCurationPipeline:
     # -- stage 2.5: LM perplexity gate (optional) ----------------------
     def lm_gate(self, docs: DataFrame) -> DataFrame:
         """Drop the highest-perplexity tail under a self-trained
-        bigram LM (operators/lm.py) — the KenLM-style fluency screen.
+        n-gram LM (operators/lm.py) — the KenLM-style fluency screen.
         The cut threshold is the (1 - lm_drop_pct) ppl percentile, a
         1-row aggregate broadcast back (same shape as the quality
         percentile — never a corpus-wide window).  cfg.lm_smoothing
         picks the smoothing family; both scorers emit the same
         (doc_id, ppl) contract."""
-        from prod2vec_spark.operators.lm import kn_perplexity, lm_perplexity
+        from prod2vec_spark.operators.lm import (
+            estimate_discount,
+            estimate_mkn_discounts,
+            fit_knn,
+            lm_perplexity,
+            score_docs_knn,
+            with_train_split,
+        )
 
-        if self.cfg.lm_smoothing != "kneser_ney" and (
-            self.cfg.lm_order != 2 or self.cfg.lm_derive_discount
+        cfg = self.cfg
+        if cfg.lm_smoothing != "kneser_ney" and (
+            cfg.lm_order != 2
+            or cfg.lm_derive_discount
+            or cfg.lm_prune_min_counts
         ):
             # silently running a different scorer than the options
             # describe would be the worst failure mode for a gate that
             # decides what enters the training corpus
             raise ValueError(
-                "lm_order / lm_derive_discount apply only to "
-                f"lm_smoothing='kneser_ney' (got {self.cfg.lm_smoothing!r})"
+                "lm_order / lm_derive_discount / lm_prune_min_counts "
+                "apply only to lm_smoothing='kneser_ney' "
+                f"(got {cfg.lm_smoothing!r})"
             )
-        if self.cfg.lm_prune_min_counts and (
-            self.cfg.lm_smoothing != "kneser_ney" or self.cfg.lm_order < 3
-        ):
-            # a silently-ignored prune config would be the same
-            # wrong-scorer failure mode as above
-            raise ValueError(
-                "lm_prune_min_counts applies only to the order-n KN "
-                "gate (lm_smoothing='kneser_ney', lm_order >= 3)"
-            )
-        if self.cfg.lm_smoothing == "kneser_ney" and self.cfg.lm_order >= 3:
-            # order-n chain (round 14): fit once at the configured
-            # order; with lm_derive_discount the per-LEVEL modified
-            # (D1, D2, D3+) triples come from each level's own
-            # counts-of-counts — n-1 bounded 1-row aggregates over
-            # the fitted tables, the estimate_mkn_discounts path
-            # exercised end-to-end
-            from prod2vec_spark.operators.lm import (
-                estimate_mkn_discounts,
-                fit_knn,
-                score_docs_knn,
-                with_train_split,
-            )
-
-            tagged = with_train_split(docs, self.cfg.lm_train_frac, seed="lm")
-            model = fit_knn(
-                tagged.where(F.col("is_train")), order=self.cfg.lm_order
-            )
-            if self.cfg.lm_prune_min_counts:
-                # round-15: the per-level count-floor scale control in
-                # the DAG path; discounts still derive from the FULL
-                # tables (the estimator needs unfloored counts-of-
-                # counts), the scoring probes hit the pruned ones
+        if cfg.lm_smoothing == "kneser_ney":
+            # fit once at the configured order; derived discounts are
+            # bounded 1-row aggregates over the fitted tables
+            tagged = with_train_split(docs, cfg.lm_train_frac, seed="lm")
+            model = fit_knn(tagged.where(F.col("is_train")), order=cfg.lm_order)
+            model_scored = model
+            if cfg.lm_prune_min_counts:
+                # discounts still derive from the FULL tables (the
+                # estimator needs unfloored counts-of-counts), the
+                # scoring probes hit the pruned ones
                 model_scored = model.pruned(
-                    min_count=self.cfg.lm_prune_min_counts.get(
-                        self.cfg.lm_order, 1
-                    ),
-                    min_counts=self.cfg.lm_prune_min_counts,
+                    min_count=cfg.lm_prune_min_counts.get(cfg.lm_order, 1),
+                    min_counts=cfg.lm_prune_min_counts,
                 )
+            if not cfg.lm_derive_discount:
+                rep = score_docs_knn(tagged, model_scored)
+            elif cfg.lm_order == 2:
+                d = estimate_discount(model.counts[2], "c2")
+                self._stage_notes["lm_derived_discount"] = d
+                rep = score_docs_knn(tagged, model_scored, discount=d)
             else:
-                model_scored = model
-            if self.cfg.lm_derive_discount:
                 discounts = {
                     k: estimate_mkn_discounts(model.counts[k], f"c{k}")
-                    for k in range(2, self.cfg.lm_order + 1)
+                    for k in range(2, cfg.lm_order + 1)
                 }
                 for k, tup in discounts.items():
                     self._stage_notes[f"lm_derived_d{k}"] = tup
                 rep = score_docs_knn(tagged, model_scored, discounts=discounts)
-            else:
-                rep = score_docs_knn(tagged, model_scored)
-        elif self.cfg.lm_smoothing == "kneser_ney":
-            if self.cfg.lm_derive_discount:
-                # derive D from the train split's counts-of-counts
-                # (estimate_discount is its own checked number): fit
-                # once, estimate, score with the fitted tables — the
-                # train-once path, so the estimate adds one bounded
-                # 1-row aggregate, not a re-derivation
-                from prod2vec_spark.operators.lm import (
-                    estimate_discount,
-                    fit_kn,
-                    score_docs_kn,
-                    with_train_split,
-                )
-
-                tagged = with_train_split(
-                    docs, self.cfg.lm_train_frac, seed="lm"
-                )
-                model = fit_kn(tagged.where(F.col("is_train")))
-                d = estimate_discount(model.c2, "c2")
-                self._stage_notes["lm_derived_discount"] = d
-                rep = score_docs_kn(tagged, model, discount=d)
-            else:
-                rep = kn_perplexity(docs, train_frac=self.cfg.lm_train_frac)
-        elif self.cfg.lm_smoothing == "stupid_backoff":
-            rep = lm_perplexity(docs, train_frac=self.cfg.lm_train_frac)
+        elif cfg.lm_smoothing == "stupid_backoff":
+            rep = lm_perplexity(docs, train_frac=cfg.lm_train_frac)
         else:
             raise ValueError(
-                f"unknown lm_smoothing {self.cfg.lm_smoothing!r} "
+                f"unknown lm_smoothing {cfg.lm_smoothing!r} "
                 "(expected 'stupid_backoff' or 'kneser_ney')"
             )
         # Round-16: materialize the narrow (doc_id, ppl) report ONCE —

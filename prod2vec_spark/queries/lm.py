@@ -646,15 +646,20 @@ register(q_packed_input_ids, _sql_packed_input_ids())
 
 def q_kn_perplexity(spark, sf_dir):
     """Per-document bigram perplexity under interpolated Kneser-Ney
-    smoothing (operators/lm.kn_perplexity) — the continuation-count
-    smoothing family next to the catalog's Stupid-Backoff entries;
-    same md5-uniform train split, same rounded (avg_nll, ppl)
-    contract."""
-    from prod2vec_spark.operators.lm import kn_perplexity
+    smoothing (operators/lm.knn_perplexity at order=2) — the
+    continuation-count smoothing family next to the catalog's
+    Stupid-Backoff entries; same md5-uniform train split, same rounded
+    (avg_nll, ppl) contract; n_unseen counts pairs absent from the
+    train bigram table."""
+    from prod2vec_spark.operators.lm import knn_perplexity
 
     docs = read_table(spark, sf_dir, "documents")
-    return kn_perplexity(
-        docs, train_frac=KN_TRAIN_FRAC, discount=KN_DISCOUNT, seed="lm"
+    return knn_perplexity(
+        docs, order=2, train_frac=KN_TRAIN_FRAC, discount=KN_DISCOUNT,
+        seed="lm",
+    ).select(
+        "doc_id", "is_train", F.col("n_grams").alias("n_pairs"),
+        F.col("n_bo").alias("n_unseen"), "avg_nll", "ppl",
     )
 
 
@@ -768,18 +773,47 @@ FROM sc GROUP BY doc_id, lang
 register(q_kn_by_lang, _sql_kn_by_lang())
 
 
+def _kn3_report(spark, sf_dir, discounts=None):
+    """Order-3 KN fit on the md5-uniform train split, every doc
+    scored: (doc_id, is_train, n_triples, n_bo1 — triples absent from
+    the trigram table —, n_bo2 — continuation bigram absent too —,
+    avg_nll, ppl), aggregated off operators/lm's per-gram rows.
+    ``discounts``: per-level modified triples; None = single D."""
+    from prod2vec_spark.operators.lm import (
+        _knn_gram_rows,
+        fit_knn,
+        with_train_split,
+    )
+
+    docs = read_table(spark, sf_dir, "documents")
+    tagged = with_train_split(docs, KN_TRAIN_FRAC, seed="lm")
+    model = fit_knn(tagged.where(F.col("is_train")), order=3)
+    c3_absent = F.col("c3").isNull()
+    return (
+        _knn_gram_rows(
+            tagged, model, discount=KN_DISCOUNT, discounts=discounts
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.max(F.col("is_train").cast("long")).alias("is_train"),
+            F.count(F.lit(1)).alias("n_triples"),
+            F.sum(c3_absent.cast("long")).alias("n_bo1"),
+            F.sum(
+                (c3_absent & F.col("c2").isNull()).cast("long")
+            ).alias("n_bo2"),
+            F.round(F.avg(-F.log("prob")), 4).alias("avg_nll"),
+            F.round(F.exp(F.avg(-F.log("prob"))), 4).alias("ppl"),
+        )
+    )
+
+
 def q_kn3_perplexity(spark, sf_dir):
     """Per-document TRIGRAM perplexity under interpolated Kneser-Ney
-    smoothing (operators/lm.kn3_perplexity) — the order-3 extension
+    smoothing (operators/lm order-3 chain) — the order-3 extension
     of the kn_perplexity entry: three-leg
     interpolation through continuation-count lower orders, same
     md5-uniform train split, same rounded (avg_nll, ppl) contract."""
-    from prod2vec_spark.operators.lm import kn3_perplexity
-
-    docs = read_table(spark, sf_dir, "documents")
-    return kn3_perplexity(
-        docs, train_frac=KN_TRAIN_FRAC, discount=KN_DISCOUNT, seed="lm"
-    )
+    return _kn3_report(spark, sf_dir)
 
 
 def _sql_kn3_perplexity() -> str:
@@ -982,19 +1016,8 @@ def q_kn3m_perplexity(spark, sf_dir):
     (Chen & Goodman 1999 §3: count-dependent discounts D1/D2/D3+ per
     level, λ reassigning exactly the removed mass through per-context
     count-of-count splits) — fit on the md5-uniform train split, score
-    every doc (operators/lm.fit_kn3 + score_docs_kn3(discounts3=…))."""
-    from prod2vec_spark.operators.lm import (
-        fit_kn3,
-        score_docs_kn3,
-        with_train_split,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    tagged = with_train_split(docs, KN_TRAIN_FRAC, seed="lm")
-    model = fit_kn3(tagged.where(F.col("is_train")))
-    return score_docs_kn3(
-        tagged, model, discounts3=KN3M_D3, discounts2=KN3M_D2
-    )
+    every doc (_kn3_report with per-level discount triples)."""
+    return _kn3_report(spark, sf_dir, {3: KN3M_D3, 2: KN3M_D2})
 
 
 def _sql_kn3m_perplexity() -> str:

@@ -53,6 +53,14 @@ def artifact_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def make_dirs(spark: SparkSession, dir_path: str) -> None:
+    """Create ``dir_path`` and its parents if absent (``mkdir -p``) on
+    whatever filesystem its scheme names — a ``file://`` URI lands at
+    its path, not as a relative ``file:`` directory in the cwd."""
+    fs, hpath = _fs_path(spark, dir_path)
+    fs.mkdirs(hpath)
+
+
 def list_artifacts(spark: SparkSession, dir_path: str) -> list[str]:
     """Names directly under ``dir_path`` (non-recursive)."""
     fs, hpath = _fs_path(spark, dir_path)

@@ -124,7 +124,7 @@ def expected_schema(name: str) -> T.StructType:
     return TABLES[name]
 
 
-def spread_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Scale-adaptive parallelism floor before expensive per-row work
     (optimization guide §2.5, input skew: "repartition immediately
     after the read").
@@ -146,7 +146,7 @@ def spread_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     a plain relational aggregate's map-side partial agg is cheaper
     than the repartition write, so those scans are left alone."""
     spark = df.sparkSession
-    n = min_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)

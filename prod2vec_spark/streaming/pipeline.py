@@ -44,6 +44,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from prod2vec_spark.sources.artifacts import make_dirs
 from prod2vec_spark.sources.io import read_partials
 from prod2vec_spark.streaming.events import (
     read_events_stream,
@@ -74,9 +75,7 @@ def _read_output(spark: SparkSession, path: str, schema: str) -> DataFrame:
     a normal state — not an error).  The declared schema makes the
     empty case a typed empty DataFrame instead of a schema-inference
     failure."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
+    make_dirs(spark, path)
     return spark.read.schema(schema).parquet(path)
 
 
@@ -126,11 +125,9 @@ class StreamingCurationPipeline:
 
     # -- stage 2: streaming sessionization ------------------------------
     def session_stage(self) -> None:
-        import os
-
         # stage 1 creates this dir only on its first commit; an empty
         # landing dir must still let stage 2 start (and drain nothing)
-        os.makedirs(self.cfg.deduped_dir, exist_ok=True)
+        make_dirs(self.spark, self.cfg.deduped_dir)
         deduped = self.spark.readStream.schema(_DEDUPED_SCHEMA).parquet(
             self.cfg.deduped_dir
         )
@@ -221,9 +218,9 @@ class StreamCorpusConfig:
     badwords_default_lang: "str | None" = None
     # round-14 (VERDICT r13 ask #6): the batch lm_gate's streaming
     # twin.  A BATCH-TRAINED model persisted at lm_model_dir (fit on
-    # the vetted archive — BigramLM / KNModel / KN3Model.save) scores
-    # each micro-batch of the exact-dedup output through the existing
-    # idempotent score streams (operators/lm.start_*_score_stream);
+    # the vetted archive — BigramLM.save or KNnModel.save at any
+    # order) scores each micro-batch of the exact-dedup output with
+    # the batch scorer (operators/lm.score_docs / score_docs_knn);
     # docs whose ppl exceeds lm_max_ppl — or that are too short to
     # score, the batch gate's semi-join semantic — drop at curated()
     # time.  The threshold is FROZEN config (the percentile computed
@@ -241,16 +238,13 @@ class StreamCorpusConfig:
     stats_count_fn: "object | None" = None
     lm_gate: bool = False
     lm_model_dir: str | None = None
-    # 'stupid_backoff' | 'kneser_ney' (bigram) | 'kneser_ney3'
-    # (trigram) | 'kneser_ney_n' (generic order-n at lm_model_order)
-    lm_smoothing: str = "kneser_ney3"
+    # 'stupid_backoff' (BigramLM) | 'kneser_ney' (KNnModel, at the
+    # order its saved meta records)
+    lm_smoothing: str = "kneser_ney"
     lm_max_ppl: float = float("inf")
     lm_discount: float | None = None  # None = operators/lm.DEFAULT_DISCOUNT
-    # optional modified-KN discount triples for the trigram scorer
-    lm_discounts3: "tuple[float, float, float] | None" = None
-    lm_discounts2: "tuple[float, float, float] | None" = None
-    # order + optional per-level modified triples for 'kneser_ney_n'
-    lm_model_order: int = 5
+    # optional per-level modified-KN (D1, D2, D3+) triples, levels
+    # 2..order — replaces the single lm_discount when set
     lm_discounts_n: "dict[int, tuple] | None" = None
     # round-15 (VERDICT r14 ask #8): streaming benchmark
     # decontamination — the batch decontaminate stage's streaming
@@ -454,15 +448,13 @@ class StreamingCorpusPipeline:
         self._start_neardup().awaitTermination()
 
     def _start_neardup(self):
-        import os
-
         from prod2vec_spark.streaming.neardup import start_near_dedup_registry
 
         # with the LM gate on, first-presenter ownership is decided
         # among GATE SURVIVORS (the batch lm_gate → near_dedup order);
         # otherwise over the exact-dedup output as before
         src = self.cfg.lmkept_dir if self.cfg.lm_gate else self.cfg.exact_dir
-        os.makedirs(src, exist_ok=True)
+        make_dirs(self.spark, src)
         survivors = self._spread_stream(
             self.spark.readStream.schema(_EXACT_SCHEMA).parquet(src), src
         )
@@ -514,27 +506,8 @@ class StreamingCorpusPipeline:
             if self.cfg.lm_discount is None
             else self.cfg.lm_discount
         )
-        if self.cfg.lm_smoothing == "kneser_ney3":
-            model = LM.KN3Model.load(self.spark, self.cfg.lm_model_dir)
-            return (
-                lambda df: LM.score_docs_kn3(
-                    df, model, discount=d,
-                    discounts3=self.cfg.lm_discounts3,
-                    discounts2=self.cfg.lm_discounts2,
-                ),
-                model,
-            )
         if self.cfg.lm_smoothing == "kneser_ney":
-            model = LM.KNModel.load(self.spark, self.cfg.lm_model_dir)
-            return (
-                lambda df: LM.score_docs_kn(df, model, discount=d),
-                model,
-            )
-        if self.cfg.lm_smoothing == "kneser_ney_n":
-            model = LM.KNnModel.load(
-                self.spark, self.cfg.lm_model_dir,
-                order=self.cfg.lm_model_order,
-            )
+            model = LM.KNnModel.load(self.spark, self.cfg.lm_model_dir)
             return (
                 lambda df: LM.score_docs_knn(
                     df, model, discount=d, discounts=self.cfg.lm_discounts_n
@@ -546,8 +519,7 @@ class StreamingCorpusPipeline:
             return (lambda df: LM.score_docs(df, model), model)
         raise ValueError(
             f"unknown lm_smoothing {self.cfg.lm_smoothing!r} (expected "
-            "'stupid_backoff', 'kneser_ney', 'kneser_ney3' or "
-            "'kneser_ney_n')"
+            "'stupid_backoff' or 'kneser_ney')"
         )
 
     def lm_stage(self) -> None:
@@ -566,12 +538,10 @@ class StreamingCorpusPipeline:
         self._start_lm().awaitTermination()
 
     def _start_lm(self):
-        import os
-
         from pyspark.sql import functions as F
 
         score_fn, _ = self._lm_scorer()
-        os.makedirs(self.cfg.exact_dir, exist_ok=True)
+        make_dirs(self.spark, self.cfg.exact_dir)
         stream = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
             self.cfg.exact_dir
         )
@@ -616,8 +586,6 @@ class StreamingCorpusPipeline:
         self._start_decon().awaitTermination()
 
     def _start_decon(self):
-        import os
-
         from pyspark.sql import functions as F
 
         from prod2vec_spark.operators.decontam import (
@@ -633,7 +601,7 @@ class StreamingCorpusPipeline:
             .select("doc_id", "text")
             .withColumn("is_bench", F.lit(True))
         )
-        os.makedirs(self.cfg.exact_dir, exist_ok=True)
+        make_dirs(self.spark, self.cfg.exact_dir)
         stream = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
             self.cfg.exact_dir
         )
@@ -707,8 +675,6 @@ class StreamingCorpusPipeline:
         self._start_token_stats().awaitTermination()
 
     def _start_token_stats(self):
-        import os
-
         from pyspark.sql import functions as F
 
         from prod2vec_spark.operators.text import tokens as _ws_tokens
@@ -716,7 +682,7 @@ class StreamingCorpusPipeline:
         cf = self.cfg.stats_count_fn or (
             lambda c: F.size(_ws_tokens(c)).cast("long")
         )
-        os.makedirs(self.cfg.exact_dir, exist_ok=True)
+        make_dirs(self.spark, self.cfg.exact_dir)
         stream = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
             self.cfg.exact_dir
         )

@@ -1,20 +1,31 @@
-"""Interpolated Kneser-Ney bigram scoring (round 12,
-operators/lm.kn_perplexity) — hand-computed probabilities, the
-unseen-left fallback, the continuation-count property that motivates
-KN, and validation errors."""
+"""Kneser-Ney scoring through the one order-n model
+(operators/lm.KNnModel / fit_knn / score_docs_knn / knn_perplexity) —
+hand-computed probabilities at orders 2, 3 and 5, the unseen-left
+fallback, the continuation-count property that motivates KN, modified
+discounts, pruning, persistence and validation errors.  The tiny
+in-memory hand-computed cases run in the default suite; the ones that
+read a corpus or only re-check a property are slow."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
-
-pytestmark = pytest.mark.slow  # e2e/replay file: driver-budget suite skips it (conftest hook)
 from pyspark.sql import functions as F
 
-from prod2vec_spark.operators.lm import kn_perplexity
+from prod2vec_spark.operators.lm import (
+    _knn_gram_rows,
+    fit_knn,
+    knn_perplexity,
+    score_docs_knn,
+)
 
 D = 0.75
+
+
+def _bigram_kn(tagged, **kw):
+    """Self-trained interpolated bigram KN over a tagged frame."""
+    return knn_perplexity(tagged, order=2, tagged=tagged, **kw)
 
 
 def test_kn_hand_computed_probabilities(spark):
@@ -27,16 +38,14 @@ def test_kn_hand_computed_probabilities(spark):
         [(1, "a b a b", True), (2, "b b zz", False)],
         "doc_id long, text string, is_train boolean",
     )
-    out = {
-        r["doc_id"]: r for r in kn_perplexity(tagged, tagged=tagged).collect()
-    }
+    out = {r["doc_id"]: r for r in _bigram_kn(tagged).collect()}
     r2 = out[2]
     assert r2["is_train"] == 0
-    assert r2["n_unseen"] == r2["n_pairs"] == 2
+    assert r2["n_bo"] == r2["n_grams"] == 2
     assert r2["avg_nll"] == round(-(math.log(0.3) + math.log(0.15)) / 2, 4)
     # doc 1: (a,b)=1.25/2+0.375·0.4=0.775 twice, (b,a)=0.25+0.75·0.4=0.55
     r1 = out[1]
-    assert r1["n_unseen"] == 0
+    assert r1["n_bo"] == 0
     assert r1["avg_nll"] == round(
         -(2 * math.log(0.775) + math.log(0.55)) / 3, 4
     )
@@ -50,15 +59,14 @@ def test_kn_unseen_left_context_falls_to_continuation(spark):
         [(1, "a b a b", True), (2, "qq b", False), (3, "qq zz", False)],
         "doc_id long, text string, is_train boolean",
     )
-    out = {
-        r["doc_id"]: r for r in kn_perplexity(tagged, tagged=tagged).collect()
-    }
+    out = {r["doc_id"]: r for r in _bigram_kn(tagged).collect()}
     # pcont(b) = 0.4, pcont(zz) = 0.2 (hand computation above)
     assert out[2]["avg_nll"] == round(-math.log(0.4), 4)
     assert out[3]["avg_nll"] == round(-math.log(0.2), 4)
     assert all(math.isfinite(r["ppl"]) for r in out.values())
 
 
+@pytest.mark.slow
 def test_kn_continuation_beats_raw_frequency(spark):
     """The KN insight ('Francisco'): equal raw frequency, different
     context diversity — the token continuing MANY contexts gets the
@@ -75,23 +83,25 @@ def test_kn_continuation_beats_raw_frequency(spark):
         ],
         "doc_id long, text string, is_train boolean",
     )
-    out = {
-        r["doc_id"]: r for r in kn_perplexity(tagged, tagged=tagged).collect()
-    }
+    out = {r["doc_id"]: r for r in _bigram_kn(tagged).collect()}
     assert out[3]["avg_nll"] < out[2]["avg_nll"]
 
 
+@pytest.mark.slow
 def test_kn_validation_errors(spark):
-    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    docs = spark.createDataFrame(
+        [(1, "a b", True)], "doc_id long, text string, is_train boolean"
+    )
     with pytest.raises(ValueError, match="discount"):
-        kn_perplexity(docs, discount=1.5)
+        _bigram_kn(docs, discount=1.5)
     empty = spark.createDataFrame(
         [(1, "solo", False)], "doc_id long, text string, is_train boolean"
     )
-    with pytest.raises(ValueError, match="no bigrams"):
-        kn_perplexity(empty, tagged=empty)
+    with pytest.raises(ValueError, match="no 2-grams"):
+        _bigram_kn(empty)
 
 
+@pytest.mark.slow
 def test_kn_by_lang_models_are_independent(spark):
     """Per-language KN: the same pair scores differently under two
     languages' different count tables; a language with no training
@@ -137,73 +147,25 @@ def test_kn_by_lang_models_are_independent(spark):
         ],
         "doc_id long, text string, lang string, is_train boolean",
     )
-    from prod2vec_spark.operators.lm import kn_perplexity
-
-    en = kn_perplexity(
-        tagged2.where(F.col("lang") == "en"),
-        tagged=tagged2.where(F.col("lang") == "en"),
-    )
-    de = kn_perplexity(
-        tagged2.where(F.col("lang") == "de"),
-        tagged=tagged2.where(F.col("lang") == "de"),
-    )
+    en = _bigram_kn(tagged2.where(F.col("lang") == "en"))
+    de = _bigram_kn(tagged2.where(F.col("lang") == "de"))
     ppl_en = {r["doc_id"]: r["ppl"] for r in en.collect()}[12]
     ppl_de = {r["doc_id"]: r["ppl"] for r in de.collect()}[13]
     assert ppl_en != ppl_de  # same text, different per-lang model
 
 
-def test_kn_fit_score_split_matches_self_trained(spark, tmp_path):
-    """The production path (fit_kn → KNModel.save → load →
-    score_docs_kn) reproduces the self-trained kn_perplexity output
-    row-for-row on the same split — and the pruned model degrades a
-    pruned pair to the λ·P_cont leg while keeping every score finite
-    (totals/continuation stats unchanged, the BigramLM.pruned
-    contract)."""
-    from prod2vec_spark.operators.lm import (
-        KNModel,
-        fit_kn,
-        kn_perplexity,
-        score_docs_kn,
-        with_train_split,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(
-            ["a b a b c", "b c b a", "a a a b", "c b a", "zz b a c"]
-        )],
-        "doc_id long, text string",
-    )
-    tagged = with_train_split(docs, 0.6, seed="kn-split")
-    want = sorted(
-        map(tuple, kn_perplexity(docs, tagged=tagged).collect())
-    )
-    model = fit_kn(tagged.where(F.col("is_train")))
-    model.save(str(tmp_path / "kn"))
-    loaded = KNModel.load(spark, str(tmp_path / "kn"))
-    got = sorted(map(tuple, score_docs_kn(tagged, loaded).collect()))
-    assert got == want
-
-    # pruning: a floor above every count empties c2 → every pair is
-    # 'unseen', scores stay finite via the continuation leg
-    hard = loaded.pruned(min_count=10_000)
-    rows = score_docs_kn(tagged, hard).collect()
-    assert rows and all(r["n_unseen"] == r["n_pairs"] for r in rows)
-    assert all(math.isfinite(r["avg_nll"]) for r in rows)
-    with pytest.raises(ValueError, match="no bigrams"):
-        fit_kn(docs.where(F.lit(False)))
-
-
+@pytest.mark.slow
 def test_kn_corpus_scoring_finite(spark):
     from tests.conftest import SF_SMOKE
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    rows = kn_perplexity(docs).collect()
+    rows = knn_perplexity(docs, order=2).collect()
     assert rows
     held = [r for r in rows if r["is_train"] == 0]
     assert held, "split should leave held-out docs at sf0.001"
     for r in rows:
         assert r["ppl"] >= 1.0 and math.isfinite(r["avg_nll"])
-        assert r["n_unseen"] <= r["n_pairs"]
+        assert r["n_bo"] <= r["n_grams"]
     # sanity vs the Stupid-Backoff twin: same doc coverage
     from prod2vec_spark.operators.lm import lm_perplexity
 
@@ -211,7 +173,28 @@ def test_kn_corpus_scoring_finite(spark):
     assert sb.count() == len(rows)
 
 
-# ------------------------------------------ round-13: trigram KN
+# ------------------------------------------------------- order 3
+def _trigram_report(docs, model, **kw):
+    """doc_id -> (avg_nll, ppl, n_bo1 — triples absent from the
+    trigram table —, n_bo2 — continuation bigram absent too), off the
+    per-gram rows score_docs_knn aggregates."""
+    c3_absent = F.col("c3").isNull()
+    rows = (
+        _knn_gram_rows(docs, model, **kw)
+        .groupBy("doc_id")
+        .agg(
+            F.round(F.avg(-F.log("prob")), 4).alias("avg_nll"),
+            F.round(F.exp(F.avg(-F.log("prob"))), 4).alias("ppl"),
+            F.sum(c3_absent.cast("long")).alias("n_bo1"),
+            F.sum((c3_absent & F.col("c2").isNull()).cast("long")).alias(
+                "n_bo2"
+            ),
+        )
+        .collect()
+    )
+    return {r["doc_id"]: r for r in rows}
+
+
 def test_kn3_hand_computed_three_leg_chain(spark):
     """VERDICT r12 ask #3's 'hand-computed three-leg chain': train
     'a b c a b c' + 'a b d' → c3={(a,b,c):2,(b,c,a):1,(c,a,b):1,
@@ -222,17 +205,13 @@ def test_kn3_hand_computed_three_leg_chain(spark):
     P3=1.25/3+(0.75·2/3)·7/24=9/16.  Held-out (b,c,d): triple AND
     continuation bigram unseen but ctx(b,c) exists → P2=0+0.75·2/9=1/6,
     P3=0+0.75·1/6=1/8.  Held-out (d,d,d): no ctx, no mid → P1=2/9."""
-    from prod2vec_spark.operators.lm import kn3_perplexity
-
     tagged = spark.createDataFrame(
         [(1, "a b c a b c", True), (2, "a b d", True),
          (3, "a b c", False), (4, "b c d", False), (5, "d d d", False)],
         "doc_id long, text string, is_train boolean",
     )
-    out = {
-        r["doc_id"]: r
-        for r in kn3_perplexity(tagged, discount=0.75, tagged=tagged).collect()
-    }
+    model = fit_knn(tagged.where(F.col("is_train")), order=3)
+    out = _trigram_report(tagged, model, discount=0.75)
     assert out[3]["avg_nll"] == round(-math.log(9 / 16), 4)
     assert out[3]["n_bo1"] == 0 and out[3]["n_bo2"] == 0
     assert out[4]["avg_nll"] == round(-math.log(1 / 8), 4)
@@ -246,58 +225,22 @@ def test_kn3_hand_computed_three_leg_chain(spark):
     both = tagged.unionByName(short)
     assert 9 not in {
         r["doc_id"]
-        for r in kn3_perplexity(both, discount=0.75, tagged=both).collect()
+        for r in score_docs_knn(both, model, discount=0.75).collect()
     }
 
 
-def test_kn3_fit_score_split_matches_self_trained(spark, tmp_path):
-    """The train-once/score-many contract at order 3: fit_kn3 +
-    score_docs_kn3 reproduce kn3_perplexity bit-for-bit on the same
-    split, and a save/load roundtrip through parquet changes nothing
-    (the KNModel pattern)."""
-    from prod2vec_spark.operators.lm import (
-        KN3Model,
-        fit_kn3,
-        kn3_perplexity,
-        score_docs_kn3,
-    )
-    from prod2vec_spark.sources.io import read_table
-    from tests.conftest import SF_SMOKE
-
-    docs = read_table(spark, SF_SMOKE, "documents").limit(120)
-    from prod2vec_spark.operators.lm import with_train_split
-
-    tagged = with_train_split(docs, 0.8, seed="lm")
-    want = {
-        r["doc_id"]: r.asDict()
-        for r in kn3_perplexity(docs, tagged=tagged).collect()
-    }
-    model = fit_kn3(tagged.where(F.col("is_train")))
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(tagged, model).collect()
-    }
-    assert got == want
-    model.save(str(tmp_path / "kn3"))
-    loaded = KN3Model.load(spark, str(tmp_path / "kn3"))
-    got2 = {
-        r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(tagged, loaded).collect()
-    }
-    assert got2 == want
-
-
+@pytest.mark.slow
 def test_kn3_discount_estimated_from_counts_of_counts(spark):
     """Ney-Essen-Kneser D = n1/(n1+2·n2) as a CHECKED number: the toy
     c3 table has n1=3 singletons and n2=1 doubleton → D = 3/5; a
     singleton-free table falls back to the standard 0.75."""
-    from prod2vec_spark.operators.lm import estimate_discount, fit_kn3
+    from prod2vec_spark.operators.lm import estimate_discount
 
     train = spark.createDataFrame(
         [(1, "a b c a b c"), (2, "a b d")], "doc_id long, text string"
     )
-    model = fit_kn3(train)
-    assert estimate_discount(model.c3, "c3") == pytest.approx(0.6)
+    model = fit_knn(train, order=3)
+    assert estimate_discount(model.counts[3], "c3") == pytest.approx(0.6)
     one_singleton = spark.createDataFrame(
         [(1, 1), (2, 2), (3, 2)], "k long, c3 long"
     )
@@ -308,92 +251,87 @@ def test_kn3_discount_estimated_from_counts_of_counts(spark):
     assert estimate_discount(no_singletons, "c3") == 0.75  # fallback
 
 
+@pytest.mark.slow
 def test_kn3_pruned_keeps_interpolation_mass(spark):
     """Pruning the trigram table floors the discounted numerator but
     keeps the λ·P2 leg (stats computed over full training mass): a
     pruned singleton scores exactly its interpolation legs."""
-    from prod2vec_spark.operators.lm import fit_kn3, score_docs_kn3
-
     train = spark.createDataFrame(
         [(1, "a b c a b c"), (2, "a b d")], "doc_id long, text string"
     )
-    model = fit_kn3(train).pruned(min_count=2)
+    model = fit_knn(train, order=3).pruned(min_count=2)
     test = spark.createDataFrame([(7, "a b d")], "doc_id long, text string")
-    r = score_docs_kn3(test, model, discount=0.75).first()
+    r = score_docs_knn(test, model, discount=0.75).first()
     # (a,b,d): c3 pruned -> numerator 0, ctx/mid/r3 intact:
     # P1(d)=2/9, P2(b,d)=0.25/2+0.75·2/9 = 7/24... wait c2p(b,d)=1:
     # P2 = max(1-.75,0)/2 + (.75·2/2)·(2/9) = 1/8 + 1/6 = 7/24
     # P3 = 0/3 + (.75·2/3)·(7/24) = 7/48
-    assert r["n_bo1"] == 1  # pruned triple counts as backed-off
+    assert r["n_bo"] == 1  # pruned triple counts as backed-off
     assert r["avg_nll"] == round(-math.log(7 / 48), 4)
 
 
+@pytest.mark.slow
 def test_kn3_validation_errors(spark):
-    from prod2vec_spark.operators.lm import fit_kn3, kn3_perplexity, score_docs_kn3
-
     docs = spark.createDataFrame(
         [(1, "a b c", True)], "doc_id long, text string, is_train boolean"
     )
     with pytest.raises(ValueError, match="discount"):
-        kn3_perplexity(docs, discount=1.5, tagged=docs)
+        knn_perplexity(docs, order=3, discount=1.5, tagged=docs)
     short = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="no trigrams"):
-        fit_kn3(short)
+    with pytest.raises(ValueError, match="no 3-grams"):
+        fit_knn(short, order=3)
 
 
-# ------------------------------------- round-13: MODIFIED Kneser-Ney
+# ------------------------------------------ MODIFIED Kneser-Ney
 def test_mkn_hand_computed_probabilities(spark):
     """Chen & Goodman 1999 §3 with pinned discounts d3=(0.5,1.1,1.6),
     d2=(0.4,0.9,1.3) on a corpus with mixed counts (c3: 4,3,3,1,1):
     held-out (a,b,c) → num=(4−D3+)/5=0.48, λ12=(0.5·1+1.6·1)/5=0.42,
     P2(b,c)=(1−0.4)/2+0.4·P1(c)=0.38 with P1(c)=2/10 → P3=0.6396;
     held-out (b,c,d) → (1−0.5)/4 + (2.1/4)·(0.3+0.4·0.3) = 0.3455."""
-    import math
-
-    from prod2vec_spark.operators.lm import fit_kn3, score_docs_kn3
-
     train = spark.createDataFrame(
         [(1, "a b c a b c a b c"), (2, "a b d"), (3, "b c a b c d")],
         "doc_id long, text string",
     )
-    model = fit_kn3(train)
+    model = fit_knn(train, order=3)
     test = spark.createDataFrame(
         [(7, "a b c"), (8, "b c d")], "doc_id long, text string"
     )
     out = {
         r["doc_id"]: r
-        for r in score_docs_kn3(
+        for r in score_docs_knn(
             test, model,
-            discounts3=(0.5, 1.1, 1.6), discounts2=(0.4, 0.9, 1.3),
+            discounts={3: (0.5, 1.1, 1.6), 2: (0.4, 0.9, 1.3)},
         ).collect()
     }
     assert out[7]["avg_nll"] == round(-math.log(0.6396), 4)
     assert out[8]["avg_nll"] == round(-math.log(0.3455), 4)
-    assert out[8]["n_bo1"] == 0  # (b,c,d) IS in the trigram table
+    assert out[8]["n_bo"] == 0  # (b,c,d) IS in the trigram table
 
 
+@pytest.mark.slow
 def test_mkn_uniform_discounts_reduce_to_single_d(spark):
     """With D1=D2=D3+=D the modified formula reduces to the single-D
     form — equal rounded outputs on a real corpus slice."""
-    from prod2vec_spark.operators.lm import fit_kn3, score_docs_kn3
     from prod2vec_spark.sources.io import read_table
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents").limit(150)
-    model = fit_kn3(docs)
+    model = fit_knn(docs, order=3)
     single = {
         r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(docs, model, discount=0.75).collect()
+        for r in score_docs_knn(docs, model, discount=0.75).collect()
     }
     uniform = {
         r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(
-            docs, model, discounts3=(0.75,) * 3, discounts2=(0.75,) * 3
+        for r in score_docs_knn(
+            docs, model, discounts={3: (0.75,) * 3, 2: (0.75,) * 3}
         ).collect()
     }
     assert uniform == single
 
 
+@pytest.mark.slow
 def test_mkn_discounts_estimated_from_counts_of_counts(spark):
     """Chen & Goodman eq. 26 as checked numbers: counts
     [1,1,1,1,2,2,2,3,3,4,4] → n1..n4 = 4,3,2,2 → Y=0.4, D1=0.4,
@@ -411,48 +349,29 @@ def test_mkn_discounts_estimated_from_counts_of_counts(spark):
     assert estimate_mkn_discounts(no_n2, "c") == (0.75, 0.75, 0.75)
 
 
+@pytest.mark.slow
 def test_mkn_validation_errors(spark):
-    from prod2vec_spark.operators.lm import (
-        KN3Model,
-        fit_kn3,
-        score_docs_kn3,
-    )
-
     docs = spark.createDataFrame(
         [(1, "a b c d e")], "doc_id long, text string"
     )
-    model = fit_kn3(docs)
-    with pytest.raises(ValueError, match="BOTH"):
-        score_docs_kn3(docs, model, discounts3=(0.5, 1.1, 1.6))
+    model = fit_knn(docs, order=3)
+    with pytest.raises(ValueError, match="discounts for levels"):
+        score_docs_knn(docs, model, discounts={3: (0.5, 1.1, 1.6)})
     with pytest.raises(ValueError, match=">= 0"):
-        score_docs_kn3(
-            docs, model, discounts3=(-0.1, 1, 1), discounts2=(0.4, 0.9, 1.3)
-        )
-    # a legacy model without the count-of-count splits refuses loudly
-    legacy = KN3Model(
-        model.c3,
-        model.ctx.select("w1", "w2", "den12", "n1p_ctx"),
-        model.c2p,
-        model.mid.select("w2", "den2p", "n1p_mid"),
-        model.r3,
-        model.totals,
-    )
-    with pytest.raises(ValueError, match="count-of-count"):
-        score_docs_kn3(
-            docs, legacy,
-            discounts3=(0.5, 1.1, 1.6), discounts2=(0.4, 0.9, 1.3),
+        score_docs_knn(
+            docs, model,
+            discounts={3: (-0.1, 1, 1), 2: (0.4, 0.9, 1.3)},
         )
 
 
-# ------------------------------------- round-14: order-n Kneser-Ney
+# ------------------------------------------------------- order n
+@pytest.mark.slow
 def test_knn_hand_computed_five_leg_chain(spark):
     """VERDICT r13 ask #3's hand-computed chain at ORDER 5: train
     'a b c d e a b c d e' + 'a b c d f' → c5={abcde:2, bcdea:1,
     cdeab:1, deabc:1, eabcd:1, abcdf:1}; every continuation count at
     levels 4/3/2 is 1; types₂=6, V=6 → P1(seen)=2/13.  Modified
     discounts (0.4, 0.9, 1.3) at every level."""
-    from prod2vec_spark.operators.lm import knn_perplexity
-
     D = (0.4, 0.9, 1.3)
     tagged = spark.createDataFrame(
         [
@@ -504,52 +423,32 @@ def test_knn_hand_computed_five_leg_chain(spark):
     }
 
 
-def test_knn_order3_reduces_to_kn3(spark):
-    """The generic order-n chain at order=3 agrees with the hand-shaped
-    kn3 twins — single-D vs kn3_perplexity AND modified vs
-    score_docs_kn3(discounts3/discounts2) — on rounded avg_nll/ppl per
-    document (same association order by construction)."""
-    from prod2vec_spark.operators.lm import (
-        fit_kn3,
-        kn3_perplexity,
-        knn_perplexity,
-        score_docs_kn3,
-        with_train_split,
+def test_knn_load_reads_order_from_meta(spark, tmp_path):
+    """KNnModel.load without an order reads it from the saved meta
+    and reproduces the in-memory model's scores; an order that
+    disagrees with meta still raises."""
+    from prod2vec_spark.operators.lm import KNnModel
+
+    train = spark.createDataFrame(
+        [(1, "a b c a b c"), (2, "a b d")], "doc_id long, text string"
     )
-    from prod2vec_spark.sources.io import read_table
-    from tests.conftest import SF_SMOKE
-
-    docs = read_table(spark, SF_SMOKE, "documents").limit(100)
-    tagged = with_train_split(docs, 0.8, seed="lm")
-    want = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"], r["n_triples"], r["n_bo1"])
-        for r in kn3_perplexity(docs, tagged=tagged).collect()
-    }
-    got = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"], r["n_grams"], r["n_bo"])
-        for r in knn_perplexity(docs, order=3, tagged=tagged).collect()
-    }
-    assert got == want
-    d3, d2 = (0.5, 1.1, 1.6), (0.4, 0.9, 1.3)
-    model = fit_kn3(tagged.where(F.col("is_train")))
-    want_m = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"])
-        for r in score_docs_kn3(
-            tagged, model, discounts3=d3, discounts2=d2
-        ).collect()
-    }
-    got_m = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"])
-        for r in knn_perplexity(
-            docs, order=3, discounts={3: d3, 2: d2}, tagged=tagged
-        ).collect()
-    }
-    assert got_m == want_m
+    test = spark.createDataFrame(
+        [(3, "a b c"), (4, "b c d"), (5, "d d d")], "doc_id long, text string"
+    )
+    model = fit_knn(train, order=3)
+    want = sorted(map(tuple, score_docs_knn(test, model).collect()))
+    model.save(str(tmp_path / "kn3"))
+    loaded = KNnModel.load(spark, str(tmp_path / "kn3"))
+    assert loaded.order == 3
+    assert sorted(map(tuple, score_docs_knn(test, loaded).collect())) == want
+    with pytest.raises(ValueError, match="saved at order 3"):
+        KNnModel.load(spark, str(tmp_path / "kn3"), order=2)
 
 
+@pytest.mark.slow
 def test_knn_save_load_roundtrip(spark, tmp_path):
     """fit_knn → save → load → score reproduces the in-memory model's
-    scores exactly (the KNModel persistence contract at order 4)."""
+    scores exactly (the persistence contract at order 4)."""
     from prod2vec_spark.operators.lm import (
         KNnModel,
         fit_knn,
@@ -575,6 +474,7 @@ def test_knn_save_load_roundtrip(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_knn_validation_errors(spark):
     from prod2vec_spark.operators.lm import (
         KNnModel,
@@ -600,9 +500,10 @@ def test_knn_validation_errors(spark):
         knn_perplexity(docs, order=3, discount=1.5, tagged=docs)
 
 
+@pytest.mark.slow
 def test_knn_pruned_keeps_interpolation_mass(spark):
     """KNnModel.pruned floors the top-level numerator but keeps the
-    interpolation legs (the KN3Model convention): a pruned singleton
+    interpolation legs: a pruned singleton
     5-gram scores exactly its λ-chain, and n_bo counts it as
     backed off."""
     from prod2vec_spark.operators.lm import fit_knn, score_docs_knn
@@ -632,6 +533,7 @@ def test_knn_pruned_keeps_interpolation_mass(spark):
     assert r_pruned["avg_nll"] == round(-math.log(p5), 4)
 
 
+@pytest.mark.slow
 def test_knn_bigram_broadcast_flag_row_identical(spark):
     """The pair-keyed level-2 count table is a shuffle join by default
     (corpus-sized at web scale — VERDICT r14 'What's wrong' #1);
@@ -674,6 +576,7 @@ def test_knn_bigram_broadcast_flag_row_identical(spark):
     assert len(hint_targets(bcast_side)) == len(hint_targets(shuffle_side)) + 1
 
 
+@pytest.mark.slow
 def test_knn_pruned_min_count_survives_save_load(spark, tmp_path):
     """ADVICE r14: a pruned() model written to disk must be
     distinguishable from a full fit at load time — meta records the
@@ -696,6 +599,7 @@ def test_knn_pruned_min_count_survives_save_load(spark, tmp_path):
     assert loaded_f.min_count is None
 
 
+@pytest.mark.slow
 def test_knn_per_level_pruning_backs_off_gracefully(spark):
     """Round-15 scale control (VERDICT r14 'missing' #5): per-LEVEL
     count floors — a pruned level-k probe must score exactly like a
@@ -735,6 +639,7 @@ def test_knn_per_level_pruning_backs_off_gracefully(spark):
     assert pruned.min_count == 1
 
 
+@pytest.mark.slow
 def test_knn_per_level_floors_persist_and_no_implicit_top(spark, tmp_path):
     """ADVICE r15: (a) the FULL {level: floor} map survives save/load
     — a model floored at level 3 must not round-trip indistinguishable

@@ -278,3 +278,20 @@ def test_events_footer_sniff_reads_file_uri(spark, events_dir, tmp_path):
     for path in (str(empty), empty.as_uri()):
         with pytest.raises(FileNotFoundError):
             _events_ts_is_nanos_long(path)
+
+
+def test_stage_output_dir_created_through_file_uri(spark, tmp_path, monkeypatch):
+    """A not-yet-committed stage directory given as a ``file://`` URI
+    is created through the Hadoop FS API: the read returns the typed
+    empty frame (as the plain path does) and no relative ``file:``
+    directory appears in the working directory."""
+    from prod2vec_spark.streaming.pipeline import _read_output
+
+    monkeypatch.chdir(tmp_path)
+    for path in (tmp_path / "plain_out", tmp_path / "stage" / "uri_out"):
+        arg = str(path) if path.name == "plain_out" else path.as_uri()
+        df = _read_output(spark, arg, "doc_id long")
+        assert df.count() == 0
+        assert df.schema.simpleString() == "struct<doc_id:bigint>"
+        assert path.is_dir()
+    assert not (tmp_path / "file:").exists()
