@@ -104,7 +104,15 @@ def fit_quality_classifier(
         maxIter=max_iter,
         regParam=reg_param,
     )
-    return lr.fit(data)
+    model = lr.fit(data)
+    # Drop the training summary, which nothing reads.  Spark's binary
+    # LR summary keeps a non-transient SparkSession field and
+    # model.transform's UDF captures the whole model, so every scoring
+    # task would serialize the session — and once the session has run
+    # an observe() its ObservationManager rides along and the task
+    # fails with "Task not serializable".
+    model._java_obj.setSummary(data.sparkSession._jvm.scala.Option.empty())
+    return model
 
 
 def score_quality(

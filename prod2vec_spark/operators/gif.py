@@ -19,8 +19,8 @@ the Graphic-Control-Extension delay timeline, composited onto an RGB
 canvas (disposal 'restore to background' honored; 'restore to
 previous' approximated as 'do not dispose' — documented), gray-folded
 with the image plane's channel mean — the ``avi_frames`` contract, so
-animated GIFs ride frame_hashes → video_span_pairs → the streaming
-gate and the curation DAG unchanged, and a GIF scene pairs
+animated GIFs ride frame_hashes → span_pairs(VIDEO_PLANE) → the
+streaming gate and the curation DAG unchanged, and a GIF scene pairs
 CROSS-CONTAINER with the same scene inside an AVI.  Single-frame GIFs
 stay in the IMAGE plane (frame_hashes emits no rows for them).
 
@@ -298,8 +298,8 @@ def encode_gif_gray8(pixels: bytes, width: int, height: int) -> bytes:
 def gif_frames(blob: bytes) -> tuple[list[bytes], dict]:
     """Decode ALL frames of a GIF to top-down 8-bit GRAY buffers +
     metadata — the ``avi_frames`` contract, so animated GIFs ride the
-    frame plane (frame_hashes → video_span_pairs → the streaming gate
-    and the curation DAG) unchanged.  Compositing: frames draw onto
+    frame plane (frame_hashes → span_pairs(VIDEO_PLANE) → the
+    streaming gate and the curation DAG) unchanged.  Compositing: frames draw onto
     the logical-screen canvas at their offsets; disposal 'restore to
     background' refills the frame region with the background color
     after the frame is captured; 'restore to previous' is approximated

@@ -13,19 +13,32 @@ Three stages, each with the engine's 100 TB shape:
    no shuffle; the blob never leaves the executor.  Non-PNG /
    undecodable blobs yield a NULL hash (auditable, not dropped
    silently).
-2. **Banded candidate generation** (``hamming_candidates``) — the
-   64-bit hash splits into ``bands`` disjoint slices; by pigeonhole,
-   two hashes within Hamming distance d share at least one intact
-   slice whenever d < bands, so 4 bands give RECALL = 1 for d ≤ 3
-   (the usual near-dup threshold).  Pure Column pipeline reusing the
-   LSH group-expand shape: explode band structs → groupBy (band,
-   slice) collect sorted id lists → in-array i<j pair expansion —
+2. **Banded candidate generation** (``phash_neardup``) — the 64-bit
+   hash splits into ``bands`` disjoint slices; by pigeonhole, two
+   hashes within Hamming distance d share at least one intact slice
+   whenever d < bands, so 4 bands give RECALL = 1 for d ≤ 3 (the
+   usual near-dup threshold).  Pure Column pipeline reusing the LSH
+   group-expand shape: explode band structs → groupBy (band, slice)
+   collect sorted (id, hash) lists → in-array i<j pair expansion —
    the shuffle carries 2-long keys + id lists, never pixels.
 3. **Exact verify** — the hash value rides through the band groups
    next to the id, so every candidate pair row already carries both
    hashes: Hamming = bit_count(XOR) ≤ d is a row-local filter, no
    join back, and the (Python-codec) hash lineage evaluates exactly
    once (round-9 fix: the old join-back shape re-ran it 3×).
+
+Stages 2 and 3 are written once (``_banded_verified_pairs``) and
+serve every caller: whole-media pairs, the span planes and the
+incremental probes.  The span planes — video frames, image tiles,
+audio windows — differ only in their ``SpanPlane`` spec; each has a
+batch leg (``span_pairs`` / ``span_pairs_from_units``), a persisted
+band table (``span_signatures``: (media_id, unit, hash, band, slice)
+rows) and an incremental probe against that table
+(``incremental_span_pairs``).  Whole-media hashes have the same pair:
+``media_signatures`` ((media_id, modality, band, slice, mhash) rows)
+and ``incremental_media_pairs``.  The streaming gates
+(streaming/span_gate.py, streaming/media.py) derive their signatures
+from the same two functions.
 
 Palette-type PNGs (color type 3) hash their palette indices — fine
 for near-identical detection (same palette ⇒ same indices) but two
@@ -35,7 +48,8 @@ depths < 8 are rejected rather than mis-averaged.
 
 from __future__ import annotations
 
-from typing import Iterator
+from dataclasses import dataclass
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -317,7 +331,9 @@ def phash_videos(
     return src.mapInPandas(run, schema=f"{id_col} long, vhash long")
 
 
-_FRAME_ID_BASE = 1_000_000  # composite frame id = clip_id * BASE + frame_idx
+# composite unit id = media_id * UNIT_ID_BASE + unit_idx — the one id
+# space of every span plane (frame_idx, tile_idx, win_idx)
+UNIT_ID_BASE = 1_000_000
 
 
 def _composite_id(id_col: str, idx_col, base: int):
@@ -389,11 +405,11 @@ def frame_hashes(
                             i for i in range(len(frames)) if starts[i] <= ts
                         )
                         if idx not in seen:
-                            if idx >= _FRAME_ID_BASE:
+                            if idx >= UNIT_ID_BASE:
                                 raise ValueError(
                                     f"clip {mid}: frame {idx} exceeds the "
                                     f"composite frame-id space "
-                                    f"(<{_FRAME_ID_BASE})"
+                                    f"(<{UNIT_ID_BASE})"
                                 )
                             seen.add(idx)
                             g = np.frombuffer(
@@ -426,11 +442,11 @@ def frame_hashes(
                         # guard): a frame index at or past the base
                         # would bleed into the NEXT clip id's space —
                         # ~11.5 days at 1 fps-sampled.  Fail loud.
-                        if idx >= _FRAME_ID_BASE:
+                        if idx >= UNIT_ID_BASE:
                             raise ValueError(
                                 f"clip {mid}: frame {idx} exceeds the "
                                 f"composite frame-id space "
-                                f"(<{_FRAME_ID_BASE}); raise every_ms "
+                                f"(<{UNIT_ID_BASE}); raise every_ms "
                                 f"or split the clip"
                             )
                         seen.add(idx)
@@ -457,179 +473,6 @@ def frame_hashes(
     )
 
 
-def _span_rollup(
-    pairs: DataFrame, base: int, min_shared: int, out_col: str
-) -> DataFrame:
-    """Shared media-pair rollup of a composite-id near-dup pair table
-    (round 15 — the batch twin of streaming/span_gate.py's
-    consolidation; these three identical blocks were the same
-    drift class the streaming gates carried): decompose composite ids
-    back to media ids, drop same-media pairs, count matched units per
-    media pair, apply the min_shared cut.
-
-    `div` is exact 64-bit integer division; floor(double/double) can
-    be off-by-one once the composite id exceeds 2^53 (hash-derived
-    ids)."""
-    a = F.expr(f"id_a div {base}").cast("long")
-    b = F.expr(f"id_b div {base}").cast("long")
-    return (
-        pairs.select(a.alias("ma"), b.alias("mb"))
-        .where(F.col("ma") != F.col("mb"))
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("int").alias(out_col))
-        .where(F.col(out_col) >= min_shared)
-    )
-
-
-def video_span_pairs(
-    media: DataFrame,
-    every_ms: int = 1000,
-    max_distance: int = 3,
-    bands: int = 4,
-    min_shared: int = 2,
-    max_group: int | None = None,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Shared-scene detection — the winnowing/verbatim-span analog for
-    video: clip pairs sharing ≥ ``min_shared`` near-identical SAMPLED
-    frames (a clip embedded in a longer video matches here even when
-    the whole-clip keyframe-mean hash diverges).
-
-    Shape: per-frame dHash (one decode per clip) → the SAME fused
-    banded-Hamming plane over composite frame ids (clip·10⁶ + idx —
-    frames of one clip can never collide with ids of another clip's
-    frames) → same-clip pairs dropped → one hash-agg counting matched
-    frame pairs per clip pair.  The shuffle carries 16-byte frame
-    signatures, never pixels.  Output: (id_a, id_b,
-    n_shared_frames ≥ min_shared)."""
-    fh = frame_hashes(media, every_ms=every_ms, id_col=id_col, blob_col=blob_col)
-    composite = fh.select(
-        _composite_id(id_col, F.col("frame_idx"), _FRAME_ID_BASE).alias("fid"),
-        "fhash",
-    )
-    pairs = phash_neardup(
-        composite,
-        id_col="fid",
-        hash_col="fhash",
-        max_distance=max_distance,
-        bands=bands,
-        max_group=max_group,
-    )
-    return _span_rollup(pairs, _FRAME_ID_BASE, min_shared, "n_shared_frames")
-
-
-def frame_band_table(
-    media: DataFrame,
-    every_ms: int = 1000,
-    bands: int = 4,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """(id, frame_idx, band, slice, fhash): the PERSISTABLE band table
-    of a video corpus's SAMPLED FRAMES — the archive the incremental
-    span path probes (tile_band_table / audio_band_table, frame
-    edition, round-13: the frame plane gains the triad legs its tile
-    and window siblings already had).  One decode per clip; the
-    8-byte frame hash rides along so the incremental verify never
-    re-decodes the archive."""
-    fh = frame_hashes(media, every_ms=every_ms, id_col=id_col, blob_col=blob_col)
-    return (
-        fh.select(
-            id_col,
-            "frame_idx",
-            "fhash",
-            F.explode(F.array(*band_structs(F.col("fhash"), bands))).alias("bs"),
-        )
-        .select(
-            id_col,
-            "frame_idx",
-            F.col("bs.band").alias("band"),
-            F.col("bs.slice").alias("slice"),
-            "fhash",
-        )
-    )
-
-
-def incremental_video_span_pairs(
-    old_bands: DataFrame,
-    new_media: DataFrame,
-    every_ms: int = 1000,
-    max_distance: int = 3,
-    bands: int = 4,
-    min_shared: int = 2,
-    max_group: int | None = None,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Shared-scene clip pairs INVOLVING at least one new clip, probed
-    against a prior snapshot's persisted frame-band table — the
-    incremental twin of :func:`video_span_pairs`
-    (incremental_image_span_pairs / incremental_audio_span_pairs,
-    frame edition).  The archive is never re-decoded: its frame
-    hashes ride in the band table.  Guarantee (hash-locked,
-    id-disjoint snapshots, no cap):
-        video_span_pairs(old ∪ new)
-          == video_span_pairs(old) ∪ incremental_video_span_pairs(...)
-    Re-ingested ids supersede their stored signatures."""
-    from prod2vec_spark.functions.arrays import pair_expand
-
-    nb = frame_band_table(
-        new_media, every_ms=every_ms, bands=bands,
-        id_col=id_col, blob_col=blob_col,
-    )
-    new_ids = new_media.select(F.col(id_col)).distinct()
-    ob = old_bands.join(F.broadcast(new_ids), id_col, "left_anti")
-    fid = _composite_id(id_col, F.col("frame_idx"), _FRAME_ID_BASE).alias(
-        "fid"
-    )
-    allb = ob.select(
-        fid, "band", "slice", "fhash", F.lit(0).alias("is_new")
-    ).unionByName(
-        nb.select(fid, "band", "slice", "fhash", F.lit(1).alias("is_new"))
-    )
-    grouped = (
-        allb.groupBy("band", "slice")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("fid").alias("id"),
-                        F.col("fhash").alias("h"),
-                        F.col("is_new").alias("is_new"),
-                    )
-                )
-            ).alias("items")
-        )
-        .filter(
-            (F.size("items") > 1)
-            & (F.size(F.filter("items", lambda s: s.is_new == 1)) > 0)
-        )
-    )
-    if max_group is not None:
-        grouped = grouped.filter(F.size("items") <= max_group)
-    fpairs = (
-        grouped.select(F.explode(pair_expand(F.col("items"))).alias("p"))
-        .where((F.col("p.a.is_new") == 1) | (F.col("p.b.is_new") == 1))
-        .select(
-            F.col("p.a.id").alias("fa"),
-            F.col("p.b.id").alias("fb"),
-            F.bit_count(F.col("p.a.h").bitwiseXOR(F.col("p.b.h")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .select(F.col("fa").alias("id_a"), F.col("fb").alias("id_b"))
-        .distinct()  # a frame pair may band-collide in several bands
-    )
-    return _span_rollup(fpairs, _FRAME_ID_BASE, min_shared, "n_shared_frames")
-
-
-_TILE_ID_BASE = 1_000_000  # composite tile id = image_id * BASE + tile_idx
 _TILE_COLS_PER_ROW = 1024  # tile_idx = tile_row * 1024 + tile_col
 
 
@@ -682,16 +525,16 @@ def image_tile_hashes(
                     continue
                 for ti, tj, th in tile_rows_py(g, tile_px, stride):
                     # Composite-id safety: tile_idx = ti*1024 + tj must stay
-                    # below _TILE_ID_BASE or tiles silently bleed into the
+                    # below UNIT_ID_BASE or tiles silently bleed into the
                     # NEXT image id's space (tall scans / long screenshots).
                     # Fail loud rather than mispair.
                     if tj >= _TILE_COLS_PER_ROW or (
-                        ti * _TILE_COLS_PER_ROW + tj >= _TILE_ID_BASE
+                        ti * _TILE_COLS_PER_ROW + tj >= UNIT_ID_BASE
                     ):
                         raise ValueError(
                             f"image {mid}: tile ({ti},{tj}) exceeds the "
                             f"composite tile-id space (cols<{_TILE_COLS_PER_ROW}, "
-                            f"idx<{_TILE_ID_BASE}); raise stride/tile_px or "
+                            f"idx<{UNIT_ID_BASE}); raise stride/tile_px or "
                             f"split the image"
                         )
                     out[id_col].append(mid)
@@ -716,200 +559,6 @@ def image_tile_hashes(
             F.col("tile_row") * F.lit(_TILE_COLS_PER_ROW) + F.col("tile_col")
         ).cast("int"),
     )
-
-
-def image_span_pairs(
-    media: DataFrame,
-    tile_px: int = 16,
-    stride: int = 8,
-    max_distance: int = 3,
-    bands: int = 4,
-    min_shared: int = 4,
-    max_group: int | None = None,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Partial-image duplicate detection — the ``video_span_pairs``
-    analog in space: image pairs sharing ≥ ``min_shared``
-    near-identical TILES, catching the cropped / letterboxed /
-    padded duplicates whose WHOLE-image dHash diverges (the gap the
-    round-11 verdict named: whole-image hashing misses a crop the way
-    whole-clip hashing misses an embedded clip).
-
-    Alignment contract: a crop/pad offset that is a multiple of
-    ``stride`` re-anchors content tiles exactly (the default 50%
-    overlap halves the alignment granularity for one extra decode-free
-    4× tile fanout); arbitrary sub-stride offsets are out of scope —
-    the same granularity trade ``frame_hashes`` makes in time.
-
-    Shape: per-tile dHash (ONE decode per image) → the SAME fused
-    banded-Hamming plane over composite tile ids (image·10⁶ +
-    tile_idx) → same-image pairs dropped → one hash-agg counting
-    matched tile pairs per image pair.  The shuffle carries 16-byte
-    tile signatures, never pixels.  Output: (id_a, id_b,
-    n_shared_tiles ≥ min_shared).
-
-    Hot-bucket caveat (measured at 10×, tests/test_scale_stress.py):
-    HALF-CONSTANT tiles — e.g. letterbox bar-straddles — zero out the
-    gradient band of their constant half, so unrelated images share a
-    degenerate (band, slice=0) bucket that grows linearly with the
-    corpus.  Set ``max_group`` at scale (the LSH text plane's valve):
-    capping that bucket loses no aligned-duplicate pair, because such
-    pairs also match on their varying-half bands, which land in
-    family-sized buckets (pigeonhole over the remaining bands)."""
-    th = image_tile_hashes(
-        media, tile_px=tile_px, stride=stride, id_col=id_col, blob_col=blob_col
-    )
-    return image_span_pairs_from_tiles(
-        th,
-        max_distance=max_distance,
-        bands=bands,
-        min_shared=min_shared,
-        max_group=max_group,
-        id_col=id_col,
-    )
-
-
-def image_span_pairs_from_tiles(
-    tile_hashes: DataFrame,
-    max_distance: int = 3,
-    bands: int = 4,
-    min_shared: int = 4,
-    max_group: int | None = None,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """:func:`image_span_pairs` over a PRECOMPUTED (id, tile_idx,
-    thash) table — the banding/verify/rollup half split out (round 16)
-    so a fused decode pass (:func:`media_features`) can feed the span
-    plane without re-decoding blobs the whole-hash pass already
-    decoded."""
-    composite = tile_hashes.select(
-        _composite_id(id_col, F.col("tile_idx"), _TILE_ID_BASE).alias("tid"),
-        "thash",
-    )
-    pairs = phash_neardup(
-        composite,
-        id_col="tid",
-        hash_col="thash",
-        max_distance=max_distance,
-        bands=bands,
-        max_group=max_group,
-    )
-    return _span_rollup(pairs, _TILE_ID_BASE, min_shared, "n_shared_tiles")
-
-
-def tile_band_table(
-    media: DataFrame,
-    tile_px: int = 16,
-    stride: int = 8,
-    bands: int = 4,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """(id, tile_idx, band, slice, thash): the PERSISTABLE band table
-    of an image corpus's TILES — the archive the incremental span
-    path probes (media_band_table, tile edition).  One decode per
-    image; each row is a band signature + the 8-byte tile hash (the
-    hash rides along so the incremental verify never re-decodes the
-    archive)."""
-    th = image_tile_hashes(
-        media, tile_px=tile_px, stride=stride, id_col=id_col, blob_col=blob_col
-    )
-    return (
-        th.select(
-            id_col,
-            "tile_idx",
-            "thash",
-            F.explode(F.array(*band_structs(F.col("thash"), bands))).alias("bs"),
-        )
-        .select(
-            id_col,
-            "tile_idx",
-            F.col("bs.band").alias("band"),
-            F.col("bs.slice").alias("slice"),
-            "thash",
-        )
-    )
-
-
-def incremental_image_span_pairs(
-    old_bands: DataFrame,
-    new_media: DataFrame,
-    tile_px: int = 16,
-    stride: int = 8,
-    max_distance: int = 3,
-    bands: int = 4,
-    min_shared: int = 4,
-    max_group: int | None = None,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Partial-image duplicate pairs INVOLVING at least one new image,
-    probed against a prior snapshot's persisted tile-band table — the
-    incremental twin of :func:`image_span_pairs`
-    (incremental_media_pairs, tile edition).
-
-    At 100 TB the archived corpus is never re-decoded: only its
-    (id, tile_idx, band, slice, thash) table is read back, and only
-    the new fraction runs the codec pass.  Old×old image pairs are
-    already known and NOT re-emitted; tile counts of an existing pair
-    can never change when disjoint new images arrive, so (pytest-
-    locked, id-disjoint snapshots, no cap):
-        image_span_pairs(old ∪ new)
-          == image_span_pairs(old) ∪ incremental_image_span_pairs(...)
-    Re-ingested ids supersede their stored signatures."""
-    from prod2vec_spark.functions.arrays import pair_expand
-
-    nb = tile_band_table(
-        new_media, tile_px=tile_px, stride=stride, bands=bands,
-        id_col=id_col, blob_col=blob_col,
-    )
-    new_ids = new_media.select(F.col(id_col)).distinct()
-    ob = old_bands.join(F.broadcast(new_ids), id_col, "left_anti")
-    tid = _composite_id(id_col, F.col("tile_idx"), _TILE_ID_BASE).alias("tid")
-    allb = ob.select(
-        tid, "band", "slice", "thash", F.lit(0).alias("is_new")
-    ).unionByName(
-        nb.select(tid, "band", "slice", "thash", F.lit(1).alias("is_new"))
-    )
-    grouped = (
-        allb.groupBy("band", "slice")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("tid").alias("id"),
-                        F.col("thash").alias("h"),
-                        F.col("is_new").alias("is_new"),
-                    )
-                )
-            ).alias("items")
-        )
-        .filter(
-            (F.size("items") > 1)
-            & (F.size(F.filter("items", lambda s: s.is_new == 1)) > 0)
-        )
-    )
-    if max_group is not None:
-        grouped = grouped.filter(F.size("items") <= max_group)
-    tpairs = (
-        grouped.select(F.explode(pair_expand(F.col("items"))).alias("p"))
-        .where((F.col("p.a.is_new") == 1) | (F.col("p.b.is_new") == 1))
-        .select(
-            F.col("p.a.id").alias("ta"),
-            F.col("p.b.id").alias("tb"),
-            F.bit_count(F.col("p.a.h").bitwiseXOR(F.col("p.b.h")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .select(F.col("ta").alias("id_a"), F.col("tb").alias("id_b"))
-        .distinct()  # a tile pair may band-collide in several bands
-    )
-    return _span_rollup(tpairs, _TILE_ID_BASE, min_shared, "n_shared_tiles")
-
-
-_WIN_ID_BASE = 1_000_000  # composite window id = clip_id * BASE + win_idx
 
 
 def window_rows_py(a: "np.ndarray", rate: int, window_ms: int, hop_ms: int):
@@ -967,10 +616,10 @@ def audio_window_hashes(
                     # the NEXT clip id's space.  win_idx < 1e6 is ~5.8
                     # days of audio at the default 500 ms hop — fail
                     # loud on anything longer rather than mispair.
-                    if wi >= _WIN_ID_BASE:
+                    if wi >= UNIT_ID_BASE:
                         raise ValueError(
                             f"clip {mid}: window {wi} exceeds the "
-                            f"composite window-id space (<{_WIN_ID_BASE});"
+                            f"composite window-id space (<{UNIT_ID_BASE});"
                             f" raise hop_ms or split the clip"
                         )
                     out[id_col].append(mid)
@@ -989,182 +638,201 @@ def audio_window_hashes(
     )
 
 
-def audio_span_pairs(
-    media: DataFrame,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
+@dataclass(frozen=True)
+class SpanPlane:
+    """Everything that differs between the three span planes.
+
+    ``hash_fn(media, id_col=..., blob_col=..., **kwargs)`` must return
+    one row per decoded unit with ``idx_col`` (unit index within the
+    media) and ``hash_col`` (the unit's 64-bit hash); ``shared_col``
+    names :func:`span_pairs`' matched-unit count."""
+
+    hash_fn: Callable[..., DataFrame]
+    idx_col: str
+    hash_col: str
+    id_base: int  # composite unit id = media_id * id_base + unit_idx
+    min_shared: int  # default cut (units shared / foreign-claimed)
+    shared_col: str
+
+
+# video: AVI or animated-GIF frames sampled every ``every_ms``
+VIDEO_PLANE = SpanPlane(
+    frame_hashes, "frame_idx", "fhash", UNIT_ID_BASE, 2, "n_shared_frames"
+)
+# image: ``tile_px`` tiles at ``stride``
+IMAGE_PLANE = SpanPlane(
+    image_tile_hashes, "tile_idx", "thash", UNIT_ID_BASE, 4, "n_shared_tiles"
+)
+# audio: ``window_ms`` windows every ``hop_ms``
+AUDIO_PLANE = SpanPlane(
+    audio_window_hashes, "win_idx", "whash", UNIT_ID_BASE, 2, "n_shared_windows"
+)
+
+
+def _span_rollup(
+    pairs: DataFrame, plane: SpanPlane, min_shared: int | None
+) -> DataFrame:
+    """The one media-pair rollup of a composite-unit pair table:
+    decompose unit ids back to media ids, drop same-media pairs, count
+    matched units per media pair into ``plane.shared_col``, apply the
+    min_shared cut (None: the plane's default).
+
+    `div` is exact 64-bit integer division; floor(double/double) can
+    be off-by-one once the composite id exceeds 2^53 (hash-derived
+    ids)."""
+    ms = plane.min_shared if min_shared is None else min_shared
+    a = F.expr(f"id_a div {plane.id_base}").cast("long")
+    b = F.expr(f"id_b div {plane.id_base}").cast("long")
+    return (
+        pairs.select(a.alias("ma"), b.alias("mb"))
+        .where(F.col("ma") != F.col("mb"))
+        .select(
+            F.least("ma", "mb").alias("id_a"),
+            F.greatest("ma", "mb").alias("id_b"),
+        )
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).cast("int").alias(plane.shared_col))
+        .where(F.col(plane.shared_col) >= ms)
+    )
+
+
+def span_pairs_from_units(
+    plane: SpanPlane,
+    unit_hashes: DataFrame,
+    min_shared: int | None = None,
     max_distance: int = 3,
     bands: int = 4,
-    min_shared: int = 2,
-    max_group: int | None = None,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Partial-audio duplicate detection — the ``video_span_pairs`` /
-    ``image_span_pairs`` analog for sound: clip pairs sharing ≥
-    ``min_shared`` near-identical WINDOWS, catching an embedded
-    jingle/sample whose WHOLE-clip energy-gradient hash diverges (the
-    gap the round-12 verdict named: whole-clip hashing misses an
-    embedded clip the way whole-image hashing misses a crop).
-
-    Alignment contract: an insertion offset that is a multiple of
-    ``hop_ms`` re-anchors content windows exactly (the default 50%
-    overlap halves the alignment granularity); arbitrary sub-hop
-    offsets are out of scope — the same granularity trade the tile
-    and frame planes make.  The energy-gradient hash is invariant to
-    uniform gain and Hamming-robust to ADPCM quantization, so the
-    pairs survive PCM↔ADPCM re-encoding (tests/test_cross_codec.py).
-
-    Shape: per-window hash (ONE decode per clip) → the SAME fused
-    banded-Hamming plane over composite window ids (clip·10⁶ +
-    win_idx) → same-clip pairs dropped → one hash-agg counting
-    matched window pairs per clip pair.  The shuffle carries 16-byte
-    window signatures, never samples.  Output: (id_a, id_b,
-    n_shared_windows ≥ min_shared)."""
-    wh = audio_window_hashes(
-        media, window_ms=window_ms, hop_ms=hop_ms,
-        id_col=id_col, blob_col=blob_col,
-    )
-    return audio_span_pairs_from_windows(
-        wh,
-        max_distance=max_distance,
-        bands=bands,
-        min_shared=min_shared,
-        max_group=max_group,
-        id_col=id_col,
-    )
-
-
-def audio_span_pairs_from_windows(
-    window_hashes: DataFrame,
-    max_distance: int = 3,
-    bands: int = 4,
-    min_shared: int = 2,
     max_group: int | None = None,
     id_col: str = "media_id",
 ) -> DataFrame:
-    """:func:`audio_span_pairs` over a PRECOMPUTED (id, win_idx,
-    whash) table — the banding/verify/rollup half split out (round 16,
-    the image_span_pairs_from_tiles twin) for the fused decode pass."""
-    composite = window_hashes.select(
-        _composite_id(id_col, F.col("win_idx"), _WIN_ID_BASE).alias("wid"),
-        "whash",
+    """:func:`span_pairs` over a PRECOMPUTED unit table (id,
+    ``plane.idx_col``, ``plane.hash_col``) — the banding/verify/rollup
+    half, so a fused decode pass (:func:`media_features`) or a
+    persisted fixture can feed the span plane without re-decoding."""
+    units = unit_hashes.select(
+        _composite_id(id_col, F.col(plane.idx_col), plane.id_base).alias("unit"),
+        F.col(plane.hash_col).alias("hash"),
     )
     pairs = phash_neardup(
-        composite,
-        id_col="wid",
-        hash_col="whash",
+        units,
+        id_col="unit",
+        hash_col="hash",
         max_distance=max_distance,
         bands=bands,
         max_group=max_group,
     )
-    return _span_rollup(pairs, _WIN_ID_BASE, min_shared, "n_shared_windows")
+    return _span_rollup(pairs, plane, min_shared)
 
 
-def audio_band_table(
+def span_pairs(
+    plane: SpanPlane,
     media: DataFrame,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
-    bands: int = 4,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """(id, win_idx, band, slice, whash): the PERSISTABLE band table
-    of an audio corpus's WINDOWS — the archive the incremental span
-    path probes (tile_band_table, audio edition).  One decode per
-    clip; the 8-byte window hash rides along so the incremental
-    verify never re-decodes the archive."""
-    wh = audio_window_hashes(
-        media, window_ms=window_ms, hop_ms=hop_ms,
-        id_col=id_col, blob_col=blob_col,
-    )
-    return (
-        wh.select(
-            id_col,
-            "win_idx",
-            "whash",
-            F.explode(F.array(*band_structs(F.col("whash"), bands))).alias("bs"),
-        )
-        .select(
-            id_col,
-            "win_idx",
-            F.col("bs.band").alias("band"),
-            F.col("bs.slice").alias("slice"),
-            "whash",
-        )
-    )
-
-
-def incremental_audio_span_pairs(
-    old_bands: DataFrame,
-    new_media: DataFrame,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
+    min_shared: int | None = None,
     max_distance: int = 3,
     bands: int = 4,
-    min_shared: int = 2,
     max_group: int | None = None,
     id_col: str = "media_id",
     blob_col: str = "blob",
+    **unit_kwargs,
 ) -> DataFrame:
-    """Partial-audio duplicate pairs INVOLVING at least one new clip,
-    probed against a prior snapshot's persisted window-band table —
-    the incremental twin of :func:`audio_span_pairs`
-    (incremental_image_span_pairs, audio edition).  The archive is
-    never re-decoded: its window hashes ride in the band table.
-    Guarantee (hash-locked, id-disjoint snapshots, no cap):
-        audio_span_pairs(old ∪ new)
-          == audio_span_pairs(old) ∪ incremental_audio_span_pairs(...)
-    Re-ingested ids supersede their stored signatures."""
-    from prod2vec_spark.functions.arrays import pair_expand
+    """Partial-media duplicate detection — the winnowing/verbatim-span
+    analog for media: media pairs sharing ≥ ``min_shared`` (None: the
+    plane's default) near-identical UNITS, catching the embedded clip,
+    the cropped / letterboxed / padded image and the embedded jingle
+    whose WHOLE-media hash diverges.  ``unit_kwargs`` go to the
+    plane's hash function (``every_ms``; ``tile_px``/``stride``;
+    ``window_ms``/``hop_ms``).
 
-    nb = audio_band_table(
-        new_media, window_ms=window_ms, hop_ms=hop_ms, bands=bands,
-        id_col=id_col, blob_col=blob_col,
+    Alignment contract: a crop/pad or insertion offset that is a
+    multiple of the tile stride or window hop re-anchors content units
+    exactly (the default 50% overlap halves the alignment
+    granularity); arbitrary sub-stride offsets are out of scope.
+    Frames need no alignment: the banded join pairs similar frames at
+    any temporal offset.  The audio hash is invariant to uniform gain
+    and Hamming-robust to ADPCM quantization, so window pairs survive
+    PCM↔ADPCM re-encoding (tests/test_cross_codec.py).
+
+    Shape: per-unit hash (ONE decode per media) → the banded-Hamming
+    plane over composite unit ids (media·UNIT_ID_BASE + unit_idx —
+    units of one media can never collide with another media's) →
+    same-media pairs dropped → one hash-agg counting matched unit
+    pairs per media pair.  The shuffle carries 16-byte unit
+    signatures, never pixels or samples.  Output: (id_a, id_b,
+    ``plane.shared_col`` ≥ min_shared).
+
+    Hot-bucket caveat (measured at 10× on the tile plane,
+    tests/test_scale_stress.py): HALF-CONSTANT tiles — e.g. letterbox
+    bar-straddles — zero out the gradient band of their constant
+    half, so unrelated images share a degenerate (band, slice=0)
+    bucket that grows linearly with the corpus.  Set ``max_group`` at
+    scale (the LSH text plane's valve): capping that bucket loses no
+    aligned-duplicate pair, because such pairs also match on their
+    varying-half bands, which land in family-sized buckets
+    (pigeonhole over the remaining bands)."""
+    units = plane.hash_fn(media, id_col=id_col, blob_col=blob_col, **unit_kwargs)
+    return span_pairs_from_units(
+        plane, units, min_shared, max_distance, bands, max_group, id_col
     )
-    new_ids = new_media.select(F.col(id_col)).distinct()
-    ob = old_bands.join(F.broadcast(new_ids), id_col, "left_anti")
-    wid = _composite_id(id_col, F.col("win_idx"), _WIN_ID_BASE).alias("wid")
-    allb = ob.select(
-        wid, "band", "slice", "whash", F.lit(0).alias("is_new")
-    ).unionByName(
-        nb.select(wid, "band", "slice", "whash", F.lit(1).alias("is_new"))
+
+
+def span_signatures(
+    plane: SpanPlane,
+    media: DataFrame,
+    bands: int = 4,
+    id_col: str = "media_id",
+    blob_col: str = "blob",
+    **hash_kwargs,
+) -> DataFrame:
+    """(media_id, unit, hash, band, slice): one row per band signature
+    of every decoded unit; ``unit`` is the composite unit id.  The
+    PERSISTABLE band table the incremental probe reads back (the unit
+    hash rides along, so the archive is never re-decoded) and the
+    streaming span gate's per-batch signatures."""
+    uh = plane.hash_fn(media, id_col=id_col, blob_col=blob_col, **hash_kwargs)
+    return uh.select(
+        F.col(id_col).alias("media_id"),
+        _composite_id(id_col, F.col(plane.idx_col), plane.id_base).alias("unit"),
+        F.col(plane.hash_col).alias("hash"),
+        F.explode(F.array(*band_structs(F.col(plane.hash_col), bands))).alias("bs"),
+    ).select(
+        "media_id",
+        "unit",
+        "hash",
+        F.col("bs.band").alias("band"),
+        F.col("bs.slice").alias("slice"),
     )
-    grouped = (
-        allb.groupBy("band", "slice")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("wid").alias("id"),
-                        F.col("whash").alias("h"),
-                        F.col("is_new").alias("is_new"),
-                    )
-                )
-            ).alias("items")
-        )
-        .filter(
-            (F.size("items") > 1)
-            & (F.size(F.filter("items", lambda s: s.is_new == 1)) > 0)
-        )
+
+
+def incremental_span_pairs(
+    plane: SpanPlane,
+    old_signatures: DataFrame,
+    new_media: DataFrame,
+    min_shared: int | None = None,
+    max_distance: int = 3,
+    bands: int = 4,
+    max_group: int | None = None,
+    id_col: str = "media_id",
+    blob_col: str = "blob",
+    **unit_kwargs,
+) -> DataFrame:
+    """Partial-media duplicate pairs INVOLVING at least one new media,
+    probed against a prior snapshot's persisted :func:`span_signatures`
+    table — the incremental twin of :func:`span_pairs`.
+
+    At 100 TB the archived corpus is never re-decoded: only its band
+    table is read back, and only the new fraction runs the codec pass.
+    Old×old pairs are already known and NOT re-emitted; unit counts
+    of an existing pair can never change when disjoint new media
+    arrive, so (pytest-locked, id-disjoint snapshots, no cap):
+        span_pairs(old ∪ new)
+          == span_pairs(old) ∪ incremental_span_pairs(...)
+    Re-ingested ids supersede their stored signatures."""
+    new = span_signatures(plane, new_media, bands, id_col, blob_col, **unit_kwargs)
+    pairs = _archive_probe(
+        old_signatures, new, new_media, id_col, ("band", "slice"), "unit",
+        "hash", max_distance, max_group,
     )
-    if max_group is not None:
-        grouped = grouped.filter(F.size("items") <= max_group)
-    wpairs = (
-        grouped.select(F.explode(pair_expand(F.col("items"))).alias("p"))
-        .where((F.col("p.a.is_new") == 1) | (F.col("p.b.is_new") == 1))
-        .select(
-            F.col("p.a.id").alias("wa"),
-            F.col("p.b.id").alias("wb"),
-            F.bit_count(F.col("p.a.h").bitwiseXOR(F.col("p.b.h")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .select(F.col("wa").alias("id_a"), F.col("wb").alias("id_b"))
-        .distinct()  # a window pair may band-collide in several bands
-    )
-    return _span_rollup(wpairs, _WIN_ID_BASE, min_shared, "n_shared_windows")
+    return _span_rollup(pairs, plane, min_shared)
 
 
 def phash_audio(
@@ -1204,49 +872,6 @@ def phash_images(
     return src.mapInPandas(run, schema=f"{id_col} long, dhash long")
 
 
-def hamming_candidates(
-    hashes: DataFrame,
-    id_col: str = "media_id",
-    hash_col: str = "dhash",
-    bands: int = 4,
-    max_group: int | None = None,
-) -> DataFrame:
-    """Distinct candidate id pairs (id_a < id_b) sharing at least one
-    of ``bands`` disjoint hash slices.  64 must divide evenly into
-    ``bands``; recall is exact for Hamming distance < bands."""
-    if HASH_BITS % bands:
-        raise ValueError(f"bands={bands} must divide {HASH_BITS}")
-    width = HASH_BITS // bands
-    mask = (1 << width) - 1
-    h = F.col(hash_col)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(h, b * width).bitwiseAND(F.lit(mask)).alias("slice"),
-        )
-        for b in range(bands)
-    ]
-    from prod2vec_spark.functions.arrays import pair_expand
-
-    sigs = (
-        hashes.where(h.isNotNull())
-        .select(id_col, F.explode(F.array(*band_cols)).alias("bs"))
-        .select(id_col, F.col("bs.band").alias("band"), F.col("bs.slice").alias("slice"))
-    )
-    grouped = (
-        sigs.groupBy("band", "slice")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    if max_group is not None:
-        grouped = grouped.filter(F.size("ids") <= max_group)
-    return (
-        grouped.select(F.explode(pair_expand(F.col("ids"))).alias("p"))
-        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-        .distinct()
-    )
-
-
 def phash_neardup(
     hashes: DataFrame,
     id_col: str = "media_id",
@@ -1273,11 +898,21 @@ def phash_neardup(
     group key (and carried into the output) — rows with different
     values can never pair, in the SAME single scan (the mixed-
     modality case)."""
-    if HASH_BITS % bands:
-        raise ValueError(f"bands={bands} must divide {HASH_BITS}")
-    return _banded_verified_pairs(
-        hashes, id_col, hash_col, max_distance, bands, max_group, extra_key
+    h = F.col(hash_col)
+    extra = [F.col(extra_key)] if extra_key else []
+    banded = (
+        hashes.where(h.isNotNull())
+        .select(
+            F.col(id_col).alias("id"),
+            h.alias("h"),
+            F.explode(F.array(*band_structs(h, bands))).alias("bs"),
+            *extra,
+        )
+        .withColumn("band", F.col("bs.band"))
+        .withColumn("slice", F.col("bs.slice"))
     )
+    keys = ["band", "slice"] + ([extra_key] if extra_key else [])
+    return _banded_verified_pairs(banded, keys, max_distance, max_group)
 
 
 def band_structs(h: Column, bands: int) -> list[Column]:
@@ -1298,56 +933,80 @@ def band_structs(h: Column, bands: int) -> list[Column]:
 
 
 def _banded_verified_pairs(
-    hashes: DataFrame,
-    id_col: str,
-    hash_col: str,
+    banded: DataFrame,
+    keys: Sequence[str],
     max_distance: int,
-    bands: int,
     max_group: int | None,
-    extra_key: str | None,
 ) -> DataFrame:
-    h = F.col(hash_col)
-    band_cols = band_structs(h, bands)
+    """The one banded group → pair → verify block: rows (``keys``,
+    ``id``, ``h``[, ``is_new``]) → distinct (id_a < id_b, hamming,
+    *non-band keys) with hamming ≤ max_distance.
+
+    Groups of one member are dropped, then groups over ``max_group``
+    members (the hot-bucket valve), then unverified pairs.  With an
+    ``is_new`` column (the incremental probe) groups without a new
+    member are dropped with the singletons, and only pairs involving
+    a new row are verified."""
     from prod2vec_spark.functions.arrays import pair_expand
 
-    keys = ["band", "slice"] + ([extra_key] if extra_key else [])
-    sel = [
-        F.col(id_col).alias("_id"),
-        h.alias("_h"),
-        F.explode(F.array(*band_cols)).alias("bs"),
-    ] + ([F.col(extra_key)] if extra_key else [])
-    sigs = (
-        hashes.where(h.isNotNull())
-        .select(*sel)
-        .withColumn("band", F.col("bs.band"))
-        .withColumn("slice", F.col("bs.slice"))
+    incremental = "is_new" in banded.columns
+    member = ["id", "h"] + (["is_new"] if incremental else [])
+    grouped = banded.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(F.struct(*member))).alias("items")
     )
-    grouped = (
-        sigs.groupBy(*keys)
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("_id").alias("id"), F.col("_h").alias("h")))
-            ).alias("items")
-        )
-        .filter(F.size("items") > 1)
-    )
+    live = F.size("items") > 1
+    if incremental:
+        live &= F.size(F.filter("items", lambda s: s.is_new == 1)) > 0
+    grouped = grouped.filter(live)
     if max_group is not None:
         grouped = grouped.filter(F.size("items") <= max_group)
-    out_cols = [
-        F.col("p.a.id").alias("id_a"),
-        F.col("p.b.id").alias("id_b"),
-        F.bit_count(F.col("p.a.h").bitwiseXOR(F.col("p.b.h"))).cast("int").alias(
-            "hamming"
-        ),
-    ] + ([F.col(extra_key)] if extra_key else [])
+    extra = [k for k in keys if k not in ("band", "slice")]
+    pairs = grouped.select(*extra, F.explode(pair_expand(F.col("items"))).alias("p"))
+    if incremental:
+        pairs = pairs.where((F.col("p.a.is_new") == 1) | (F.col("p.b.is_new") == 1))
     return (
-        grouped.select(
-            *([F.col(extra_key)] if extra_key else []),
-            F.explode(pair_expand(F.col("items"))).alias("p"),
+        pairs.select(
+            F.col("p.a.id").alias("id_a"),
+            F.col("p.b.id").alias("id_b"),
+            F.bit_count(F.col("p.a.h").bitwiseXOR(F.col("p.b.h"))).cast("int").alias(
+                "hamming"
+            ),
+            *extra,
         )
-        .select(*out_cols)
         .filter(F.col("hamming") <= max_distance)
-        .distinct()
+        .distinct()  # a pair may band-collide in several bands
+    )
+
+
+def _archive_probe(
+    old_signatures: DataFrame,
+    new_signatures: DataFrame,
+    new_media: DataFrame,
+    id_col: str,
+    keys: Sequence[str],
+    unit_col: str,
+    hash_col: str,
+    max_distance: int,
+    max_group: int | None,
+) -> DataFrame:
+    """The incremental probe (keep the persisted band table, reuse it
+    instead of re-decoding the archive): drop the archive's
+    signatures of every re-ingested ``media_id`` — the new ones
+    supersede them — union the new signatures flagged ``is_new``, and
+    keep the verified pairs that involve a new row."""
+    new_ids = new_media.select(F.col(id_col).alias("media_id")).distinct()
+    old = old_signatures.join(F.broadcast(new_ids), "media_id", "left_anti")
+    rows = [
+        sigs.select(
+            *keys,
+            F.col(unit_col).alias("id"),
+            F.col(hash_col).alias("h"),
+            F.lit(is_new).alias("is_new"),
+        )
+        for sigs, is_new in ((old, 0), (new_signatures, 1))
+    ]
+    return _banded_verified_pairs(
+        rows[0].unionByName(rows[1]), keys, max_distance, max_group
     )
 
 
@@ -1548,12 +1207,12 @@ def media_features(
                 mhash = dhash64(gray)
             for ti, tj, th in tile_rows_py(gray, tile_px, stride):
                 if tj >= _TILE_COLS_PER_ROW or (
-                    ti * _TILE_COLS_PER_ROW + tj >= _TILE_ID_BASE
+                    ti * _TILE_COLS_PER_ROW + tj >= UNIT_ID_BASE
                 ):
                     raise ValueError(
                         f"image {mid}: tile ({ti},{tj}) exceeds the "
                         f"composite tile-id space "
-                        f"(cols<{_TILE_COLS_PER_ROW}, idx<{_TILE_ID_BASE}); "
+                        f"(cols<{_TILE_COLS_PER_ROW}, idx<{UNIT_ID_BASE}); "
                         f"raise stride/tile_px or split the image"
                     )
                 tiles.append(
@@ -1563,10 +1222,10 @@ def media_features(
             a, rate = audio
             mhash = ahash64(a)
             for wi, wh in window_rows_py(a, rate, window_ms, hop_ms):
-                if wi >= _WIN_ID_BASE:
+                if wi >= UNIT_ID_BASE:
                     raise ValueError(
                         f"clip {mid}: window {wi} exceeds the composite "
-                        f"window-id space (<{_WIN_ID_BASE}); raise hop_ms "
+                        f"window-id space (<{UNIT_ID_BASE}); raise hop_ms "
                         f"or split the clip"
                     )
                 wins.append({"win_idx": wi, "whash": wh})
@@ -1640,29 +1299,30 @@ def media_neardup_pairs(
     )
 
 
-def media_band_table(
+def media_signatures(
     media: DataFrame,
     id_col: str = "media_id",
     blob_col: str = "blob",
     bands: int = 4,
 ) -> DataFrame:
-    """(id, modality, band, slice, mhash): the PERSISTABLE band table
-    of a media corpus — the archive the incremental path probes (the
-    text plane's minhash_bands store, media edition).  One decode per
-    blob; each row is a 3-key band signature + the 8-byte hash (the
-    hash rides along so the incremental verify never re-decodes the
-    archive).  Undecodable blobs emit no rows (auditable upstream)."""
+    """(media_id, modality, band, slice, mhash): one row per band
+    signature of every decodable media row — the PERSISTABLE band
+    table the incremental probe reads back (the text plane's
+    minhash_bands store, media edition; the hash rides along so the
+    archive is never re-decoded) and the streaming media gate's
+    per-batch signatures.  Undecodable blobs emit no rows (auditable
+    upstream)."""
     hashes = media_hashes(media, id_col=id_col, blob_col=blob_col)
     return (
         hashes.where(F.col("mhash").isNotNull())
         .select(
-            id_col,
+            F.col(id_col).alias("media_id"),
             "modality",
             "mhash",
             F.explode(F.array(*band_structs(F.col("mhash"), bands))).alias("bs"),
         )
         .select(
-            id_col,
+            "media_id",
             "modality",
             F.col("bs.band").alias("band"),
             F.col("bs.slice").alias("slice"),
@@ -1672,7 +1332,7 @@ def media_band_table(
 
 
 def incremental_media_pairs(
-    old_bands: DataFrame,
+    old_signatures: DataFrame,
     new_media: DataFrame,
     id_col: str = "media_id",
     blob_col: str = "blob",
@@ -1681,70 +1341,29 @@ def incremental_media_pairs(
     max_group: int | None = None,
 ) -> DataFrame:
     """Verified media near-dup pairs INVOLVING at least one new blob,
-    probed against a prior snapshot's persisted band table — the
-    incremental twin of :func:`media_neardup_pairs` (and the media leg
-    of the snapshot-diff plane), completing the media triad next to
-    the batch stage (pipeline_llm.media_dedup) and the streaming gate
+    probed against a prior snapshot's persisted
+    :func:`media_signatures` table — the incremental twin of
+    :func:`media_neardup_pairs` (and the media leg of the
+    snapshot-diff plane), completing the media triad next to the
+    batch stage (pipeline_llm.media_dedup) and the streaming gate
     (streaming/media.py).
 
     At 100 TB the point is what does NOT happen: the archived corpus
-    is never re-decoded or re-hashed — only its (id, modality, band,
-    slice, mhash) table is read back, and only the typically-small
-    new fraction runs the codec pass.  Old×old pairs are already
-    known and are NOT re-emitted; the output is exactly the delta
-    pair set, exact-verified (bit_count ≤ max_distance) from the
-    hashes riding in the band rows.  Re-ingested ids supersede their
-    stored signatures.  Semantics (pytest-locked, no cap):
+    is never re-decoded or re-hashed — only its band table is read
+    back, and only the typically-small new fraction runs the codec
+    pass.  Old×old pairs are already known and are NOT re-emitted;
+    the output is exactly the delta pair set, exact-verified
+    (bit_count ≤ max_distance) from the hashes riding in the band
+    rows.  Re-ingested ids supersede their stored signatures.
+    Output: (id_a, id_b, hamming, modality).  Semantics
+    (pytest-locked, no cap):
         media_neardup_pairs(old ∪ new)
           == media_neardup_pairs(old) ∪ incremental_media_pairs(...)
     for id-disjoint snapshots."""
-    from prod2vec_spark.functions.arrays import pair_expand
-
-    nb = media_band_table(new_media, id_col=id_col, blob_col=blob_col, bands=bands)
-    new_ids = new_media.select(F.col(id_col)).distinct()
-    ob = old_bands.join(F.broadcast(new_ids), id_col, "left_anti")
-    allb = ob.select(
-        id_col, "modality", "band", "slice", "mhash", F.lit(0).alias("is_new")
-    ).unionByName(
-        nb.select(
-            id_col, "modality", "band", "slice", "mhash", F.lit(1).alias("is_new")
-        )
-    )
-    grouped = (
-        allb.groupBy("modality", "band", "slice")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("id"),
-                        F.col("mhash").alias("h"),
-                        F.col("is_new").alias("is_new"),
-                    )
-                )
-            ).alias("items")
-        )
-        .filter(
-            (F.size("items") > 1)
-            & (F.size(F.filter("items", lambda s: s.is_new == 1)) > 0)
-        )
-    )
-    if max_group is not None:
-        grouped = grouped.filter(F.size("items") <= max_group)
-    return (
-        grouped.select(
-            F.col("modality"), F.explode(pair_expand(F.col("items"))).alias("p")
-        )
-        .where((F.col("p.a.is_new") == 1) | (F.col("p.b.is_new") == 1))
-        .select(
-            F.col("p.a.id").alias("id_a"),
-            F.col("p.b.id").alias("id_b"),
-            F.bit_count(F.col("p.a.h").bitwiseXOR(F.col("p.b.h"))).cast("int").alias(
-                "hamming"
-            ),
-            "modality",
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .distinct()
+    new = media_signatures(new_media, id_col, blob_col, bands)
+    return _archive_probe(
+        old_signatures, new, new_media, id_col, ("modality", "band", "slice"),
+        "media_id", "mhash", max_distance, max_group,
     )
 
 

@@ -266,10 +266,10 @@ class CorpusConfig:
     media_format_audit: bool = False
     # round-12: also collapse PARTIAL-image duplicates (a doc whose
     # image is a stride-aligned crop/letterbox of another doc's —
-    # whole-image hashes diverge on those): image_span_pairs' matched-
-    # tile pairs union into the same connected-components pass.
-    # round-13: the same switch now ALSO unions partial-AUDIO spans
-    # (audio_span_pairs — a doc whose clip embeds another doc's
+    # whole-image hashes diverge on those): phash.span_pairs' matched-
+    # tile pairs (IMAGE_PLANE) union into the same connected-components
+    # pass.  round-13: the same switch now ALSO unions partial-AUDIO
+    # spans (AUDIO_PLANE — a doc whose clip embeds another doc's
     # jingle at a hop-aligned offset collapses even across PCM↔ADPCM)
     # — one switch per the span-triad principle: partial-media dedup
     # is one policy, not three.
@@ -1062,40 +1062,27 @@ class CorpusCurationPipeline:
             max_group=self.cfg.lsh_max_group,
         ).select("id_a", "id_b")
         if self.cfg.media_span_dedup:
-            # partial-image dups (crops/letterboxes) union into the
-            # SAME component pass — zero extra decodes, the span
-            # plane's hot-bucket cap applied (image_span_pairs
-            # docstring)
-            span = PH.image_span_pairs_from_tiles(
-                feats.select(
-                    "doc_id", F.explode("tiles").alias("t")
-                ).select(
-                    "doc_id",
-                    F.col("t.tile_idx").alias("tile_idx"),
-                    F.col("t.thash").alias("thash"),
-                ),
-                max_distance=self.cfg.media_max_distance,
-                min_shared=self.cfg.media_span_min_shared,
-                max_group=self.cfg.lsh_max_group,
-                id_col="doc_id",
-            ).select("id_a", "id_b")
-            # round-13: partial-AUDIO spans ride the same switch — a
-            # doc whose clip embeds another doc's jingle (hop-aligned,
-            # incl. across PCM↔ADPCM) joins the same component pass
-            aspan = PH.audio_span_pairs_from_windows(
-                feats.select(
-                    "doc_id", F.explode("wins").alias("w")
-                ).select(
-                    "doc_id",
-                    F.col("w.win_idx").alias("win_idx"),
-                    F.col("w.whash").alias("whash"),
-                ),
-                max_distance=self.cfg.media_max_distance,
-                min_shared=self.cfg.media_audio_min_shared,
-                max_group=self.cfg.lsh_max_group,
-                id_col="doc_id",
-            ).select("id_a", "id_b")
-            pairs = pairs.unionByName(span).unionByName(aspan).distinct()
+            # partial-image dups (crops/letterboxes) and partial-audio
+            # spans (a clip embedding another doc's jingle, hop-aligned,
+            # incl. across PCM↔ADPCM) union into the SAME component
+            # pass — zero extra decodes, the span plane's hot-bucket
+            # cap applied (phash.span_pairs docstring)
+            for plane, units, min_shared in (
+                (PH.IMAGE_PLANE, "tiles", self.cfg.media_span_min_shared),
+                (PH.AUDIO_PLANE, "wins", self.cfg.media_audio_min_shared),
+            ):
+                span = PH.span_pairs_from_units(
+                    plane,
+                    feats.select("doc_id", F.explode(units).alias("u")).select(
+                        "doc_id", "u.*"
+                    ),
+                    min_shared=min_shared,
+                    max_distance=self.cfg.media_max_distance,
+                    max_group=self.cfg.lsh_max_group,
+                    id_col="doc_id",
+                )
+                pairs = pairs.unionByName(span.select("id_a", "id_b"))
+            pairs = pairs.distinct()
         clusters = dedup_clusters(
             pairs.select(
                 F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")

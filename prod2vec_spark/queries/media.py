@@ -12,6 +12,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from prod2vec_spark.operators.phash import UNIT_ID_BASE
 from prod2vec_spark.queries.common import (
     _audio_fixture_path,
     _image_fixture_path,
@@ -262,7 +263,6 @@ IMG_W = IMG_H = 48
 TILE_PX, STRIDE = 16, 8
 MIN_SHARED = 4
 _TILE_COLS = 1024  # tile_idx = tile_row * 1024 + tile_col
-_TILE_ID_BASE = 1_000_000
 
 
 def planted_image(doc_id: int) -> bytes:
@@ -345,7 +345,17 @@ _SPAN_MAX_GROUP = 256  # the hot-bucket valve, ON in the driver entry:
 # (band, slice=0) buckets grow with the CORPUS (measured 4,165 tiles at
 # sf0.1 → ~35M candidate pairs → 19 s) while family buckets stay
 # family-sized.  Capping loses no aligned-duplicate pair (the pigeonhole
-# argument on image_span_pairs) and is replayed EXACTLY by the oracle.
+# argument in phash.span_pairs' docstring) and is replayed EXACTLY by
+# the oracle.
+
+
+def _with_same_family(pairs):
+    """The span audits' self-audit column: ``same_family`` = 1 iff
+    both ids belong to one planted family (doc_id // 2)."""
+    return pairs.withColumn(
+        "same_family",
+        (F.floor(F.col("id_a") / 2) == F.floor(F.col("id_b") / 2)).cast("bigint"),
+    )
 
 
 def q_image_span_audit(spark, sf_dir):
@@ -361,39 +371,11 @@ def q_image_span_audit(spark, sf_dir):
     from prod2vec_spark.operators import phash as PH
 
     docs = read_table(spark, sf_dir, "documents", spread=False).select("doc_id")
-    tiles = (
-        spark.read.parquet(_image_fixture_path())
-        .join(docs, "doc_id", "leftsemi")
-        .select(
-            (F.col("doc_id") * F.lit(_TILE_ID_BASE) + F.col("tile_idx")).alias(
-                "tid"
-            ),
-            "thash",
-        )
-    )
-    pairs = PH.phash_neardup(
-        tiles, id_col="tid", hash_col="thash", max_distance=3,
-        max_group=_SPAN_MAX_GROUP,
-    )
-    img_a = F.expr(f"id_a div {_TILE_ID_BASE}").cast("long")
-    img_b = F.expr(f"id_b div {_TILE_ID_BASE}").cast("long")
-    return (
-        pairs.select(img_a.alias("ia"), img_b.alias("ib"))
-        .where(F.col("ia") != F.col("ib"))
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("n_shared_tiles"))
-        .where(F.col("n_shared_tiles") >= MIN_SHARED)
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared_tiles",
-            (
-                F.floor(F.col("id_a") / 2) == F.floor(F.col("id_b") / 2)
-            ).cast("bigint").alias("same_family"),
+    tiles = spark.read.parquet(_image_fixture_path()).join(docs, "doc_id", "leftsemi")
+    return _with_same_family(
+        PH.span_pairs_from_units(
+            PH.IMAGE_PLANE, tiles, min_shared=MIN_SHARED, max_distance=3,
+            max_group=_SPAN_MAX_GROUP, id_col="doc_id",
         )
     )
 
@@ -408,7 +390,7 @@ def _sql_image_span_audit() -> str:
     path = _image_fixture_path()
     return f"""
 WITH t AS (
-  SELECT v.doc_id * {_TILE_ID_BASE} + v.tile_idx AS tid, v.thash
+  SELECT v.doc_id * {UNIT_ID_BASE} + v.tile_idx AS tid, v.thash
   FROM read_parquet('{path}') v
   WHERE v.doc_id IN (SELECT doc_id FROM documents)
 ),
@@ -427,10 +409,10 @@ cand AS (
   JOIN ok ON ok.band = a.band AND ok.slice = a.slice
 ),
 tile_pairs AS (
-  SELECT ta // {_TILE_ID_BASE} AS ia, tb // {_TILE_ID_BASE} AS ib
+  SELECT ta // {UNIT_ID_BASE} AS ia, tb // {UNIT_ID_BASE} AS ib
   FROM cand
   WHERE bit_count(xor(ha, hb)) <= 3
-    AND ta // {_TILE_ID_BASE} <> tb // {_TILE_ID_BASE}
+    AND ta // {UNIT_ID_BASE} <> tb // {UNIT_ID_BASE}
 )
 SELECT LEAST(ia, ib) AS id_a, GREATEST(ia, ib) AS id_b,
        CAST(COUNT(*) AS INT) AS n_shared_tiles,
@@ -448,7 +430,6 @@ register(q_image_span_audit, _sql_image_span_audit())
 AUDIO_RATE = 4000
 WINDOW_MS, HOP_MS = 500, 250
 AUDIO_MIN_SHARED = 3
-_WIN_ID_BASE = 1_000_000
 
 
 def planted_audio_sig(tag: str, n: int) -> list[int]:
@@ -544,38 +525,11 @@ def q_audio_span_audit(spark, sf_dir):
     from prod2vec_spark.operators import phash as PH
 
     docs = read_table(spark, sf_dir, "documents", spread=False).select("doc_id")
-    wins = (
-        spark.read.parquet(_audio_fixture_path())
-        .join(docs, "doc_id", "leftsemi")
-        .select(
-            (F.col("doc_id") * F.lit(_WIN_ID_BASE) + F.col("win_idx")).alias(
-                "wid"
-            ),
-            "whash",
-        )
-    )
-    pairs = PH.phash_neardup(
-        wins, id_col="wid", hash_col="whash", max_distance=3
-    )
-    clip_a = F.expr(f"id_a div {_WIN_ID_BASE}").cast("long")
-    clip_b = F.expr(f"id_b div {_WIN_ID_BASE}").cast("long")
-    return (
-        pairs.select(clip_a.alias("ca"), clip_b.alias("cb"))
-        .where(F.col("ca") != F.col("cb"))
-        .select(
-            F.least("ca", "cb").alias("id_a"),
-            F.greatest("ca", "cb").alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("n_shared_windows"))
-        .where(F.col("n_shared_windows") >= AUDIO_MIN_SHARED)
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared_windows",
-            (
-                F.floor(F.col("id_a") / 2) == F.floor(F.col("id_b") / 2)
-            ).cast("bigint").alias("same_family"),
+    wins = spark.read.parquet(_audio_fixture_path()).join(docs, "doc_id", "leftsemi")
+    return _with_same_family(
+        PH.span_pairs_from_units(
+            PH.AUDIO_PLANE, wins, min_shared=AUDIO_MIN_SHARED, max_distance=3,
+            id_col="doc_id",
         )
     )
 
@@ -588,7 +542,7 @@ def _sql_audio_span_audit() -> str:
     path = _audio_fixture_path()
     return f"""
 WITH t AS (
-  SELECT v.doc_id * {_WIN_ID_BASE} + v.win_idx AS wid, v.whash
+  SELECT v.doc_id * {UNIT_ID_BASE} + v.win_idx AS wid, v.whash
   FROM read_parquet('{path}') v
   WHERE v.doc_id IN (SELECT doc_id FROM documents)
 ),
@@ -602,10 +556,10 @@ cand AS (
     ON a.band = b.band AND a.slice = b.slice AND a.wid < b.wid
 ),
 win_pairs AS (
-  SELECT wa // {_WIN_ID_BASE} AS ca, wb // {_WIN_ID_BASE} AS cb
+  SELECT wa // {UNIT_ID_BASE} AS ca, wb // {UNIT_ID_BASE} AS cb
   FROM cand
   WHERE bit_count(xor(ha, hb)) <= 3
-    AND wa // {_WIN_ID_BASE} <> wb // {_WIN_ID_BASE}
+    AND wa // {UNIT_ID_BASE} <> wb // {UNIT_ID_BASE}
 )
 SELECT LEAST(ca, cb) AS id_a, GREATEST(ca, cb) AS id_b,
        CAST(COUNT(*) AS INT) AS n_shared_windows,
@@ -636,7 +590,6 @@ VID_W, VID_H = 32, 24
 VID_FPS = 4
 VID_EVERY_MS = 250  # sample every frame: idx = ts*fps/1000 walks 0..n-1
 VID_MIN_SHARED = 4
-_FRAME_ID_BASE = 1_000_000
 
 
 def _video_frame(tag: str) -> bytes:
@@ -729,38 +682,13 @@ def q_video_span_audit(spark, sf_dir):
     from prod2vec_spark.operators import phash as PH
 
     docs = read_table(spark, sf_dir, "documents", spread=False).select("doc_id")
-    frames = (
-        spark.read.parquet(_video_frames_fixture_path())
-        .join(docs, "doc_id", "leftsemi")
-        .select(
-            (
-                F.col("doc_id") * F.lit(_FRAME_ID_BASE) + F.col("frame_idx")
-            ).alias("fid"),
-            "fhash",
-        )
+    frames = spark.read.parquet(_video_frames_fixture_path()).join(
+        docs, "doc_id", "leftsemi"
     )
-    pairs = PH.phash_neardup(
-        frames, id_col="fid", hash_col="fhash", max_distance=3
-    )
-    clip_a = F.expr(f"id_a div {_FRAME_ID_BASE}").cast("long")
-    clip_b = F.expr(f"id_b div {_FRAME_ID_BASE}").cast("long")
-    return (
-        pairs.select(clip_a.alias("ca"), clip_b.alias("cb"))
-        .where(F.col("ca") != F.col("cb"))
-        .select(
-            F.least("ca", "cb").alias("id_a"),
-            F.greatest("ca", "cb").alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("n_shared_frames"))
-        .where(F.col("n_shared_frames") >= VID_MIN_SHARED)
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared_frames",
-            (
-                F.floor(F.col("id_a") / 2) == F.floor(F.col("id_b") / 2)
-            ).cast("bigint").alias("same_family"),
+    return _with_same_family(
+        PH.span_pairs_from_units(
+            PH.VIDEO_PLANE, frames, min_shared=VID_MIN_SHARED, max_distance=3,
+            id_col="doc_id",
         )
     )
 
@@ -770,7 +698,7 @@ def _sql_video_span_audit() -> str:
     path = _video_frames_fixture_path()
     return f"""
 WITH t AS (
-  SELECT v.doc_id * {_FRAME_ID_BASE} + v.frame_idx AS fid, v.fhash
+  SELECT v.doc_id * {UNIT_ID_BASE} + v.frame_idx AS fid, v.fhash
   FROM read_parquet('{path}') v
   WHERE v.doc_id IN (SELECT doc_id FROM documents)
 ),
@@ -784,10 +712,10 @@ cand AS (
     ON a.band = b.band AND a.slice = b.slice AND a.fid < b.fid
 ),
 frame_pairs AS (
-  SELECT fa // {_FRAME_ID_BASE} AS ca, fb // {_FRAME_ID_BASE} AS cb
+  SELECT fa // {UNIT_ID_BASE} AS ca, fb // {UNIT_ID_BASE} AS cb
   FROM cand
   WHERE bit_count(xor(ha, hb)) <= 3
-    AND fa // {_FRAME_ID_BASE} <> fb // {_FRAME_ID_BASE}
+    AND fa // {UNIT_ID_BASE} <> fb // {UNIT_ID_BASE}
 )
 SELECT LEAST(ca, cb) AS id_a, GREATEST(ca, cb) AS id_b,
        CAST(COUNT(*) AS INT) AS n_shared_frames,

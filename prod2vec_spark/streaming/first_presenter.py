@@ -58,7 +58,9 @@ def start_first_presenter_gate(
     signature (``key_cols`` + ``owner_col`` + ``carry`` + whatever
     ``decide`` reads); ``decide`` receives those rows joined with
     their ``owner``/``owner_<c>`` columns and returns the batch's
-    decision rows.
+    decision rows.  The registry stores only ``key_cols``, ``owner``
+    and ``owner_<c>``: other signature columns reach ``decide`` and
+    nothing else.
 
     Raises if ``checkpoint`` has committed batches but ``registry_dir``
     holds no partial: resuming would silently re-own every signature

@@ -4,14 +4,15 @@ perceptual-hash counterpart of the text stream's MinHash/LSH gate
 (streaming/neardup.py), sharing its semantics, registry and sink
 recipe.
 
-Every arriving media row (mixed PNG/WAV/AVI blobs) computes its
-perceptual hash in the Arrow-batched decode pass
-(operators/phash.media_hashes — mapInPandas runs unchanged on a
-stream) and explodes the hash into the SAME ``bands`` disjoint
-(band, slice) signatures as the batch plane
-(operators/phash.band_structs).  A (modality, band, slice) signature
-is owned by the first media id to present it; a row is KEPT iff it
-owns ALL of its bands.  Modality in the key means an image hash can
+Every arriving media row (mixed PNG/WAV/AVI blobs) derives its
+signatures with operators/phash.media_signatures — the Arrow-batched
+decode pass (mapInPandas runs unchanged on a stream) exploded into
+the SAME ``bands`` disjoint (band, slice) rows the batch plane
+persists as its incremental band table (the ``mhash`` column those
+rows carry for the batch probe never reaches the registry, which
+stores only key and owner columns).  A (modality, band, slice)
+signature is owned by the first media id to present it; a row is
+KEPT iff it owns ALL of its bands.  Modality in the key means an image hash can
 never collide with an audio hash — the batch plane's partition rule,
 held in the registry.
 
@@ -31,40 +32,12 @@ auditable-miss contract; the batch stage keeps them too).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from prod2vec_spark.operators.phash import band_structs, media_hashes
+from prod2vec_spark.operators.phash import media_signatures
 from prod2vec_spark.streaming.first_presenter import (
     owns_all,
     start_first_presenter_gate,
 )
-
-BANDS = 4
-
-
-def media_signatures(
-    media: DataFrame,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-    bands: int = BANDS,
-) -> DataFrame:
-    """(media_id, modality, band, slice): one row per band signature
-    of every decodable media row."""
-    hashes = media_hashes(media, id_col=id_col, blob_col=blob_col)
-    return (
-        hashes.where(F.col("mhash").isNotNull())
-        .select(
-            F.col(id_col).alias("media_id"),
-            "modality",
-            F.explode(F.array(*band_structs(F.col("mhash"), bands))).alias("bs"),
-        )
-        .select(
-            "media_id",
-            "modality",
-            F.col("bs.band").alias("band"),
-            F.col("bs.slice").alias("slice"),
-        )
-    )
 
 
 def start_media_near_dedup_registry(
@@ -74,7 +47,7 @@ def start_media_near_dedup_registry(
     checkpoint: str,
     id_col: str = "media_id",
     blob_col: str = "blob",
-    bands: int = BANDS,
+    bands: int = 4,
 ):
     """Media first-presenter gate over a media stream: (media_id,
     keep) decisions land at ``out_dir/batch_id=N`` (read them with

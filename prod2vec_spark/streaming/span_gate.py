@@ -1,9 +1,11 @@
 """Streaming span gate (ENGINE scope): the span plane of the
 first-presenter gate (streaming/first_presenter.py), behind the span
 triad's three streaming legs — video frames, image tiles, audio
-windows.  Each leg is a ``SpanPlane`` spec (unit hash function,
-composite id base, default min_shared); the signature derivation and
-the foreign-claim fold are written once, here.
+windows.  Each leg is one of operators/phash.py's ``SpanPlane``
+specs (``VIDEO_PLANE`` / ``IMAGE_PLANE`` / ``AUDIO_PLANE``); the
+signatures are phash.span_signatures — the same (media_id, unit,
+hash, band, slice) rows the batch plane persists as its band table
+— and the foreign-claim fold is written once, here.
 
 Semantics:
 
@@ -11,7 +13,7 @@ Semantics:
   pass; each unit's 64-bit hash explodes into ``bands`` disjoint
   (band, slice) signatures — the batch plane's banding;
 * a (band, slice) signature is owned by the FIRST composite unit id
-  (media·BASE + unit_idx; min id within a batch) and carries that
+  (media·UNIT_ID_BASE + unit_idx; min id within a batch) and carries that
   unit's FULL hash as ``owner_hash`` (the verify side);
 * a unit is foreign-claimed iff some signature of its is owned by a
   DIFFERENT media's unit whose owner hash exact-verifies
@@ -37,73 +39,11 @@ matter how many units present it (hot-bucket-proof by construction).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prod2vec_spark.operators.phash import (
-    _FRAME_ID_BASE,
-    _TILE_ID_BASE,
-    _WIN_ID_BASE,
-    _composite_id,
-    audio_window_hashes,
-    band_structs,
-    frame_hashes,
-    image_tile_hashes,
-)
+from prod2vec_spark.operators.phash import SpanPlane, span_signatures
 from prod2vec_spark.streaming.first_presenter import start_first_presenter_gate
-
-DEFAULT_BANDS = 4
-
-
-@dataclass(frozen=True)
-class SpanPlane:
-    """Everything that differs between the three streaming span legs.
-
-    ``hash_fn(media, id_col=..., blob_col=..., **kwargs)`` must return
-    one row per decoded unit with ``idx_col`` (unit index within the
-    media) and ``hash_col`` (the unit's 64-bit hash)."""
-
-    hash_fn: Callable[..., DataFrame]
-    idx_col: str
-    hash_col: str
-    id_base: int  # composite unit id = media_id * id_base + unit_idx
-    min_shared: int  # default drop threshold (units foreign-claimed)
-
-
-# video: AVI or animated-GIF frames sampled every ``every_ms``
-VIDEO_PLANE = SpanPlane(frame_hashes, "frame_idx", "fhash", _FRAME_ID_BASE, 2)
-# image: ``tile_px`` tiles at ``stride``
-IMAGE_PLANE = SpanPlane(image_tile_hashes, "tile_idx", "thash", _TILE_ID_BASE, 4)
-# audio: ``window_ms`` windows every ``hop_ms``
-AUDIO_PLANE = SpanPlane(audio_window_hashes, "win_idx", "whash", _WIN_ID_BASE, 2)
-
-
-def span_signatures(
-    plane: SpanPlane,
-    media: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    id_col: str = "media_id",
-    blob_col: str = "blob",
-    **hash_kwargs,
-) -> DataFrame:
-    """(media_id, unit, hash, band, slice): one row per band signature
-    of every decoded unit; ``unit`` is the composite unit id."""
-    uh = plane.hash_fn(media, id_col=id_col, blob_col=blob_col, **hash_kwargs)
-    return uh.select(
-        F.col(id_col).alias("media_id"),
-        _composite_id(id_col, F.col(plane.idx_col), plane.id_base).alias("unit"),
-        F.col(plane.hash_col).alias("hash"),
-        F.explode(F.array(*band_structs(F.col(plane.hash_col), bands))).alias("bs"),
-    ).select(
-        "media_id",
-        "unit",
-        "hash",
-        F.col("bs.band").alias("band"),
-        F.col("bs.slice").alias("slice"),
-    )
 
 
 def start_span_gate(
@@ -114,7 +54,7 @@ def start_span_gate(
     checkpoint: str,
     min_shared: "int | None" = None,
     max_distance: int = 3,
-    bands: int = DEFAULT_BANDS,
+    bands: int = 4,
     id_col: str = "media_id",
     blob_col: str = "blob",
     **hash_kwargs,

@@ -2,7 +2,7 @@
 third leg of the span triad (video frames → image tiles → audio
 windows).  Whole-clip energy-gradient hashing misses an embedded
 jingle the way whole-image hashing misses a crop; ``audio_window_hashes``
-+ ``audio_span_pairs`` close that gap for insertion offsets aligned to
++ ``span_pairs(AUDIO_PLANE, ...)`` close that gap for insertion offsets aligned to
 the window hop (the granularity contract documented on the operator,
 mirroring frame_hashes' temporal sampling and the tile plane's
 stride)."""
@@ -17,11 +17,12 @@ from prod2vec_spark.operators.multimodal import (
     encode_wav_pcm16,
 )
 from prod2vec_spark.operators.phash import (
-    audio_band_table,
+    AUDIO_PLANE,
     audio_mono,
-    audio_span_pairs,
     audio_window_hashes,
-    incremental_audio_span_pairs,
+    incremental_span_pairs,
+    span_pairs,
+    span_signatures,
     window_rows_py,
 )
 
@@ -94,8 +95,8 @@ def test_embedded_jingle_recovered_cross_codec(spark):
     media = spark.createDataFrame(rows, "media_id long, blob binary")
     got = {
         (r["id_a"], r["id_b"]): r["n_shared_windows"]
-        for r in audio_span_pairs(
-            media, window_ms=500, hop_ms=250, max_distance=3, min_shared=2
+        for r in span_pairs(
+            AUDIO_PLANE, media, window_ms=500, hop_ms=250, max_distance=3, min_shared=2
         ).collect()
     }
     assert set(got) == {(1, 2)}, got
@@ -117,8 +118,8 @@ def test_sub_hop_offset_documented_miss(spark):
         "media_id long, blob binary",
     )
     assert (
-        audio_span_pairs(
-            media, window_ms=500, hop_ms=250, max_distance=3, min_shared=2
+        span_pairs(
+            AUDIO_PLANE, media, window_ms=500, hop_ms=250, max_distance=3, min_shared=2
         ).count()
         == 0
     )
@@ -134,8 +135,9 @@ def test_gain_invariance_of_window_hashes():
 
 
 def test_incremental_twin_matches_batch(spark):
-    """The hash-locked guarantee: audio_span_pairs(old ∪ new) ==
-    audio_span_pairs(old) ∪ incremental_audio_span_pairs(bands, new),
+    """The hash-locked guarantee at the window plane:
+    span_pairs(old ∪ new) == span_pairs(old) ∪
+    incremental_span_pairs(bands, new),
     with the archive probed via its PERSISTED band table (never
     re-decoded)."""
     jingle = _sig(1, 2 * RATE)
@@ -154,16 +156,16 @@ def test_incremental_twin_matches_batch(spark):
 
     batch = {
         (r["id_a"], r["id_b"]): r["n_shared_windows"]
-        for r in audio_span_pairs(both, **kw).collect()
+        for r in span_pairs(AUDIO_PLANE, both, **kw).collect()
     }
     old_only = {
         (r["id_a"], r["id_b"]): r["n_shared_windows"]
-        for r in audio_span_pairs(old, **kw).collect()
+        for r in span_pairs(AUDIO_PLANE, old, **kw).collect()
     }
-    bands = audio_band_table(old, window_ms=500, hop_ms=250)
+    bands = span_signatures(AUDIO_PLANE, old, window_ms=500, hop_ms=250)
     inc = {
         (r["id_a"], r["id_b"]): r["n_shared_windows"]
-        for r in incremental_audio_span_pairs(bands, new, **kw).collect()
+        for r in incremental_span_pairs(AUDIO_PLANE, bands, new, **kw).collect()
     }
     assert {**old_only, **inc} == batch
     assert (1, 3) in inc  # the new clip's embedded jingle was caught

@@ -12,16 +12,14 @@ from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.dedup import minhash_bands
 from prod2vec_spark.streaming.first_presenter import read_decisions
-from prod2vec_spark.streaming.media import (
-    media_signatures,
-    start_media_near_dedup_registry,
-)
-from prod2vec_spark.streaming.neardup import start_near_dedup_registry
-from prod2vec_spark.streaming.span_gate import (
+from prod2vec_spark.operators.phash import (
     IMAGE_PLANE,
+    media_signatures,
     span_signatures,
-    start_span_gate,
 )
+from prod2vec_spark.streaming.media import start_media_near_dedup_registry
+from prod2vec_spark.streaming.neardup import start_near_dedup_registry
+from prod2vec_spark.streaming.span_gate import start_span_gate
 from tests.first_presenter_oracle import assert_gate_matches_oracle, span_keep
 
 DOCS = "doc_id long, text string, lang string"
@@ -78,7 +76,7 @@ def test_text_gate_single_wave_matches_oracle(spark, tmp_path):
 
 
 def test_media_gate_single_wave_matches_oracle(spark, tmp_path):
-    from tests.test_streaming_media import _media_rows
+    from tests.test_phash import _media_rows
 
     rows = _media_rows()
     landing = tmp_path / "landing"
@@ -99,6 +97,11 @@ def test_media_gate_single_wave_matches_oracle(spark, tmp_path):
         id_col="media_id",
     )
     assert 0 in got.values() and rows[-1][0] not in got  # undecodable
+    # the signatures carry mhash for the batch probe; the registry
+    # stores only the key and owner columns
+    assert sorted(spark.read.parquet(reg).columns) == [
+        "band", "batch_id", "modality", "owner", "slice",
+    ]
 
 
 def test_image_span_gate_single_wave_matches_oracle(spark, tmp_path):

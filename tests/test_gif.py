@@ -131,9 +131,9 @@ def test_gif_cross_codec_pairing_in_media_plane(spark):
 
 def test_gif_joins_the_tile_span_plane(spark):
     """image_tile_hashes accepts GIF blobs through the shared decode
-    door: a GIF crop of a PNG original pairs in image_span_pairs —
+    door: a GIF crop of a PNG original pairs in span_pairs(IMAGE_PLANE) —
     the cross-codec partial-image case, GIF edition."""
-    from prod2vec_spark.operators.phash import image_span_pairs
+    from prod2vec_spark.operators.phash import IMAGE_PLANE, span_pairs
 
     base = _noise(9, h=48, w=48)
     crop = base[16:, 16:]
@@ -145,7 +145,7 @@ def test_gif_joins_the_tile_span_plane(spark):
     media = spark.createDataFrame(rows, "media_id long, blob binary")
     got = {
         (r["id_a"], r["id_b"]): r["n_shared_tiles"]
-        for r in image_span_pairs(media, min_shared=4).collect()
+        for r in span_pairs(IMAGE_PLANE, media, min_shared=4).collect()
     }
     assert set(got) == {(1, 2)}, got
 
@@ -229,12 +229,16 @@ def test_animated_gif_frames_and_disposal():
 
 def test_animated_gif_joins_the_frame_span_plane(spark):
     """An animated GIF embedding another clip's scene pairs in
-    video_span_pairs (frame_hashes now dispatches GIF ≥2 frames), and
+    span_pairs(VIDEO_PLANE) (frame_hashes now dispatches GIF ≥2 frames), and
     a GIF scene embedded in an AVI host pairs CROSS-CONTAINER; static
     GIFs stay out of the frame plane (the image plane owns them)."""
     from prod2vec_spark.operators.gif import encode_gif_animated
     from prod2vec_spark.operators.multimodal import encode_avi_gray8
-    from prod2vec_spark.operators.phash import frame_hashes, video_span_pairs
+    from prod2vec_spark.operators.phash import (
+        VIDEO_PLANE,
+        frame_hashes,
+        span_pairs,
+    )
 
     rng = np.random.RandomState(5)
 
@@ -255,8 +259,8 @@ def test_animated_gif_joins_the_frame_span_plane(spark):
     assert ids == {1, 2, 3}  # static GIF emits no frame rows
     got = {
         (r["id_a"], r["id_b"]): r["n_shared_frames"]
-        for r in video_span_pairs(
-            media, every_ms=250, min_shared=2
+        for r in span_pairs(
+            VIDEO_PLANE, media, every_ms=250, min_shared=2
         ).collect()
     }
     assert set(got) == {(1, 2)}, got

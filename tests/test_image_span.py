@@ -2,7 +2,7 @@
 duplicate detection — the spatial analog of the video plane's
 per-frame span detection.  Whole-image dHash misses a cropped or
 letterboxed duplicate the way whole-clip hashing misses an embedded
-clip; ``image_tile_hashes`` + ``image_span_pairs`` close that gap for
+clip; ``image_tile_hashes`` + ``span_pairs(IMAGE_PLANE, ...)`` close that gap for
 crop/pad offsets aligned to the tile stride (the granularity contract
 documented on the operator, mirroring frame_hashes' temporal
 sampling)."""
@@ -14,9 +14,10 @@ import pytest
 
 from prod2vec_spark.operators.multimodal import encode_png_gray8
 from prod2vec_spark.operators.phash import (
+    IMAGE_PLANE,
     image_gray,
-    image_span_pairs,
     image_tile_hashes,
+    span_pairs,
 )
 
 
@@ -86,8 +87,8 @@ def test_image_span_pairs_recovers_crop_and_letterbox(spark):
     )
     pairs = {
         (r["id_a"], r["id_b"]): r["n_shared_tiles"]
-        for r in image_span_pairs(
-            media, tile_px=16, stride=8, min_shared=4
+        for r in span_pairs(
+            IMAGE_PLANE, media, tile_px=16, stride=8, min_shared=4
         ).collect()
     }
     assert set(pairs) == {(1, 2), (1, 3), (2, 3)}, pairs
@@ -162,8 +163,8 @@ def test_incremental_image_span_matches_batch(spark):
     — with the archive never re-decoded and old×old pairs never
     re-emitted."""
     from prod2vec_spark.operators.phash import (
-        incremental_image_span_pairs,
-        tile_band_table,
+        incremental_span_pairs,
+        span_signatures,
     )
 
     a, b = _noise(1), _noise(2)
@@ -185,16 +186,16 @@ def test_incremental_image_span_matches_batch(spark):
     kw = dict(tile_px=16, stride=8, min_shared=4)
     batch_all = {
         (r["id_a"], r["id_b"]): r["n_shared_tiles"]
-        for r in image_span_pairs(both, **kw).collect()
+        for r in span_pairs(IMAGE_PLANE, both, **kw).collect()
     }
     batch_old = {
         (r["id_a"], r["id_b"]): r["n_shared_tiles"]
-        for r in image_span_pairs(old, **kw).collect()
+        for r in span_pairs(IMAGE_PLANE, old, **kw).collect()
     }
-    archive = tile_band_table(old, tile_px=16, stride=8)
+    archive = span_signatures(IMAGE_PLANE, old, tile_px=16, stride=8)
     inc = {
         (r["id_a"], r["id_b"]): r["n_shared_tiles"]
-        for r in incremental_image_span_pairs(archive, new, **kw).collect()
+        for r in incremental_span_pairs(IMAGE_PLANE, archive, new, **kw).collect()
     }
     assert batch_old == {(1, 2): batch_all[(1, 2)]}
     assert inc == {(3, 4): batch_all[(3, 4)], (5, 6): batch_all[(5, 6)]}
@@ -207,7 +208,7 @@ def test_incremental_image_span_matches_batch(spark):
         [(3, _png(_noise(9)))], "media_id long, blob binary"
     )
     assert (
-        incremental_image_span_pairs(archive, new2, **kw).count() == 0
+        incremental_span_pairs(IMAGE_PLANE, archive, new2, **kw).count() == 0
     )
 
 
@@ -238,8 +239,8 @@ def test_image_span_pairs_cross_codec_jpeg_letterbox(spark):
     )
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in image_span_pairs(
-            media, tile_px=16, stride=8, min_shared=4
+        for r in span_pairs(
+            IMAGE_PLANE, media, tile_px=16, stride=8, min_shared=4
         ).collect()
     }
     assert (1, 2) in pairs

@@ -560,6 +560,34 @@ def test_quality_classifier_separates_planted_spam(spark, tmp_path):
     assert 0.0 <= agg[0] < agg[1] <= 1.0
 
 
+def test_quality_scoring_after_an_observe(spark, tmp_path):
+    """A fitted quality model scores in a session that has already run
+    an ``observe``: the model keeps no training summary, whose
+    SparkSession field would otherwise carry the session's
+    non-serializable ObservationManager into every scoring task."""
+    from prod2vec_spark.ml.quality_clf import (
+        fit_quality_classifier,
+        score_quality,
+    )
+    from prod2vec_spark.sources.io import checkpoint
+
+    _, seen = checkpoint(
+        spark.range(3), str(tmp_path / "obs"),
+        observe=[F.count(F.lit(1)).alias("n")],
+    )
+    assert seen["n"] == 3
+    rows = [(i, "the cat sat on the mat with a book " * 3) for i in range(6)]
+    rows += [(100 + i, "buy now " * 20) for i in range(6)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
+        "label", (F.col("doc_id") < 100).cast("int")
+    )
+    model = fit_quality_classifier(docs, max_iter=5)
+    assert not model.hasSummary
+    got = score_quality(docs, model).collect()
+    assert len(got) == 12
+    assert all(0.0 <= r["quality_prob"] <= 1.0 for r in got)
+
+
 # --------------------------------------------------- text normalize
 def test_normalize_text_golden(spark):
     from prod2vec_spark.operators.text import normalize_text

@@ -87,11 +87,11 @@ def test_span_pairs_from_features_match_standalone(spark, media, feats):
     from pyspark.sql import functions as F
 
     from prod2vec_spark.operators.phash import (
-        audio_span_pairs,
-        audio_span_pairs_from_windows,
-        image_span_pairs,
-        image_span_pairs_from_tiles,
+        AUDIO_PLANE,
+        IMAGE_PLANE,
         media_features,
+        span_pairs,
+        span_pairs_from_units,
     )
 
     fdf = media_features(media)
@@ -107,8 +107,8 @@ def test_span_pairs_from_features_match_standalone(spark, media, feats):
     )
     key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
     assert sorted(
-        map(key, image_span_pairs_from_tiles(tiles).collect())
-    ) == sorted(map(key, image_span_pairs(media).collect()))
+        map(key, span_pairs_from_units(IMAGE_PLANE, tiles).collect())
+    ) == sorted(map(key, span_pairs(IMAGE_PLANE, media).collect()))
     assert sorted(
-        map(key, audio_span_pairs_from_windows(wins).collect())
-    ) == sorted(map(key, audio_span_pairs(media).collect()))
+        map(key, span_pairs_from_units(AUDIO_PLANE, wins).collect())
+    ) == sorted(map(key, span_pairs(AUDIO_PLANE, media).collect()))

@@ -6,11 +6,18 @@ audit contract."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators import phash as PH
+from prod2vec_spark.operators.multimodal import (
+    encode_avi_gray8,
+    encode_png_gray8,
+    encode_wav_pcm16,
+)
 from tests.test_multimodal import make_png
 
 
@@ -128,7 +135,7 @@ def test_hamming_candidates_pigeonhole_recall(spark):
     for b in flips:
         v ^= 1 << b
     df = spark.createDataFrame([(1, base), (2, v)], "media_id long, dhash long")
-    got = PH.hamming_candidates(df).collect()
+    got = PH.phash_neardup(df, max_distance=3).collect()
     assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)]
 
 
@@ -246,22 +253,22 @@ def test_composite_id_rejects_negative_and_overflow_ids(spark):
     at composite-id construction."""
     from pyspark.sql import functions as F
 
-    from prod2vec_spark.operators.phash import _FRAME_ID_BASE, _composite_id
+    from prod2vec_spark.operators.phash import UNIT_ID_BASE, _composite_id
 
     ok = spark.createDataFrame([(42, 7)], "media_id long, frame_idx int")
     got = ok.select(
-        _composite_id("media_id", F.col("frame_idx"), _FRAME_ID_BASE).alias("fid")
+        _composite_id("media_id", F.col("frame_idx"), UNIT_ID_BASE).alias("fid")
     ).collect()
-    assert got[0]["fid"] == 42 * _FRAME_ID_BASE + 7
+    assert got[0]["fid"] == 42 * UNIT_ID_BASE + 7
 
-    for bad_id in (-5, (1 << 63) // _FRAME_ID_BASE):
+    for bad_id in (-5, (1 << 63) // UNIT_ID_BASE):
         bad = spark.createDataFrame(
             [(bad_id, 1)], "media_id long, frame_idx int"
         )
         with pytest.raises(Exception, match="composite-id owner out of range"):
             bad.select(
                 _composite_id(
-                    "media_id", F.col("frame_idx"), _FRAME_ID_BASE
+                    "media_id", F.col("frame_idx"), UNIT_ID_BASE
                 ).alias("fid")
             ).collect()
 
@@ -285,3 +292,120 @@ def test_phash_pair_fixture_goldens_match_codecs():
     wp = pq.read_table(os.path.join(fixdir, "phash_pairs_webp.parquet"))
     for blob, want in zip(wp["blob"].to_pylist(), wp["dhash"].to_pylist()):
         assert PH.dhash_webp(blob) == want
+
+
+# ------------------------------------------- whole-media incremental
+def _media_rows() -> list[tuple[int, bytearray]]:
+    """Mixed-modality corpus with planted near-dup families (3
+    members each, one-element perturbations) plus singletons and one
+    undecodable blob."""
+    import struct as _struct
+
+    rows: list[tuple[int, bytearray]] = []
+    mid = 0
+    for fam in range(4):  # image families
+        base = bytearray(
+            b"".join(hashlib.md5(f"simg{fam}|{k}".encode()).digest() for k in range(16))
+        )
+        for member in range(3):
+            mat = bytearray(base)
+            if member:
+                mat[(member * 31) % 256] = (mat[(member * 31) % 256] + 1) % 256
+            rows.append((mid, bytearray(encode_png_gray8(bytes(mat), 16, 16))))
+            mid += 1
+    for fam in range(3):  # audio families
+        raw = b"".join(
+            hashlib.md5(f"swav{fam}|{k}".encode()).digest() for k in range(130)
+        )
+        samples = [s // 8 for s in _struct.unpack("<1040h", raw)]
+        for member in range(3):
+            s2 = list(samples)
+            if member:
+                s2[(member * 97) % 1040] += 200
+            rows.append((mid, bytearray(encode_wav_pcm16(s2))))
+            mid += 1
+    for fam in range(3):  # video families
+        frames = [
+            bytearray(
+                b"".join(
+                    hashlib.md5(f"svid{fam}|{t}|{k}".encode()).digest()
+                    for k in range(16)
+                )
+            )
+            for t in range(4)
+        ]
+        for member in range(3):
+            fr = [bytearray(f) for f in frames]
+            if member:
+                f = fr[member % 4]
+                f[(member * 41) % 256] = (f[(member * 41) % 256] + 1) % 256
+            rows.append(
+                (mid, bytearray(encode_avi_gray8([bytes(f) for f in fr], 16, 16)))
+            )
+            mid += 1
+    # singletons: one unique per modality
+    rng = np.random.default_rng(5)
+    rows.append((mid, bytearray(encode_png_gray8(bytes(rng.integers(0, 256, 256, dtype=np.uint8)), 16, 16)))); mid += 1
+    rows.append((mid, bytearray(encode_wav_pcm16((rng.integers(-2000, 2000, 1040) // 8).tolist())))); mid += 1
+    rows.append((mid, bytearray(b"not media")))  # undecodable
+    return rows
+
+
+def test_incremental_media_pairs_equal_full_rebuild(spark, tmp_path):
+    """The media incremental contract: full == prior ∪ delta for
+    id-disjoint snapshots, with the archive contributing only its
+    PERSISTED band table (never re-decoded); re-ingested ids
+    supersede their stored signatures."""
+    from prod2vec_spark.operators.phash import (
+        incremental_media_pairs,
+        media_hashes,
+        media_neardup_pairs,
+        media_signatures,
+    )
+
+    rows = _media_rows()
+    old_rows = [r for r in rows if r[0] % 2 == 0]
+    new_rows = [r for r in rows if r[0] % 2 == 1]
+    old = spark.createDataFrame(old_rows, "media_id long, blob binary")
+    new = spark.createDataFrame(new_rows, "media_id long, blob binary")
+    both = spark.createDataFrame(rows, "media_id long, blob binary")
+
+    # persist the archive's band table (the incremental store)
+    store = str(tmp_path / "media_bands")
+    media_signatures(old).write.parquet(store)
+    old_bands = spark.read.parquet(store)
+
+    full = {
+        (r["id_a"], r["id_b"])
+        for r in media_neardup_pairs(media_hashes(both)).collect()
+    }
+    prior = {
+        (r["id_a"], r["id_b"])
+        for r in media_neardup_pairs(media_hashes(old)).collect()
+    }
+    delta = {
+        (r["id_a"], r["id_b"])
+        for r in incremental_media_pairs(old_bands, new).collect()
+    }
+    assert full == prior | delta
+    assert delta  # the planted families straddle the id split
+    # every delta pair involves a new id
+    new_ids = {r[0] for r in new_rows}
+    assert all(a in new_ids or b in new_ids for a, b in delta)
+
+    # re-ingestion: a changed blob under an ARCHIVED id supersedes —
+    # id 0 (image family 0's canonical, present in old_bands) re-
+    # ingested as an unrelated image must stop pairing with member 2
+    # (its stored band rows are dropped before grouping)
+    rng = np.random.default_rng(77)
+    unrelated = bytearray(
+        encode_png_gray8(bytes(rng.integers(0, 256, 256, dtype=np.uint8)), 16, 16)
+    )
+    reingest = spark.createDataFrame(
+        [(0, unrelated)], "media_id long, blob binary"
+    )
+    delta2 = {
+        (r["id_a"], r["id_b"])
+        for r in incremental_media_pairs(old_bands, reingest).collect()
+    }
+    assert not any(0 in pair for pair in delta2), delta2

@@ -301,10 +301,11 @@ def test_image_span_plane_holds_at_10x_fixture(spark):
     """
     from prod2vec_spark.operators import phash as PH
     from prod2vec_spark.queries.common import _image_fixture_path
-    from prod2vec_spark.queries.media import MIN_SHARED, _TILE_ID_BASE
+    from prod2vec_spark.operators.phash import UNIT_ID_BASE
+    from prod2vec_spark.queries.media import MIN_SHARED
 
     tiles = spark.read.parquet(_image_fixture_path()).select(
-        (F.col("doc_id") * F.lit(_TILE_ID_BASE) + F.col("tile_idx")).alias(
+        (F.col("doc_id") * F.lit(UNIT_ID_BASE) + F.col("tile_idx")).alias(
             "tid"
         ),
         "thash",
@@ -329,8 +330,8 @@ def test_image_span_plane_holds_at_10x_fixture(spark):
     pairs = PH.phash_neardup(
         tiles, id_col="tid", hash_col="thash", max_distance=3, max_group=256
     )
-    img_a = F.floor(F.col("id_a") / F.lit(_TILE_ID_BASE)).cast("long")
-    img_b = F.floor(F.col("id_b") / F.lit(_TILE_ID_BASE)).cast("long")
+    img_a = F.floor(F.col("id_a") / F.lit(UNIT_ID_BASE)).cast("long")
+    img_b = F.floor(F.col("id_b") / F.lit(UNIT_ID_BASE)).cast("long")
     rolled = (
         pairs.select(img_a.alias("ia"), img_b.alias("ib"))
         .where(F.col("ia") != F.col("ib"))
@@ -361,10 +362,11 @@ def test_audio_span_plane_holds_at_10x_fixture(spark):
     """
     from prod2vec_spark.operators import phash as PH
     from prod2vec_spark.queries.common import _audio_fixture_path
-    from prod2vec_spark.queries.media import AUDIO_MIN_SHARED, _WIN_ID_BASE
+    from prod2vec_spark.operators.phash import UNIT_ID_BASE
+    from prod2vec_spark.queries.media import AUDIO_MIN_SHARED
 
     wins = spark.read.parquet(_audio_fixture_path()).select(
-        (F.col("doc_id") * F.lit(_WIN_ID_BASE) + F.col("win_idx")).alias(
+        (F.col("doc_id") * F.lit(UNIT_ID_BASE) + F.col("win_idx")).alias(
             "wid"
         ),
         "whash",
@@ -383,8 +385,8 @@ def test_audio_span_plane_holds_at_10x_fixture(spark):
     pairs = PH.phash_neardup(
         wins, id_col="wid", hash_col="whash", max_distance=3
     )
-    clip_a = F.expr(f"id_a div {_WIN_ID_BASE}").cast("long")
-    clip_b = F.expr(f"id_b div {_WIN_ID_BASE}").cast("long")
+    clip_a = F.expr(f"id_a div {UNIT_ID_BASE}").cast("long")
+    clip_b = F.expr(f"id_b div {UNIT_ID_BASE}").cast("long")
     rolled = (
         pairs.select(clip_a.alias("ca"), clip_b.alias("cb"))
         .where(F.col("ca") != F.col("cb"))

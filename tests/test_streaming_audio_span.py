@@ -14,15 +14,13 @@ from prod2vec_spark.operators.multimodal import (
     encode_wav_pcm16,
 )
 from prod2vec_spark.operators.phash import (
-    audio_span_pairs,
+    AUDIO_PLANE,
     audio_window_hashes,
+    span_pairs,
+    span_signatures,
 )
 from prod2vec_spark.streaming.first_presenter import read_decisions
-from prod2vec_spark.streaming.span_gate import (
-    AUDIO_PLANE,
-    span_signatures,
-    start_span_gate,
-)
+from prod2vec_spark.streaming.span_gate import start_span_gate
 from tests.first_presenter_oracle import assert_gate_matches_oracle, span_keep
 
 import pytest
@@ -101,7 +99,7 @@ def test_audio_span_gate_invariants(spark, tmp_path):
     # batch span plane over the kept subset: empty
     kept = decisions.filter(F.col("keep") == 1).select("media_id")
     kept_media = media.join(kept, "media_id", "left_semi")
-    assert audio_span_pairs(kept_media, min_shared=2, **KW).count() == 0
+    assert span_pairs(AUDIO_PLANE, kept_media, min_shared=2, **KW).count() == 0
 
 
 def test_audio_span_gate_restart_idempotent(spark, tmp_path):

@@ -9,13 +9,14 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.multimodal import encode_png_gray8
-from prod2vec_spark.operators.phash import image_span_pairs, image_tile_hashes
-from prod2vec_spark.streaming.first_presenter import read_decisions
-from prod2vec_spark.streaming.span_gate import (
+from prod2vec_spark.operators.phash import (
     IMAGE_PLANE,
+    image_tile_hashes,
+    span_pairs,
     span_signatures,
-    start_span_gate,
 )
+from prod2vec_spark.streaming.first_presenter import read_decisions
+from prod2vec_spark.streaming.span_gate import start_span_gate
 from tests.first_presenter_oracle import assert_gate_matches_oracle, span_keep
 
 import pytest
@@ -93,7 +94,7 @@ def test_image_span_gate_invariants(spark, tmp_path):
     # batch span plane over the kept subset: empty
     kept = decisions.filter(F.col("keep") == 1).select("media_id")
     kept_media = media.join(kept, "media_id", "left_semi")
-    assert image_span_pairs(kept_media, min_shared=4, **KW).count() == 0
+    assert span_pairs(IMAGE_PLANE, kept_media, min_shared=4, **KW).count() == 0
 
 
 def test_image_span_gate_restart_idempotent(spark, tmp_path):

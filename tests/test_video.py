@@ -282,7 +282,7 @@ def test_video_span_pairs_finds_embedded_scene(spark):
     """A short clip embedded (with pixel noise) inside a longer,
     otherwise-unrelated video is recovered by the shared-frame plane
     even though the whole-clip fingerprints diverge."""
-    from prod2vec_spark.operators.phash import video_span_pairs
+    from prod2vec_spark.operators.phash import VIDEO_PLANE, span_pairs
 
     rng_frames = _clip(31, n_frames=8, h=24, w=36)     # clip X: 8 frames
     long_frames = _clip(32, n_frames=12, h=24, w=36)   # clip Y: 12 frames
@@ -302,7 +302,7 @@ def test_video_span_pairs_finds_embedded_scene(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["n_shared_frames"]
-        for r in video_span_pairs(media, every_ms=1000, min_shared=2).collect()
+        for r in span_pairs(VIDEO_PLANE, media, every_ms=1000, min_shared=2).collect()
     }
     assert (1, 2) in got and got[(1, 2)] >= 3  # the embedded scene
     assert (1, 3) not in got and (2, 3) not in got

@@ -463,11 +463,11 @@ def test_webp_crosscodec_neardup_query_self_audit(spark):
 def test_webp_joins_the_tile_span_plane(spark):
     """image_tile_hashes accepts lossless-WebP blobs through the
     shared decode door: a WebP crop of a PNG original pairs in
-    image_span_pairs — the cross-codec partial-image case, WebP
+    span_pairs(IMAGE_PLANE) — the cross-codec partial-image case, WebP
     edition (the GIF test's shape)."""
     import numpy as np
 
-    from prod2vec_spark.operators.phash import image_span_pairs
+    from prod2vec_spark.operators.phash import IMAGE_PLANE, span_pairs
 
     base = np.random.RandomState(21).randint(0, 256, (48, 48), dtype=np.uint8)
     crop = np.ascontiguousarray(base[16:, 16:])
@@ -480,7 +480,7 @@ def test_webp_joins_the_tile_span_plane(spark):
     media = spark.createDataFrame(rows, "media_id long, blob binary")
     got = {
         (r["id_a"], r["id_b"]): r["n_shared_tiles"]
-        for r in image_span_pairs(media, min_shared=4).collect()
+        for r in span_pairs(IMAGE_PLANE, media, min_shared=4).collect()
     }
     assert set(got) == {(1, 2)}, got
 
