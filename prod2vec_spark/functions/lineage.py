@@ -20,6 +20,8 @@ localCheckpoint behavior and plans bit-identical.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
 
@@ -71,3 +73,29 @@ def break_lineage(
             )
     sc.setCheckpointDir(checkpoint_dir)
     return df.checkpoint(eager=eager)
+
+
+@contextmanager
+def closing_lazy_breaks(spark):
+    """Scope code that makes a CHAIN of lazy (``eager=False``) breaks —
+    each level derived from the one before — together with the first
+    action over them, so that action marks every level checkpointed.
+
+    Spark's post-job checkpoint pass stops at the first checkpointed
+    RDD it meets, so by default only the last level is marked; the
+    deeper ones stay cached but keep their lineage, and a LATER job
+    marks them while its concurrently submitted adaptive stages still
+    run that lineage.  Those tasks then report SQL metrics of plans
+    the driver has already garbage-collected ("Failed to update
+    accumulator … non-existent accumulator" traces; results are
+    unaffected).  checkpointAllMarkedAncestors makes the pass walk on
+    through every marked level; their partitions are already
+    materialized, so it adds no job."""
+    key = "spark.checkpoint.checkpointAllMarkedAncestors"
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, "true")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(key, prev)

@@ -123,8 +123,8 @@ def _deinterlace(indices: bytearray, width: int, height: int) -> bytearray:
 
 def gif_pixels(blob: bytes) -> tuple[bytes, dict]:
     """Decode the FIRST frame of a GIF to packed top-down RGB bytes +
-    metadata — the ``png_pixels`` contract so the shared gray door
-    (phash.image_gray) dispatches it identically.  Frames smaller than
+    metadata — the ``png_pixels`` contract, so the media decode door
+    (multimodal.decode_blob) folds it to gray identically.  Frames smaller than
     the logical screen are composited onto a bg-color canvas at their
     (left, top) offset.  The background fill happens in RGB space from
     the GLOBAL color table (a frame carrying a LOCAL palette must not
@@ -305,7 +305,7 @@ def gif_frames(blob: bytes) -> tuple[list[bytes], dict]:
     after the frame is captured; 'restore to previous' is approximated
     as 'do not dispose' (documented — it is vanishingly rare and only
     perturbs SUBSEQUENT frame pixels under the approximation).  The
-    gray fold is the channel mean — the image plane's ``_gray``, so a
+    gray fold is the channel mean — multimodal's ``_gray``, so a
     gray-palette GIF's frames are exact.  GCE transparency is honored:
     a frame's transparent-index pixels leave the canvas (the previous
     composite) untouched — the dominant real-world delta encoding.

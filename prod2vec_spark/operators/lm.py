@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from prod2vec_spark.functions.arrays import bind
 from prod2vec_spark.functions.hashing import hash_unit
 from prod2vec_spark.functions.lineage import break_lineage as _break_lineage
+from prod2vec_spark.functions.lineage import closing_lazy_breaks
 from prod2vec_spark.operators.text import tokens
 from prod2vec_spark.sources.io import read_partials
 
@@ -1041,9 +1042,21 @@ def fit_knn(
     entry; the re-derivation share grows with corpus size since the
     explode is the per-byte cost).  The production path still persists
     the model to parquet (KNnModel.save) — this only de-amplifies the
-    self-trained form."""
-    n = order
+    self-trained form.  The per-level breaks chain, so the fit runs
+    under ``closing_lazy_breaks``: its own first action marks every
+    level, and no later job finds one half-closed."""
+    with closing_lazy_breaks(train_docs.sparkSession):
+        return _fit_knn(train_docs, order, text_col, lineage_break, checkpoint_dir)
 
+
+def _fit_knn(
+    train_docs: DataFrame,
+    n: int,
+    text_col: str,
+    lineage_break: bool,
+    checkpoint_dir: "str | None",
+) -> KNnModel:
+    """The body of :func:`fit_knn`."""
     # the n-gram array rides the bind barrier: the explode's inferred
     # size>0 filter otherwise re-inlines the whole tokenize+n-tuple
     # chain into a scan-level Filter (a full duplicate evaluation per

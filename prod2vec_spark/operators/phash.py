@@ -7,12 +7,14 @@ fingerprint for audio and a keyframe-mean dHash for video).
 
 Three stages, each with the engine's 100 TB shape:
 
-1. **dHash** (``phash_images``) — Arrow-batched ``mapInPandas``:
-   stdlib PNG decode (multimodal.png_pixels) → grayscale → 9×8
-   area-average downsample → 64 horizontal-gradient bits.  Row-local,
-   no shuffle; the blob never leaves the executor.  Non-PNG /
-   undecodable blobs yield a NULL hash (auditable, not dropped
-   silently).
+1. **Hash** (``media_hashes``) — Arrow-batched ``mapInPandas``: each
+   blob goes once through ``multimodal.decode_blob`` (the one sniff +
+   decode door) and ``media_hash`` hashes the record — dHash of the
+   gray plane (grayscale → 9×8 area-average downsample → 64
+   horizontal-gradient bits), the energy-gradient hash of the mono
+   signal, or the keyframe-mean dHash of the frames.  Row-local, no
+   shuffle; the blob never leaves the executor.  Undecodable blobs
+   yield a NULL hash (auditable, not dropped silently).
 2. **Banded candidate generation** (``phash_neardup``) — the 64-bit
    hash splits into ``bands`` disjoint slices; by pigeonhole, two
    hashes within Hamming distance d share at least one intact slice
@@ -56,19 +58,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from prod2vec_spark.operators.multimodal import PNG_SIG, png_pixels
+from prod2vec_spark.operators.multimodal import (
+    DecodedBlob,
+    avi_frame_samples,
+    decode_blob,
+    sniff_format,
+    sniff_modality,
+)
 
 HASH_BITS = 64
 _GRID_H, _GRID_W = 8, 9  # 8 rows x 9 cols -> 8x8 horizontal gradients
 _N_WINDOWS = 65  # audio energy windows -> 64 gradient bits
-
-
-def _gray(pixels: bytes, width: int, height: int, channels: int) -> np.ndarray:
-    """(height, width) float64 luminance from raw 8-bit pixel bytes
-    (channel-mean; alpha participates like any channel — identical
-    images keep identical grays, which is all dHash needs)."""
-    a = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, channels)
-    return a.mean(axis=2, dtype=np.float64)
 
 
 def _area_resize(g: np.ndarray, th: int, tw: int) -> np.ndarray:
@@ -101,113 +101,12 @@ def dhash64(g: np.ndarray) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def dhash_png(blob: bytes) -> int | None:
-    """dHash of a PNG blob, or None when the blob is not a decodable
-    non-interlaced 8-bit PNG (the auditable-miss contract)."""
-    if not isinstance(blob, (bytes, bytearray)) or not bytes(blob).startswith(PNG_SIG):
-        return None
-    try:
-        pixels, hdr = png_pixels(bytes(blob))
-    except Exception:
-        return None
-    if hdr["bit_depth"] != 8:
-        return None  # packed sub-byte rows would be mis-averaged
-    g = _gray(pixels, hdr["width"], hdr["height"], hdr["channels"])
-    return dhash64(g)
-
-
-def dhash_jpeg(blob: bytes) -> int | None:
-    """dHash of a baseline-JPEG blob via its decoded LUMA plane, or
-    None when not decodable (the auditable-miss contract).  Pixels come
-    from the same decoder the MJPEG video plane already uses, so a
-    PNG↔JPEG re-encode of the same image lands in the same banded
-    bucket — the image edition of the raw↔MJPEG cross-codec pairing."""
-    bb = bytes(blob) if isinstance(blob, (bytes, bytearray)) else b""
-    if bb[:2] != b"\xff\xd8":
-        return None
-    from prod2vec_spark.operators.jpeg import decode_jpeg_gray
-
-    try:
-        gray, w, h = decode_jpeg_gray(bb)
-    except Exception:
-        return None
-    g = np.frombuffer(gray, dtype=np.uint8).astype(np.float64).reshape(h, w)
-    return dhash64(g)
-
-
-def dhash_gif(blob: bytes) -> int | None:
-    """dHash of a GIF blob via its decoded first frame (round-13), or
-    None when not decodable (the auditable-miss contract).  The gray
-    fold is the SAME channel-mean ``_gray`` the PNG path uses, so a
-    PNG↔GIF re-encode of the same grayscale image hashes
-    BIT-IDENTICALLY (gray palettes have r=g=b)."""
-    if not (
-        isinstance(blob, (bytes, bytearray))
-        and bytes(blob)[:6] in (b"GIF87a", b"GIF89a")
-    ):
-        return None
-    g = image_gray(blob)
-    if g is None:
-        return None
-    return dhash64(g)
-
-
-def dhash_webp(blob: bytes) -> int | None:
-    """dHash of a LOSSLESS WebP (VP8L) blob via its decoded RGB plane
-    (round-15), or None when not decodable — including lossy VP8
-    payloads, the remaining declared boundary (the auditable-miss
-    contract).  The gray fold is the SAME channel-mean ``_gray`` the
-    PNG/GIF paths use, so a PNG↔WebP-lossless re-encode of the same
-    grayscale image hashes BIT-IDENTICALLY."""
-    bb = bytes(blob) if isinstance(blob, (bytes, bytearray)) else b""
-    if not (bb[:4] == b"RIFF" and bb[8:12] == b"WEBP"):
-        return None
-    g = image_gray(bb)
-    if g is None:
-        return None
-    return dhash64(g)
-
-
 def image_gray(blob) -> np.ndarray | None:
-    """(height, width) float64 luminance of a decodable PNG, JPEG
-    (baseline or progressive), GIF or lossless-WebP blob, None
-    otherwise — the shared pixel door for every whole-image and tiled
-    hash (one sniff+decode path, so the tile plane can never disagree
-    with the whole-image plane about what decodes)."""
-    bb = bytes(blob) if isinstance(blob, (bytes, bytearray)) else b""
-    if bb.startswith(PNG_SIG):
-        try:
-            pixels, hdr = png_pixels(bb)
-        except Exception:
-            return None
-        if hdr["bit_depth"] != 8:
-            return None
-        return _gray(pixels, hdr["width"], hdr["height"], hdr["channels"])
-    if bb[:2] == b"\xff\xd8":
-        from prod2vec_spark.operators.jpeg import decode_jpeg_gray
-
-        try:
-            gray, w, h = decode_jpeg_gray(bb)
-        except Exception:
-            return None
-        return np.frombuffer(gray, dtype=np.uint8).astype(np.float64).reshape(h, w)
-    if bb[:6] in (b"GIF87a", b"GIF89a"):
-        from prod2vec_spark.operators.gif import gif_pixels
-
-        try:
-            rgb, m = gif_pixels(bb)
-        except Exception:
-            return None
-        return _gray(rgb, m["width"], m["height"], m["channels"])
-    if bb[:4] == b"RIFF" and bb[8:12] == b"WEBP":
-        from prod2vec_spark.operators.webp import webp_pixels
-
-        try:
-            rgb, m = webp_pixels(bb)
-        except Exception:
-            return None
-        return _gray(rgb, m["width"], m["height"], m["channels"])
-    return None
+    """(height, width) float64 luminance of a decodable PNG (8-bit),
+    JPEG (baseline or progressive), GIF or lossless-WebP blob, None
+    otherwise — the image door of ``multimodal.decode_blob``.  The
+    sniff gates the decode: a non-image blob is never decoded."""
+    return decode_blob(blob).gray if sniff_modality(blob) == "image" else None
 
 
 def ahash64(samples: np.ndarray) -> int | None:
@@ -235,36 +134,12 @@ def ahash64(samples: np.ndarray) -> int | None:
 
 
 def audio_mono(blob) -> "tuple[np.ndarray, int] | None":
-    """Shared audio decode door (the ``image_gray`` analog): channel-
-    mean mono float64 signal + sample rate of a WAV blob — PCM
-    8/16/32-bit or IMA-ADPCM, both via ``multimodal.wav_samples`` —
-    None where the blob isn't decodable audio (the auditable-miss
-    contract every fingerprint shares)."""
-    from prod2vec_spark.operators.multimodal import wav_samples
-
-    if not isinstance(blob, (bytes, bytearray)) or bytes(blob)[:4] != b"RIFF":
-        return None
-    try:
-        samples, m = wav_samples(bytes(blob))
-    except Exception:
-        return None
-    a = np.asarray(samples, dtype=np.float64)
-    nch = m["n_channels"]
-    if nch > 1:
-        a = a[: (len(a) // nch) * nch].reshape(-1, nch).mean(axis=1)
-    rate = int(m.get("framerate") or 0)
-    if rate <= 0:
-        return None
-    return a, rate
-
-
-def ahash_wav(blob: bytes) -> int | None:
-    """Audio fingerprint of a WAV blob (None when not decodable PCM):
-    channel-mean mono mix, then the energy-gradient hash."""
-    dec = audio_mono(blob)
-    if dec is None:
-        return None
-    return ahash64(dec[0])
+    """(channel-mean mono float64 signal, sample rate) of a decodable
+    WAV blob — PCM 8/16/32-bit or IMA-ADPCM — None otherwise: the
+    audio door of ``multimodal.decode_blob`` (the ``image_gray``
+    analog).  The sniff gates the decode: a non-audio blob is never
+    decoded."""
+    return decode_blob(blob).audio if sniff_modality(blob) == "audio" else None
 
 
 _VHASH_FRAMES = 8  # keyframes sampled per clip
@@ -294,41 +169,29 @@ def vhash64(frames: list[bytes], width: int, height: int) -> int | None:
     return dhash64(stack.mean(axis=0))
 
 
-def vhash_avi(blob: bytes) -> int | None:
-    """Video fingerprint of an uncompressed AVI blob, or None when the
-    blob is not decodable (the auditable-miss contract shared with
-    dhash_png / ahash_wav)."""
-    from prod2vec_spark.operators.multimodal import avi_frames
-
-    b = bytes(blob) if isinstance(blob, (bytes, bytearray)) else None
-    if b is None or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        return None
-    try:
-        frames, m = avi_frames(b)
-    except Exception:
-        return None
-    return vhash64(frames, m["width"], m["height"])
+def _record_hash(d: DecodedBlob) -> int | None:
+    """The whole-media hash of a decoded record: dHash of the gray
+    plane, energy-gradient hash of the mono signal, keyframe-mean
+    dHash of the frames; None when the record carries no payload."""
+    if d.gray is not None:
+        return dhash64(d.gray)
+    if d.audio is not None:
+        return ahash64(d.audio[0])
+    if d.video is not None:
+        frames, m = d.video
+        return vhash64(frames, m["width"], m["height"])
+    return None
 
 
-def phash_videos(
-    media: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """(id, vhash) for every row — NULL where the blob isn't a
-    decodable uncompressed AVI.  Same Arrow-batched shape as
-    ``phash_images``; feed the result to
-    ``phash_neardup(hashes, hash_col='vhash')`` — the banded-Hamming
-    plane is hash-agnostic, so video near-dup rides the identical
-    candidate-join + bit_count-verify machinery at 100 TB."""
-    src = media.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = [vhash_avi(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "vhash": pd.array(hashes, dtype="Int64")}
-            )
-
-    return src.mapInPandas(run, schema=f"{id_col} long, vhash long")
+def media_hash(blob) -> tuple[str | None, int | None]:
+    """(modality, 64-bit hash) of one blob through ONE decode: dHash
+    for PNG / JPEG / GIF / lossless WebP, the energy-gradient hash for
+    WAV, the keyframe-mean dHash for AVI.  (modality, None) for a
+    decodable container whose codec failed or whose payload is too
+    small to hash, (None, None) for every other blob — the
+    auditable-miss contract."""
+    d = decode_blob(blob)
+    return d.modality, _record_hash(d)
 
 
 # composite unit id = media_id * UNIT_ID_BASE + unit_idx — the one id
@@ -360,21 +223,70 @@ def _composite_id(id_col: str, idx_col, base: int):
     ).otherwise(i * F.lit(base) + idx_col)
 
 
+def clip_frame_hashes(mid, blob, every_ms: int) -> list[tuple[int, int, int]]:
+    """[(frame_ts_ms, frame_idx, fhash)] of one clip: dHash per
+    distinct SAMPLED frame of an AVI (``avi_frame_samples``) or an
+    ANIMATED GIF (≥2 frames; per-frame GCE delays drive the timeline,
+    frame idx = the last frame started at ts — a single-frame GIF
+    belongs to the IMAGE plane).  [] for any other or undecodable
+    blob.  The one per-clip recipe of ``frame_hashes``, the fixture
+    generator and the golden gate."""
+    fmt = sniff_format(blob)
+    if fmt == "gif":
+        from prod2vec_spark.operators.gif import gif_frames
+
+        try:
+            frames, m = gif_frames(bytes(blob))
+        except Exception:
+            return []
+        if m["n_frames"] < 2:
+            return []  # static GIF: the image plane's case
+        starts = [0]
+        for d in m["delays_ms"]:
+            starts.append(starts[-1] + d)
+        samples, ts = [], 0
+        while ts < starts[-1]:
+            samples.append(
+                (ts, max(i for i in range(len(frames)) if starts[i] <= ts))
+            )
+            ts += every_ms
+    elif fmt == "avi" and (video := decode_blob(blob).video) is not None:
+        frames, m = video
+        samples = avi_frame_samples(len(frames), m["fps"], every_ms)
+    else:
+        return []
+    out, seen = [], set()
+    for ts, idx in samples:
+        if idx in seen:  # one hash per distinct frame
+            continue
+        if idx >= UNIT_ID_BASE:
+            # composite-id safety (as for tiles and windows): a frame
+            # index at or past the base would bleed into the NEXT clip
+            # id's space — ~11.5 days at 1 fps-sampled.  Fail loud.
+            raise ValueError(
+                f"clip {mid}: frame {idx} exceeds the composite "
+                f"frame-id space (<{UNIT_ID_BASE}); raise every_ms "
+                f"or split the clip"
+            )
+        seen.add(idx)
+        g = np.frombuffer(frames[idx], dtype=np.uint8).reshape(
+            m["height"], m["width"]
+        )
+        out.append((ts, idx, dhash64(g.astype(np.float64))))
+    return out
+
+
 def frame_hashes(
     media: DataFrame,
     every_ms: int = 1000,
     id_col: str = "media_id",
     blob_col: str = "blob",
 ) -> DataFrame:
-    """(id, frame_ts_ms, frame_idx, fhash): dHash per SAMPLED frame of
-    an uncompressed/MJPEG-AVI clip OR (round-13) an ANIMATED GIF (≥2
-    frames; per-frame GCE delays drive the timeline — a single-frame
-    GIF belongs to the IMAGE plane and emits no rows here).  One
-    decode per clip, ts→index arithmetic — the multimodal.decode_frames
-    shape with a fingerprint instead of a digest.  Undecodable blobs
-    emit no rows (auditable upstream via extract_features)."""
-    from prod2vec_spark.operators.multimodal import avi_frames
-
+    """(id, frame_ts_ms, frame_idx, fhash): :func:`clip_frame_hashes`
+    per AVI or animated-GIF clip — one decode per clip, ts→index
+    arithmetic, the multimodal.decode_frames shape with a fingerprint
+    instead of a digest.  Undecodable blobs emit no rows (auditable
+    upstream via extract_features)."""
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive, got {every_ms}")
     src = media.select(id_col, blob_col)
@@ -383,81 +295,11 @@ def frame_hashes(
         for pdf in batches:
             out = {id_col: [], "frame_ts_ms": [], "frame_idx": [], "fhash": []}
             for mid, b in zip(pdf[id_col], pdf[blob_col]):
-                bb = bytes(b) if isinstance(b, (bytes, bytearray)) else b""
-                if bb[:6] in (b"GIF87a", b"GIF89a"):
-                    # animated GIF: frames on the GCE-delay timeline
-                    from prod2vec_spark.operators.gif import gif_frames
-
-                    try:
-                        frames, gm = gif_frames(bb)
-                    except Exception:
-                        continue
-                    if gm["n_frames"] < 2:
-                        continue  # static GIF: the image plane's case
-                    starts = [0]
-                    for d in gm["delays_ms"]:
-                        starts.append(starts[-1] + d)
-                    duration_ms = starts[-1]
-                    seen = set()
-                    ts = 0
-                    while ts < duration_ms:
-                        idx = max(
-                            i for i in range(len(frames)) if starts[i] <= ts
-                        )
-                        if idx not in seen:
-                            if idx >= UNIT_ID_BASE:
-                                raise ValueError(
-                                    f"clip {mid}: frame {idx} exceeds the "
-                                    f"composite frame-id space "
-                                    f"(<{UNIT_ID_BASE})"
-                                )
-                            seen.add(idx)
-                            g = np.frombuffer(
-                                frames[idx], dtype=np.uint8
-                            ).reshape(gm["height"], gm["width"])
-                            out[id_col].append(mid)
-                            out["frame_ts_ms"].append(ts)
-                            out["frame_idx"].append(idx)
-                            out["fhash"].append(
-                                dhash64(g.astype(np.float64))
-                            )
-                        ts += every_ms
-                    continue
-                if bb[:4] != b"RIFF" or bb[8:12] != b"AVI ":
-                    continue
-                try:
-                    frames, m = avi_frames(bb)
-                except Exception:
-                    continue
-                fps = m["fps"]
-                if not frames or not fps:
-                    continue
-                duration_ms = len(frames) / fps * 1000.0
-                seen = set()
-                ts = 0
-                while ts < duration_ms:
-                    idx = min(len(frames) - 1, int(ts * fps / 1000.0))
-                    if idx not in seen:  # one hash per distinct frame
-                        # composite-id safety (the tile/window-plane
-                        # guard): a frame index at or past the base
-                        # would bleed into the NEXT clip id's space —
-                        # ~11.5 days at 1 fps-sampled.  Fail loud.
-                        if idx >= UNIT_ID_BASE:
-                            raise ValueError(
-                                f"clip {mid}: frame {idx} exceeds the "
-                                f"composite frame-id space "
-                                f"(<{UNIT_ID_BASE}); raise every_ms "
-                                f"or split the clip"
-                            )
-                        seen.add(idx)
-                        g = np.frombuffer(frames[idx], dtype=np.uint8).reshape(
-                            m["height"], m["width"]
-                        )
-                        out[id_col].append(mid)
-                        out["frame_ts_ms"].append(ts)
-                        out["frame_idx"].append(idx)
-                        out["fhash"].append(dhash64(g.astype(np.float64)))
-                    ts += every_ms
+                for ts, idx, fh in clip_frame_hashes(mid, b, every_ms):
+                    out[id_col].append(mid)
+                    out["frame_ts_ms"].append(ts)
+                    out["frame_idx"].append(idx)
+                    out["fhash"].append(fh)
             yield pd.DataFrame(
                 {
                     id_col: out[id_col],
@@ -476,13 +318,30 @@ def frame_hashes(
 _TILE_COLS_PER_ROW = 1024  # tile_idx = tile_row * 1024 + tile_col
 
 
-def tile_rows_py(g: "np.ndarray", tile_px: int, stride: int):
+def _check_tile_args(tile_px: int, stride: int) -> None:
+    if tile_px < 2:
+        raise ValueError(f"tile_px must be >= 2, got {tile_px}")
+    if stride < 1:
+        raise ValueError(f"stride must be >= 1, got {stride}")
+
+
+def _check_window_args(window_ms: int, hop_ms: int) -> None:
+    if window_ms <= 0:
+        raise ValueError(f"window_ms must be positive, got {window_ms}")
+    if hop_ms <= 0:
+        raise ValueError(f"hop_ms must be positive, got {hop_ms}")
+
+
+def tile_rows_py(g: "np.ndarray", tile_px: int, stride: int, mid=None):
     """Pure-Python tile enumeration of one grayscale plane —
-    [(tile_row, tile_col, dhash64)] with exactly-constant tiles
-    skipped.  The SINGLE source of tile geometry: the distributed
-    image_tile_hashes pass, the fixture generator
-    (tools/gen_image_tile_fixture.py), and the pytest golden gate all
-    call this, so they can never silently disagree."""
+    [(tile_row, tile_col, tile_idx, dhash64)] with exactly-constant
+    tiles skipped and tile_idx = tile_row·1024 + tile_col guarded to
+    the composite-id space (``mid`` names the image in the error).
+    The SINGLE source of tile geometry and of its guard: the
+    distributed image_tile_hashes pass, the fused media_features
+    pass, the fixture generator (tools/gen_image_tile_fixture.py) and
+    the pytest golden gate all call this, so they can never silently
+    disagree."""
     h, w = g.shape
     out = []
     for ti, r0 in enumerate(range(0, h - tile_px + 1, stride)):
@@ -490,7 +349,18 @@ def tile_rows_py(g: "np.ndarray", tile_px: int, stride: int):
             tile = g[r0 : r0 + tile_px, c0 : c0 + tile_px]
             if tile.min() == tile.max():
                 continue  # constant tile: uninformative
-            out.append((ti, tj, dhash64(tile)))
+            idx = ti * _TILE_COLS_PER_ROW + tj
+            if tj >= _TILE_COLS_PER_ROW or idx >= UNIT_ID_BASE:
+                # composite-id safety: tiles at or past the base bleed
+                # into the NEXT image id's space (tall scans / long
+                # screenshots).  Fail loud rather than mispair.
+                raise ValueError(
+                    f"image {mid}: tile ({ti},{tj}) exceeds the "
+                    f"composite tile-id space (cols<{_TILE_COLS_PER_ROW}, "
+                    f"idx<{UNIT_ID_BASE}); raise stride/tile_px or "
+                    f"split the image"
+                )
+            out.append((ti, tj, idx, dhash64(tile)))
     return out
 
 
@@ -501,74 +371,55 @@ def image_tile_hashes(
     id_col: str = "media_id",
     blob_col: str = "blob",
 ) -> DataFrame:
-    """(id, tile_row, tile_col, tile_idx, thash): dHash per
-    ``tile_px``×``tile_px`` tile of a PNG/JPEG image, tiles anchored
-    at every ``stride`` pixels (overlapping when stride < tile_px) —
-    the spatial analog of ``frame_hashes``' temporal sampling.  One
-    decode per image; EXACTLY-CONSTANT tiles are skipped (a flat tile
-    dHashes to 0 regardless of its level, so letterbox bars and blank
-    backgrounds of UNRELATED images would otherwise pair).
-    Undecodable blobs emit no rows (auditable upstream via
-    extract_features, same contract as frame_hashes)."""
-    if tile_px < 2:
-        raise ValueError(f"tile_px must be >= 2, got {tile_px}")
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
+    """(id, tile_row, tile_col, thash, tile_idx): dHash per
+    ``tile_px``×``tile_px`` tile of an image (the ``image_gray``
+    door), tiles anchored at every ``stride`` pixels (overlapping when
+    stride < tile_px) — the spatial analog of ``frame_hashes``'
+    temporal sampling.  One decode per image; EXACTLY-CONSTANT tiles
+    are skipped (a flat tile dHashes to 0 regardless of its level, so
+    letterbox bars and blank backgrounds of UNRELATED images would
+    otherwise pair).  Undecodable blobs emit no rows (auditable
+    upstream via extract_features, same contract as frame_hashes)."""
+    _check_tile_args(tile_px, stride)
     src = media.select(id_col, blob_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {id_col: [], "tile_row": [], "tile_col": [], "thash": []}
+            out = {id_col: [], "tile_row": [], "tile_col": [], "thash": [], "tile_idx": []}
             for mid, b in zip(pdf[id_col], pdf[blob_col]):
                 g = image_gray(b)
                 if g is None:
                     continue
-                for ti, tj, th in tile_rows_py(g, tile_px, stride):
-                    # Composite-id safety: tile_idx = ti*1024 + tj must stay
-                    # below UNIT_ID_BASE or tiles silently bleed into the
-                    # NEXT image id's space (tall scans / long screenshots).
-                    # Fail loud rather than mispair.
-                    if tj >= _TILE_COLS_PER_ROW or (
-                        ti * _TILE_COLS_PER_ROW + tj >= UNIT_ID_BASE
-                    ):
-                        raise ValueError(
-                            f"image {mid}: tile ({ti},{tj}) exceeds the "
-                            f"composite tile-id space (cols<{_TILE_COLS_PER_ROW}, "
-                            f"idx<{UNIT_ID_BASE}); raise stride/tile_px or "
-                            f"split the image"
-                        )
+                for ti, tj, idx, th in tile_rows_py(g, tile_px, stride, mid):
                     out[id_col].append(mid)
                     out["tile_row"].append(ti)
                     out["tile_col"].append(tj)
                     out["thash"].append(th)
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    "tile_row": out["tile_row"],
-                    "tile_col": out["tile_col"],
-                    "thash": pd.array(out["thash"], dtype="Int64"),
-                }
-            )
+                    out["tile_idx"].append(idx)
+            out["thash"] = pd.array(out["thash"], dtype="Int64")
+            yield pd.DataFrame(out)
 
     return src.mapInPandas(
         run,
-        schema=f"{id_col} long, tile_row int, tile_col int, thash long",
-    ).withColumn(
-        "tile_idx",
-        (
-            F.col("tile_row") * F.lit(_TILE_COLS_PER_ROW) + F.col("tile_col")
-        ).cast("int"),
+        schema=(
+            f"{id_col} long, tile_row int, tile_col int, thash long, "
+            f"tile_idx int"
+        ),
     )
 
 
-def window_rows_py(a: "np.ndarray", rate: int, window_ms: int, hop_ms: int):
+def window_rows_py(
+    a: "np.ndarray", rate: int, window_ms: int, hop_ms: int, mid=None
+):
     """[(win_idx, whash)] for one mono signal: energy-gradient hash
     (``ahash64``) per ``window_ms`` window anchored every ``hop_ms``
-    (overlapping when hop < window).  EXACTLY-CONSTANT windows are
-    skipped — digital silence / DC gradient-hashes to 0 regardless of
-    level, so silent lead-ins of UNRELATED clips would otherwise
-    pair (the flat-tile rule, audio edition).  Windows too short for
-    the 65-sub-window gradient are skipped too."""
+    (overlapping when hop < window), win_idx guarded to the
+    composite-id space (``mid`` names the clip in the error).
+    EXACTLY-CONSTANT windows are skipped — digital silence / DC
+    gradient-hashes to 0 regardless of level, so silent lead-ins of
+    UNRELATED clips would otherwise pair (the flat-tile rule, audio
+    edition).  Windows too short for the 65-sub-window gradient are
+    skipped too."""
     win = max(1, (rate * window_ms) // 1000)
     hop = max(1, (rate * hop_ms) // 1000)
     out = []
@@ -578,6 +429,14 @@ def window_rows_py(a: "np.ndarray", rate: int, window_ms: int, hop_ms: int):
             continue  # constant window: uninformative
         h = ahash64(w)
         if h is not None:
+            if wi >= UNIT_ID_BASE:
+                # composite-id safety (the tile guard): ~5.8 days of
+                # audio at the default 500 ms hop.  Fail loud.
+                raise ValueError(
+                    f"clip {mid}: window {wi} exceeds the composite "
+                    f"window-id space (<{UNIT_ID_BASE}); raise hop_ms "
+                    f"or split the clip"
+                )
             out.append((wi, h))
     return out
 
@@ -593,13 +452,10 @@ def audio_window_hashes(
     audio WINDOW — the temporal analog of ``image_tile_hashes``' tile
     grid and ``frame_hashes``' frame sampling, completing the span
     triad (video frames, image tiles, audio windows).  One decode per
-    clip (PCM or IMA-ADPCM via the shared ``audio_mono`` door);
-    undecodable blobs emit no rows (auditable upstream via
-    extract_features, same contract as frame_hashes)."""
-    if window_ms <= 0:
-        raise ValueError(f"window_ms must be positive, got {window_ms}")
-    if hop_ms <= 0:
-        raise ValueError(f"hop_ms must be positive, got {hop_ms}")
+    clip (PCM or IMA-ADPCM via the ``audio_mono`` door); undecodable
+    blobs emit no rows (auditable upstream via extract_features, same
+    contract as frame_hashes)."""
+    _check_window_args(window_ms, hop_ms)
     src = media.select(id_col, blob_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -609,19 +465,7 @@ def audio_window_hashes(
                 dec = audio_mono(b)
                 if dec is None:
                     continue
-                a, rate = dec
-                for wi, wh in window_rows_py(a, rate, window_ms, hop_ms):
-                    # Composite-id safety (the tile-plane guard): a
-                    # window index at or past the base would bleed into
-                    # the NEXT clip id's space.  win_idx < 1e6 is ~5.8
-                    # days of audio at the default 500 ms hop — fail
-                    # loud on anything longer rather than mispair.
-                    if wi >= UNIT_ID_BASE:
-                        raise ValueError(
-                            f"clip {mid}: window {wi} exceeds the "
-                            f"composite window-id space (<{UNIT_ID_BASE});"
-                            f" raise hop_ms or split the clip"
-                        )
+                for wi, wh in window_rows_py(*dec, window_ms, hop_ms, mid):
                     out[id_col].append(mid)
                     out["win_idx"].append(wi)
                     out["whash"].append(wh)
@@ -835,43 +679,6 @@ def incremental_span_pairs(
     return _span_rollup(pairs, plane, min_shared)
 
 
-def phash_audio(
-    media: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """(id, ahash) for every row — NULL where the blob isn't decodable
-    PCM WAV.  Same Arrow-batched shape as ``phash_images``; feed the
-    result to ``phash_neardup(hashes, hash_col='ahash')``."""
-    src = media.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = [ahash_wav(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "ahash": pd.array(hashes, dtype="Int64")}
-            )
-
-    return src.mapInPandas(run, schema=f"{id_col} long, ahash long")
-
-
-def phash_images(
-    media: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """(id, dhash) for every input row — dhash NULL where the blob
-    isn't a decodable PNG.  Arrow-batched mapInPandas; only the two
-    needed columns cross into Python (project before calling for the
-    column-pruning win to reach the scan)."""
-    src = media.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = [dhash_png(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "dhash": pd.array(hashes, dtype="Int64")}
-            )
-
-    return src.mapInPandas(run, schema=f"{id_col} long, dhash long")
-
-
 def phash_neardup(
     hashes: DataFrame,
     id_col: str = "media_id",
@@ -1013,52 +820,48 @@ def _archive_probe(
 def media_hashes(
     media: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
 ) -> DataFrame:
-    """(id, modality, mhash) for a MIXED-modality blob column: sniff
-    container magic → dHash (PNG / JPEG / GIF / lossless WebP) /
-    energy-gradient (WAV) / keyframe-mean dHash (AVI); (NULL, NULL)
-    where the blob is undecodable — the auditable-miss contract.  One
-    Arrow-batched pass; the blob never leaves the executor."""
+    """(id, modality, mhash) for a blob column: :func:`media_hash` per
+    blob — dHash (PNG / JPEG / GIF / lossless WebP), energy-gradient
+    (WAV) or keyframe-mean dHash (AVI); a decodable container whose
+    codec failed keeps its modality with a NULL hash, (NULL, NULL)
+    for every other blob.  One Arrow-batched pass; the blob never
+    leaves the executor.  Single-modality callers (the image, audio
+    and video near-dup entries) read ``mhash`` too: there is no
+    per-format pass any more, so a blob of another decodable format
+    gets its hash rather than the NULL the old per-format passes
+    reported."""
     src = media.select(id_col, blob_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from prod2vec_spark.operators.multimodal import PNG_SIG as _SIG
-
         for pdf in batches:
-            mods, hashes = [], []
-            for b in pdf[blob_col]:
-                bb = bytes(b) if isinstance(b, (bytes, bytearray)) else b""
-                if bb.startswith(_SIG):
-                    mods.append("image")
-                    hashes.append(dhash_png(bb))
-                elif bb[:2] == b"\xff\xd8":
-                    mods.append("image")
-                    hashes.append(dhash_jpeg(bb))
-                elif bb[:6] in (b"GIF87a", b"GIF89a"):
-                    mods.append("image")
-                    hashes.append(dhash_gif(bb))
-                elif bb[:4] == b"RIFF" and bb[8:12] == b"WEBP":
-                    mods.append("image")
-                    hashes.append(dhash_webp(bb))
-                elif bb[:4] == b"RIFF" and bb[8:12] == b"WAVE":
-                    mods.append("audio")
-                    hashes.append(ahash_wav(bb))
-                elif bb[:4] == b"RIFF" and bb[8:12] == b"AVI ":
-                    mods.append("video")
-                    hashes.append(vhash_avi(bb))
-                else:
-                    mods.append(None)
-                    hashes.append(None)
-            # a decodable container that still failed its codec keeps
-            # modality but a NULL hash — distinguishable from unknown
+            hashed = [media_hash(b) for b in pdf[blob_col]]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
-                    "modality": mods,
-                    "mhash": pd.array(hashes, dtype="Int64"),
+                    "modality": [m for m, _ in hashed],
+                    "mhash": pd.array([h for _, h in hashed], dtype="Int64"),
                 }
             )
 
     return src.mapInPandas(run, schema=f"{id_col} long, modality string, mhash long")
+
+
+def _feature_row(mid, blob, tile_px: int, stride: int, window_ms: int, hop_ms: int):
+    """(fmt, status, modality, mhash, tiles, wins) of one blob from ONE
+    ``decode_blob`` record — the per-row body of :func:`media_features`."""
+    d = decode_blob(blob)
+    tiles, wins = [], []
+    if d.gray is not None:
+        tiles = [
+            {"tile_idx": idx, "thash": th}
+            for _, _, idx, th in tile_rows_py(d.gray, tile_px, stride, mid)
+        ]
+    if d.audio is not None:
+        wins = [
+            {"win_idx": wi, "whash": wh}
+            for wi, wh in window_rows_py(*d.audio, window_ms, hop_ms, mid)
+        ]
+    return d.fmt, d.status, d.modality, _record_hash(d), tiles, wins
 
 
 def media_features(
@@ -1075,190 +878,32 @@ def media_features(
     wins) where ``tiles`` is array<struct<tile_idx int, thash long>>
     (the image_tile_hashes rows, in-array) and ``wins`` is
     array<struct<win_idx int, whash long>> (the audio_window_hashes
-    rows).  The curation pipeline's media stage previously ran FOUR
-    Arrow passes over the blob column — format audit, whole-media
-    hash, image tiles, audio windows — each paying the full Python
-    codec chain per blob; this pass decodes once and derives all four
-    surfaces, bit-identical by construction:
+    rows).  One ``decode_blob`` record per blob yields all four
+    surfaces the curation pipeline's media stage reads:
 
-    * fmt/status — the classify_media contract (the decodable six
-      fused here; container-metadata formats delegate to
-      classify_media, whose walks never decode payloads);
-    * modality/mhash — the media_hashes contract (NULL hash where the
-      codec fails, modality kept for decodable containers);
-    * tiles — tile_rows_py over the SAME gray plane, with the same
-      composite-id guard;
-    * wins — window_rows_py over the SAME mono signal.
+    * fmt/status — the media_format_rows contract;
+    * modality/mhash — the media_hashes contract;
+    * tiles — tile_rows_py over the record's gray plane;
+    * wins — window_rows_py over the record's mono signal.
 
     tests/test_media_features.py locks the equivalence against the
     four standalone passes over the planted mixed fixture."""
-    if tile_px < 2:
-        raise ValueError(f"tile_px must be >= 2, got {tile_px}")
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-    if window_ms <= 0:
-        raise ValueError(f"window_ms must be positive, got {window_ms}")
-    if hop_ms <= 0:
-        raise ValueError(f"hop_ms must be positive, got {hop_ms}")
+    _check_tile_args(tile_px, stride)
+    _check_window_args(window_ms, hop_ms)
     src = media.select(id_col, blob_col)
-
-    def one(mid, b):
-        from prod2vec_spark.operators.gif import gif_pixels
-        from prod2vec_spark.operators.jpeg import decode_jpeg_gray
-        from prod2vec_spark.operators.multimodal import (
-            _jpeg_unsupported_mode,
-            avi_frames,
-            classify_media,
-        )
-        from prod2vec_spark.operators.webp import _vp8l_payload, webp_pixels
-
-        bb = bytes(b) if isinstance(b, (bytes, bytearray)) else b""
-        fmt = status = modality = mhash = None
-        gray = audio = None
-        if bb.startswith(PNG_SIG):
-            fmt, modality = "png", "image"
-            try:
-                pixels, hdr = png_pixels(bb)
-                status = "decoded"
-                if hdr["bit_depth"] == 8:
-                    gray = _gray(
-                        pixels, hdr["width"], hdr["height"], hdr["channels"]
-                    )
-            except Exception:
-                status = "corrupt"
-        elif bb[:2] == b"\xff\xd8":
-            fmt, modality = "jpeg", "image"
-            if _jpeg_unsupported_mode(bb):
-                status = "unsupported_format"
-            else:
-                try:
-                    g8, w, h = decode_jpeg_gray(bb)
-                    status = "decoded"
-                    gray = (
-                        np.frombuffer(g8, dtype=np.uint8)
-                        .astype(np.float64)
-                        .reshape(h, w)
-                    )
-                except Exception:
-                    status = "corrupt"
-        elif bb[:6] in (b"GIF87a", b"GIF89a"):
-            fmt, modality = "gif", "image"
-            try:
-                rgb, m = gif_pixels(bb)
-                status = "decoded"
-                gray = _gray(rgb, m["width"], m["height"], m["channels"])
-            except Exception:
-                status = "corrupt"
-        elif bb[:4] == b"RIFF" and bb[8:12] == b"WEBP":
-            fmt, modality = "webp", "image"
-            try:
-                lossless = _vp8l_payload(bb) is not None
-            except Exception:
-                lossless = None
-                status = "corrupt"
-            if lossless is False:
-                status = "unsupported_format"
-            elif lossless:
-                try:
-                    rgb, m = webp_pixels(bb)
-                    status = "decoded"
-                    gray = _gray(rgb, m["width"], m["height"], m["channels"])
-                except Exception:
-                    status = "corrupt"
-        elif bb[:4] == b"RIFF" and bb[8:12] == b"WAVE":
-            from prod2vec_spark.operators.multimodal import wav_samples
-
-            fmt, modality = "wav", "audio"
-            try:
-                samples, m = wav_samples(bb)
-                status = "decoded"  # classify's contract: parse = decoded
-            except Exception:
-                status = "corrupt"
-                samples = None
-            if samples is not None:
-                # the audio_mono door, on the ALREADY-decoded samples:
-                # channel-mean mono; rate<=0 keeps status but no hash
-                a = np.asarray(samples, dtype=np.float64)
-                nch = m["n_channels"]
-                if nch > 1:
-                    a = a[: (len(a) // nch) * nch].reshape(-1, nch).mean(
-                        axis=1
-                    )
-                rate = int(m.get("framerate") or 0)
-                if rate > 0:
-                    audio = (a, rate)
-        elif bb[:4] == b"RIFF" and bb[8:12] == b"AVI ":
-            fmt, modality = "avi", "video"
-            try:
-                frames, m = avi_frames(bb)
-                status = "decoded"
-                mhash = vhash64(frames, m["width"], m["height"])
-            except Exception:
-                status = "corrupt"
-        else:
-            # container-metadata formats (mp4/flac/ogg/aac/mp3) and
-            # unknown: classify_media's walks parse headers only —
-            # there is no payload decode to fuse, and media_hashes
-            # reports (NULL, NULL) for all of them
-            fmt, status = classify_media(bb)
-        tiles, wins = [], []
-        if gray is not None:
-            if modality == "image":
-                mhash = dhash64(gray)
-            for ti, tj, th in tile_rows_py(gray, tile_px, stride):
-                if tj >= _TILE_COLS_PER_ROW or (
-                    ti * _TILE_COLS_PER_ROW + tj >= UNIT_ID_BASE
-                ):
-                    raise ValueError(
-                        f"image {mid}: tile ({ti},{tj}) exceeds the "
-                        f"composite tile-id space "
-                        f"(cols<{_TILE_COLS_PER_ROW}, idx<{UNIT_ID_BASE}); "
-                        f"raise stride/tile_px or split the image"
-                    )
-                tiles.append(
-                    {"tile_idx": ti * _TILE_COLS_PER_ROW + tj, "thash": th}
-                )
-        if audio is not None:
-            a, rate = audio
-            mhash = ahash64(a)
-            for wi, wh in window_rows_py(a, rate, window_ms, hop_ms):
-                if wi >= UNIT_ID_BASE:
-                    raise ValueError(
-                        f"clip {mid}: window {wi} exceeds the composite "
-                        f"window-id space (<{UNIT_ID_BASE}); raise hop_ms "
-                        f"or split the clip"
-                    )
-                wins.append({"win_idx": wi, "whash": wh})
-        if fmt in ("mp4", "flac", "ogg", "aac", "mp3", "unknown"):
-            modality = None  # the media_hashes else-branch contract
-        return fmt, status, modality, mhash, tiles, wins
+    cols = ("fmt", "status", "modality", "mhash", "tiles", "wins")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {
-                id_col: [], "fmt": [], "status": [], "modality": [],
-                "mhash": [], "tiles": [], "wins": [],
-            }
-            for mid, b in zip(pdf[id_col], pdf[blob_col]):
-                fmt, status, modality, mhash, tiles, wins = one(mid, b)
-                rows[id_col].append(mid)
-                rows["fmt"].append(fmt)
-                rows["status"].append(status)
-                rows["modality"].append(modality)
-                rows["mhash"].append(mhash)
-                rows["tiles"].append(tiles)
-                rows["wins"].append(wins)
-            yield pd.DataFrame(
-                {
-                    id_col: rows[id_col],
-                    "fmt": rows["fmt"],
-                    "status": rows["status"],
-                    "modality": rows["modality"],
-                    "mhash": pd.array(rows["mhash"], dtype="Int64"),
-                    "tiles": rows["tiles"],
-                    "wins": rows["wins"],
-                }
-            )
+            rows = [
+                _feature_row(mid, b, tile_px, stride, window_ms, hop_ms)
+                for mid, b in zip(pdf[id_col], pdf[blob_col])
+            ]
+            out = {id_col: pdf[id_col]}
+            for i, c in enumerate(cols):
+                out[c] = [r[i] for r in rows]
+            out["mhash"] = pd.array(out["mhash"], dtype="Int64")
+            yield pd.DataFrame(out)
 
     return src.mapInPandas(
         run,

@@ -36,7 +36,7 @@ def q_phash_neardup(spark, sf_dir):
     deterministic 40-family PNGs an in-query renderer once
     produced, plus a golden dhash column pytest-locked against the
     real codec.  Spark RECOMPUTES the dHash from the raw blobs through
-    the real stdlib-PNG decode (operators/phash.phash_images, one
+    the real stdlib-PNG decode (operators/phash.media_hashes, one
     Arrow-batched scan) and runs the banded-Hamming candidate join +
     bit_count verify; the DuckDB twin replays the banding over the
     PERSISTED goldens — codec drift fails the driver-style hash
@@ -57,7 +57,9 @@ def q_phash_neardup(spark, sf_dir):
         .join(docs, F.col("media_id") == F.col("doc_id"), "leftsemi")
         .select("media_id", "blob")
     )
-    hashes = PH.phash_images(media)
+    hashes = PH.media_hashes(media).select(
+        "media_id", F.col("mhash").alias("dhash")
+    )
     pairs = PH.phash_neardup(hashes, max_distance=3)
     return pairs.select(
         "id_a",
@@ -77,7 +79,7 @@ def q_audio_neardup(spark, sf_dir):
     against the real codec; tests/fixtures/phash_pairs_audio.parquet,
     regenerate with tools/gen_phash_pair_fixture.py).  Spark
     RECOMPUTES the gain-invariant energy-gradient fingerprint from
-    the raw WAV blobs (operators/phash.phash_audio) and runs the
+    the raw WAV blobs (operators/phash.media_hashes) and runs the
     banded-Hamming join; the DuckDB twin replays the banding over the
     persisted goldens."""
     from prod2vec_spark.operators import phash as PH
@@ -93,7 +95,9 @@ def q_audio_neardup(spark, sf_dir):
         .join(docs, F.col("media_id") == F.col("doc_id"), "leftsemi")
         .select("media_id", "blob")
     )
-    hashes = PH.phash_audio(media)
+    hashes = PH.media_hashes(media).select(
+        "media_id", F.col("mhash").alias("ahash")
+    )
     pairs = PH.phash_neardup(hashes, hash_col="ahash", max_distance=3)
     return pairs.select(
         "id_a",
@@ -170,7 +174,7 @@ def planted_clip(doc_id: int) -> bytes:
 def rendered_video_hashes(spark, doc_ids):
     """(media_id, vhash) via the REAL codec chain: mapInPandas render
     (encode_avi_gray8) → mapInPandas keyframe-mean dHash (stdlib AVI
-    decode, operators/phash.vhash_avi).  The pytest-golden gate runs
+    decode, operators/phash.media_hashes).  The pytest-golden gate runs
     this against the persisted fixture so the codec boundary stays
     verified even though the driver entry reads the fixture."""
     from typing import Iterator
@@ -185,7 +189,9 @@ def rendered_video_hashes(spark, doc_ids):
             yield pd.DataFrame({"media_id": pdf["doc_id"], "blob": blobs})
 
     media = doc_ids.mapInPandas(render, schema="media_id long, blob binary")
-    return PH.phash_videos(media)
+    return PH.media_hashes(media).select(
+        "media_id", F.col("mhash").alias("vhash")
+    )
 
 
 def q_video_neardup(spark, sf_dir):
@@ -262,7 +268,6 @@ register(q_video_neardup, _sql_video_neardup())
 IMG_W = IMG_H = 48
 TILE_PX, STRIDE = 16, 8
 MIN_SHARED = 4
-_TILE_COLS = 1024  # tile_idx = tile_row * 1024 + tile_col
 
 
 def planted_image(doc_id: int) -> bytes:
@@ -309,8 +314,8 @@ def tile_hash_rows(doc_id: int) -> list[tuple[int, int, int]]:
 
     g = image_gray(planted_image(doc_id))
     return [
-        (int(doc_id), ti * _TILE_COLS + tj, th)
-        for ti, tj, th in tile_rows_py(g, TILE_PX, STRIDE)
+        (int(doc_id), idx, th)
+        for _, _, idx, th in tile_rows_py(g, TILE_PX, STRIDE, doc_id)
     ]
 
 
@@ -484,7 +489,7 @@ def window_hash_rows(doc_id: int) -> list[tuple[int, int, int]]:
     a, rate = audio_mono(planted_audio(doc_id))
     return [
         (int(doc_id), wi, wh)
-        for wi, wh in window_rows_py(a, rate, WINDOW_MS, HOP_MS)
+        for wi, wh in window_rows_py(a, rate, WINDOW_MS, HOP_MS, doc_id)
     ]
 
 
@@ -621,31 +626,18 @@ def planted_video(doc_id: int) -> bytes:
 
 def frame_hash_rows(doc_id: int) -> list[tuple[int, int, int]]:
     """[(doc_id, frame_idx, fhash)] through the REAL codec chain
-    (AVI encode → avi_frames decode → per-frame dHash) replicating
-    frame_hashes' ts→index sampling exactly (every frame at this
-    fps/every_ms pairing) — the single recipe the fixture generator
-    and the golden gate share."""
-    import numpy as np
+    (AVI encode → decode → per-frame dHash, frame_hashes' per-clip
+    recipe ``clip_frame_hashes``; every frame at this fps/every_ms
+    pairing) — the single recipe the fixture generator and the golden
+    gate share."""
+    from prod2vec_spark.operators.phash import clip_frame_hashes
 
-    from prod2vec_spark.operators.multimodal import avi_frames
-    from prod2vec_spark.operators.phash import dhash64
-
-    frames, m = avi_frames(planted_video(doc_id))
-    fps = m["fps"]
-    duration_ms = len(frames) / fps * 1000.0
-    out = []
-    seen = set()
-    ts = 0
-    while ts < duration_ms:
-        idx = min(len(frames) - 1, int(ts * fps / 1000.0))
-        if idx not in seen:
-            seen.add(idx)
-            g = np.frombuffer(frames[idx], dtype=np.uint8).reshape(
-                m["height"], m["width"]
-            )
-            out.append((int(doc_id), idx, dhash64(g.astype(np.float64))))
-        ts += VID_EVERY_MS
-    return out
+    return [
+        (int(doc_id), idx, fh)
+        for _, idx, fh in clip_frame_hashes(
+            doc_id, planted_video(doc_id), VID_EVERY_MS
+        )
+    ]
 
 
 def rendered_frame_hashes(spark, doc_ids):
@@ -739,7 +731,7 @@ def q_media_format_audit(spark, sf_dir):
 
     The golden-fixture split (the video_neardup protocol): Spark
     RECOMPUTES (fmt, status) from the raw blobs through the real
-    sniff+decode classifier (operators/multimodal.classify_media, one
+    sniff+decode door (operators/multimodal.decode_blob, one
     Arrow-batched scan); the DuckDB twin aggregates the PERSISTED
     golden columns, themselves pytest-locked against the classifier —
     so classifier drift fails the driver's hash compare, and the

@@ -73,6 +73,6 @@ def test_cross_codec_hashes_bit_identical_for_video(spark):
     envelope-shaped frames: the re-encode hashes BIT-IDENTICAL to the
     original, so cross-codec pairs survive any banding scheme."""
     fr = _frames(3)
-    assert PH.vhash_avi(encode_avi_gray8(fr, W, H)) == PH.vhash_avi(
+    assert PH.media_hash(encode_avi_gray8(fr, W, H))[1] == PH.media_hash(
         encode_avi_mjpeg(fr, W, H, quality=90)
-    )
+    )[1]

@@ -80,17 +80,17 @@ def test_gif_dhash_bit_identical_to_png():
     a = _noise(5)
     png = encode_png_gray8(a.tobytes(), W, H)
     gif = encode_gif_gray8(a.tobytes(), W, H)
-    assert PH.dhash_png(png) == PH.dhash_gif(gif)
-    assert PH.dhash_gif(gif) is not None
+    assert PH.media_hash(png)[1] == PH.media_hash(gif)[1]
+    assert PH.media_hash(gif)[1] is not None
     assert np.array_equal(PH.image_gray(png), PH.image_gray(gif))
 
 
 def test_gif_corrupt_and_webp_boundary():
     a = _noise(6)
     blob = encode_gif_gray8(a.tobytes(), W, H)
-    assert PH.dhash_gif(blob[:40]) is None  # truncated
+    assert PH.media_hash(blob[:40])[1] is None  # truncated
     assert decode_media("image", blob[:40])["format"] == "corrupt"
-    assert PH.dhash_gif(b"not a gif") is None
+    assert PH.media_hash(b"not a gif")[1] is None
     # WebP lossy: pixels stay the documented out-of-scope boundary —
     # never mis-decoded; since r16 the HEADER is parsed, so an
     # all-zero payload (no RFC 6386 start code) classifies corrupt

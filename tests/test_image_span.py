@@ -96,9 +96,9 @@ def test_image_span_pairs_recovers_crop_and_letterbox(spark):
     assert pairs[(1, 2)] >= 25
     # whole-image dHash genuinely diverges on these (the gap the tile
     # plane exists to close)
-    from prod2vec_spark.operators.phash import dhash_png
+    from prod2vec_spark.operators.phash import media_hash
 
-    ha, hb = dhash_png(bytes(_png(a))), dhash_png(bytes(_png(b)))
+    ha, hb = media_hash(bytes(_png(a)))[1], media_hash(bytes(_png(b)))[1]
     assert bin((ha ^ hb) & ((1 << 64) - 1)).count("1") > 3
 
 

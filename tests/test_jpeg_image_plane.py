@@ -3,8 +3,8 @@ existed since round 11 (operators/jpeg.py, written for MJPEG) but a
 bare ``\\xff\\xd8`` blob fell to ``format='raw'`` byte stats and hashed
 to (NULL, NULL) — exempting the dominant real-world image format from
 media dedup.  These tests lock the two new dispatch branches
-(multimodal.decode_media → decode_jpeg, phash.media_hashes →
-dhash_jpeg) and the PNG↔JPEG cross-codec pairing, the image edition of
+(multimodal.decode_media → decode_jpeg, phash.media_hashes → the
+JPEG branch of multimodal.decode_blob) and the PNG↔JPEG cross-codec pairing, the image edition of
 the raw↔MJPEG video test (tests/test_cross_codec.py)."""
 
 from __future__ import annotations
@@ -71,15 +71,15 @@ def test_png_jpeg_cross_codec_hash_identical():
     the re-encode hashes BIT-IDENTICAL to the PNG original, so
     cross-codec image pairs survive any banding scheme."""
     px = _image(4)
-    h_png = PH.dhash_png(encode_png_gray8(px, W, H))
-    h_jpg = PH.dhash_jpeg(encode_jpeg_gray(px, W, H, quality=90))
+    h_png = PH.media_hash(encode_png_gray8(px, W, H))[1]
+    h_jpg = PH.media_hash(encode_jpeg_gray(px, W, H, quality=90))[1]
     assert h_png is not None and h_png == h_jpg
 
 
 def test_dhash_jpeg_auditable_misses():
-    assert PH.dhash_jpeg(b"not a jpeg") is None
-    assert PH.dhash_jpeg(b"\xff\xd8truncated") is None
-    assert PH.dhash_jpeg(None) is None
+    assert PH.media_hash(b"not a jpeg")[1] is None
+    assert PH.media_hash(b"\xff\xd8truncated")[1] is None
+    assert PH.media_hash(None)[1] is None
 
 
 def test_media_hashes_pairs_and_dedup_png_jpeg(spark):
@@ -146,7 +146,7 @@ def test_progressive_jpeg_decodes_bit_identical_to_baseline():
 
 
 def test_progressive_jpeg_dhash_bit_identical_and_corrupt_unchanged():
-    """dhash_jpeg of the progressive re-encode is BIT-IDENTICAL to the
+    """The dHash of the progressive re-encode is BIT-IDENTICAL to the
     baseline's (same pixels in, same hash out), so progressive blobs
     join media dedup in the same banded bucket; garbage and truncated
     progressive streams still map to the auditable miss (None /
@@ -156,12 +156,12 @@ def test_progressive_jpeg_dhash_bit_identical_and_corrupt_unchanged():
     px = _image(5)
     base = encode_jpeg_gray(px, W, H, quality=90)
     prog = encode_jpeg_gray_progressive(px, W, H, quality=90)
-    assert PH.dhash_jpeg(prog) == PH.dhash_jpeg(base)
-    assert PH.dhash_jpeg(prog) is not None
+    assert PH.media_hash(prog)[1] == PH.media_hash(base)[1]
+    assert PH.media_hash(prog)[1] is not None
     # image_gray door: identical planes -> the tile plane agrees too
     assert np.array_equal(PH.image_gray(prog), PH.image_gray(base))
     # corrupt handling unchanged
-    assert PH.dhash_jpeg(prog[:60]) is None
+    assert PH.media_hash(prog[:60])[1] is None
     assert decode_media("image", prog[:60])["format"] == "corrupt"
     d = decode_media("image", prog)
     assert d["format"] == "jpeg"

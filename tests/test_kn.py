@@ -669,3 +669,67 @@ def test_knn_per_level_floors_persist_and_no_implicit_top(spark, tmp_path):
     # no-arg default unchanged: top level floors at 2
     dflt = full.pruned()
     assert dflt.min_counts == {4: 2} and dflt.min_count == 2
+
+
+def test_knn_fit_closes_every_lazy_break(spark):
+    """fit_knn chains one lazy lineage break per level; the fit's own
+    first action must mark them all checkpointed.  A level left
+    half-closed is marked by a later job while that job's other stages
+    still run its lineage, and the driver logs "Failed to update
+    accumulator … non-existent accumulator" once per metric whose plan
+    it has already collected.  A JVM GC loop during the scoring collect
+    makes that collection happen before the updates arrive, so a
+    regression logs every time."""
+    import gc
+    import threading
+    import time
+
+    from prod2vec_spark.sources.io import read_table
+    from tests.conftest import SF_SMOKE
+
+    jvm = spark._jvm
+    log4j = jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    sink = jvm.java.io.StringWriter()
+    appender = (
+        log4j.core.appender.WriterAppender.newBuilder()
+        .setName("knn-accumulator-probe")
+        .setTarget(sink)
+        .setLayout(log4j.core.layout.PatternLayout.newBuilder().withPattern("%m%n").build())
+        .build()
+    )
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    stop = threading.Event()
+
+    def gc_loop():
+        while not stop.is_set():
+            jvm.System.gc()
+            time.sleep(0.1)
+
+    loop = threading.Thread(target=gc_loop, daemon=True)
+    try:
+        docs = read_table(spark, SF_SMOKE, "documents")
+        tagged = docs.withColumn("is_train", F.col("doc_id") % 5 != 0)
+        model = fit_knn(tagged.where(F.col("is_train")), order=5)
+        half_closed = [
+            k
+            for k, counts in model.counts.items()
+            if not counts._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+        ]
+        scored = score_docs_knn(tagged, model)
+        del model
+        gc.collect()
+        loop.start()
+        assert scored.collect()
+    finally:
+        stop.set()
+        if loop.is_alive():
+            loop.join(timeout=30)
+        root.removeAppender("knn-accumulator-probe")
+        ctx.updateLoggers()
+    assert not loop.is_alive()
+    traces = sink.toString().count("non-existent accumulator")
+    assert (half_closed, traces) == ([], 0)

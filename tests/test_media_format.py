@@ -1,6 +1,6 @@
 """Round-14 (VERDICT r13 ask #5): the media format audit — the codec
 boundary's unsupported share as a driver-checked number.
-operators/multimodal.classify_media + media_format_audit over the
+operators/multimodal.decode_blob + media_format_audit over the
 planted fixture (tools/gen_media_format_fixture.py)."""
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from prod2vec_spark.operators.multimodal import classify_media
+from prod2vec_spark.operators.multimodal import decode_blob
 from prod2vec_spark.queries.common import _media_format_fixture_path
 
 
@@ -20,7 +20,7 @@ def test_fixture_golden_lock():
     df = pd.read_parquet(_media_format_fixture_path())
     assert len(df) == 240
     for _, row in df.iterrows():
-        fmt, status = classify_media(bytes(row["blob"]))
+        fmt, status = decode_blob(bytes(row["blob"]))[:2]
         assert (fmt, status) == (row["fmt"], row["status"]), row["media_id"]
     # every declared class is present, including the planted WebP
     got = set(zip(df["fmt"], df["status"]))
@@ -42,18 +42,18 @@ def test_classifier_boundaries():
     )
 
     png = encode_png_gray8(bytes(range(256)), 16, 16)
-    assert classify_media(png) == ("png", "decoded")
-    assert classify_media(png[:20]) == ("png", "corrupt")
-    assert classify_media(encode_wav_pcm16([0] * 100)) == ("wav", "decoded")
+    assert decode_blob(png)[:2] == ("png", "decoded")
+    assert decode_blob(png[:20])[:2] == ("png", "corrupt")
+    assert decode_blob(encode_wav_pcm16([0] * 100))[:2] == ("wav", "decoded")
     webp = b"RIFF" + struct.pack("<I", 12) + b"WEBP" + bytes(12)
-    assert classify_media(webp) == ("webp", "unsupported_format")
+    assert decode_blob(webp)[:2] == ("webp", "unsupported_format")
     arith = b"\xff\xd8\xff\xca" + struct.pack(">H", 11) + bytes(9)
-    assert classify_media(arith) == ("jpeg", "unsupported_format")
+    assert decode_blob(arith)[:2] == ("jpeg", "unsupported_format")
     lossless = b"\xff\xd8\xff\xc3" + struct.pack(">H", 11) + bytes(9)
-    assert classify_media(lossless) == ("jpeg", "unsupported_format")
-    assert classify_media(b"\xff\xd8 not a real jpeg") == ("jpeg", "corrupt")
-    assert classify_media(b"garbage") == ("unknown", "unsupported_format")
-    assert classify_media(None) == ("unknown", "unsupported_format")
+    assert decode_blob(lossless)[:2] == ("jpeg", "unsupported_format")
+    assert decode_blob(b"\xff\xd8 not a real jpeg")[:2] == ("jpeg", "corrupt")
+    assert decode_blob(b"garbage")[:2] == ("unknown", "unsupported_format")
+    assert decode_blob(None)[:2] == ("unknown", "unsupported_format")
 
 
 def test_audit_counts_match_pandas(spark):

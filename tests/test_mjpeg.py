@@ -23,7 +23,7 @@ from prod2vec_spark.operators.multimodal import (
     encode_avi_gray8,
     encode_avi_mjpeg,
 )
-from prod2vec_spark.operators.phash import vhash_avi
+from prod2vec_spark.operators.phash import media_hash
 
 W, H = 36, 24
 
@@ -218,16 +218,16 @@ def test_vhash_stable_across_codec_and_compression():
     same clip encoded raw and MJPEG hashes identically (or within 2
     bits), while an unrelated clip stays far."""
     frames = _clip(12, n_frames=8)
-    h_raw = vhash_avi(encode_avi_gray8(frames, W, H))
-    h_mjpg = vhash_avi(encode_avi_mjpeg(frames, W, H, quality=90))
+    h_raw = media_hash(encode_avi_gray8(frames, W, H))[1]
+    h_mjpg = media_hash(encode_avi_mjpeg(frames, W, H, quality=90))[1]
     assert _ham(h_raw, h_mjpg) <= 2
-    h_other = vhash_avi(encode_avi_mjpeg(_clip(77, n_frames=8), W, H))
+    h_other = media_hash(encode_avi_mjpeg(_clip(77, n_frames=8), W, H))[1]
     assert _ham(h_mjpg, h_other) > 10
 
 
 def test_mjpeg_neardup_planted_families(spark):
     """Planted near-duplicate clip families survive MJPEG compression:
-    phash_videos + banded-Hamming recovers every within-family pair and
+    media_hashes + banded-Hamming recovers every within-family pair and
     no cross-family pair — the compressed twin of
     test_phash_videos_neardup_planted_families."""
     import collections
@@ -256,7 +256,9 @@ def test_mjpeg_neardup_planted_families(spark):
             )
     rows.append((999, bytearray(b"undecodable")))
     media = spark.createDataFrame(rows, "media_id long, blob binary")
-    hashes = PH.phash_videos(media)
+    hashes = PH.media_hashes(media).select(
+        "media_id", F.col("mhash").alias("vhash")
+    )
     assert hashes.where(F.col("media_id") == 999).collect()[0]["vhash"] is None
     pairs = PH.phash_neardup(hashes, hash_col="vhash", max_distance=3).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}

@@ -55,7 +55,7 @@ def test_resample_identity_half_and_double(spark):
 
 def test_resample_adpcm_and_stereo_through_shared_door(spark):
     """ADPCM decodes through the same door; stereo folds to the
-    channel mean BEFORE resampling (the ahash_wav convention)."""
+    channel mean BEFORE resampling (the audio fingerprint's convention)."""
     s = _sig(8, 600)
     stereo = [v for pair in zip(s, s) for v in pair]  # L == R
     rows = [

@@ -45,12 +45,12 @@ def test_dhash_golden_monotone_gradient():
 
 def test_dhash_png_matches_matrix_hash():
     mat = _rand_img(1)
-    assert PH.dhash_png(_gray_png(mat)) == PH.dhash64(mat.astype(np.float64))
+    assert PH.media_hash(_gray_png(mat))[1] == PH.dhash64(mat.astype(np.float64))
 
 
 def test_dhash_png_rejects_non_png_and_subbyte_depth():
-    assert PH.dhash_png(b"not a png at all") is None
-    assert PH.dhash_png(None) is None
+    assert PH.media_hash(b"not a png at all")[1] is None
+    assert PH.media_hash(None)[1] is None
     # bit_depth 8 is required; 16 would also be rejected if built
 
 
@@ -83,7 +83,9 @@ def _media_df(spark, imgs: dict[int, bytes]):
 
 def test_phash_images_null_for_undecodable(spark):
     imgs = {1: _gray_png(_rand_img(4)), 2: b"\x00garbage"}
-    out = {r["media_id"]: r["dhash"] for r in PH.phash_images(_media_df(spark, imgs)).collect()}
+    out = {r["media_id"]: r["dhash"] for r in PH.media_hashes(_media_df(spark, imgs)).select(
+        "media_id", F.col("mhash").alias("dhash")
+    ).collect()}
     assert out[1] is not None and out[2] is None
 
 
@@ -102,7 +104,9 @@ def test_phash_neardup_finds_planted_families(spark):
             imgs[mid] = _gray_png(m)
             fam[mid] = f
             mid += 1
-    hashes = PH.phash_images(_media_df(spark, imgs))
+    hashes = PH.media_hashes(_media_df(spark, imgs)).select(
+        "media_id", F.col("mhash").alias("dhash")
+    )
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in PH.phash_neardup(hashes, max_distance=3).collect()
@@ -193,11 +197,11 @@ def test_ahash_wav_decodes_and_rejects():
 
     s = _rand_pcm(13)
     blob = encode_wav_pcm16([int(x) for x in s])
-    assert PH.ahash_wav(blob) == PH.ahash64(s.astype(np.float64))
-    assert PH.ahash_wav(b"not riff") is None
-    assert PH.ahash_wav(None) is None
+    assert PH.media_hash(blob)[1] == PH.ahash64(s.astype(np.float64))
+    assert PH.media_hash(b"not riff")[1] is None
+    assert PH.media_hash(None)[1] is None
     # too-short clip: no windows
-    assert PH.ahash_wav(encode_wav_pcm16([1, 2, 3])) is None
+    assert PH.media_hash(encode_wav_pcm16([1, 2, 3]))[1] is None
 
 
 def test_wav_encoder_roundtrip_and_stereo_mix():
@@ -207,10 +211,10 @@ def test_wav_encoder_roundtrip_and_stereo_mix():
     blob = encode_wav_pcm16(samples, sample_rate=4000)
     got, m = wav_samples(blob)
     assert list(got) == samples and m["framerate"] == 4000
-    # stereo: channel-mean mix is what ahash_wav hashes
+    # stereo: channel-mean mix is what the audio hash reads
     stereo = encode_wav_pcm16([10, 30, 20, 40, 30, 50] * 200, n_channels=2)
     mono = encode_wav_pcm16([20, 30, 40] * 200)
-    assert PH.ahash_wav(stereo) == PH.ahash_wav(mono)
+    assert PH.media_hash(stereo)[1] == PH.media_hash(mono)[1]
 
 
 def test_phash_audio_neardup_planted_families(spark):
@@ -228,7 +232,9 @@ def test_phash_audio_neardup_planted_families(spark):
             imgs[mid] = encode_wav_pcm16([int(x) for x in s])
             fam[mid] = f
             mid += 1
-    hashes = PH.phash_audio(_media_df(spark, imgs))
+    hashes = PH.media_hashes(_media_df(spark, imgs)).select(
+        "media_id", F.col("mhash").alias("ahash")
+    )
     pairs = PH.phash_neardup(hashes, hash_col="ahash", max_distance=3).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     within = {(a, b) for a in fam for b in fam if a < b and fam[a] == fam[b]}
@@ -285,13 +291,13 @@ def test_phash_pair_fixture_goldens_match_codecs():
     fixdir = os.path.join(os.path.dirname(__file__), "fixtures")
     img = pq.read_table(os.path.join(fixdir, "phash_pairs_images.parquet"))
     for blob, want in zip(img["blob"].to_pylist(), img["dhash"].to_pylist()):
-        assert PH.dhash_png(blob) == want
+        assert PH.media_hash(blob)[1] == want
     wav = pq.read_table(os.path.join(fixdir, "phash_pairs_audio.parquet"))
     for blob, want in zip(wav["blob"].to_pylist(), wav["ahash"].to_pylist()):
-        assert PH.ahash_wav(blob) == want
+        assert PH.media_hash(blob)[1] == want
     wp = pq.read_table(os.path.join(fixdir, "phash_pairs_webp.parquet"))
     for blob, want in zip(wp["blob"].to_pylist(), wp["dhash"].to_pylist()):
-        assert PH.dhash_webp(blob) == want
+        assert PH.media_hash(blob)[1] == want
 
 
 # ------------------------------------------- whole-media incremental

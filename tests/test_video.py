@@ -1,7 +1,7 @@
 """Round-9: the video plane is REAL — stdlib AVI codec
 (operators/multimodal.py: encode_avi_gray8 / avi_frames / decode_avi)
 plus the keyframe-mean dHash fingerprint (operators/phash.py:
-vhash64 / vhash_avi / phash_videos) feeding the existing
+vhash64 / media_hash / media_hashes) feeding the existing
 banded-Hamming near-dup machinery.  Mirrors test_phash.py's
 planted-family strategy and test_multimodal.py's golden decodes."""
 
@@ -104,21 +104,21 @@ def _hamming(a: int, b: int) -> int:
 def test_vhash_robust_to_single_frame_edit_far_for_random():
     frames = _clip(7, n_frames=8, h=24, w=36)
     blob = encode_avi_gray8(frames, 36, 24)
-    h0 = PH.vhash_avi(blob)
+    h0 = PH.media_hash(blob)[1]
     assert h0 is not None
     # single-pixel edit in one frame barely moves the keyframe mean
     edited = [bytearray(f) for f in frames]
     edited[3][100] = (edited[3][100] + 9) % 256
-    h1 = PH.vhash_avi(encode_avi_gray8([bytes(f) for f in edited], 36, 24))
+    h1 = PH.media_hash(encode_avi_gray8([bytes(f) for f in edited], 36, 24))[1]
     assert _hamming(h0, h1) <= 2
     # an unrelated clip is far
-    other = PH.vhash_avi(encode_avi_gray8(_clip(99, n_frames=8, h=24, w=36), 36, 24))
+    other = PH.media_hash(encode_avi_gray8(_clip(99, n_frames=8, h=24, w=36), 36, 24))[1]
     assert _hamming(h0, other) > 10
 
 
 def test_vhash_null_on_undecodable():
-    assert PH.vhash_avi(b"not video") is None
-    assert PH.vhash_avi(None) is None
+    assert PH.media_hash(b"not video")[1] is None
+    assert PH.media_hash(None)[1] is None
     assert PH.vhash64([], 4, 4) is None
 
 
@@ -127,15 +127,15 @@ def test_vhash_keyframe_sampling_includes_endpoints():
     # the all-frames mean, but first/last frames always participate —
     # changing ONLY frame 19 must change the hash input set
     frames = _clip(8, n_frames=20)
-    h0 = PH.vhash_avi(encode_avi_gray8(frames, 16, 16))
+    h0 = PH.media_hash(encode_avi_gray8(frames, 16, 16))[1]
     swapped = frames[:19] + [bytes(255 - b for b in frames[19])]
-    h1 = PH.vhash_avi(encode_avi_gray8(swapped, 16, 16))
+    h1 = PH.media_hash(encode_avi_gray8(swapped, 16, 16))[1]
     assert h0 != h1
 
 
 def test_phash_videos_neardup_planted_families(spark):
     """Planted near-duplicate clip families (one-pixel per-member
-    edits) are recovered by phash_videos + the generic banded-Hamming
+    edits) are recovered by media_hashes + the generic banded-Hamming
     plane — the video twin of test_phash_neardup_finds_planted_families."""
     rows = []
     for fam in range(6):
@@ -156,7 +156,9 @@ def test_phash_videos_neardup_planted_families(spark):
             )
     rows.append((999, bytearray(b"undecodable")))
     media = spark.createDataFrame(rows, "media_id long, blob binary")
-    hashes = PH.phash_videos(media)
+    hashes = PH.media_hashes(media).select(
+        "media_id", F.col("mhash").alias("vhash")
+    )
     assert (
         hashes.where(F.col("media_id") == 999).collect()[0]["vhash"] is None
     )
@@ -177,7 +179,7 @@ def test_video_hash_fixture_matches_codec_chain(spark):
     split: the persisted hash table (tests/fixtures/video_vhash.
     parquet) must be bit-for-bit what the REAL distributed codec
     chain (mapInPandas render → encode_avi_gray8 → stdlib AVI decode
-    → vhash_avi) produces — re-derived here for every sf0.01 doc_id,
+    → keyframe-mean dHash) produces — re-derived here for every sf0.01 doc_id,
     so the driver's full-hash oracle on the pair plane plus this gate
     together cover the whole original pipeline."""
     from prod2vec_spark.queries.common import (
@@ -307,8 +309,8 @@ def test_video_span_pairs_finds_embedded_scene(spark):
     assert (1, 2) in got and got[(1, 2)] >= 3  # the embedded scene
     assert (1, 3) not in got and (2, 3) not in got
     # whole-clip fingerprints DO diverge — the span plane is needed
-    from prod2vec_spark.operators.phash import vhash_avi
+    from prod2vec_spark.operators.phash import media_hash
 
-    h1 = vhash_avi(encode_avi_gray8(rng_frames, 36, 24, fps=1))
-    h2 = vhash_avi(encode_avi_gray8(long_frames, 36, 24, fps=1))
+    h1 = media_hash(encode_avi_gray8(rng_frames, 36, 24, fps=1))[1]
+    h2 = media_hash(encode_avi_gray8(long_frames, 36, 24, fps=1))[1]
     assert _hamming(h1, h2) > 3

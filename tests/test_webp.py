@@ -1,6 +1,6 @@
 """Round-15 (VERDICT r14 ask #4): the lossless-WebP (VP8L) codec —
 operators/webp.py — and its wiring through the image plane's shared
-pixel door (phash.image_gray / dhash_webp), the media classifier, and
+pixel door (phash.image_gray / media_hash), the media classifier, and
 the format audit.  Beyond the encoder roundtrips, the transform and
 entropy paths our minimal encoder does not emit (predictor, color
 transform, color indexing, color cache, meta prefix groups) are
@@ -16,7 +16,7 @@ import pytest
 
 from prod2vec_spark.operators import phash as PH
 from prod2vec_spark.operators.multimodal import (
-    classify_media,
+    decode_blob,
     decode_media,
     encode_png_gray8,
 )
@@ -79,8 +79,8 @@ def test_png_webp_dhash_parity():
     raw = _gray_bytes("parity", 256)
     png = encode_png_gray8(raw, 16, 16)
     webp = encode_webp_lossless_gray8(raw, 16, 16)
-    h_png = PH.dhash_png(bytes(png))
-    h_webp = PH.dhash_webp(webp)
+    h_png = PH.media_hash(bytes(png))[1]
+    h_webp = PH.media_hash(webp)[1]
     assert h_png is not None and h_png == h_webp
     g = PH.image_gray(webp)
     assert g is not None and g.shape == (16, 16)
@@ -92,12 +92,12 @@ def test_png_webp_dhash_parity():
 def test_classify_media_webp_classes():
     raw = _gray_bytes("cls", 256)
     good = encode_webp_lossless_gray8(raw, 16, 16)
-    assert classify_media(good) == ("webp", "decoded")
+    assert decode_blob(good)[:2] == ("webp", "decoded")
     # truncated VP8L payload -> corrupt, never mis-decoded
-    assert classify_media(good[:-10]) == ("webp", "corrupt")
+    assert decode_blob(good[:-10])[:2] == ("webp", "corrupt")
     # lossy VP8 chunk -> the remaining declared boundary
     vp8 = b"RIFF" + struct.pack("<I", 20) + b"WEBP" + b"VP8 " + struct.pack("<I", 8) + bytes(8)
-    assert classify_media(vp8) == ("webp", "unsupported_format")
+    assert decode_blob(vp8)[:2] == ("webp", "unsupported_format")
     # VP8L-decodable blob flows through decode_media as a feature row
     row = decode_media("image", good)
     assert row["format"] == "webp" and (row["width"], row["height"]) == (16, 16)
@@ -416,7 +416,7 @@ def test_corrupt_streams_raise():
     bad_sig[20] ^= 0xFF  # clobber inside the payload
     with pytest.raises(ValueError):
         webp_pixels(bytes(bad_sig[:21]))
-    assert PH.dhash_webp(good[:-8]) is None  # auditable miss, no raise
+    assert PH.media_hash(good[:-8])[1] is None  # auditable miss, no raise
 
 
 def test_webp_crosscodec_neardup_query_self_audit(spark):
@@ -691,7 +691,7 @@ def test_decode_media_lossy_webp_feature_row():
     """decode_media: lossy WebP no longer falls to 'raw' byte stats —
     it carries a header-level feature row (format='webp_lossy' with
     real dims); pixels remain the classified unsupported boundary."""
-    from prod2vec_spark.operators.multimodal import classify_media, decode_media
+    from prod2vec_spark.operators.multimodal import decode_blob, decode_media
 
     blob = make_lossy_webp(320, 200)
     d = decode_media("image", blob)
@@ -699,7 +699,7 @@ def test_decode_media_lossy_webp_feature_row():
     assert (d["width"], d["height"]) == (320, 200)
     assert "pixel_digest" not in d  # no pixels were decoded, honestly
     # the classifier still reports the pixel boundary
-    assert classify_media(blob) == ("webp", "unsupported_format")
+    assert decode_blob(blob)[:2] == ("webp", "unsupported_format")
     # structurally corrupt lossy header -> corrupt, not webp_lossy
     bad = bytearray(blob)
     bad[bad.index(b"\x9d\x01\x2a")] = 0x00

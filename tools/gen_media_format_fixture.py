@@ -11,8 +11,8 @@ arithmetic-coded-JPEG header stay declared unsupported), plus
 unknown-magic garbage.
 
 Columns: media_id, blob, fmt, status — fmt/status are the REAL
-classifier's output at generation time (operators/multimodal.
-classify_media); tests/test_media_format.py re-runs the classifier
+decode door's output at generation time (operators/multimodal.
+decode_blob); tests/test_media_format.py re-runs the classifier
 against the blobs and asserts bit-equality, so the persisted columns
 stay honest (the video_vhash golden-fixture protocol).  The catalog
 entry recomputes (fmt, status) from the blobs in Spark and its DuckDB
@@ -281,12 +281,13 @@ def _make_mp3(n_audio_bytes: int) -> bytes:
 def main() -> None:
     import pandas as pd
 
-    from prod2vec_spark.operators.multimodal import classify_media, decode_media
+    from prod2vec_spark.operators.multimodal import decode_blob, decode_media
 
     rows = []
     for i in range(N_ROWS):
         blob = planted_media_blob(i)
-        fmt, status = classify_media(blob)
+        d = decode_blob(blob)
+        fmt, status = d.fmt, d.status
         # r16 golden columns for the header-feature plane: the
         # decode_media feature-row format plus dims (None where the
         # decoder reports none) — DuckDB replays these, the honesty

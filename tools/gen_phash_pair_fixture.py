@@ -10,8 +10,8 @@ the SAME deterministic recipes the round-7c in-query renderers used:
 variants, md5-expanded content.
 
 Columns: media_id, blob, dhash|ahash — the hash columns are the REAL
-codec chain's output at generation time (operators/phash.dhash_png /
-ahash_wav); tests/test_phash.py re-runs the codecs against the blobs
+codec chain's output at generation time (operators/phash.media_hash);
+tests/test_phash.py re-runs the codecs against the blobs
 and asserts bit-equality, so the persisted goldens stay honest.  The
 superset entries RECOMPUTE the hashes from the blobs in Spark (the
 codec plane stays exercised end-to-end) and their DuckDB oracles
@@ -97,10 +97,10 @@ def main() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from prod2vec_spark.operators.phash import ahash_wav, dhash_png, dhash_webp
+    from prod2vec_spark.operators.phash import media_hash
 
     img_blobs = [planted_image_blob(i) for i in range(N_ROWS)]
-    img_hashes = [dhash_png(b) for b in img_blobs]
+    img_hashes = [media_hash(b)[1] for b in img_blobs]
     assert all(h is not None for h in img_hashes)
     pq.write_table(
         pa.table(
@@ -113,7 +113,7 @@ def main() -> None:
         os.path.join(FIXDIR, "phash_pairs_images.parquet"),
     )
     webp_blobs = [planted_webp_blob(i) for i in range(N_ROWS)]
-    webp_hashes = [dhash_webp(b) for b in webp_blobs]
+    webp_hashes = [media_hash(b)[1] for b in webp_blobs]
     assert all(h is not None for h in webp_hashes)
     pq.write_table(
         pa.table(
@@ -126,7 +126,7 @@ def main() -> None:
         os.path.join(FIXDIR, "phash_pairs_webp.parquet"),
     )
     wav_blobs = [planted_audio_blob(i) for i in range(N_ROWS)]
-    wav_hashes = [ahash_wav(b) for b in wav_blobs]
+    wav_hashes = [media_hash(b)[1] for b in wav_blobs]
     assert all(h is not None for h in wav_hashes)
     pq.write_table(
         pa.table(

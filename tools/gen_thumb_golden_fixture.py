@@ -33,10 +33,7 @@ THUMB_W = THUMB_H = 8
 def golden_row(media_id: int, blob: bytes):
     import numpy as np
 
-    from prod2vec_spark.operators.multimodal import (
-        classify_media,
-        encode_png_gray8,
-    )
+    from prod2vec_spark.operators.multimodal import decode_blob, encode_png_gray8
     from prod2vec_spark.operators.phash import _area_resize, image_gray
 
     g = image_gray(blob)
@@ -50,7 +47,7 @@ def golden_row(media_id: int, blob: bytes):
         hashlib.md5(thumb).hexdigest(),
         int(g.shape[1]),
         int(g.shape[0]),
-        classify_media(blob)[0],
+        decode_blob(blob).fmt,
     )
 
 

@@ -8,7 +8,7 @@ One row per doc_id in [0, 5000) — covering every driver scale factor
 (sf0.1's documents table tops out at doc_id 4999) — with the
 keyframe-mean dHash of the planted clip corpus, computed through the
 REAL codec chain (planted_clip render → encode_avi_gray8 →
-stdlib AVI decode → vhash_avi).  Pure Python, no Spark session.
+stdlib AVI decode → keyframe-mean dHash, phash.media_hash).  Pure Python, no Spark session.
 
     python tools/gen_video_hash_fixture.py
 
@@ -34,10 +34,10 @@ def main() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from prod2vec_spark.operators.phash import vhash_avi
+    from prod2vec_spark.operators.phash import media_hash
     from prod2vec_spark.queries.media import planted_clip
 
-    hashes = [vhash_avi(planted_clip(i)) for i in range(N_DOCS)]
+    hashes = [media_hash(planted_clip(i))[1] for i in range(N_DOCS)]
     assert all(h is not None for h in hashes), "codec chain produced a NULL hash"
     table = pa.table(
         {
