@@ -6,7 +6,7 @@ distributed.  The reference's ML surface stops at the embedding
 estimator (pipeline/model_train/model_train.py); the engine's prior
 language-ID is the marker-vocabulary heuristic (operators/text.
 lang_guess) which stays as the oracled fallback — this module is the
-learned upgrade sharing the fit/score/save/stream scaffolding of
+learned upgrade sharing the fit/score/save scaffolding of
 ml/quality_clf.py.
 
 Shape, and why it holds at 100 TB:
@@ -35,7 +35,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prod2vec_spark.sources.io import read_partials
 
 DEFAULT_DIM = 4096
 
@@ -122,46 +121,4 @@ def score_lang(
             "lang_pred"
         ),
         F.round(F.array_max(probs), 6).alias("lang_prob"),
-    )
-
-
-def start_lang_score_stream(
-    docs_stream: DataFrame,
-    model,
-    out_dir: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-):
-    """Language-ID over a document stream against a FITTED model —
-    the CCNet ingestion shape (label every incoming crawl batch): per
-    micro-batch, score_lang runs batch-side in foreachBatch
-    (coefficients broadcast, zero shuffles) and labeled rows land
-    idempotently at ``out_dir/batch_id=N`` (replayed batches
-    overwrite their own partition — the quality_clf/sketch stream
-    exactly-once recipe).  Returns the started availableNow query."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_lang(batch_df, model, id_col=id_col).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_lang_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch label partitions; empty before the
-    first commit, not an error."""
-    return (
-        read_partials(
-            spark,
-            out_dir,
-            "doc_id long, lang_pred string, lang_prob double",
-        )
-        .drop("batch_id")
     )

@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prod2vec_spark.sources.io import read_partials
 
 FEATURE_COLS = [
     "n_tokens",
@@ -128,42 +127,4 @@ def score_quality(
         F.round(
             vector_to_array(F.col("probability")).getItem(1), 6
         ).alias("quality_prob"),
-    )
-
-
-def start_quality_score_stream(
-    docs_stream: DataFrame,
-    model,
-    out_dir: str,
-    checkpoint: str,
-    text_col: str = "text",
-):
-    """Score a document stream against a FITTED classifier — the
-    learned screen applied to incoming crawls: per micro-batch,
-    score_quality runs batch-side in foreachBatch (model coefficients
-    broadcast, zero shuffles) and scored rows land idempotently at
-    ``out_dir/batch_id=N`` (replayed batches overwrite their own
-    partition — the sketch/LM-stream exactly-once recipe).  Returns
-    the started availableNow query."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_quality(batch_df, model, text_col=text_col).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_quality_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch score partitions; empty before the
-    first commit, not an error."""
-    return (
-        read_partials(spark, out_dir, "doc_id long, quality_prob double")
-        .drop("batch_id")
     )

@@ -283,13 +283,18 @@ def badwords_screen(
 ) -> DataFrame:
     """GATE form shared by the batch DAG and the streaming pipeline:
     run the badwords report (single-list ``cats`` or per-language
-    ``lang_lists`` — exactly one must be given), drop flagged docs,
-    strip the report columns.  One definition so the two chains can
-    never drift (the span-gate consolidation rule)."""
-    if (cats is None) == (lang_lists is None):
+    ``lang_lists``), drop flagged docs, strip the report columns.  A
+    None or empty mapping is off; with both off the docs pass
+    unscreened, with both on it raises.  One definition so the two
+    chains can never drift (the span-gate consolidation rule)."""
+    cats, lang_lists = cats or None, lang_lists or None
+    if cats is not None and lang_lists is not None:
         raise ValueError(
-            "badwords_screen takes exactly one of cats / lang_lists"
+            "badwords cats and lang_lists are mutually exclusive — pick "
+            "the single-list or per-language gate"
         )
+    if cats is None and lang_lists is None:
+        return docs
     if cats is not None:
         rep = badwords_gate(
             docs, cats, text_col=text_col, max_frac=max_frac

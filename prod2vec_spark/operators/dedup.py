@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.text import tokens
+from prod2vec_spark.sources.io import read_partials
 
 
 def normalized(text: Column) -> Column:
@@ -551,3 +552,60 @@ def incremental_lsh_candidates(
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .distinct()
     )
+
+def incremental_lsh_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    bands_dir: str,
+    text_col: str = "text",
+    shingle_k: int = 3,
+    num_hashes: int = 8,
+    band_size: int = 4,
+    max_group: int | None = None,
+) -> "tuple[DataFrame, DataFrame]":
+    """One micro-batch of the streaming incremental LSH plane: (delta
+    candidate pairs, the batch's own band rows) — the ``per_batch`` of
+    ``start_batch_stage(docs, partial(incremental_lsh_batch,
+    bands_dir=...), (pairs_dir, bands_dir), checkpoint)``.  The pairs
+    probe the committed band table EXCLUDING this batch id, so a
+    replayed batch recomputes the same partials instead of
+    pairing against its own half-committed bands; the band store grows
+    append-only and the archived corpus is never re-shingled.  Not a
+    keep/drop decision: the union of the delta pairs
+    (``read_delta_pairs``) is the batch pipeline's full pair set, so
+    CC/canonical selection stays batch-adjudicated."""
+    old = (
+        read_committed_bands(batch_df.sparkSession, bands_dir)
+        .where(F.col("batch_id") != batch_id)
+        .select("doc_id", "band_id", "band_sig")
+    )
+    kw = dict(
+        text_col=text_col,
+        shingle_k=shingle_k,
+        num_hashes=num_hashes,
+        band_size=band_size,
+    )
+    return (
+        incremental_lsh_candidates(old, batch_df, max_group=max_group, **kw),
+        minhash_bands(batch_df, **kw),
+    )
+
+
+def read_committed_bands(
+    spark, bands_dir: str, checkpoint: str | None = None
+) -> DataFrame:
+    """The committed band table (union of per-batch partials) with its
+    batch_id partition column — empty before the first commit; a lost
+    table under a committed ``checkpoint`` raises."""
+    return read_partials(
+        spark, bands_dir, "doc_id long, band_id int, band_sig string", checkpoint
+    )
+
+
+def read_delta_pairs(
+    spark, pairs_dir: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Union of the committed per-batch delta pair sets.  Each pair is
+    emitted exactly once — by the batch that ingested its LATER member
+    — so the union replays the batch pipeline's full pair set."""
+    return read_partials(spark, pairs_dir, "doc_a long, doc_b long", checkpoint)

@@ -44,7 +44,6 @@ from prod2vec_spark.functions.hashing import hash_unit
 from prod2vec_spark.functions.lineage import break_lineage as _break_lineage
 from prod2vec_spark.functions.lineage import closing_lazy_breaks
 from prod2vec_spark.operators.text import tokens
-from prod2vec_spark.sources.io import read_partials
 
 DEFAULT_ALPHA = 0.4
 
@@ -266,50 +265,6 @@ def lm_perplexity(
     # column order of the original single-pass implementation
     return out.select(
         id_col, "is_train", "n_pairs", "n_backoff", "avg_nll", "ppl"
-    )
-
-
-def start_lm_score_stream(
-    docs_stream: DataFrame,
-    model: BigramLM,
-    out_dir: str,
-    checkpoint: str,
-    alpha: float = DEFAULT_ALPHA,
-):
-    """Score a DOCUMENT STREAM against a fitted (static) model — the
-    production fluency screen for incoming crawls: per micro-batch,
-    score_docs runs batch-side in foreachBatch (the model's count
-    tables are static DataFrames, so each batch is an ordinary
-    stream-static scoring join) and the scored rows land idempotently
-    at ``out_dir/batch_id=N`` (a replayed batch overwrites its own
-    partition — the same exactly-once recipe as the sketch streams).
-    Returns the started availableNow query."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_docs(batch_df, model, alpha=alpha).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_lm_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch score partitions as one frame.  Before
-    the first commit: empty, not an error."""
-    return (
-        read_partials(
-            spark,
-            out_dir,
-            "doc_id long, n_pairs long, n_backoff long, avg_nll double, "
-            "ppl double",
-        )
-        .drop("batch_id")
     )
 
 
@@ -1322,48 +1277,4 @@ def knn_perplexity(
         text_col=text_col,
         broadcast_unigrams=broadcast_unigrams,
         broadcast_bigrams=broadcast_bigrams,
-    )
-
-
-def start_knn_score_stream(
-    docs_stream: DataFrame,
-    model: "KNnModel",
-    out_dir: str,
-    checkpoint: str,
-    discount: float | None = None,
-    discounts: "dict[int, tuple] | None" = None,
-):
-    """Score a DOCUMENT STREAM against a fitted order-n KN model —
-    the Kneser-Ney twin of :func:`start_lm_score_stream`, at any order:
-    same stream-static scoring join per micro-batch, same
-    idempotent-by-path ``out_dir/batch_id=N`` sink; per-level modified
-    discounts ride through unchanged (batch parity with
-    ``score_docs_knn`` pytest-locked)."""
-    d = DEFAULT_DISCOUNT if discount is None else discount
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_docs_knn(
-            batch_df, model, discount=d, discounts=discounts
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_knn_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch order-n KN score partitions as one
-    frame.  Before the first commit: empty, not an error."""
-    return (
-        read_partials(
-            spark,
-            out_dir,
-            "doc_id long, n_grams long, n_bo long, avg_nll double, "
-            "ppl double",
-        )
-        .drop("batch_id")
     )

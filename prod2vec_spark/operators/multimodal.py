@@ -1414,17 +1414,18 @@ def audio_resample(
     """Deterministic linear-interpolation resampling for every
     decodable WAV blob (round-15 — the audio analog of
     image_thumbnails: training pipelines normalize heterogeneous
-    crawl audio to one model rate): decode through the SHARED sample
-    door (wav_samples — PCM or IMA-ADPCM, stereo folded to the
-    channel MEAN by the fingerprint plane's ``_mono``, so the resample
-    plane can never disagree with it about what decodes),
+    crawl audio to one model rate): decode through the fingerprint
+    plane's audio door (phash.audio_mono over decode_blob — sniff
+    gated, PCM or IMA-ADPCM, stereo folded to the channel MEAN, so the
+    resample plane can never disagree with it about what decodes),
     linearly interpolate onto the uniform target grid (output sample
     i sits at source position i·src/target; endpoints clamp), round
     half-away-from-zero to int16, re-encode PCM16 WAV at
     ``target_rate``.
 
     Output: (id, resampled binary, src_rate, src_samples) — NULL
-    where the blob is undecodable (the auditable-miss contract).  A
+    where the door yields no signal: undecodable, not audio, or a
+    0 Hz ``fmt `` header (the auditable-miss contract).  A
     source already at ``target_rate`` round-trips its channel-mean
     EXACTLY (the interpolation grid is then the identity — mono PCM16
     in == PCM16 out, pytest-locked).
@@ -1436,26 +1437,26 @@ def audio_resample(
         raise ValueError("target_rate must be positive")
     if _np is None:  # pragma: no cover - numpy is baked into the env
         raise RuntimeError("audio_resample needs numpy")
+    from prod2vec_spark.operators.phash import audio_mono
+
     src = media.select(id_col, blob_col)
 
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for pdf in batches:
             blobs, rates, counts = [], [], []
             for b in pdf[blob_col]:
-                try:
-                    samples, meta = wav_samples(bytes(b))
-                except Exception:
+                dec = audio_mono(bytes(b))
+                if dec is None:
                     blobs.append(None)
                     rates.append(None)
                     counts.append(None)
                     continue
-                a = _mono(samples, meta.get("n_channels", 1) or 1)
+                a, src_rate = dec
                 if a.size == 0:
                     blobs.append(None)
-                    rates.append(meta["framerate"])
+                    rates.append(src_rate)
                     counts.append(0)
                     continue
-                src_rate = int(meta["framerate"])
                 n_out = max(1, int(round(a.size * target_rate / src_rate)))
                 pos = _np.arange(n_out, dtype=_np.float64) * (
                     src_rate / float(target_rate)

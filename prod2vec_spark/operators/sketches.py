@@ -24,6 +24,11 @@ thousands of rows regardless of input size; estimation broadcasts the
 frequent-token / heavy-hitter primitive an LLM corpus pipeline uses
 when exact per-term counts at full vocabulary width are too wide to
 keep.
+
+Streams maintain both mergeable sketches (CMS, bottom-k) with no
+stream-specific code: ``cms_sketch`` / ``bottomk_sketch`` is the
+``per_batch`` of ``sources/io.start_batch_stage``, and ``read_cms`` /
+``read_bottomk`` merge the committed per-batch partials on read.
 """
 
 from __future__ import annotations
@@ -158,45 +163,20 @@ def bloom_maybe_contains(
     )
 
 
-def start_cms_stream(
-    items: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-    col: str = "term",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-):
-    """Maintain the count-min sketch INCREMENTALLY over a stream: each
-    micro-batch's items are sketched batch-side in foreachBatch and the
-    partial sketch lands at ``out_dir/batch_id=N`` (overwrite — a
-    replayed batch rewrites its own partition, the idempotent
-    foreachBatch recipe).  Because counters add, the current sketch is
-    just the counter-wise sum of the committed partials — no
-    read-modify-write of a master copy, no stateful operator, and the
-    partials double as a time-sliced sketch history (drop old
-    partitions to age data out).  Returns the started query
-    (availableNow drain)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_sketch(batch_df, col=col, depth=depth, width=width).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
-
+def read_cms(
+    spark, out_dir: str, depth: int = CMS_DEPTH, checkpoint: str | None = None
+) -> DataFrame:
+    """The current sketch of a stream whose micro-batches each landed a
+    ``cms_sketch`` partial through ``sources/io.start_batch_stage``:
+    because counters add, it is the counter-wise sum of the committed
+    partials — no master copy, no stateful operator, and the partials
+    double as a time-sliced history (drop old partitions to age data
+    out).  Empty before the first commit; a lost sketch under a
+    committed ``checkpoint`` raises."""
     return (
-        items.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_cms(spark, out_dir: str, depth: int = CMS_DEPTH) -> DataFrame:
-    """Merge the committed per-batch partials into the current sketch
-    (counter-wise sum — the mergeability the unit test locks).  Before
-    the first commit the sketch is empty, not an error."""
-    return (
-        read_partials(spark, out_dir, "depth int, bucket long, cnt long")
+        read_partials(
+            spark, out_dir, "depth int, bucket long, cnt long", checkpoint
+        )
         .groupBy("depth", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -261,45 +241,17 @@ def bottomk_quantiles(sketch: DataFrame, ps: list[float]) -> DataFrame:
     )
 
 
-def start_bottomk_stream(
-    rows: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-    value_col: str,
-    key_cols: list[str],
-    k: int = BOTTOMK_K,
-    seed: str = "bk",
-):
-    """Maintain the bottom-k sketch INCREMENTALLY over a stream — the
-    same idempotent foreachBatch recipe as start_cms_stream: each
-    micro-batch's bottom-k partial lands at ``out_dir/batch_id=N``
-    (overwrite — a replayed batch rewrites its own partition), and
-    because bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ bottom-k(B))
-    (the merge law the unit test proves EXACT), the current sketch on
-    read is just the bottom-k of the committed partials.  No master
-    copy, no stateful operator, ≤ k rows written per batch.  Returns
-    the started query (availableNow drain)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bottomk_sketch(
-            batch_df, value_col, key_cols, k=k, seed=seed
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
+def read_bottomk(
+    spark, out_dir: str, k: int = BOTTOMK_K, checkpoint: str | None = None
+) -> DataFrame:
+    """The current sketch of a stream whose micro-batches each landed a
+    ``bottomk_sketch`` partial through ``sources/io.start_batch_stage``:
+    by the merge law it is the bottom-k of the committed partials
+    (union + re-take) — ≤ k rows written per batch.  Empty before the
+    first commit; a lost sketch under a committed ``checkpoint``
+    raises."""
     return (
-        rows.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_bottomk(spark, out_dir: str, k: int = BOTTOMK_K) -> DataFrame:
-    """Merge committed per-batch partials into the current sketch
-    (union + re-take, the exact merge law).  Empty before the first
-    commit, not an error."""
-    return (
-        read_partials(spark, out_dir, "hkey string, v double")
+        read_partials(spark, out_dir, "hkey string, v double", checkpoint)
         .select("hkey", "v")
         .orderBy("hkey", "v")
         .limit(k)

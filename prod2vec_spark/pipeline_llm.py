@@ -493,11 +493,6 @@ class CorpusCurationPipeline:
                 drop_brace_lines=self.cfg.lf_drop_braces,
                 max_dropped_frac=self.cfg.lf_max_dropped_frac,
             )
-        if self.cfg.badwords_cats and self.cfg.badwords_lang_lists:
-            raise ValueError(
-                "badwords_cats and badwords_lang_lists are mutually "
-                "exclusive — pick the single-list or per-language gate"
-            )
         if badwords and (
             self.cfg.badwords_cats or self.cfg.badwords_lang_lists
         ):
@@ -1313,7 +1308,7 @@ class CorpusCurationPipeline:
             )
         if cfg.badwords_cats or cfg.badwords_lang_lists:
             chain.append(("badwords_gate", self._scrubbed(cfg.sf_dir)))
-        if bool(cfg.domain_blocklist) or cfg.domain_cap_k > 0:
+        if self._url_curation_active():
             chain.append(
                 ("url_curation",
                  self.spark.read.parquet(f"{cfg.work_dir}/url_curated"))

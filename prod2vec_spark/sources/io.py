@@ -440,7 +440,7 @@ def compact_parquet(
 
 def has_partials(spark: SparkSession, dir_path: str) -> bool:
     """True once ``dir_path`` holds a committed ``batch_id=N`` parquet
-    partial — the idempotent foreachBatch sink layout.  Lists through
+    partial — the ``start_batch_stage`` sink layout.  Lists through
     the Hadoop FileSystem API, so ``file://``, ``s3a://`` and
     ``hdfs://`` paths resolve like local ones."""
     from prod2vec_spark.sources.artifacts import _fs_path
@@ -449,14 +449,72 @@ def has_partials(spark: SparkSession, dir_path: str) -> bool:
     return bool(fs.globStatus(hpath))
 
 
-def read_partials(spark: SparkSession, dir_path: str, schema) -> DataFrame:
+def _stage_partials(spark: SparkSession, dir_path: str, checkpoint) -> bool:
+    """``has_partials``, raising when ``checkpoint`` (the writing
+    stage's) has committed a batch whose partials ``dir_path`` lost:
+    reading or resuming over it would silently forget state."""
+    from prod2vec_spark.sources.artifacts import list_artifacts
+
+    if has_partials(spark, dir_path):
+        return True
+    if checkpoint is not None and any(
+        n.isdigit() for n in list_artifacts(spark, f"{checkpoint}/commits")
+    ):
+        raise RuntimeError(
+            f"checkpoint {checkpoint} has committed batches but "
+            f"{dir_path} holds no batch_id=* partial; restore it or "
+            "start from a fresh checkpoint"
+        )
+    return False
+
+
+def read_partials(
+    spark: SparkSession, dir_path: str, schema, checkpoint: str | None = None
+) -> DataFrame:
     """The union of the committed ``batch_id=N`` partials under
     ``dir_path`` with their ``batch_id`` partition column.  Before the
     first commit it is an empty frame of ``schema`` (DDL string or
-    StructType) plus ``batch_id`` — never a read error, and never a
-    directory created as a side effect."""
-    if has_partials(spark, dir_path):
+    StructType) plus ``batch_id`` — never a directory created as a
+    side effect.  Given the writing stage's ``checkpoint``, a dir
+    whose stage has committed but which holds no partial raises
+    ``RuntimeError`` instead of reading as empty."""
+    if _stage_partials(spark, dir_path, checkpoint):
         return spark.read.option("basePath", dir_path).parquet(dir_path)
     return spark.createDataFrame([], schema).withColumn(
         "batch_id", F.lit(None).cast("long")
+    )
+
+
+def start_batch_stage(stream: DataFrame, per_batch, out_dirs, checkpoint: str):
+    """The one door for a stateful micro-batch stage: start ``stream``
+    as an availableNow drain and return the started query.
+
+    ``per_batch(batch_df, batch_id)`` — an ordinary batch operator —
+    returns one frame per entry of ``out_dirs``; the door writes them
+    in that order to ``<dir>/batch_id=N`` with overwrite, so a
+    replayed batch rewrites its own partials with the same rows
+    (exactly-once: the file-sink ``_spark_metadata`` log does not
+    cover foreachBatch).  A ``per_batch`` that reads its own earlier
+    partials excludes its own batch id, for the same reason.
+
+    Raises ``RuntimeError`` before starting when ``checkpoint`` has
+    committed batches but any of ``out_dirs`` holds no partial:
+    resuming would build on state the lost dir held.  Read the
+    partials back with ``read_partials(spark, dir, schema,
+    checkpoint)``, which takes the same guard."""
+    spark = stream.sparkSession
+    dirs = list(out_dirs)
+    for d in dirs:
+        _stage_partials(spark, d, checkpoint)
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        for frame, d in zip(per_batch(batch_df, batch_id), dirs, strict=True):
+            frame.write.mode("overwrite").parquet(f"{d}/batch_id={batch_id}")
+
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )

@@ -13,14 +13,16 @@ every signature it presented; spans: a verified foreign-claim count).
 
 The registry: one row per distinct signature — the key columns,
 ``owner`` and one ``owner_<c>`` per ``carry`` column — stored as
-idempotent ``registry_dir/batch_id=N`` partials holding only the
-signatures first presented by batch N.  Decisions land the same way at
-``out_dir/batch_id=N``.  A batch reads the registry EXCLUDING its own
-batch id, so a replayed batch recomputes byte-identical partials
-(exactly-once under the foreachBatch recipe; the file-sink
-_spark_metadata log does not cover foreachBatch).  Rows that present
-no signature (too short to shingle, undecodable) get no decision row
-and are kept by the caller.
+``registry_dir/batch_id=N`` partials holding only the signatures first
+presented by batch N.  Decisions land the same way at
+``out_dir/batch_id=N``.  Both are written through the one micro-batch
+door, ``sources/io.start_batch_stage``: a batch reads the registry
+EXCLUDING its own batch id, so a replayed batch recomputes
+byte-identical partials, and a checkpoint whose registry or decision
+dir was lost refuses to resume (``read_decisions`` with the gate's
+checkpoint refuses to read it).  Rows that present no signature (too
+short to shingle, undecodable) get no decision row and are kept by
+the caller.
 
 Cost shape: per micro-batch one hash-agg over the signatures and one
 join against the committed registry — the right shape for
@@ -37,8 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from prod2vec_spark.sources.artifacts import list_artifacts
-from prod2vec_spark.sources.io import has_partials, read_partials
+from prod2vec_spark.sources.io import read_partials, start_batch_stage
 
 
 def start_first_presenter_gate(
@@ -63,21 +64,12 @@ def start_first_presenter_gate(
     nothing else.
 
     Raises if ``checkpoint`` has committed batches but ``registry_dir``
-    holds no partial: resuming would silently re-own every signature
-    the lost registry held."""
+    or ``out_dir`` holds no partial: resuming would silently re-own
+    every signature the lost registry held."""
     keys = list(key_cols)
     owned = ["owner"] + [f"owner_{c}" for c in carry]
-    spark = stream.sparkSession
-    if any(
-        n.isdigit() for n in list_artifacts(spark, f"{checkpoint}/commits")
-    ) and not has_partials(spark, registry_dir):
-        raise RuntimeError(
-            f"checkpoint {checkpoint} has committed batches but the "
-            f"registry {registry_dir} holds no batch_id=* partial; "
-            "restore the registry or start from a fresh checkpoint"
-        )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def per_batch(batch_df: DataFrame, batch_id: int):
         # signatures feed two consumers (ownership agg + the decision
         # fold): lazy lineage break so the derivation evaluates once
         sigs = signatures(batch_df).localCheckpoint(eager=False)
@@ -109,23 +101,15 @@ def start_first_presenter_gate(
             )
             .localCheckpoint(eager=False)  # read by decisions + new-sig legs
         )
-        decide(sigs.join(sig_owner, keys)).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
         # register only FIRST-presented signatures: re-presented ones
         # already have an earlier partial, and duplicate rows would
         # grow the registry past its one-row-per-signature contract
-        sig_owner.join(old, keys, "left_anti").write.mode("overwrite").parquet(
-            f"{registry_dir}/batch_id={batch_id}"
+        return (
+            decide(sigs.join(sig_owner, keys)),
+            sig_owner.join(old, keys, "left_anti"),
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stage(stream, per_batch, (out_dir, registry_dir), checkpoint)
 
 
 def owns_all(id_col: str) -> Callable[[DataFrame], DataFrame]:
@@ -136,10 +120,13 @@ def owns_all(id_col: str) -> Callable[[DataFrame], DataFrame]:
     )
 
 
-def read_decisions(spark, out_dir: str, id_col: str = "doc_id") -> DataFrame:
+def read_decisions(
+    spark, out_dir: str, id_col: str = "doc_id", checkpoint: str | None = None
+) -> DataFrame:
     """The accumulated (id, keep) decisions across all committed
-    batches — empty before the first commit, never a read error."""
-    return read_partials(spark, out_dir, f"{id_col} long, keep int").select(
-        id_col, "keep"
-    )
-
+    batches — empty before the first commit.  Given the gate's
+    ``checkpoint``, a decision dir lost after a commit raises instead
+    of reading as empty (every row would silently read as kept)."""
+    return read_partials(
+        spark, out_dir, f"{id_col} long, keep int", checkpoint
+    ).select(id_col, "keep")

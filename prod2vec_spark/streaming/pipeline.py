@@ -36,6 +36,15 @@ spread across executors by the groupBy hash; session state is O(open
 sessions); both sinks write partition-parallel parquet.  Kafka/delta
 swap in at the readStream/writeStream call sites (connectors absent in
 this environment, documented at streaming/events.py:146).
+
+The documents plane (``StreamingCorpusPipeline``) runs its exact dedup
+on the same file sink; every later stage — LM gate, segment CMS, token
+stats, decon, the near-dedup gate — is a batch operator handed to the
+one micro-batch door, ``sources/io.start_batch_stage``, which writes
+idempotent ``batch_id=N`` partials.  Every read of those partials
+(``curated()``, ``drop_ledger()``, ``token_stats()``) passes the
+stage's checkpoint, so a partial dir lost after a commit raises
+instead of reading as empty.
 """
 
 from __future__ import annotations
@@ -45,7 +54,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from prod2vec_spark.sources.artifacts import make_dirs
-from prod2vec_spark.sources.io import read_partials
+from prod2vec_spark.sources.io import read_partials, start_batch_stage
 from prod2vec_spark.streaming.events import (
     read_events_stream,
     streaming_dedup,
@@ -181,9 +190,9 @@ class StreamCorpusConfig:
     repetition_gate: bool = False
     # streaming boilerplate gate (round-7 twin of the batch segment
     # dedup): a count-min sketch over per-doc DISTINCT window hashes
-    # is maintained incrementally (operators/sketches.start_cms_stream
-    # — idempotent batch_id partials) over the exact-dedup output, so
-    # each distinct content counts once; at curated() time, docs whose
+    # is maintained incrementally (one operators/sketches.cms_sketch
+    # partial per micro-batch) over the exact-dedup output, so each
+    # distinct content counts once; at curated() time, docs whose
     # fraction of ≥seg_min_docs-estimated windows exceeds
     # seg_max_frac are dropped.  CMS only OVERestimates, so the gate
     # errs toward dropping (one-sided, like every sketch gate here).
@@ -325,6 +334,10 @@ class StreamingCorpusPipeline:
         leave at curated() time, preserving the batch DAG's
         decon-after-near-dedup ordering.
 
+    Every stage after exact dedup goes through
+    ``sources/io.start_batch_stage``; ``curated()`` and
+    ``drop_ledger()`` fold one boundary chain (``_boundaries``).
+
     Scale notes: digest state is one row per distinct content (the
     same cardinality the batch digest shuffle carries), bounded in
     unbounded deployments by dropDuplicatesWithinWatermark at the
@@ -334,6 +347,11 @@ class StreamingCorpusPipeline:
     def __init__(self, spark: SparkSession, cfg: StreamCorpusConfig):
         self.spark = spark
         self.cfg = cfg
+
+    def _ckpt(self, stage: str) -> str:
+        """The checkpoint of ``stage`` — written by its stream, read by
+        every guarded read of the stage's partials."""
+        return f"{self.cfg.work_dir}/ckpt_{stage}"
 
     def _spread_stream(self, df: DataFrame, path: str) -> DataFrame:
         """Input-parallelism floor for a drain's micro-batches — the
@@ -383,11 +401,6 @@ class StreamingCorpusPipeline:
             )
             if stages is not None:
                 stages.append(("line_filter", docs))
-        if self.cfg.badwords_cats and self.cfg.badwords_lang_lists:
-            raise ValueError(
-                "badwords_cats and badwords_lang_lists are mutually "
-                "exclusive — pick the single-list or per-language gate"
-            )
         if self.cfg.badwords_cats or self.cfg.badwords_lang_lists:
             # round-15 (per-language round-16): the batch DAG's C4
             # §2.2 doc-level badwords screen joins the streaming gate
@@ -439,9 +452,7 @@ class StreamingCorpusPipeline:
         deduped = docs.withColumn(
             "text_hash", text_digest(docs["text"])
         ).dropDuplicates(["text_hash"])
-        q = write_stream_parquet(
-            deduped, self.cfg.exact_dir, f"{self.cfg.work_dir}/ckpt_exact"
-        )
+        q = write_stream_parquet(deduped, self.cfg.exact_dir, self._ckpt("exact"))
         q.awaitTermination()
 
     def neardup_stage(self) -> None:
@@ -462,7 +473,7 @@ class StreamingCorpusPipeline:
             survivors,
             f"{self.cfg.work_dir}/band_registry",
             self.cfg.decisions_dir,
-            f"{self.cfg.work_dir}/ckpt_neardup",
+            self._ckpt("neardup"),
             shingle_k=self.cfg.shingle_k,
             num_hashes=self.cfg.num_hashes,
             band_size=self.cfg.band_size,
@@ -475,22 +486,21 @@ class StreamingCorpusPipeline:
         """Maintain the boilerplate-window CMS over the exact-dedup
         output (so each distinct content contributes once): stream the
         committed stage-1 parquet, project per-doc DISTINCT window
-        hashes row-locally, land idempotent per-batch sketch partials
-        (operators/sketches.start_cms_stream)."""
+        hashes row-locally, land one ``cms_sketch`` partial per batch
+        (summed on read by ``operators/sketches.read_cms``)."""
         from prod2vec_spark.operators.linedup import (
             doc_distinct_segment_hashes,
         )
-        from prod2vec_spark.operators.sketches import start_cms_stream
+        from prod2vec_spark.operators.sketches import cms_sketch
 
         docs = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
             self.cfg.exact_dir
         )
-        segs = doc_distinct_segment_hashes(docs, self.cfg.seg_width)
-        return start_cms_stream(
-            segs,
-            self.cfg.segcms_dir,
-            f"{self.cfg.work_dir}/ckpt_segcms",
-            col="seg_h",
+        return start_batch_stage(
+            doc_distinct_segment_hashes(docs, self.cfg.seg_width),
+            lambda batch, _: (cms_sketch(batch, col="seg_h"),),
+            (self.cfg.segcms_dir,),
+            self._ckpt("segcms"),
         )
 
     def _lm_scorer(self):
@@ -542,32 +552,22 @@ class StreamingCorpusPipeline:
 
         score_fn, _ = self._lm_scorer()
         make_dirs(self.spark, self.cfg.exact_dir)
-        stream = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
-            self.cfg.exact_dir
-        )
-        ckpt = f"{self.cfg.work_dir}/ckpt_lm"
-        scores_dir, kept_dir = self.cfg.lmscores_dir, self.cfg.lmkept_dir
         thr = self.cfg.lm_max_ppl
 
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            score_fn(batch_df).write.mode("overwrite").parquet(
-                f"{scores_dir}/batch_id={batch_id}"
-            )
-            keep = (
-                self.spark.read.parquet(f"{scores_dir}/batch_id={batch_id}")
-                .where(F.col("ppl") <= F.lit(thr))
-                .select("doc_id")
-            )
-            batch_df.join(keep, "doc_id", "left_semi").write.mode(
-                "overwrite"
-            ).parquet(f"{kept_dir}/batch_id={batch_id}")
+        def per_batch(batch_df: DataFrame, _):
+            # the kept rows derive from the scores: lazy lineage break
+            # so each batch is scored once for both partials
+            scores = score_fn(batch_df).localCheckpoint(eager=False)
+            keep = scores.where(F.col("ppl") <= F.lit(thr)).select("doc_id")
+            return scores, batch_df.join(keep, "doc_id", "left_semi")
 
-        return (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return start_batch_stage(
+            self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
+                self.cfg.exact_dir
+            ),
+            per_batch,
+            (self.cfg.lmscores_dir, self.cfg.lmkept_dir),
+            self._ckpt("lm"),
         )
 
     def decon_stage(self) -> None:
@@ -602,13 +602,9 @@ class StreamingCorpusPipeline:
             .withColumn("is_bench", F.lit(True))
         )
         make_dirs(self.spark, self.cfg.exact_dir)
-        stream = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
-            self.cfg.exact_dir
-        )
-        out = self.cfg.decon_dir
         cfg = self.cfg
 
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, _):
             tagged = batch_df.select("doc_id", "text").withColumn(
                 "is_bench", F.lit(False)
             ).unionByName(bench)
@@ -636,32 +632,36 @@ class StreamingCorpusPipeline:
                     .select("doc_id")
                 )
                 bad = bad.unionByName(fuzzy_bad).distinct()
-            batch_df.select("doc_id").join(
-                F.broadcast(bad.withColumn("_bad", F.lit(1))),
-                "doc_id",
-                "left",
-            ).select(
-                "doc_id",
-                F.when(F.col("_bad").isNull(), F.lit(1))
-                .otherwise(F.lit(0))
-                .alias("keep"),
-            ).write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
+            return (
+                batch_df.select("doc_id").join(
+                    F.broadcast(bad.withColumn("_bad", F.lit(1))),
+                    "doc_id",
+                    "left",
+                ).select(
+                    "doc_id",
+                    F.when(F.col("_bad").isNull(), F.lit(1))
+                    .otherwise(F.lit(0))
+                    .alias("keep"),
+                ),
+            )
 
-        return (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", f"{self.cfg.work_dir}/ckpt_decon")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return start_batch_stage(
+            self.spark.readStream.schema(_EXACT_SCHEMA).parquet(cfg.exact_dir),
+            per_batch,
+            (cfg.decon_dir,),
+            self._ckpt("decon"),
         )
 
-    def _decon_drop(self) -> DataFrame:
-        """doc_ids the decontamination screen dropped, over the
-        committed decision partials; empty before the first commit."""
+    def _drops(self, decisions_dir: str, stage: str) -> DataFrame:
+        """doc_ids a decision stage (``neardup`` or ``decon``) dropped,
+        over its committed partials; empty before the first commit,
+        ``RuntimeError`` once the partials are lost after one."""
         from pyspark.sql import functions as F
 
         return (
-            read_decisions(self.spark, self.cfg.decon_dir)
+            read_decisions(
+                self.spark, decisions_dir, checkpoint=self._ckpt(stage)
+            )
             .where(F.col("keep") == 0)
             .select("doc_id")
         )
@@ -683,37 +683,34 @@ class StreamingCorpusPipeline:
             lambda c: F.size(_ws_tokens(c)).cast("long")
         )
         make_dirs(self.spark, self.cfg.exact_dir)
-        stream = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
-            self.cfg.exact_dir
-        )
-        out = self.cfg.tokenstats_dir
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.select(
-                cf(F.col("text")).cast("long").alias("_n")
-            ).agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("_n"), F.lit(0)).alias("n_tokens"),
-            ).write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
-        return (
-            stream.writeStream.foreachBatch(write_batch)
-            .option(
-                "checkpointLocation", f"{self.cfg.work_dir}/ckpt_tokenstats"
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return start_batch_stage(
+            self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
+                self.cfg.exact_dir
+            ),
+            lambda batch, _: (
+                batch.select(cf(F.col("text")).cast("long").alias("_n")).agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.coalesce(F.sum("_n"), F.lit(0)).alias("n_tokens"),
+                ),
+            ),
+            (self.cfg.tokenstats_dir,),
+            self._ckpt("tokenstats"),
         )
 
     def token_stats(self) -> "tuple[int, int]":
         """(n_docs, n_tokens) summed over the committed partials —
-        0/0 before the first commit, never an error."""
+        0/0 before the first commit; ``RuntimeError`` once the
+        partials are lost after one."""
         from pyspark.sql import functions as F
 
         schema = "n_docs long, n_tokens long"
         row = (
-            read_partials(self.spark, self.cfg.tokenstats_dir, schema)
+            read_partials(
+                self.spark,
+                self.cfg.tokenstats_dir,
+                schema,
+                self._ckpt("tokenstats"),
+            )
             .agg(F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t"))
             .first()
         )
@@ -724,7 +721,7 @@ class StreamingCorpusPipeline:
         columns) — the materialized output the near-dedup stage
         streams.  Empty typed frame before the first commit."""
         return read_partials(
-            self.spark, self.cfg.lmkept_dir, _EXACT_SCHEMA
+            self.spark, self.cfg.lmkept_dir, _EXACT_SCHEMA, self._ckpt("lm")
         ).drop("batch_id")
 
     def _segment_gate_drop(self, docs: DataFrame) -> DataFrame:
@@ -740,7 +737,9 @@ class StreamingCorpusPipeline:
         )
         from prod2vec_spark.operators.sketches import cms_estimate, read_cms
 
-        sketch = read_cms(self.spark, self.cfg.segcms_dir)
+        sketch = read_cms(
+            self.spark, self.cfg.segcms_dir, checkpoint=self._ckpt("segcms")
+        )
         segs = doc_distinct_segment_hashes(docs, self.cfg.seg_width)
         boiler = (
             cms_estimate(sketch, segs.select("seg_h").distinct(), col="seg_h")
@@ -762,40 +761,41 @@ class StreamingCorpusPipeline:
             F.col("boiler_frac") > F.lit(self.cfg.seg_max_frac)
         ).select("doc_id")
 
-    def curated(self) -> DataFrame:
+    def _boundaries(self) -> "list[tuple[str, DataFrame]]":
+        """The stateful stage chain over the committed outputs, in the
+        batch DAG's order: (stage, survivors) for exact dedup → LM gate
+        → segment gate → near-dedup → decon, each entry ⊆ the one
+        before.  The LM gate's materialized survivors replace the exact
+        output (near-dup decisions were computed over that same set);
+        each drop set — the near-dup or contaminated fraction, usually
+        small — is broadcast into a left-anti join, so the corpus side
+        never shuffles (pipeline_llm.near_dedup's final subtraction);
+        docs with no decision row (too short to shingle) are kept."""
         from pyspark.sql import functions as F
 
-        # base = the LM gate's materialized survivors when the gate is
-        # on (near-dup decisions were computed over this same set —
-        # the batch lm_gate → near_dedup order), else the exact output
-        base = (
-            self._lm_kept()
-            if self.cfg.lm_gate
-            else _read_output(self.spark, self.cfg.exact_dir, _EXACT_SCHEMA)
-        )
-        exact = base
-        if self.cfg.segment_gate:
-            seg_drop = self._segment_gate_drop(exact)
-            exact = exact.join(F.broadcast(seg_drop), "doc_id", "left_anti")
-        # subtract only the DROP set — the near-dup fraction, usually
-        # small relative to the corpus — broadcast into a left-anti
-        # join so the corpus side never shuffles (same shape as
-        # pipeline_llm.near_dedup's final subtraction); docs with no
-        # decision row (too short to shingle) are kept by construction
-        drop = (
-            read_decisions(self.spark, self.cfg.decisions_dir)
-            .where(F.col("keep") == 0)
-            .select("doc_id")
-        )
-        out = exact.join(F.broadcast(drop), "doc_id", "left_anti")
-        if self.cfg.decon_gate:
-            # contaminated ids are a small set — broadcast anti join,
-            # the corpus never shuffles (the batch decontaminate
-            # subtraction shape; batch ordering: decon after near-dup)
-            out = out.join(
-                F.broadcast(self._decon_drop()), "doc_id", "left_anti"
+        chain = [
+            (
+                "exact_dedup",
+                _read_output(self.spark, self.cfg.exact_dir, _EXACT_SCHEMA),
             )
-        return out
+        ]
+        if self.cfg.lm_gate:
+            chain.append(("lm_gate", self._lm_kept()))
+
+        def minus(stage: str, drop: DataFrame) -> None:
+            kept = chain[-1][1].join(F.broadcast(drop), "doc_id", "left_anti")
+            chain.append((stage, kept))
+
+        if self.cfg.segment_gate:
+            minus("segment_gate", self._segment_gate_drop(chain[-1][1]))
+        minus("near_dedup", self._drops(self.cfg.decisions_dir, "neardup"))
+        if self.cfg.decon_gate:
+            minus("decon_gate", self._drops(self.cfg.decon_dir, "decon"))
+        return chain
+
+    def curated(self) -> DataFrame:
+        """The curated corpus: the last boundary's survivors."""
+        return self._boundaries()[-1][1]
 
     def drop_ledger(self) -> DataFrame:
         """Per-document provenance over the stream's COMMITTED outputs
@@ -810,11 +810,8 @@ class StreamingCorpusPipeline:
         construction: the row-local gates are replayed batch-side over
         the landing dir through the SAME ``_row_gates`` code path the
         stream ran (deterministic, so replay survivors ⊇ exact-dedup
-        survivors), and the stateful stages read their committed
-        artifacts — the exact-dedup parquet (idempotent file-sink
-        commits), the banded first-presenter decisions (idempotent
-        batch_id partitions, streaming/first_presenter.read_decisions), and
-        the CMS partials behind the segment gate.
+        survivors), and the stateful stages are ``curated()``'s own
+        boundary chain over their committed artifacts.
 
         Scale shape: id-only left-anti joins per boundary, probe side
         shrinking monotonically — identical to the batch ledger."""
@@ -825,34 +822,7 @@ class StreamingCorpusPipeline:
         )
         chain: list[tuple[str, DataFrame]] = []
         self._row_gates(landing, stages=chain)
-        exact = _read_output(self.spark, self.cfg.exact_dir, _EXACT_SCHEMA)
-        chain.append(("exact_dedup", exact))
-        gated = exact
-        if self.cfg.lm_gate:
-            # the gate's committed survivors (batch order: lm before
-            # near-dedup; ⊆ exact by construction)
-            gated = self._lm_kept()
-            chain.append(("lm_gate", gated))
-        if self.cfg.segment_gate:
-            seg_drop = self._segment_gate_drop(gated)
-            gated = gated.join(F.broadcast(seg_drop), "doc_id", "left_anti")
-            chain.append(("segment_gate", gated))
-        if self.cfg.decon_gate:
-            # near_dedup boundary = curated() WITHOUT the decon
-            # subtraction; decon_gate then claims the final boundary
-            neardup_kept = gated.join(
-                F.broadcast(
-                    read_decisions(self.spark, self.cfg.decisions_dir)
-                    .where(F.col("keep") == 0)
-                    .select("doc_id")
-                ),
-                "doc_id",
-                "left_anti",
-            )
-            chain.append(("near_dedup", neardup_kept))
-            chain.append(("decon_gate", self.curated()))
-        else:
-            chain.append(("near_dedup", self.curated()))
+        chain += self._boundaries()
 
         prev = landing.select("doc_id")
         ledger = None

@@ -266,3 +266,54 @@ def test_dag_badwords_by_lang_stage_and_ledger(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="mutually exclusive"):
         CorpusCurationPipeline(spark, both).run()
+
+
+def test_badwords_screen_empty_mapping_is_off(spark, tmp_path):
+    """An empty ``cats`` or ``lang_lists`` mapping is off, as None is:
+    the screen runs the other list (or passes every doc with both
+    off), for the batch DAG and the streaming gate chain alike; both
+    lists set is the one exclusivity error, raised by the screen."""
+    from prod2vec_spark.operators.badwords import badwords_screen
+    from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
+    from prod2vec_spark.streaming.pipeline import (
+        StreamCorpusConfig,
+        StreamingCorpusPipeline,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "en", "the slow engine"), (2, "en", "a quick engine")],
+        "doc_id long, lang string, text string",
+    )
+    lists = {"en": {"latency": ("slow",)}}
+
+    def ids(df):
+        return sorted(r["doc_id"] for r in df.collect())
+
+    assert ids(badwords_screen(docs, cats={}, lang_lists=lists)) == [2]
+    assert ids(badwords_screen(docs, cats=CATS, lang_lists={})) == [1, 2]
+    assert ids(badwords_screen(docs, cats={}, lang_lists=None)) == [1, 2]
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        badwords_screen(docs, cats=CATS, lang_lists=lists)
+
+    stream = StreamingCorpusPipeline(
+        spark,
+        StreamCorpusConfig(
+            landing_dir="unused",
+            work_dir="unused",
+            badwords_cats={},
+            badwords_lang_lists=lists,
+        ),
+    )
+    assert ids(stream._row_gates(docs)) == [2]
+    sf_dir = str(tmp_path / "sf")
+    docs.write.parquet(f"{sf_dir}/documents.parquet")
+    batch = CorpusCurationPipeline(
+        spark,
+        CorpusConfig(
+            sf_dir=sf_dir,
+            work_dir=str(tmp_path / "w"),
+            badwords_cats={},
+            badwords_lang_lists=lists,
+        ),
+    )
+    assert ids(batch.scrubbed_input()) == [2]

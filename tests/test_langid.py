@@ -156,15 +156,13 @@ def test_lang_id_learned_query_accuracy_bound(spark):
 
 
 def test_langid_stream_matches_batch_scoring(spark, tmp_path):
-    """start_lang_score_stream labels exactly as batch score_lang with
-    the same fitted model, exactly-once across a no-input restart
-    (the quality_clf stream contract, language edition)."""
+    """score_lang through the micro-batch door labels exactly as batch
+    score_lang with the same fitted model, exactly-once across a
+    no-input restart (the quality_clf stream contract, language
+    edition)."""
     import shutil
 
-    from prod2vec_spark.ml.langid_clf import (
-        read_lang_scores,
-        start_lang_score_stream,
-    )
+    from prod2vec_spark.sources.io import read_partials, start_batch_stage
 
     model = fit_lang_classifier(_frame(spark, _corpus(seed=20, n_per_lang=30)))
     probe = _frame(spark, _corpus(seed=21, n_per_lang=6)).select(
@@ -182,13 +180,17 @@ def test_langid_stream_matches_batch_scoring(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        start_lang_score_stream(stream, model, out, ckpt).awaitTermination()
+        start_batch_stage(
+            stream, lambda b, _: (score_lang(b, model),), (out,), ckpt
+        ).awaitTermination()
+
+    def read_labels():
+        return read_partials(
+            spark, out, "doc_id long, lang_pred string, lang_prob double", ckpt
+        ).collect()
 
     drain()
-    got = {
-        r["doc_id"]: (r["lang_pred"], r["lang_prob"])
-        for r in read_lang_scores(spark, out).collect()
-    }
+    got = {r["doc_id"]: (r["lang_pred"], r["lang_prob"]) for r in read_labels()}
     want = {
         r["doc_id"]: (r["lang_pred"], r["lang_prob"])
         for r in score_lang(probe, model).collect()
@@ -196,6 +198,5 @@ def test_langid_stream_matches_batch_scoring(spark, tmp_path):
     assert got == want and got
     drain()  # no-input restart: unchanged
     assert {
-        r["doc_id"]: (r["lang_pred"], r["lang_prob"])
-        for r in read_lang_scores(spark, out).collect()
+        r["doc_id"]: (r["lang_pred"], r["lang_prob"]) for r in read_labels()
     } == got

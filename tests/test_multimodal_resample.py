@@ -111,3 +111,21 @@ def test_resample_goldens_match_live_chain():
         ).astype(np.int64)
         wav = bytes(encode_wav_pcm16([int(x) for x in q], sample_rate=16000))
         assert hashlib.md5(wav).hexdigest() == want[m]
+
+
+def test_resample_zero_rate_header_yields_the_null_row(spark):
+    """A WAV whose ``fmt `` chunk says 0 Hz carries no usable signal:
+    the audio door rejects it, so its row is NULL like any undecodable
+    blob and the rest of the batch still resamples."""
+    s = _sig(9, 300)
+    good = bytearray(encode_wav_pcm16(s, sample_rate=8000))
+    zero = bytearray(good)
+    rate_at = zero.index(b"fmt ") + 12  # id, size, format tag, channels
+    zero[rate_at : rate_at + 4] = (0).to_bytes(4, "little")
+    media = spark.createDataFrame(
+        [(1, zero), (2, good)], "media_id long, blob binary"
+    )
+    got = {r["media_id"]: r for r in audio_resample(media, 16000).collect()}
+    assert got[1]["resampled"] is None
+    assert got[1]["src_rate"] is None and got[1]["src_samples"] is None
+    assert got[2]["src_rate"] == 8000 and got[2]["src_samples"] == 300

@@ -315,19 +315,14 @@ def test_streaming_segment_gate_one_sided_vs_batch(spark, tmp_path):
 
 
 def test_streaming_lm_scoring_matches_batch(spark, tmp_path):
-    """start_lm_score_stream over a doc landing dir scores exactly as
-    batch score_docs with the same fitted model, stays exactly-once
-    across a no-new-input restart, and extends (not rewrites) on a
-    second landing batch."""
+    """score_docs through the micro-batch door over a doc landing dir
+    scores exactly as batch score_docs with the same fitted model,
+    stays exactly-once across a no-new-input restart, and extends (not
+    rewrites) on a second landing batch."""
     import shutil
 
-    from prod2vec_spark.operators.lm import (
-        BigramLM,
-        fit_lm,
-        read_lm_scores,
-        score_docs,
-        start_lm_score_stream,
-    )
+    from prod2vec_spark.operators.lm import BigramLM, fit_lm, score_docs
+    from prod2vec_spark.sources.io import read_partials, start_batch_stage
 
     docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     train = docs.where(F.col("doc_id") % 2 == 0)
@@ -353,12 +348,20 @@ def test_streaming_lm_scoring_matches_batch(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        start_lm_score_stream(stream, model, out, ckpt).awaitTermination()
+        start_batch_stage(
+            stream, lambda b, _: (score_docs(b, model),), (out,), ckpt
+        ).awaitTermination()
 
     def scores():
         return {
             r["doc_id"]: (r["n_pairs"], r["n_backoff"], r["avg_nll"], r["ppl"])
-            for r in read_lm_scores(spark, out).collect()
+            for r in read_partials(
+                spark,
+                out,
+                "doc_id long, n_pairs long, n_backoff long, avg_nll double, "
+                "ppl double",
+                ckpt,
+            ).collect()
         }
 
     def batch_scores(df):
@@ -382,17 +385,16 @@ def test_streaming_lm_scoring_matches_batch(spark, tmp_path):
 
 
 def test_streaming_quality_classifier_matches_batch(spark, tmp_path):
-    """start_quality_score_stream scores exactly as batch
-    score_quality with the same fitted model, exactly-once across a
-    no-input restart."""
+    """score_quality through the micro-batch door scores exactly as
+    batch score_quality with the same fitted model, exactly-once
+    across a no-input restart."""
     import shutil
 
     from prod2vec_spark.ml.quality_clf import (
         fit_quality_classifier,
-        read_quality_scores,
         score_quality,
-        start_quality_score_stream,
     )
+    from prod2vec_spark.sources.io import read_partials, start_batch_stage
 
     clean = (
         read_table(spark, SF_SMOKE, "documents")
@@ -418,23 +420,24 @@ def test_streaming_quality_classifier_matches_batch(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        start_quality_score_stream(stream, model, out, ckpt).awaitTermination()
+        start_batch_stage(
+            stream, lambda b, _: (score_quality(b, model),), (out,), ckpt
+        ).awaitTermination()
+
+    def read_scores():
+        return read_partials(
+            spark, out, "doc_id long, quality_prob double", ckpt
+        ).collect()
 
     drain()
-    got = {
-        r["doc_id"]: r["quality_prob"]
-        for r in read_quality_scores(spark, out).collect()
-    }
+    got = {r["doc_id"]: r["quality_prob"] for r in read_scores()}
     want = {
         r["doc_id"]: r["quality_prob"]
         for r in score_quality(score_me, model).collect()
     }
     assert got == want and got
     drain()  # no-input restart: unchanged
-    assert {
-        r["doc_id"]: r["quality_prob"]
-        for r in read_quality_scores(spark, out).collect()
-    } == got
+    assert {r["doc_id"]: r["quality_prob"] for r in read_scores()} == got
 
 
 def test_streaming_line_filter_matches_batch(spark, tmp_path):
@@ -558,20 +561,15 @@ def test_streaming_drop_ledger_partition_contract(spark, tmp_path):
     ],
 )
 def test_streaming_knn_scoring_matches_batch(spark, tmp_path, order, D):
-    """start_knn_score_stream — the Kneser-Ney member of the
-    score-stream family, at orders 2, 3 and 4: per-batch scores equal
-    batch score_docs_knn under the same persisted model (single-D and
-    per-level modified discounts), stay exactly-once across a
-    no-new-input restart, and extend on a second landing batch."""
+    """score_docs_knn through the micro-batch door, at orders 2, 3
+    and 4: per-batch scores equal batch score_docs_knn under the same
+    persisted model (single-D and per-level modified discounts), stay
+    exactly-once across a no-new-input restart, and extend on a
+    second landing batch."""
     import shutil
 
-    from prod2vec_spark.operators.lm import (
-        KNnModel,
-        fit_knn,
-        read_knn_scores,
-        score_docs_knn,
-        start_knn_score_stream,
-    )
+    from prod2vec_spark.operators.lm import KNnModel, fit_knn, score_docs_knn
+    from prod2vec_spark.sources.io import read_partials, start_batch_stage
 
     docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     model = fit_knn(docs.where(F.col("doc_id") % 2 == 0), order=order)
@@ -593,14 +591,23 @@ def test_streaming_knn_scoring_matches_batch(spark, tmp_path, order, D):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        start_knn_score_stream(
-            stream, model, out, ckpt, discounts=D
+        start_batch_stage(
+            stream,
+            lambda b, _: (score_docs_knn(b, model, discounts=D),),
+            (out,),
+            ckpt,
         ).awaitTermination()
 
     def scores():
         return {
             r["doc_id"]: (r["n_grams"], r["n_bo"], r["avg_nll"], r["ppl"])
-            for r in read_knn_scores(spark, out).collect()
+            for r in read_partials(
+                spark,
+                out,
+                "doc_id long, n_grams long, n_bo long, avg_nll double, "
+                "ppl double",
+                ckpt,
+            ).collect()
         }
 
     def batch_scores(df):
@@ -715,7 +722,9 @@ def test_streaming_decontamination_matches_batch_and_replays(spark, tmp_path):
     assert 7 in exp_fuzzy and 7 not in exp_exact, (
         "paraphrase must be fuzzy-only"
     )
-    got_drop = {r["doc_id"] for r in pipe._decon_drop().collect()}
+    got_drop = {
+        r["doc_id"] for r in pipe._drops(cfg.decon_dir, "decon").collect()
+    }
     assert got_drop == (exp_exact | exp_fuzzy)
 
     curated_ids = {r["doc_id"] for r in curated.select("doc_id").collect()}

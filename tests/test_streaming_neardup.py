@@ -155,12 +155,9 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
     counter for counter — across two drains and a no-input restart."""
     import shutil
 
-    from prod2vec_spark.operators.sketches import (
-        cms_sketch,
-        read_cms,
-        start_cms_stream,
-    )
+    from prod2vec_spark.operators.sketches import cms_sketch, read_cms
     from prod2vec_spark.operators.text import tokens as tok
+    from prod2vec_spark.sources.io import start_batch_stage
 
     docs = read_table(spark, SF_SMOKE, "documents").limit(200).localCheckpoint()
     terms = docs.select(F.explode(tok(F.col("text"))).alias("term"))
@@ -180,9 +177,10 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        q = start_cms_stream(
+        q = start_batch_stage(
             stream.select(F.explode(tok(F.col("text"))).alias("term")),
-            out,
+            lambda b, _: (cms_sketch(b),),
+            (out,),
             ckpt,
         )
         q.awaitTermination()
@@ -195,7 +193,7 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
     drain()
     drain()  # no new input: partials unchanged
 
-    merged = read_cms(spark, out)
+    merged = read_cms(spark, out, checkpoint=ckpt)
     want = cms_sketch(terms)
     assert merged.exceptAll(want).count() == 0
     assert want.exceptAll(merged).count() == 0
@@ -209,11 +207,8 @@ def test_streaming_bottomk_equals_batch_sketch(spark, tmp_path):
     restart, by the merge law."""
     import shutil
 
-    from prod2vec_spark.operators.sketches import (
-        bottomk_sketch,
-        read_bottomk,
-        start_bottomk_stream,
-    )
+    from prod2vec_spark.operators.sketches import bottomk_sketch, read_bottomk
+    from prod2vec_spark.sources.io import start_batch_stage
 
     docs = (
         read_table(spark, SF_SMOKE, "documents")
@@ -237,14 +232,18 @@ def test_streaming_bottomk_equals_batch_sketch(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, n_chars double").parquet(
             str(landing)
         )
-        q = start_bottomk_stream(
-            stream, out, ckpt, value_col="n_chars", key_cols=["doc_id"], k=K
+        q = start_batch_stage(
+            stream,
+            lambda b, _: (bottomk_sketch(b, "n_chars", ["doc_id"], k=K),),
+            (out,),
+            ckpt,
         )
         q.awaitTermination()
 
     def current():
         return [
-            (r["hkey"], r["v"]) for r in read_bottomk(spark, out, k=K).collect()
+            (r["hkey"], r["v"])
+            for r in read_bottomk(spark, out, k=K, checkpoint=ckpt).collect()
         ]
 
     assert current() == []  # empty before the first commit
@@ -270,21 +269,23 @@ def test_streaming_bottomk_equals_batch_sketch(spark, tmp_path):
 
 
 def test_streaming_incremental_lsh_matches_batch(spark, tmp_path):
-    """start_incremental_lsh_stream: the union of committed per-batch
-    delta pair sets equals the batch pipeline's full pair set; a
-    no-new-input restart adds nothing; the band store holds every
-    doc's signatures exactly once."""
+    """incremental_lsh_batch through the micro-batch door: the union
+    of committed per-batch delta pair sets equals the batch pipeline's
+    full pair set; a no-new-input restart adds nothing; the band store
+    holds every doc's signatures exactly once."""
     import shutil
+    from functools import partial
 
     from pyspark.sql import functions as F
 
-    from prod2vec_spark.operators.dedup import lsh_candidate_pairs, minhash_bands
-    from prod2vec_spark.sources.io import read_table
-    from prod2vec_spark.streaming.neardup import (
+    from prod2vec_spark.operators.dedup import (
+        incremental_lsh_batch,
+        lsh_candidate_pairs,
+        minhash_bands,
         read_committed_bands,
         read_delta_pairs,
-        start_incremental_lsh_stream,
     )
+    from prod2vec_spark.sources.io import read_table, start_batch_stage
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
@@ -306,14 +307,17 @@ def test_streaming_incremental_lsh_matches_batch(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        start_incremental_lsh_stream(
-            stream, bands_dir, pairs_dir, ckpt
+        start_batch_stage(
+            stream,
+            partial(incremental_lsh_batch, bands_dir=bands_dir),
+            (pairs_dir, bands_dir),
+            ckpt,
         ).awaitTermination()
 
     def pairs():
         return {
             (r["doc_a"], r["doc_b"])
-            for r in read_delta_pairs(spark, pairs_dir).collect()
+            for r in read_delta_pairs(spark, pairs_dir, ckpt).collect()
         }
 
     drain()
@@ -324,10 +328,10 @@ def test_streaming_incremental_lsh_matches_batch(spark, tmp_path):
     }
     assert got_a == batch_a
     # restart with nothing new: no re-emission, band store unchanged
-    n_bands = read_committed_bands(spark, bands_dir).count()
+    n_bands = read_committed_bands(spark, bands_dir, ckpt).count()
     drain()
     assert pairs() == got_a
-    assert read_committed_bands(spark, bands_dir).count() == n_bands
+    assert read_committed_bands(spark, bands_dir, ckpt).count() == n_bands
     # second landing: union now equals the full-corpus batch run
     shutil.copy(
         sorted((tmp_path / "sb").glob("*.parquet"))[0], landing / "b.parquet"
@@ -339,7 +343,7 @@ def test_streaming_incremental_lsh_matches_batch(spark, tmp_path):
     }
     assert pairs() == full
     # the store holds each doc's bands exactly once
-    bands = read_committed_bands(spark, bands_dir)
+    bands = read_committed_bands(spark, bands_dir, ckpt)
     assert bands.count() == minhash_bands(docs).count()
     assert bands.select("doc_id", "band_id").distinct().count() == bands.count()
 
