@@ -82,13 +82,16 @@ def bind(df, name: str, value: Column):
     derivation into a scan-level Filter (quadratic for gram chains:
     the tokenize sits inside the per-position lambda) — measured as
     the dominant cost of verbatim_span_pairs.  Column pruning of the
-    child still works.  CAVEAT: PushDownPredicates only pushes filters
+    child still works.  The seed is fixed: an unseeded ``shuffle``
+    draws a new one per call and the generated code embeds it, so each
+    build of the same plan compiled fresh classes.  CAVEAT:
+    PushDownPredicates only pushes filters
     through a Project whose fields are ALL deterministic, so NO filter
     (related or not) pushes below a bind — place binds above any
     selective filters that should reach the scan.  Stream-safe
     (stateless, row-local; retry-safe: re-evaluation reproduces the
     same value)."""
-    return df.select("*", F.shuffle(F.array(value)).getItem(0).alias(name))
+    return df.select("*", F.shuffle(F.array(value), seed=0).getItem(0).alias(name))
 
 
 def let(value: Column, body) -> Column:

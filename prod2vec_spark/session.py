@@ -6,6 +6,11 @@ partition coalescing), Arrow on (fast pandas interchange for the few
 Pandas-UDF operators), small broadcast threshold kept at default so
 dimension tables (part, nation, region, vocab) broadcast automatically.
 
+Warm passes reuse what the first pass compiled: the generated-code
+cache is sized to the measured working set (``CODEGEN_CACHE_ENTRIES``)
+and a whole-stage class is named without its per-query stage id, so
+the same pipeline compiles once per JVM rather than once per pass.
+
 The reference has no session concept — it is a single pandas process
 (see /root/reference/pipeline/data_preprocessing/data_prep.py).
 """
@@ -15,6 +20,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Generated classes the JVM keeps compiled (Spark's default is 100).
+# Measured at sf0.01 with CodegenMetrics' compile count per pass: the
+# 50-entry CATALOG compiles 796 distinct classes on its first pass, a
+# perfbench ``catalog`` pass 146 and a ``pipelines`` pass about 245.
+# At the default every warm pass recompiled them all (145 per
+# ``catalog`` pass).  At 1024, the smallest power of two above the
+# catalog's set, the catalog's second pass and a warm ``catalog`` pass
+# compile nothing, and a warm ``pipelines`` pass only its new
+# streaming plans (3-10 classes).
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def get_spark(
@@ -39,6 +55,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # a whole-stage class named after its stage id differs between
+        # two runs of one plan whenever AQE numbers the stages in
+        # another order, and then misses the cache
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: driver heap IS the executor heap for all 32 task
         # threads; interpreted HOF expressions allocate boxed values

@@ -6,10 +6,15 @@ The reference reads CSV from S3 into pandas
 columnar, splittable, predicate-pushdown-able — the only sane choice at
 100 TB.  CSV scan/sink are kept for the reference's CSV surface (S1/S4).
 
-Parquet is self-describing, so scans of input tables don't force a
-schema — Catalyst still prunes columns and pushes filters into the
-reader.  The *expected* schemas live in ``TABLES`` and feed the
-data-quality gates (Q3/Q4, operators/quality.py) rather than the reader.
+Every input table has one declared schema in ``TABLES`` and is read
+with it (``read_table``): Spark's own inference would run a one-task
+footer job on every open.  The declaration is checked instead by one
+driver-side footer read through the Hadoop FS API (no Spark job), so a
+file that lacks a declared column or stores it as another type raises
+rather than reading NULLs or a silently widened column.  Catalyst still
+prunes columns and pushes filters into the reader.  ``read_partials``
+reads a stage's ``batch_id=N`` partials the same way, with the schema
+its caller declares.
 
 Pipeline stage hand-offs use ``checkpoint``: the parquet sink plus a
 read-back that reuses the schema just written, so a stage never pays a
@@ -19,12 +24,19 @@ observe row counts or other aggregates on the way out.
 
 from __future__ import annotations
 
+import functools
+import json
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Expected logical schemas for the driver testdata (FIXTURES.md §2).
-# Used by quality gates; parquet supplies physical schemas at scan time.
+# The declared schema of each input table (FIXTURES.md §2): the read
+# schema of ``read_table`` and the expectation of the quality gates.
+# Every data dir stores µs timestamps without a UTC adjustment, which
+# Spark reads as TIMESTAMP_NTZ; the declaration equals what inference
+# gives for each of them (tests/test_declared_schemas.py).
 TABLES: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -72,7 +84,7 @@ TABLES: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -88,13 +100,13 @@ TABLES: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
+            T.StructField("ts", T.TimestampNTZType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
             T.StructField("value", T.DoubleType()),
@@ -162,26 +174,91 @@ def spread_scan(df: DataFrame) -> DataFrame:
 _SPREAD_TABLES = frozenset({"documents", "embeddings"})
 
 
+@functools.cache
+def _footer_classes(jvm):
+    """The JVM classes of a footer read, looked up once per gateway:
+    each lookup is one py4j round trip per package segment, together
+    about half the cost of the read itself."""
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    parquet = jvm.org.apache.parquet
+    return SimpleNamespace(
+        path=jvm.org.apache.hadoop.fs.Path,
+        reader=parquet.hadoop.ParquetFileReader,
+        footer=parquet.hadoop.Footer,
+        no_row_groups=parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        converter=pq.ParquetToSparkSchemaConverter,
+        fmt=pq.ParquetFileFormat,
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark's parquet inference gives ``path`` (a file, or
+    the first data file of a directory), from one driver-side footer
+    read through the Hadoop FS API: no Spark job.  The conversion is
+    Spark's own (session confs, Spark's row metadata), so a
+    TIMESTAMP(NANOS) column raises here as it would on a scan."""
+    jc = _footer_classes(spark._jvm)
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jc.path(path)
+    fs = hpath.getFileSystem(conf)
+    if fs.getFileStatus(hpath).isDirectory():
+        names = sorted(
+            st.getPath().toString()
+            for st in fs.listStatus(hpath)
+            if not st.getPath().getName().startswith(("_", "."))
+        )
+        if not names:
+            raise FileNotFoundError(f"{path} holds no parquet data file")
+        hpath = jc.path(names[0])
+    meta = jc.reader.readFooter(conf, hpath, jc.no_row_groups)
+    found = jc.fmt.readSchemaFromFooter(
+        jc.footer(hpath, meta),
+        jc.converter(spark._jsparkSession.sessionState().conf()),
+    )
+    return _nullable(T.StructType.fromJson(json.loads(found.json())))
+
+
+def _conformed(
+    spark: SparkSession, path: str, declared: T.StructType
+) -> T.StructType:
+    """The read schema of ``path`` once its footer agrees with
+    ``declared``: every declared column present with the declared type
+    (nullability aside).  Raises ``ValueError`` otherwise.  Columns the
+    file holds beyond the declaration keep their place."""
+    found = _footer_schema(spark, path)
+    have = {f.name: f.dataType for f in found.fields}
+    bad = [
+        f"{f.name} {have[f.name].simpleString() if f.name in have else 'missing'}"
+        f" (declared {f.dataType.simpleString()})"
+        for f in declared.fields
+        if _nullable(f.dataType) != have.get(f.name)
+    ]
+    if bad:
+        raise ValueError(
+            f"{path} disagrees with its declared schema: {', '.join(bad)}"
+        )
+    return found
+
+
 def read_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
 ) -> DataFrame:
-    """S1-class scan: one logical table from the testdata directory.
+    """S1-class scan: one logical table from the testdata directory,
+    read with its declared schema (``TABLES``) — no inference job.
 
-    The events table carries TIMESTAMP(NANOS) parquet, which Spark 4
-    refuses by default — enable the nanos-as-long escape hatch
-    defensively (harmless otherwise) and convert ns → microsecond
-    TimestampType with integer division (no double rounding).
+    One footer read checks the declaration first: a file that lacks a
+    declared column or stores one as another type raises ``ValueError``
+    (a TIMESTAMP(NANOS) column raises Spark's own error).  Columns
+    beyond the declaration (a corpus that carries ``url``) are read as
+    the file stores them.
 
     ``spread`` (default: on for the corpus-class tables, see
     ``_SPREAD_TABLES``) applies the scale-adaptive parallelism floor
     of ``spread_scan`` so compute-heavy consumers never serialize on a
     single-row-group local file; pass ``spread=False`` to pin the raw
     scan partitioning."""
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_conformed(spark, path, TABLES[name])).parquet(path)
     if spread is None:
         spread = name in _SPREAD_TABLES
     if spread:
@@ -438,51 +515,58 @@ def compact_parquet(
     return n_files
 
 
-def has_partials(spark: SparkSession, dir_path: str) -> bool:
-    """True once ``dir_path`` holds a committed ``batch_id=N`` parquet
-    partial — the ``start_batch_stage`` sink layout.  Lists through
-    the Hadoop FileSystem API, so ``file://``, ``s3a://`` and
-    ``hdfs://`` paths resolve like local ones."""
-    from prod2vec_spark.sources.artifacts import _fs_path
+def _partial_files(spark: SparkSession, dir_path: str, checkpoint) -> list[str]:
+    """The data files of the ``batch_id=N`` partials under ``dir_path``
+    (the ``start_batch_stage`` sink layout), listed through the Hadoop
+    FileSystem API so ``file://``, ``s3a://`` and ``hdfs://`` paths
+    resolve like local ones.
+
+    Given the writing stage's ``checkpoint``, raises ``RuntimeError``
+    when a batch id committed under ``<checkpoint>/commits`` has no
+    partial here: reading or resuming over it would silently forget
+    that batch's state."""
+    from prod2vec_spark.sources.artifacts import _fs_path, list_artifacts
 
     fs, hpath = _fs_path(spark, f"{dir_path}/batch_id=*/*.parquet")
-    return bool(fs.globStatus(hpath))
-
-
-def _stage_partials(spark: SparkSession, dir_path: str, checkpoint) -> bool:
-    """``has_partials``, raising when ``checkpoint`` (the writing
-    stage's) has committed a batch whose partials ``dir_path`` lost:
-    reading or resuming over it would silently forget state."""
-    from prod2vec_spark.sources.artifacts import list_artifacts
-
-    if has_partials(spark, dir_path):
-        return True
-    if checkpoint is not None and any(
-        n.isdigit() for n in list_artifacts(spark, f"{checkpoint}/commits")
-    ):
-        raise RuntimeError(
-            f"checkpoint {checkpoint} has committed batches but "
-            f"{dir_path} holds no batch_id=* partial; restore it or "
-            "start from a fresh checkpoint"
+    files = sorted(st.getPath().toString() for st in fs.globStatus(hpath) or [])
+    if checkpoint is not None:
+        present = {int(f.rsplit("batch_id=", 1)[1].split("/", 1)[0]) for f in files}
+        lost = sorted(
+            int(n)
+            for n in list_artifacts(spark, f"{checkpoint}/commits")
+            if n.isdigit() and int(n) not in present
         )
-    return False
+        if lost:
+            raise RuntimeError(
+                f"checkpoint {checkpoint} has committed batches {lost} but "
+                f"{dir_path} holds no batch_id=N partial for them; restore "
+                "them or start from a fresh checkpoint"
+            )
+    return files
 
 
 def read_partials(
     spark: SparkSession, dir_path: str, schema, checkpoint: str | None = None
 ) -> DataFrame:
     """The union of the committed ``batch_id=N`` partials under
-    ``dir_path`` with their ``batch_id`` partition column.  Before the
-    first commit it is an empty frame of ``schema`` (DDL string or
-    StructType) plus ``batch_id`` — never a directory created as a
-    side effect.  Given the writing stage's ``checkpoint``, a dir
-    whose stage has committed but which holds no partial raises
-    ``RuntimeError`` instead of reading as empty."""
-    if _stage_partials(spark, dir_path, checkpoint):
-        return spark.read.option("basePath", dir_path).parquet(dir_path)
-    return spark.createDataFrame([], schema).withColumn(
-        "batch_id", F.lit(None).cast("long")
+    ``dir_path`` with their ``batch_id`` partition column, read with
+    ``schema`` (DDL string or StructType) plus ``batch_id int``: no
+    inference job.  One partial's footer is checked against ``schema``
+    as in ``read_table``.  Before the first commit it is an empty frame
+    of ``schema`` plus ``batch_id`` — never a directory created as a
+    side effect.  Given the writing stage's ``checkpoint``, a committed
+    batch whose partial is missing raises ``RuntimeError`` instead of
+    reading as empty."""
+    files = _partial_files(spark, dir_path, checkpoint)
+    if not files:
+        return spark.createDataFrame([], schema).withColumn(
+            "batch_id", F.lit(None).cast("long")
+        )
+    declared = (
+        schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
     )
+    read_schema = _conformed(spark, files[0], declared).add("batch_id", T.IntegerType())
+    return spark.read.schema(read_schema).option("basePath", dir_path).parquet(dir_path)
 
 
 def start_batch_stage(stream: DataFrame, per_batch, out_dirs, checkpoint: str):
@@ -497,15 +581,15 @@ def start_batch_stage(stream: DataFrame, per_batch, out_dirs, checkpoint: str):
     cover foreachBatch).  A ``per_batch`` that reads its own earlier
     partials excludes its own batch id, for the same reason.
 
-    Raises ``RuntimeError`` before starting when ``checkpoint`` has
-    committed batches but any of ``out_dirs`` holds no partial:
-    resuming would build on state the lost dir held.  Read the
+    Raises ``RuntimeError`` before starting when a batch committed
+    under ``checkpoint`` has no partial in one of ``out_dirs``:
+    resuming would build on state the lost partial held.  Read the
     partials back with ``read_partials(spark, dir, schema,
     checkpoint)``, which takes the same guard."""
     spark = stream.sparkSession
     dirs = list(out_dirs)
     for d in dirs:
-        _stage_partials(spark, d, checkpoint)
+        _partial_files(spark, d, checkpoint)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         for frame, d in zip(per_batch(batch_df, batch_id), dirs, strict=True):

@@ -27,11 +27,11 @@ from prod2vec_spark.sources.io import TABLES
 def _events_ts_is_nanos_long(dir_path: str) -> bool:
     """Inspect the parquet footer to learn the physical type of ``ts``.
 
-    Streams must declare their schema up front, so mirror the batch
-    reader's dtype branch (sources/io.py read_table): TIMESTAMP(NANOS)
+    Streams must declare their schema up front.  TIMESTAMP(NANOS)
     parquet surfaces as int64 only under the nanosAsLong escape hatch,
-    while plain µs TIMESTAMP reads directly as TimestampType.  Footer
-    inspection is one driver-side metadata read — no data scan.
+    while plain µs TIMESTAMP reads directly as TimestampType (the batch
+    reader, sources/io.py read_table, refuses nanos files instead).
+    Footer inspection is one driver-side metadata read — no data scan.
 
     The ns match is prefix-based so tz-aware ``timestamp[ns, tz=…]``
     footers take the nanos branch too.  A directory with no readable
@@ -71,7 +71,7 @@ def read_events_stream(
     """File-source stream over the events parquet.  Schema must be
     declared up front (streams can't infer).  ``ts`` is declared
     TimestampType when the footer says so; the legacy ns-long layout
-    (nanosAsLong, see sources/io.py) is converted only when the
+    (read under nanosAsLong) is converted only when the
     physical type really is int64/nanos.
 
     ``ts_is_nanos`` is the explicit override for starting a stream on

@@ -844,21 +844,31 @@ class StreamingCorpusPipeline:
         CONCURRENTLY; only near-dedup orders after the LM gate (it
         streams the gate's survivors).  Each query keeps its own
         checkpoint — restart/idempotency semantics are unchanged, the
-        drain is just no longer serialized on per-stream startup."""
+        drain is just no longer serialized on per-stream startup.  When
+        a later stage refuses to start, the queries already started are
+        stopped before the error propagates."""
         self.exact_stage()
         qs = []
-        if self.cfg.segment_gate:
-            qs.append(self._start_segment_cms())
-        if self.cfg.token_stats:
-            qs.append(self._start_token_stats())
-        if self.cfg.decon_gate:
-            qs.append(self._start_decon())
-        if self.cfg.lm_gate:
-            # near-dedup consumes the gate's survivors: await the LM
-            # stream (it overlaps the independent gates above) before
-            # starting the dependent stage
-            self._start_lm().awaitTermination()
-        qs.append(self._start_neardup())
+        try:
+            if self.cfg.segment_gate:
+                qs.append(self._start_segment_cms())
+            if self.cfg.token_stats:
+                qs.append(self._start_token_stats())
+            if self.cfg.decon_gate:
+                qs.append(self._start_decon())
+            if self.cfg.lm_gate:
+                # near-dedup consumes the gate's survivors: await the LM
+                # stream (it overlaps the independent gates above) before
+                # starting the dependent stage
+                self._start_lm().awaitTermination()
+            qs.append(self._start_neardup())
+        except BaseException:
+            # a later door refused to start (or the LM drain failed):
+            # stop the queries already running before re-raising; an
+            # interrupted batch has no commit and replays on the next run
+            for q in qs:
+                q.stop()
+            raise
         for q in qs:
             q.awaitTermination()
         return self.curated()

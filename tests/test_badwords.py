@@ -306,7 +306,10 @@ def test_badwords_screen_empty_mapping_is_off(spark, tmp_path):
     )
     assert ids(stream._row_gates(docs)) == [2]
     sf_dir = str(tmp_path / "sf")
-    docs.write.parquet(f"{sf_dir}/documents.parquet")
+    # the documents table carries every declared column
+    docs.withColumn("source", F.lit("s")).withColumn(
+        "n_chars", F.length("text").cast("long")
+    ).write.parquet(f"{sf_dir}/documents.parquet")
     batch = CorpusCurationPipeline(
         spark,
         CorpusConfig(

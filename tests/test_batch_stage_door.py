@@ -145,6 +145,8 @@ def test_lost_partials_raise_on_restart_and_read(spark, tmp_path):
     try:
         with pytest.raises(RuntimeError, match="holds no batch_id"):
             pipe.run()
+        # the queries started before the refusing door were stopped
+        assert not spark.streams.active
     finally:
         for q in spark.streams.active:
             q.awaitTermination()
@@ -152,6 +154,53 @@ def test_lost_partials_raise_on_restart_and_read(spark, tmp_path):
     shutil.rmtree(pipe.cfg.tokenstats_dir)
     with pytest.raises(RuntimeError, match="holds no batch_id"):
         pipe.token_stats()
+
+
+def test_one_lost_batch_partial_raises(spark, tmp_path):
+    """Losing the partial of ONE committed batch of two refuses the
+    restart and every guarded read: the other batch's partial must not
+    let the dir read as whole (it undercounted the token totals)."""
+    pipe = _pipeline(spark, tmp_path)
+    for lo, name in ((0, "a"), (100, "b")):
+        _land(spark, _wave(lo, 8), tmp_path / "landing", name)
+        pipe.run()
+    assert _partials(pipe.cfg.tokenstats_dir) == ["batch_id=0", "batch_id=1"]
+    assert pipe.token_stats() == _batch_totals(spark, pipe)
+
+    shutil.rmtree(f"{pipe.cfg.decisions_dir}/batch_id=0")
+    with pytest.raises(RuntimeError, match=r"committed batches \[0\]"):
+        pipe.curated()
+    shutil.rmtree(f"{pipe.cfg.tokenstats_dir}/batch_id=0")
+    with pytest.raises(RuntimeError, match="holds no batch_id"):
+        pipe.token_stats()
+    try:
+        with pytest.raises(RuntimeError, match="holds no batch_id"):
+            pipe.run()
+        assert not spark.streams.active
+    finally:
+        for q in spark.streams.active:
+            q.awaitTermination()
+
+
+def test_partials_read_with_their_declared_schema(spark, tmp_path):
+    """A partial dir reads with the caller's schema plus ``batch_id
+    int`` — the schema Spark infers for it — without a Spark job, and a
+    partial that lacks a declared column raises."""
+    _land(spark, _wave(0, 8), tmp_path / "landing", "a")
+    pipe = _pipeline(spark, tmp_path)
+    pipe.run()
+    d = pipe.cfg.tokenstats_dir
+    sc = spark.sparkContext
+    group = f"partials-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        got = read_partials(spark, d, "n_docs long, n_tokens long")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert got.schema == spark.read.option("basePath", d).parquet(d).schema
+    with pytest.raises(ValueError, match="n_words missing"):
+        read_partials(spark, d, "n_docs long, n_words long")
 
 
 def test_score_docs_through_the_door_matches_batch(spark, tmp_path):

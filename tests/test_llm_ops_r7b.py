@@ -843,9 +843,15 @@ def test_script_profile_golden_cases(spark, tmp_path):
     ]
     d = str(tmp_path / "sd")
     os.makedirs(d, exist_ok=True)
-    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(f"{d}/documents.parquet")
+    # a documents table carries every declared column (read_table
+    # refuses one that lacks any)
+    spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id",
+        "text",
+        F.lit("und").alias("lang"),
+        F.lit("golden").alias("source"),
+        F.length("text").cast("long").alias("n_chars"),
+    ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
     got = {
         r["doc_id"]: r for r in q_script_profile(spark, d).collect()
     }

@@ -8,8 +8,8 @@
   execution per round;
 * the SQL-execution totals of ``CorpusCurationPipeline.run()`` and
   ``Prod2VecPipeline.run()`` are pinned, and no job runs outside a SQL
-  execution except the first open of each input table (a parquet
-  footer-inference job) and MLlib's own RDD jobs.
+  execution except MLlib's own RDD jobs (input tables are read with
+  their declared schemas, so opening one runs no footer job).
 
 Executions and their jobs are read from Spark's SQL status store after
 the listener bus drains; jobs come from ``statusTracker`` by job group.
@@ -248,19 +248,18 @@ def test_curation_run_action_budget(default_curation):
     """15 SQL executions: the gates, the input count, ten checkpoint
     writes (exact_deduped, quality_gated, quality_thr, quality_kept,
     bands, near_dup_clusters, curated, decontaminated, chunks, the
-    report), the CC edge-list break and one per CC round (2 here).  The
-    one job outside a SQL execution is the footer inference of the
-    ``documents`` open, shared by the gates, the input count and the
-    scrubbed input."""
+    report), the CC edge-list break and one per CC round (2 here).  No
+    job runs outside a SQL execution: ``documents`` is read with its
+    declared schema."""
     _, _, led = default_curation
-    assert (led.executions, led.outside) == (15, 1)
+    assert (led.executions, led.outside) == (15, 0)
 
 
 def test_prod2vec_run_action_budget(spark, tmp_path):
-    """11 SQL executions.  Jobs outside a SQL execution: one footer
-    inference per input table (lineitem, part) plus MLlib's own 3 RDD
-    jobs to fit and save the model; every stage read-back adds none."""
+    """11 SQL executions.  Jobs outside a SQL execution: MLlib's own 3
+    RDD jobs to fit and save the model; the input tables (read with
+    their declared schemas) and every stage read-back add none."""
     cfg = PipelineConfig(sf_dir=SF_SMOKE, work_dir=str(tmp_path / "p2v"))
     with Ledger(spark, f"p2v-{tmp_path.name}") as led:
         Prod2VecPipeline(spark, cfg).run()
-    assert (led.executions, led.outside) == (11, 5)
+    assert (led.executions, led.outside) == (11, 3)
