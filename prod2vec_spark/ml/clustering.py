@@ -95,47 +95,6 @@ def kmeans_ivf_topk(
     )
 
 
-def kmeans_pq_codebooks(
-    corpus: DataFrame,
-    dims: int,
-    m: int = 4,
-    n_codes: int = 8,
-    seed: int = 42,
-    max_iter: int = 10,
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Lloyd-refined PQ codebooks — the quality upgrade for the PQ
-    plane, exactly as kmeans_ivf_topk is for IVF: per subspace, fit
-    MLlib KMeans over the UNIT vectors' slices (k-means minimizes the
-    same squared-distance objective PQ's distortion is defined by, so
-    refined codewords can only lower quantization error vs the
-    seeded sample).  Returns the same [m][n_codes][sub] shape
-    pq_codebooks does; plug into pq_topk / ivf_pq_topk via their
-    ``codebooks`` parameter.  No oracle — the fit is iterative ML;
-    the seeded-sample ann_pq_topk / ann_ivfpq_topk stay the
-    hash-matched entries.  m independent fits, each one distributed
-    pass per iteration over sub-wide slices."""
-    from prod2vec_spark.operators.simsearch import _with_unit, l2_norm
-
-    if dims % m:
-        raise ValueError(f"dims={dims} not divisible by m={m} subspaces")
-    sub = dims // m
-    unit = _with_unit(
-        corpus.where(l2_norm(F.col(vec_col)) > 0), vec_col, "nvec"
-    ).select("nvec")
-    cbs = []
-    for mi in range(m):
-        sliced = unit.select(
-            F.slice(F.col("nvec"), mi * sub + 1, sub).alias("_slice")
-        )
-        model, _ = kmeans_fit(
-            sliced, vec_col="_slice", k=n_codes, seed=seed + mi,
-            max_iter=max_iter,
-        )
-        cbs.append([list(map(float, c)) for c in model.clusterCenters()])
-    return cbs
-
-
 def cluster_profile(assigned: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Per-cluster summary (cluster, n_vecs, avg_norm): one hash-agg
     shuffle on the (tiny-cardinality) cluster key."""
@@ -151,43 +110,3 @@ def cluster_profile(assigned: DataFrame, vec_col: str = "embedding") -> DataFram
         )
     )
 
-
-def kmeans_semdedup(
-    corpus,
-    dims: int,
-    n_clusters: int = 8,
-    threshold: float = 0.4,
-    seed: int = 42,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """SemDeDup with Lloyd-refined cells — the paper's actual shape
-    (Abbas et al. 2023 cluster with k-means): fit MLlib KMeans, hand
-    the centers to simsearch.semdedup's supplied-centroids path (same
-    zero-norm guard as kmeans_ivf_topk).  Refined cells track the
-    data, so near-duplicates co-cluster more reliably than with
-    seeded-sample cells.  No oracle — the fit is iterative ML; the
-    seeded-centroid `semdedup_audit` remains the hash-matched catalog
-    entry, and the pytest asserts the refined variant drops at least
-    every pair the seeded variant drops on planted duplicates."""
-    from prod2vec_spark.operators.simsearch import semdedup
-
-    model, _ = kmeans_fit(
-        corpus, vec_col=vec_col, k=n_clusters, seed=seed, max_iter=max_iter
-    )
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    centers = [c for c in centers if any(x != 0.0 for x in c)]
-    if not centers:
-        raise ValueError(
-            "kmeans_semdedup: every fitted center is zero — degenerate corpus"
-        )
-    return semdedup(
-        corpus,
-        dims=dims,
-        n_clusters=len(centers),
-        threshold=threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroids=centers,
-    )

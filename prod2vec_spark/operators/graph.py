@@ -19,12 +19,6 @@ Scale notes (100 TB design point):
 * Rounds needed = graph diameter.  LSH candidate graphs are unions of
   near-cliques (every member of a dup cluster shares a band with most
   others), so diameter is ~2-3 and the loop converges in 3-4 rounds.
-  For general graphs with long chains the alternating
-  large-star/small-star algorithm (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14) converges in
-  O(log² n) rounds — implemented as
-  :func:`connected_components_star` (equivalence + rounds-bound
-  pytest-locked on a 64-chain).
 * Each round is exactly 2 shuffles: propagate (join labels onto the
   edge list) + re-label (min-agg per node); round 1 starts from the
   all-self labelling, so it is one min-agg over the edge list.  The
@@ -166,8 +160,7 @@ def connected_components_with_rounds(
     if not converged:
         raise RuntimeError(
             f"connected_components: no fixed point after {max_iter} rounds "
-            f"— the graph's diameter exceeds max_iter (raise it, or use "
-            f"connected_components_star for long-chain graphs)"
+            f"— the graph's diameter exceeds max_iter; raise max_iter"
         )
     return labels, rounds
 
@@ -186,125 +179,6 @@ def connected_components(
         checkpoint_dir=checkpoint_dir,
     )
     return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    checkpoint_dir: "str | None" = None,
-) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14):
-    the general-graph counterpart of min-label propagation, converging
-    in O(log² n) rounds on LONG CHAINS where propagation needs
-    diameter rounds.  Same contract as
-    :func:`connected_components_with_rounds`: ((node, comp), rounds).
-
-    Per round, each node u with directed neighborhood Γ(u) and
-    m = min(Γ(u) ∪ {u}):
-      * large-star: rewire every neighbor v > u to m;
-      * small-star: rewire every neighbor v ≤ u (and u itself) to m.
-    At the fixed point every component is a star rooted at its minimum
-    node, so labels read directly off the edge set.
-
-    Scale notes: each half-round is one groupBy-min + one equi-join —
-    2 shuffles, the same budget as a propagation round; lineage breaks
-    per round (eager localCheckpoint) and the overflow-free decimal
-    checksum is observed on that same pass — one SQL execution per
-    round.  Use this over propagation when the candidate
-    graph is NOT a union of near-cliques (e.g. transitive similarity
-    chains across a corpus); for LSH near-clique graphs propagation's
-    ~2 rounds wins."""
-    # one-scan both-directions emit — see connected_components' note
-    both = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src).alias("a"), F.col(dst).alias("b")
-                    ),
-                    F.struct(
-                        F.col(dst).alias("a"), F.col(src).alias("b")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-    )
-    # canonical undirected edge list (u < v), self-loops dropped
-    e = (
-        both.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("u"),
-            F.greatest("a", "b").alias("v"),
-        )
-        .distinct()
-    )
-    e, (prev,) = _checksum_break(e, checkpoint_dir, ("u", "v"))
-    singletons = both.select(F.col("a").alias("node")).distinct()
-
-    def _star(cur: DataFrame, large: bool) -> DataFrame:
-        d = cur.select(F.col("u").alias("x"), F.col("v").alias("y")).union(
-            cur.select(F.col("v").alias("x"), F.col("u").alias("y"))
-        )
-        mins = d.groupBy("x").agg(F.min("y").alias("mn"))
-        mins = mins.select(
-            "x", F.least(F.col("mn"), F.col("x")).alias("m")
-        )
-        joined = d.join(mins, "x")
-        if large:
-            # rewire every strictly-larger neighbor to m; every edge
-            # (a<b) is processed by its smaller endpoint, so no edge
-            # drops out of the graph
-            out = joined.filter(F.col("y") > F.col("x")).select(
-                F.least(F.col("y"), F.col("m")).alias("u"),
-                F.greatest(F.col("y"), F.col("m")).alias("v"),
-            )
-        else:
-            # v ranges over Γ⁺(u) = neighbors ≤ u PLUS u itself — the
-            # center edge (u, m) is what keeps u attached once its
-            # smaller neighbors are rewired away (Kiveris §3)
-            nbrs = joined.filter(F.col("y") <= F.col("x")).select(
-                F.least(F.col("y"), F.col("m")).alias("u"),
-                F.greatest(F.col("y"), F.col("m")).alias("v"),
-            )
-            centers = mins.select(
-                F.least(F.col("x"), F.col("m")).alias("u"),
-                F.greatest(F.col("x"), F.col("m")).alias("v"),
-            )
-            out = nbrs.union(centers)
-        return out.filter(F.col("u") != F.col("v")).distinct()
-
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        e = _star(e, large=True)
-        e, (cur,) = _checksum_break(
-            _star(e, large=False), checkpoint_dir, ("u", "v")
-        )
-        rounds += 1
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # a truncated star graph is not a component assignment —
-        # surface it instead of returning silently-wrong labels
-        # (ADVICE r5; the checksum fixed point is the convergence
-        # certificate, max_iter is only a runaway bound)
-        raise RuntimeError(
-            f"connected_components_star: no fixed point after "
-            f"{max_iter} rounds; raise max_iter (O(log² n) expected)"
-        )
-    # fixed point: every edge points root -> member; emit labels, and
-    # re-attach isolated-after-rewiring roots + true singletons
-    members = e.select(F.col("v").alias("node"), F.col("u").alias("comp"))
-    roots = singletons.join(
-        members.select(F.col("node")), "node", "left_anti"
-    ).select("node", F.col("node").alias("comp"))
-    return members.unionByName(roots), rounds
 
 
 def dedup_clusters(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:

@@ -3,24 +3,19 @@ opaque ``binary`` columns with a typed metadata struct, processed by
 Arrow-batched ``mapInPandas`` stages.
 
 Image, audio AND video decode are REAL, stdlib-only: a pure-Python
-PNG decoder (``zlib`` inflate + per-scanline unfilter → width/height/
-bit-depth/color-type + a digest of the reconstructed pixel bytes), a
-WAV decoder (``wave`` + ``struct`` → sample rate, duration, RMS), and
-an AVI decoder (round-9: RIFF walk → uncompressed BGR24 DIB frames →
-grayscale frame buffers + fps/duration; round-11 adds MJPEG — '00dc'
-chunks baseline-JPEG-decoded by operators/jpeg.py — while all other
-compressed fourccs stay rejected explicitly, not mis-decoded).
-Unknown formats take a
-deterministic byte-stats path (``_decode_stub``), the only remaining
-fallback.
+PNG decoder (``zlib`` inflate + per-scanline unfilter → the raw pixel
+bytes plus IHDR metadata), a WAV decoder (``wave`` + ``struct``, PCM
+or IMA-ADPCM → interleaved samples), and an AVI decoder (RIFF walk →
+uncompressed BGR24 DIB frames or MJPEG '00dc' chunks baseline-JPEG-
+decoded by operators/jpeg.py → grayscale frame buffers + fps; every
+other compressed fourcc is rejected explicitly, not mis-decoded).
 
 ``decode_blob`` is the media plane's one decode door: ``sniff_format``
 (the one magic-byte table) picks the format, one payload decode per
 format yields a ``DecodedBlob`` record (format, status, modality, gray
 plane, mono signal or frames), and every hash, span, thumbnail and
 format-audit operator (here, operators/phash.py, queries/media.py)
-reads what it needs from that record.  ``decode_media`` /
-``extract_features`` keep their own feature-row contract.
+reads what it needs from that record.
 
 The Spark-side contract is real throughout: the
 schema, the Pandas-UDF batch shape (iterator of DataFrames),
@@ -39,12 +34,10 @@ from __future__ import annotations
 
 import hashlib
 import io
-import math
 import struct
 import wave
 import zlib
 from collections.abc import Iterator
-from contextlib import contextmanager
 from typing import NamedTuple
 
 import pandas as pd
@@ -53,8 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 try:  # numpy accelerates the AVI pixel paths (byte-identical results)
-    # and holds decode_blob's gray planes and mono signals; every
-    # feature-row decoder stays correct without it
+    # and holds decode_blob's gray planes and mono signals
     import numpy as _np
 except Exception:  # pragma: no cover
     _np = None
@@ -68,13 +60,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("duration_ms", T.IntegerType()),
         T.StructField("blob", T.BinaryType()),
     ]
-)
-
-FEATURE_SCHEMA = (
-    "media_id long, media_type string, n_bytes int, "
-    "blob_digest string, format string, width int, height int, "
-    "bit_depth int, sample_rate int, duration_ms double, rms double, "
-    "pixel_digest string, feature array<float>"
 )
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -175,8 +160,7 @@ def encode_png_gray8(pixels: bytes, width: int, height: int) -> bytes:
     """Minimal stdlib PNG ENCODER: 8-bit grayscale, filter-0 scanlines,
     one IDAT.  The write half of the codec boundary — lets pipelines
     materialize deterministic image fixtures/thumbnails without any
-    imaging dependency, and round-trips exactly through decode_png /
-    png_pixels."""
+    imaging dependency, and round-trips exactly through png_pixels."""
     if len(pixels) != width * height:
         raise ValueError("pixel buffer does not match width*height")
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
@@ -203,9 +187,11 @@ def encode_png_gray8(pixels: bytes, width: int, height: int) -> bytes:
 
 def png_pixels(blob: bytes) -> tuple[bytes, dict]:
     """Chunk walk → IDAT inflate → scanline unfilter: the reconstructed
-    raw pixel bytes plus the IHDR metadata.  The shared decode core for
-    ``decode_png`` (digest/mean features) and ``decode_blob`` (the gray
-    plane the perceptual hashes read)."""
+    raw pixel bytes plus the IHDR metadata: the PNG decode behind
+    ``decode_blob`` (the gray plane the perceptual hashes read).
+    Non-interlaced images only (Adam7 is rejected explicitly, not
+    silently mis-decoded); every bit depth and color type in the spec
+    is handled because PNG filtering is byte-wise."""
     hdr = png_header(blob)
     if hdr["interlace"] != 0:
         raise ValueError("interlaced (Adam7) PNG not supported")
@@ -226,26 +212,6 @@ def png_pixels(blob: bytes) -> tuple[bytes, dict]:
     if len(raw) != (stride + 1) * hdr["height"]:
         raise ValueError("PNG pixel payload size mismatch")
     return _png_unfilter(raw, stride, hdr["height"], bpp), hdr
-
-
-def decode_png(blob: bytes) -> dict:
-    """Real stdlib-only PNG decode: chunk walk → IHDR metadata, IDAT
-    concat → ``zlib`` inflate → scanline unfilter → digest + mean of
-    the reconstructed raw pixel bytes (palette indices for color type
-    3).  Non-interlaced images only (Adam7 is rejected explicitly, not
-    silently mis-decoded); every bit depth and color type in the spec
-    is handled because PNG filtering is byte-wise."""
-    pixels, hdr = png_pixels(blob)
-    return {
-        "format": "png",
-        "width": hdr["width"],
-        "height": hdr["height"],
-        "bit_depth": hdr["bit_depth"],
-        "color_type": hdr["color_type"],
-        "channels": hdr["channels"],
-        "pixel_digest": hashlib.md5(pixels).hexdigest(),
-        "mean_pixel_byte": (sum(pixels) / len(pixels)) if pixels else 0.0,
-    }
 
 
 # IMA/DVI ADPCM (WAVE format tag 0x0011) — the compressed-audio twin
@@ -404,11 +370,10 @@ def _wav_format_tag(blob: bytes) -> int:
 
 
 def wav_samples(blob: bytes) -> tuple[tuple, dict]:
-    """Sample decode shared by ``decode_wav`` (RMS features) and
-    ``decode_blob`` (audio fingerprinting): interleaved signed
-    samples plus the stream metadata.  PCM via the stdlib ``wave``
-    module; IMA-ADPCM (round-11) via the block decoder above — same
-    (samples, meta) contract either way."""
+    """The WAV decode behind ``decode_blob`` (audio fingerprinting and
+    resampling): interleaved signed samples plus the stream metadata.
+    PCM via the stdlib ``wave`` module; IMA-ADPCM (round-11) via the
+    block decoder above — same (samples, meta) contract either way."""
     if _wav_format_tag(blob) == 0x0011:
         return _adpcm_samples(blob)
     with wave.open(io.BytesIO(blob), "rb") as w:
@@ -447,26 +412,6 @@ def encode_wav_pcm16(samples, sample_rate: int = 8000, n_channels: int = 1) -> b
         w.setframerate(sample_rate)
         w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
     return buf.getvalue()
-
-
-def decode_wav(blob: bytes) -> dict:
-    """Real stdlib-only WAV decode via ``wave``: sample rate, channel
-    count, bit depth, duration, and RMS amplitude (in raw sample
-    units) computed from the PCM frames with ``struct``."""
-    samples, m = wav_samples(blob)
-    n_channels, sampwidth = m["n_channels"], m["sampwidth"]
-    framerate, n_frames = m["framerate"], m["n_frames"]
-    n = len(samples)
-    rms = math.sqrt(sum(s * s for s in samples) / n) if n else 0.0
-    return {
-        "format": "wav",
-        "sample_rate": framerate,
-        "n_channels": n_channels,
-        # on-wire depth: 4-bit nibbles for ADPCM, sample width for PCM
-        "bit_depth": 4 if m.get("codec") == "ima_adpcm" else sampwidth * 8,
-        "duration_ms": (n_frames / framerate * 1000.0) if framerate else 0.0,
-        "rms": rms,
-    }
 
 
 def encode_avi_gray8(
@@ -695,316 +640,6 @@ def avi_frames(blob: bytes) -> tuple[list[bytes], dict]:
     return frames, meta
 
 
-def decode_avi(blob: bytes) -> dict:
-    """Real stdlib-only AVI decode feature row: dimensions, frame
-    count, fps, duration, and a digest + mean of the reconstructed
-    grayscale frame bytes (the video twin of decode_png's
-    pixel_digest — golden tests pin it)."""
-    frames, m = avi_frames(blob)
-    allpx = b"".join(frames)
-    return {
-        "format": "avi",
-        "width": m["width"],
-        "height": m["height"],
-        "bit_depth": m["bit_count"],
-        "n_frames": m["n_frames"],
-        "fps": m["fps"],
-        "duration_ms": (m["n_frames"] / m["fps"] * 1000.0) if m["fps"] else 0.0,
-        "pixel_digest": hashlib.md5(allpx).hexdigest(),
-        "mean_pixel_byte": (sum(allpx) / len(allpx)) if allpx else 0.0,
-    }
-
-
-def decode_jpeg(blob: bytes) -> dict:
-    """Real stdlib-only baseline-JPEG decode feature row — the
-    standalone-image twin of ``decode_png``, built on the SAME decoder
-    the MJPEG video plane uses (operators/jpeg.py:decode_jpeg_gray).
-    Dimensions plus a digest + mean of the decoded LUMA plane; round-12
-    closes the gap where a bare JPEG — the dominant real-world image
-    format — fell to ``format='raw'`` byte stats and was invisible to
-    media dedup."""
-    from prod2vec_spark.operators.jpeg import decode_jpeg_gray
-
-    gray, width, height = decode_jpeg_gray(blob)
-    return {
-        "format": "jpeg",
-        "width": width,
-        "height": height,
-        "bit_depth": 8,
-        "channels": 1,
-        "pixel_digest": hashlib.md5(gray).hexdigest(),
-        "mean_pixel_byte": (sum(gray) / len(gray)) if gray else 0.0,
-    }
-
-
-def decode_gif(blob: bytes) -> dict:
-    """Real stdlib-only GIF decode feature row (round-13) — the
-    palette-image twin of ``decode_png``, built on operators/gif.py's
-    LZW decoder.  Dimensions plus a digest + mean of the decoded RGB
-    plane; closes the VERDICT r12 gap where GIF blobs fell to
-    ``format='raw'`` byte stats and were invisible to media dedup.
-    (Lossless WebP decodes through decode_webp since round 15; only
-    lossy VP8 remains in the raw class — operators/webp.py.)"""
-    from prod2vec_spark.operators.gif import gif_pixels
-
-    rgb, m = gif_pixels(blob)
-    return {
-        "format": "gif",
-        "width": m["width"],
-        "height": m["height"],
-        "bit_depth": m["bit_depth"],
-        "channels": m["channels"],
-        "pixel_digest": hashlib.md5(rgb).hexdigest(),
-        "mean_pixel_byte": (sum(rgb) / len(rgb)) if rgb else 0.0,
-    }
-
-
-def decode_webp(blob: bytes) -> dict:
-    """Real stdlib-only lossless-WebP (VP8L) decode feature row
-    (round-15) — closes the measured blind spot the format audit
-    reports: WebP is the dominant modern web image format, and its
-    blobs previously fell to ``format='raw'`` byte stats and were
-    invisible to media dedup.  Dimensions plus a digest + mean of the
-    decoded RGB plane (the GIF contract); lossy VP8 payloads raise
-    (the remaining declared boundary) and classify as
-    unsupported_format upstream."""
-    from prod2vec_spark.operators.webp import webp_pixels
-
-    rgb, m = webp_pixels(blob)
-    return {
-        "format": "webp",
-        "width": m["width"],
-        "height": m["height"],
-        "bit_depth": m["bit_depth"],
-        "channels": m["channels"],
-        "pixel_digest": hashlib.md5(rgb).hexdigest(),
-        "mean_pixel_byte": (sum(rgb) / len(rgb)) if rgb else 0.0,
-    }
-
-
-def decode_media(media_type: str, blob: bytes) -> dict:
-    """Sniff the container by magic bytes and run the REAL decoder
-    (PNG / JPEG / GIF / lossless WebP / WAV / uncompressed AVI);
-    unknown formats fall through to the deterministic byte-stats path
-    with ``format='raw'`` (including lossy-VP8 WebP — the remaining
-    documented boundary).  A corrupt PNG/JPEG/GIF/WebP/WAV/AVI is
-    reported as ``format='corrupt'`` rather than mis-decoded."""
-    fmt = "raw"
-    if blob[:8] == PNG_SIG:
-        try:
-            return decode_png(blob)
-        except Exception:
-            fmt = "corrupt"
-    elif blob[:2] == b"\xff\xd8":
-        try:
-            return decode_jpeg(blob)
-        except Exception:
-            fmt = "corrupt"
-    elif blob[:6] in (b"GIF87a", b"GIF89a"):
-        try:
-            return decode_gif(blob)
-        except Exception:
-            fmt = "corrupt"
-    elif blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-        from prod2vec_spark.operators.webp import _vp8l_payload
-
-        try:
-            lossless = _vp8l_payload(blob) is not None
-        except Exception:
-            lossless = True  # truncated VP8L chunk -> corrupt below
-        if lossless:
-            try:
-                return decode_webp(blob)
-            except Exception:
-                fmt = "corrupt"
-        else:
-            # lossy VP8: PIXELS stay the declared boundary (RFC 6386's
-            # entropy decode needs spec probability tables unavailable
-            # here — operators/webp.py), but the header is parseable:
-            # dimensions + frame-tag fields become an auditable
-            # feature row instead of opaque 'raw' byte stats (r16)
-            from prod2vec_spark.operators.webp import webp_info
-
-            try:
-                inf = webp_info(blob)
-                return {
-                    "format": "webp_lossy",
-                    "width": inf.get("width"),
-                    "height": inf.get("height"),
-                }
-            except Exception:
-                fmt = "corrupt"
-    elif blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-        try:
-            return decode_wav(blob)
-        except Exception:
-            fmt = "corrupt"
-    elif blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-        try:
-            return decode_avi(blob)
-        except Exception:
-            fmt = "corrupt"
-    elif len(blob) >= 12 and blob[4:8] == b"ftyp":
-        # MP4: payload decode stays the boundary; the box walk yields
-        # auditable dims/duration feature rows (r16, the webp_lossy
-        # pattern)
-        from prod2vec_spark.operators.mediainfo import mp4_info
-
-        try:
-            inf = mp4_info(blob)
-            return {
-                "format": "mp4_meta",
-                "width": inf.get("width"),
-                "height": inf.get("height"),
-                "duration_ms": inf.get("duration_ms"),
-            }
-        except Exception:
-            fmt = "corrupt"
-    elif blob[:4] == b"fLaC":
-        from prod2vec_spark.operators.mediainfo import flac_info
-
-        try:
-            inf = flac_info(blob)
-            return {
-                "format": "flac_meta",
-                "sample_rate": inf["sample_rate"],
-                "duration_ms": inf["duration_ms"],
-            }
-        except Exception:
-            fmt = "corrupt"
-    elif blob[:4] == b"OggS":
-        from prod2vec_spark.operators.mediainfo import ogg_info
-
-        try:
-            inf = ogg_info(blob)
-            return {
-                "format": "ogg_meta",
-                "sample_rate": inf.get("sample_rate"),
-                "duration_ms": inf.get("duration_ms"),
-            }
-        except Exception:
-            fmt = "corrupt"
-    elif blob[:3] == b"ID3" or (
-        len(blob) >= 4 and blob[0] == 0xFF and (blob[1] & 0xE0) == 0xE0
-    ):
-        from prod2vec_spark.operators.mediainfo import adts_info, mp3_info
-
-        try:
-            inf = adts_info(blob)
-            return {
-                "format": "aac_meta",
-                "sample_rate": inf["sample_rate"],
-                "duration_ms": inf["duration_ms"],
-            }
-        except Exception:
-            pass
-        try:
-            inf = mp3_info(blob)
-            return {
-                "format": "mp3_meta",
-                "sample_rate": inf["sample_rate"],
-                "duration_ms": inf.get("duration_est_ms"),
-            }
-        except Exception:
-            if blob[:3] == b"ID3":
-                fmt = "corrupt"
-    return {"format": fmt}
-
-
-def _decode_stub(media_type: str, blob: bytes) -> list[float]:
-    """Byte-stats fallback features for UNKNOWN formats (PNG, WAV and
-    uncompressed-AVI decode are all real above) — also the generic
-    per-row feature vector every format gets.  Deterministic: 4
-    features from blob length and simple byte stats, so tests have
-    stable expectations."""
-    n = len(blob)
-    if n == 0:
-        return [0.0, 0.0, 0.0, 0.0]
-    head = blob[: min(n, 64)]
-    return [
-        float(n),
-        float(sum(head) % 256),
-        float(head[0]),
-        float(len(set(head))),
-    ]
-
-
-@contextmanager
-def arrow_batch_scope(spark, max_records: int):
-    """Scope spark.sql.execution.arrow.maxRecordsPerBatch around an
-    ACTION, restoring the previous value on exit.  Arrow input-batch
-    sizing is a session conf read at execution time, so a lazy
-    operator cannot scope it itself — callers wrap the write/collect:
-
-        with arrow_batch_scope(spark, 256):
-            extract_features(media).write.parquet(...)
-    """
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    # get(key, None) returns None when the key is not EXPLICITLY set
-    # (a bare get would return the SQL default, and restoring that
-    # would pin the conf to an explicit value it never had)
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(max_records))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
-    """mapInPandas feature extraction: Arrow-batched iterator in, rows
-    with a fixed-width feature vector out.  The iterator protocol keeps
-    peak memory at one Arrow batch per task regardless of blob sizes.
-
-    Real PNG/WAV decode happens here per blob (``decode_media``); the
-    decoded metadata rides in typed columns (width/height/bit_depth
-    for images, sample_rate/duration_ms/rms for audio — null where a
-    field does not apply to the format), alongside the generic
-    byte-stats ``feature`` vector that every format gets.
-
-    ``batch_hint`` caps rows per OUTPUT Arrow batch by slicing inside
-    the UDF — no session conf is touched (the round-2 version mutated
-    spark.sql.execution.arrow.maxRecordsPerBatch session-wide as a
-    side effect; a lazy operator must not).  To also cap the INPUT
-    batch size for very large blobs, wrap the action in
-    ``arrow_batch_scope`` — that conf only exists session-side."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            step = batch_hint or len(pdf) or 1
-            for lo in range(0, len(pdf), step):
-                sub = pdf.iloc[lo : lo + step]
-                blobs = [b if b is not None else b"" for b in sub["blob"]]
-                decoded = [
-                    decode_media(mt, b) for mt, b in zip(sub["media_type"], blobs)
-                ]
-                yield pd.DataFrame(
-                    {
-                        "media_id": sub["media_id"],
-                        "media_type": sub["media_type"],
-                        "n_bytes": [len(b) for b in blobs],
-                        "blob_digest": [hashlib.md5(b).hexdigest() for b in blobs],
-                        "format": [d["format"] for d in decoded],
-                        "width": [d.get("width") for d in decoded],
-                        "height": [d.get("height") for d in decoded],
-                        "bit_depth": [d.get("bit_depth") for d in decoded],
-                        "sample_rate": [d.get("sample_rate") for d in decoded],
-                        "duration_ms": [d.get("duration_ms") for d in decoded],
-                        "rms": [d.get("rms") for d in decoded],
-                        "pixel_digest": [d.get("pixel_digest") for d in decoded],
-                        "feature": [
-                            _decode_stub(mt, b)
-                            for mt, b in zip(sub["media_type"], blobs)
-                        ],
-                    }
-                )
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
 def avi_frame_samples(
     n_frames: int, fps: float, every_ms: int
 ) -> list[tuple[int, int]]:
@@ -1034,7 +669,7 @@ def decode_frames(
     per sampled frame — each clip decoded ONCE per task, frames picked
     by :func:`avi_frame_samples`.  Arrow-batched mapInPandas; rows
     whose blob isn't decodable AVI emit no frames (the miss is
-    auditable upstream via extract_features' format column)."""
+    auditable upstream via media_format_rows' status column)."""
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive, got {every_ms}")
     src = media.select(id_col, blob_col)

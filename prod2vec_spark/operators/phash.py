@@ -286,7 +286,7 @@ def frame_hashes(
     per AVI or animated-GIF clip — one decode per clip, ts→index
     arithmetic, the multimodal.decode_frames shape with a fingerprint
     instead of a digest.  Undecodable blobs emit no rows (auditable
-    upstream via extract_features)."""
+    upstream via media_format_rows)."""
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive, got {every_ms}")
     src = media.select(id_col, blob_col)
@@ -379,7 +379,7 @@ def image_tile_hashes(
     are skipped (a flat tile dHashes to 0 regardless of its level, so
     letterbox bars and blank backgrounds of UNRELATED images would
     otherwise pair).  Undecodable blobs emit no rows (auditable
-    upstream via extract_features, same contract as frame_hashes)."""
+    upstream via media_format_rows, same contract as frame_hashes)."""
     _check_tile_args(tile_px, stride)
     src = media.select(id_col, blob_col)
 
@@ -453,7 +453,7 @@ def audio_window_hashes(
     grid and ``frame_hashes``' frame sampling, completing the span
     triad (video frames, image tiles, audio windows).  One decode per
     clip (PCM or IMA-ADPCM via the ``audio_mono`` door); undecodable
-    blobs emit no rows (auditable upstream via extract_features, same
+    blobs emit no rows (auditable upstream via media_format_rows, same
     contract as frame_hashes)."""
     _check_window_args(window_ms, hop_ms)
     src = media.select(id_col, blob_col)

@@ -73,49 +73,6 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow fast path of ``brute_force_topk`` (SURVEY.md §2.12): the
-    identical candidate shape (broadcast queries, one corpus pass,
-    per-query rank window) but the per-pair cosine is a vectorized
-    scalar ``@pandas_udf`` — one numpy einsum per Arrow batch instead
-    of an interpreted per-element fold.
-
-    Trade-off: numpy accumulates float sums pairwise, not as the
-    strict left fold the DuckDB oracle replays, so results can differ
-    from the HOF path by ~1 ulp — ranks only flip on ties below
-    ~1e-12.  tests assert neighbor-set parity with the exact path;
-    use this variant when pair volume makes interpreted folds the
-    bottleneck and bit-exact oracle replay is not required."""
-    from prod2vec_spark.functions.vector_arrow import pair_cosine as pair_cos
-
-    c = _with_unit(corpus, vec_col, "nvec")
-    q = F.broadcast(
-        _with_unit(queries, vec_col, "qn").select(
-            F.col(id_col).alias("query_id"), "qn"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        c.crossJoin(q)
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("sim", pair_cos(F.col("qn"), F.col("nvec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round("sim", 5).alias("cosine_sim"),
-            "rank",
-        )
-    )
-
-
 def deterministic_planes(dims: int, num_planes: int) -> list[list[float]]:
     """Hyperplane matrix derived from md5 (hashlib, driver-side):
     component (p, d) = 2·(first-8-hex-digits of md5('plane|p|d'))/2^32 − 1.

@@ -104,6 +104,25 @@ from prod2vec_spark.sources.io import (
 )
 
 
+def fold_drop_ledger(first: DataFrame, chain) -> DataFrame:
+    """``(doc_id, dropped_at)`` for every id of ``first`` missing from
+    a later frame of the monotone ``chain`` of ``(stage, frame)``
+    pairs, attributed to the first stage whose frame lacks it: one
+    id-only left-anti join per boundary, unioned.  The drop ledger of
+    both curation DAGs (``CorpusCurationPipeline`` and the streaming
+    ``StreamingCorpusPipeline``)."""
+    prev = first.select("doc_id")
+    ledger = None
+    for stage, df in chain:
+        cur = df.select("doc_id")
+        dropped = prev.join(cur, "doc_id", "left_anti").withColumn(
+            "dropped_at", F.lit(stage)
+        )
+        ledger = dropped if ledger is None else ledger.unionByName(dropped)
+        prev = cur
+    return ledger
+
+
 def _budget_metrics() -> tuple:
     """The final corpus's token budget, observed by whichever write
     produces ``final`` (decontaminate, or the holdout split)."""
@@ -1358,15 +1377,7 @@ class CorpusCurationPipeline:
              self.spark.read.parquet(f"{cfg.work_dir}/decontaminated"))
         )
 
-        prev = self._table(cfg.sf_dir, "documents").select("doc_id")
-        ledger = None
-        for stage, df in chain:
-            cur = df.select("doc_id")
-            dropped = prev.join(cur, "doc_id", "left_anti").withColumn(
-                "dropped_at", F.lit(stage)
-            )
-            ledger = dropped if ledger is None else ledger.unionByName(dropped)
-            prev = cur
+        ledger = fold_drop_ledger(self._table(cfg.sf_dir, "documents"), chain)
         return checkpoint(ledger, f"{cfg.work_dir}/drop_ledger")
 
     # -- full run -------------------------------------------------------

@@ -919,65 +919,3 @@ WHERE media_id IN (SELECT doc_id FROM documents)
 
 
 register(q_resample_audit, _sql_resample_audit())
-
-
-# ------------------------------------------- lossy-WebP header audit
-def q_webp_header_audit(spark, sf_dir):
-    """Header-feature rows for every WebP blob in the planted media
-    corpus: lossy VP8
-    pixels stay the declared codec boundary (RFC 6386's entropy
-    decode needs spec probability tables unavailable in this
-    environment — operators/webp.py documents it), but the key-frame
-    header IS parseable, so lossy blobs now carry real dimensions
-    through decode_media ('webp_lossy' rows) instead of opaque byte
-    stats.  The golden-fixture split (the media_format_audit
-    protocol): Spark RECOMPUTES format + dims from raw blobs through
-    the real sniff+parse chain, one Arrow-batched scan; the DuckDB
-    twin replays the persisted golden columns, themselves
-    pytest-locked against the parser."""
-    from prod2vec_spark.operators.multimodal import decode_media
-
-    import pandas as pd  # noqa: F401
-
-    media = spark.read.parquet(_media_format_fixture_path()).where(
-        "fmt = 'webp'"
-    )
-    docs = read_table(spark, sf_dir, "documents", spread=False).select("doc_id")
-    media = media.join(
-        docs, media["media_id"] == docs["doc_id"], "left_semi"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            decs = [decode_media("media", bytes(b)) for b in pdf["blob"]]
-            import pandas as _pd
-
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "dec_format": [d["format"] for d in decs],
-                    "width": _pd.array(
-                        [d.get("width") for d in decs], dtype="Int32"
-                    ),
-                    "height": _pd.array(
-                        [d.get("height") for d in decs], dtype="Int32"
-                    ),
-                }
-            )
-
-    return media.select("media_id", "blob").mapInPandas(
-        run, schema="media_id long, dec_format string, width int, height int"
-    )
-
-
-def _sql_webp_header_audit() -> str:
-    path = _media_format_fixture_path()
-    return f"""
-SELECT media_id, dec_format, width, height
-FROM read_parquet('{path}')
-WHERE fmt = 'webp'
-  AND media_id IN (SELECT doc_id FROM documents)
-"""
-
-
-register(q_webp_header_audit, _sql_webp_header_audit())

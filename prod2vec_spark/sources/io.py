@@ -482,39 +482,6 @@ def file_audit(
     )
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compaction companion to ``file_audit``: rewrite a fragmented
-    parquet dataset into ~target-sized files.  File count derives
-    from the CURRENT total byte size (driver-side listing — no data
-    read for the estimate), then one shuffle-free coalesce() when
-    shrinking.  Writes to ``out_path`` (never in place — the caller
-    swaps directories after validating, the same
-    write-then-commit discipline as the streaming sinks).  Returns
-    the target file count."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    total = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().toString().endswith(".parquet"):
-            total += int(st.getLen())
-    n_files = max(1, round(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    # coalesce, not repartition: compaction must not pay a shuffle —
-    # it only narrows the file count (if n_files exceeds the current
-    # partitioning, coalesce is a no-op and the write keeps them)
-    df.coalesce(n_files).write.mode("overwrite").parquet(out_path)
-    return n_files
-
-
 def _partial_files(spark: SparkSession, dir_path: str, checkpoint) -> list[str]:
     """The data files of the ``batch_id=N`` partials under ``dir_path``
     (the ``start_batch_stage`` sink layout), listed through the Hadoop
@@ -560,7 +527,7 @@ def read_partials(
     files = _partial_files(spark, dir_path, checkpoint)
     if not files:
         return spark.createDataFrame([], schema).withColumn(
-            "batch_id", F.lit(None).cast("long")
+            "batch_id", F.lit(None).cast("int")
         )
     declared = (
         schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)

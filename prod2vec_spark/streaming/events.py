@@ -20,78 +20,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from prod2vec_spark.sources.io import TABLES
 
 
-def _events_ts_is_nanos_long(dir_path: str) -> bool:
-    """Inspect the parquet footer to learn the physical type of ``ts``.
-
-    Streams must declare their schema up front.  TIMESTAMP(NANOS)
-    parquet surfaces as int64 only under the nanosAsLong escape hatch,
-    while plain µs TIMESTAMP reads directly as TimestampType (the batch
-    reader, sources/io.py read_table, refuses nanos files instead).
-    Footer inspection is one driver-side metadata read — no data scan.
-
-    The ns match is prefix-based so tz-aware ``timestamp[ns, tz=…]``
-    footers take the nanos branch too.  A directory with no readable
-    top-level parquet footer raises instead of silently guessing µs:
-    the stream schema is fixed at definition time, so a wrong silent
-    default would poison every late-arriving nanos file.  Files are
-    listed through the Hadoop FS API, so a ``file://`` directory reads
-    like a local path."""
-    import pyarrow.parquet as pq
-
-    from prod2vec_spark.sources.artifacts import _fs_path
-
-    spark = SparkSession.active()
-    fs, hpath = _fs_path(spark, dir_path)
-    if fs.isDirectory(hpath):
-        fs, hpath = _fs_path(spark, f"{dir_path}/*.parquet")
-    candidates = sorted(st.getPath().toString() for st in fs.globStatus(hpath) or [])
-    for f in candidates:
-        try:
-            typ = pq.read_schema(f).field("ts").type
-        except (OSError, KeyError):
-            continue
-        s = str(typ)
-        return s.startswith("timestamp[ns") or s == "int64"
-    raise FileNotFoundError(
-        f"read_events_stream: no readable parquet footer with a 'ts' field "
-        f"under {dir_path!r}; cannot pin the stream schema (seed the "
-        f"directory with at least one file, or pass an explicit file path)"
-    )
-
-
-def read_events_stream(
-    spark: SparkSession,
-    dir_path: str,
-    ts_is_nanos: bool | None = None,
-) -> DataFrame:
-    """File-source stream over the events parquet.  Schema must be
-    declared up front (streams can't infer).  ``ts`` is declared
-    TimestampType when the footer says so; the legacy ns-long layout
-    (read under nanosAsLong) is converted only when the
-    physical type really is int64/nanos.
-
-    ``ts_is_nanos`` is the explicit override for starting a stream on
-    an INITIALLY-EMPTY landing directory (a normal streaming-source
-    pattern): with no footer to sniff, the caller declares the layout
-    (True = ns-long parquet, False = µs timestamp) and no file read
-    happens.  Left at None, the footer sniff runs and an empty
-    directory raises rather than silently guessing (ADVICE r5)."""
-    nanos = ts_is_nanos if ts_is_nanos is not None else _events_ts_is_nanos_long(dir_path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = (
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
-        raw = spark.readStream.schema(schema).parquet(dir_path)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
+def read_events_stream(spark: SparkSession, dir_path: str) -> DataFrame:
+    """File-source stream over the events parquet, read with the
+    declared ``TABLES["events"]`` columns (streams can't infer), so it
+    starts on an initially-empty landing directory like any other.
+    ``ts`` is declared TIMESTAMP rather than the batch table's
+    TIMESTAMP_NTZ: ``withWatermark`` accepts only TIMESTAMP event
+    times, and Spark reads the stored µs column either way.  A
+    TIMESTAMP(NANOS) file raises Spark's own error, as in
+    ``read_table``."""
+    schema = T.StructType(
+        [
+            T.StructField(f.name, T.TimestampType()) if f.name == "ts" else f
+            for f in TABLES["events"].fields
+        ]
     )
     return spark.readStream.schema(schema).parquet(dir_path)
 
@@ -177,87 +124,6 @@ def streaming_dedup(events: DataFrame, keys: list[str], watermark: str = "2 days
     """Streaming exact dedup: dropDuplicates keyed state bounded by the
     event-time watermark — the incremental twin of exact_dup_groups."""
     return events.withWatermark("ts", watermark).dropDuplicates(keys)
-
-
-def streaming_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``
-    (SURVEY.md §2.13 / the arbitrary-state path): per-user running
-    event count + value sum maintained across micro-batches in
-    explicit GroupState.
-
-    This is the escape hatch for stateful logic the built-in windowed
-    aggregations can't express (conditional resets, custom eviction,
-    cross-event derived state); for plain running totals the built-in
-    agg is preferred — this operator exists to keep the custom-state
-    plumbing (Arrow batch iteration, state schema, update semantics)
-    real and tested.  State is one (count, sum) pair per user — O(1)
-    per key."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long, sum_value double",
-        stateStructType="n long, s double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_conversions(
-    events: DataFrame,
-    left_type: str = "view",
-    right_type: str = "purchase",
-    within: str = "1 hour",
-    watermark: str = "2 days",
-) -> DataFrame:
-    """Stream-stream inner join with a time-range condition: each
-    ``right_type`` event (purchase) matched to every ``left_type``
-    event (view) of the same user in the preceding ``within`` —
-    the attribution/conversion shape.
-
-    State on BOTH sides is bounded: the watermarks plus the time-range
-    predicate let Spark evict a buffered view once no future purchase
-    can land inside its window (and vice versa) — without the range
-    condition the join state would grow forever.  One shuffle per side
-    on user_id."""
-    views = (
-        events.where(F.col("event_type") == left_type)
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", watermark)
-    )
-    buys = (
-        events.where(F.col("event_type") == right_type)
-        .select(
-            F.col("user_id").alias("b_user"),
-            F.col("event_id").alias("buy_id"),
-            F.col("ts").alias("buy_ts"),
-        )
-        .withWatermark("buy_ts", watermark)
-    )
-    return views.join(
-        buys,
-        F.expr(
-            f"v_user = b_user AND buy_ts >= view_ts "
-            f"AND buy_ts <= view_ts + INTERVAL {within}"
-        ),
-    ).select(
-        F.col("v_user").alias("user_id"), "view_id", "buy_id", "view_ts", "buy_ts"
-    )
 
 
 def run_to_memory(stream_df: DataFrame, table_name: str, output_mode: str = "append") -> None:

@@ -1,47 +1,14 @@
 """Streaming curation pipeline (ENGINE scope, VERDICT r5 stretch #7):
-the incremental counterpart of pipeline_llm.py's batch stages, composed
-from the already-parity-tested streaming operators and the checkpointed
-parquet sink.
+the incremental counterpart of pipeline_llm.py's batch stages over the
+documents plane, composed from the already-parity-tested streaming
+operators and the checkpointed parquet sink.
 
-Stage graph (each hand-off a checkpointed file sink, each stage its own
-StreamingQuery):
-
-    landing dir ──stream──> dedup ──parquet+ckpt──> sessions ──parquet+ckpt──>
-
-  * stage 1 — exact dedup: ``streaming_dedup`` keyed state drops
-    replayed/duplicated events; the file sink's _spark_metadata log +
-    source offsets give exactly-once across restarts.
-  * stage 2 — sessionization: reads stage 1's OUTPUT DIRECTORY as a
-    file-source stream (the file source honors the upstream sink's
-    _spark_metadata transaction log, so only committed files are
-    consumed — the stages chain without a message bus), applies
-    ``session_window`` sessionization, appends finalized sessions.
-
-Restart contract (pytest-locked in tests/test_streaming_pipeline.py):
-``run()`` with the same work_dir resumes BOTH stages from their
-checkpoints — a crash between the stages, a replayed input file, or a
-no-new-input restart all preserve exactly-once outputs.
-
-Watermark tuning per stage (both configurable):
-  * dedup_watermark bounds dedup state; duplicates arriving later than
-    the horizon are passed through (and input older than it dropped) —
-    the standard completeness/state tradeoff.
-  * session_watermark delays session finalization: append mode emits a
-    session only once the watermark passes its close, so trailing
-    sessions stay buffered in state until later drains.  Smaller =
-    fresher output, larger = more late-data tolerance.
-
-At 100 TB scale: dedup state is O(keys inside the watermark horizon)
-spread across executors by the groupBy hash; session state is O(open
-sessions); both sinks write partition-parallel parquet.  Kafka/delta
-swap in at the readStream/writeStream call sites (connectors absent in
-this environment, documented at streaming/events.py:146).
-
-The documents plane (``StreamingCorpusPipeline``) runs its exact dedup
-on the same file sink; every later stage — LM gate, segment CMS, token
-stats, decon, the near-dedup gate — is a batch operator handed to the
-one micro-batch door, ``sources/io.start_batch_stage``, which writes
-idempotent ``batch_id=N`` partials.  Every read of those partials
+``StreamingCorpusPipeline`` runs its exact dedup on the checkpointed
+parquet file sink (``write_stream_parquet``); every later stage — LM
+gate, segment CMS, token stats, decon, the near-dedup gate — is a
+batch operator handed to the one micro-batch door,
+``sources/io.start_batch_stage``, which writes idempotent
+``batch_id=N`` partials.  Every read of those partials
 (``curated()``, ``drop_ledger()``, ``token_stats()``) passes the
 stage's checkpoint, so a partial dir lost after a commit raises
 instead of reading as empty.
@@ -49,32 +16,14 @@ instead of reading as empty.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 from prod2vec_spark.sources.artifacts import make_dirs
 from prod2vec_spark.sources.io import read_partials, start_batch_stage
-from prod2vec_spark.streaming.events import (
-    read_events_stream,
-    streaming_dedup,
-    streaming_sessions,
-    write_stream_parquet,
-)
+from prod2vec_spark.streaming.events import write_stream_parquet
 from prod2vec_spark.streaming.first_presenter import read_decisions
-
-# schema of stage 1's parquet output (post read_events_stream: ts is a
-# real timestamp regardless of the landing layout) — stage 2 declares
-# it up front, as file streams must
-_DEDUPED_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-_SESSIONS_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long"
-)
 
 
 def _read_output(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -88,80 +37,8 @@ def _read_output(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-@dataclass
-class StreamCurationConfig:
-    landing_dir: str
-    work_dir: str
-    dedup_keys: list[str] = field(default_factory=lambda: ["event_id"])
-    dedup_watermark: str = "3650 days"  # effectively unbounded for tests
-    session_gap: str = "30 minutes"
-    session_watermark: str = "1 minute"
-    ts_is_nanos: bool | None = None  # explicit override for empty landing dirs
-
-    @property
-    def deduped_dir(self) -> str:
-        return f"{self.work_dir}/deduped"
-
-    @property
-    def sessions_dir(self) -> str:
-        return f"{self.work_dir}/sessions"
-
-
-class StreamingCurationPipeline:
-    """Drain-style runner: each ``run()`` processes everything newly
-    available (trigger availableNow), then stops — the incremental
-    backfill mode.  A long-lived deployment replaces the trigger; the
-    dataflow is identical."""
-
-    def __init__(self, spark: SparkSession, cfg: StreamCurationConfig):
-        self.spark = spark
-        self.cfg = cfg
-
-    # -- stage 1: streaming exact dedup --------------------------------
-    def dedup_stage(self) -> None:
-        events = read_events_stream(
-            self.spark, self.cfg.landing_dir, ts_is_nanos=self.cfg.ts_is_nanos
-        )
-        deduped = streaming_dedup(
-            events, self.cfg.dedup_keys, watermark=self.cfg.dedup_watermark
-        )
-        q = write_stream_parquet(
-            deduped,
-            self.cfg.deduped_dir,
-            f"{self.cfg.work_dir}/ckpt_dedup",
-        )
-        q.awaitTermination()
-
-    # -- stage 2: streaming sessionization ------------------------------
-    def session_stage(self) -> None:
-        # stage 1 creates this dir only on its first commit; an empty
-        # landing dir must still let stage 2 start (and drain nothing)
-        make_dirs(self.spark, self.cfg.deduped_dir)
-        deduped = self.spark.readStream.schema(_DEDUPED_SCHEMA).parquet(
-            self.cfg.deduped_dir
-        )
-        sessions = streaming_sessions(
-            deduped,
-            gap=self.cfg.session_gap,
-            watermark=self.cfg.session_watermark,
-        )
-        q = write_stream_parquet(
-            sessions,
-            self.cfg.sessions_dir,
-            f"{self.cfg.work_dir}/ckpt_sessions",
-        )
-        q.awaitTermination()
-
-    # -- full drain ------------------------------------------------------
-    def run(self) -> DataFrame:
-        self.dedup_stage()
-        self.session_stage()
-        return _read_output(self.spark, self.cfg.sessions_dir, _SESSIONS_SCHEMA)
-
-
 # ---------------------------------------------------------------------
-# Streaming CORPUS curation: the documents-plane counterpart of the
-# events pipeline above, mirroring pipeline_llm.py's batch stages as
+# Streaming CORPUS curation: pipeline_llm.py's batch stages as
 # incremental streaming queries.
 # ---------------------------------------------------------------------
 
@@ -814,8 +691,8 @@ class StreamingCorpusPipeline:
         boundary chain over their committed artifacts.
 
         Scale shape: id-only left-anti joins per boundary, probe side
-        shrinking monotonically — identical to the batch ledger."""
-        from pyspark.sql import functions as F
+        shrinking monotonically — the batch ledger's own fold."""
+        from prod2vec_spark.pipeline_llm import fold_drop_ledger
 
         landing = self.spark.read.schema(_DOCS_SCHEMA).parquet(
             self.cfg.landing_dir
@@ -823,17 +700,7 @@ class StreamingCorpusPipeline:
         chain: list[tuple[str, DataFrame]] = []
         self._row_gates(landing, stages=chain)
         chain += self._boundaries()
-
-        prev = landing.select("doc_id")
-        ledger = None
-        for stage, df in chain:
-            cur = df.select("doc_id")
-            dropped = prev.join(cur, "doc_id", "left_anti").withColumn(
-                "dropped_at", F.lit(stage)
-            )
-            ledger = dropped if ledger is None else ledger.unionByName(dropped)
-            prev = cur
-        return ledger
+        return fold_drop_ledger(landing, chain)
 
     def run(self) -> DataFrame:
         """Drain everything available, overlapping the independent

@@ -16,8 +16,7 @@ from pyspark.sql import functions as F
 
 from prod2vec_spark.operators import phash as PH
 from prod2vec_spark.operators.multimodal import (
-    decode_media,
-    decode_wav,
+    decode_blob,
     encode_wav_adpcm,
     encode_wav_pcm16,
     wav_samples,
@@ -66,13 +65,18 @@ def test_adpcm_fact_chunk_truncates_block_padding_exactly():
 
 def test_adpcm_decode_wav_features():
     sig = _am(3)
-    d = decode_wav(encode_wav_adpcm(sig, sample_rate=SR))
-    assert d["format"] == "wav"
-    assert d["bit_depth"] == 4  # on-wire nibble depth
-    assert d["sample_rate"] == SR
-    assert d["duration_ms"] == pytest.approx(N / SR * 1000.0)
-    rms_pcm = decode_wav(encode_wav_pcm16(sig, sample_rate=SR))["rms"]
-    assert d["rms"] == pytest.approx(rms_pcm, rel=0.02)  # energy preserved
+    blob = encode_wav_adpcm(sig, sample_rate=SR)
+    assert decode_blob(blob)[:2] == ("wav", "decoded")
+    samples, m = wav_samples(blob)
+    assert m["codec"] == "ima_adpcm"  # 4-bit on-wire nibbles
+    assert m["framerate"] == SR
+    assert m["n_frames"] / m["framerate"] * 1000.0 == pytest.approx(N / SR * 1000.0)
+
+    def rms(x):
+        return float(np.sqrt(np.mean(np.asarray(x, dtype=np.float64) ** 2)))
+
+    rms_pcm = rms(wav_samples(encode_wav_pcm16(sig, sample_rate=SR))[0])
+    assert rms(samples) == pytest.approx(rms_pcm, rel=0.02)  # energy preserved
 
 
 def test_adpcm_rejects_stereo_and_garbage():
@@ -83,8 +87,8 @@ def test_adpcm_rejects_stereo_and_garbage():
         wav_samples(bytes(blob))
     # a truncated ADPCM blob is 'corrupt', never mis-decoded
     full = encode_wav_adpcm(_am(4))
-    assert decode_media("audio", full)["format"] == "wav"
-    assert decode_media("audio", full[:50])["format"] == "corrupt"
+    assert decode_blob(full)[:2] == ("wav", "decoded")
+    assert decode_blob(full[:50])[:2] == ("wav", "corrupt")
 
 
 def test_adpcm_rejects_bad_block_align():

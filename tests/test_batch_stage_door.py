@@ -203,6 +203,22 @@ def test_partials_read_with_their_declared_schema(spark, tmp_path):
         read_partials(spark, d, "n_docs long, n_words long")
 
 
+def test_partials_schema_is_the_same_before_and_after_first_commit(spark, tmp_path):
+    """A stage dir read before its first commit has the schema it has
+    once a ``batch_id=N`` partial exists: ``batch_id`` is ``int`` on
+    both sides, so a caller's schema never changes after the first
+    batch."""
+    schema = "n_docs long, n_tokens long"
+    d = str(tmp_path / "partials")
+    empty = read_partials(spark, d, schema)
+    assert empty.count() == 0
+    spark.createDataFrame([(3, 17)], schema).write.parquet(f"{d}/batch_id=0")
+    committed = read_partials(spark, d, schema)
+    assert [tuple(r) for r in committed.collect()] == [(3, 17, 0)]
+    assert empty.schema == committed.schema
+    assert dict(empty.dtypes)["batch_id"] == "int"
+
+
 def test_score_docs_through_the_door_matches_batch(spark, tmp_path):
     """``score_docs`` as a door's ``per_batch`` writes exactly the
     batch scores; a no-input restart leaves them unchanged."""

@@ -17,7 +17,7 @@ from prod2vec_spark.operators.gif import (
     encode_gif_gray8,
     gif_pixels,
 )
-from prod2vec_spark.operators.multimodal import decode_media, encode_png_gray8
+from prod2vec_spark.operators.multimodal import decode_blob, encode_png_gray8
 
 W, H = 40, 24
 
@@ -44,9 +44,10 @@ def test_gif_roundtrip_and_feature_row():
     got = np.frombuffer(rgb, dtype=np.uint8).reshape(H, W, 3)
     for c in range(3):  # gray palette: every channel IS the index
         assert np.array_equal(got[:, :, c], a)
-    d = decode_media("image", blob)
-    assert d["format"] == "gif"
-    assert (d["width"], d["height"], d["channels"]) == (W, H, 3)
+    d = decode_blob(blob)
+    assert d[:3] == ("gif", "decoded", "image")
+    assert d.gray.shape == (H, W)
+    assert np.array_equal(d.gray, a)
 
 
 def test_gif_interlaced_rows_deinterlaced():
@@ -89,20 +90,22 @@ def test_gif_corrupt_and_webp_boundary():
     a = _noise(6)
     blob = encode_gif_gray8(a.tobytes(), W, H)
     assert PH.media_hash(blob[:40])[1] is None  # truncated
-    assert decode_media("image", blob[:40])["format"] == "corrupt"
+    assert decode_blob(blob[:40])[:2] == ("gif", "corrupt")
     assert PH.media_hash(b"not a gif")[1] is None
     # WebP lossy: pixels stay the documented out-of-scope boundary —
-    # never mis-decoded; since r16 the HEADER is parsed, so an
-    # all-zero payload (no RFC 6386 start code) classifies corrupt
-    # rather than silently falling to raw byte stats
+    # never mis-decoded; the header parser rejects an all-zero payload
+    # (no RFC 6386 start code)
+    from prod2vec_spark.operators.webp import webp_info
+
     webp = b"RIFF\x24\x00\x00\x00WEBPVP8 " + bytes(24)
-    assert decode_media("image", webp)["format"] == "corrupt"
+    assert decode_blob(webp)[:2] == ("webp", "unsupported_format")
+    with pytest.raises(ValueError):
+        webp_info(webp)
     assert PH.image_gray(webp) is None
-    # a WELL-FORMED lossy header gets real dims (the r16 feature row)
+    # a WELL-FORMED lossy header gets real dims
     from tests.test_webp import make_lossy_webp
 
-    good_hdr = decode_media("image", make_lossy_webp(40, 30))
-    assert good_hdr["format"] == "webp_lossy"
+    good_hdr = webp_info(make_lossy_webp(40, 30))
     assert (good_hdr["width"], good_hdr["height"]) == (40, 30)
     assert PH.image_gray(make_lossy_webp(40, 30)) is None  # still no pixels
 

@@ -16,8 +16,7 @@ import numpy as np
 from prod2vec_spark.operators import phash as PH
 from prod2vec_spark.operators.jpeg import decode_jpeg_gray, encode_jpeg_gray
 from prod2vec_spark.operators.multimodal import (
-    decode_jpeg,
-    decode_media,
+    decode_blob,
     encode_png_gray8,
 )
 
@@ -35,25 +34,34 @@ def _image(seed: int) -> bytes:
 
 def test_decode_media_dispatches_jpeg_and_flags_corrupt():
     blob = encode_jpeg_gray(_image(1), W, H, quality=90)
-    d = decode_media("image", blob)
-    assert d["format"] == "jpeg"
-    assert (d["width"], d["height"], d["bit_depth"]) == (W, H, 8)
+    d = decode_blob(blob)
+    assert d[:3] == ("jpeg", "decoded", "image")
+    assert d.gray.shape == (H, W)
     gray, w, h = decode_jpeg_gray(blob)
-    assert d["pixel_digest"] == hashlib.md5(gray).hexdigest()
-    assert abs(d["mean_pixel_byte"] - sum(gray) / len(gray)) < 1e-9
+    assert hashlib.md5(d.gray.astype(np.uint8).tobytes()).hexdigest() == (
+        hashlib.md5(gray).hexdigest()
+    )
+    assert abs(d.gray.mean() - sum(gray) / len(gray)) < 1e-9
     # corrupt: valid SOI but truncated stream -> 'corrupt', never a throw
-    assert decode_media("image", blob[:20])["format"] == "corrupt"
-    # progressive/unsupported coding also flags corrupt, not mis-decode
-    assert decode_media("image", b"\xff\xd8\xff\xc2\x00\x04\x00\x00")["format"] == (
-        "corrupt"
+    assert decode_blob(blob[:20])[:2] == ("jpeg", "corrupt")
+    # a progressive frame with no scan data also flags corrupt, not mis-decode
+    assert decode_blob(b"\xff\xd8\xff\xc2\x00\x04\x00\x00")[:2] == (
+        "jpeg",
+        "corrupt",
     )
 
 
 def test_decode_jpeg_feature_row_matches_png_shape():
-    """The JPEG feature row carries the same typed keys as decode_png
-    so extract_features' fixed schema picks them up unchanged."""
-    d = decode_jpeg(encode_jpeg_gray(_image(2), W, H))
-    assert set(d) >= {"format", "width", "height", "bit_depth", "pixel_digest"}
+    """A JPEG decodes to the same record shape as a PNG of the same
+    size — an image-modality (H, W) gray plane and nothing else — so
+    every image operator reads both unchanged."""
+    px = _image(2)
+    jpg = decode_blob(encode_jpeg_gray(px, W, H))
+    png = decode_blob(encode_png_gray8(px, W, H))
+    for d in (jpg, png):
+        assert d.modality == "image" and d.status == "decoded"
+        assert d.gray.shape == (H, W)
+        assert d.audio is None and d.video is None
 
 
 def test_standalone_markers_do_not_break_the_walk():
@@ -162,10 +170,12 @@ def test_progressive_jpeg_dhash_bit_identical_and_corrupt_unchanged():
     assert np.array_equal(PH.image_gray(prog), PH.image_gray(base))
     # corrupt handling unchanged
     assert PH.media_hash(prog[:60])[1] is None
-    assert decode_media("image", prog[:60])["format"] == "corrupt"
-    d = decode_media("image", prog)
-    assert d["format"] == "jpeg"
-    assert d["pixel_digest"] == hashlib.md5(decode_jpeg_gray(prog)[0]).hexdigest()
+    assert decode_blob(prog[:60])[:2] == ("jpeg", "corrupt")
+    d = decode_blob(prog)
+    assert d[:2] == ("jpeg", "decoded")
+    assert hashlib.md5(d.gray.astype(np.uint8).tobytes()).hexdigest() == (
+        hashlib.md5(decode_jpeg_gray(prog)[0]).hexdigest()
+    )
 
 
 def test_progressive_parity_property():

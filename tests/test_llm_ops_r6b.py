@@ -227,6 +227,10 @@ def test_semdedup_rejects_all_zero_corpus(spark):
     )
     with pytest.raises(ValueError, match="no non-zero-norm"):
         semdedup(df, dims=8, n_clusters=2)
+    # all-zero SUPPLIED centroids are rejected too
+    planted = _planted_embeddings(spark)
+    with pytest.raises(ValueError, match="zero"):
+        semdedup(planted, dims=64, centroids=[[0.0] * 64, [0.0] * 64])
 
 
 def test_pii_scrub_plants_and_redacts_exactly(spark):
@@ -406,26 +410,6 @@ def test_winnowing_guarantees_long_span_detection(spark):
         ["doc_id", "text"],
     )
     assert winnow_candidate_pairs(df2, k=8, w=8).count() == 0
-
-
-def test_kmeans_semdedup_recovers_planted_duplicates(spark):
-    """The Lloyd-refined SemDeDup variant must recover the planted
-    duplicate families (verbatim copies 0/1/2 → keep 0; near-copies
-    10/11 → keep 10), partition every vector exactly once, and reject
-    all-zero supplied centroids."""
-    from prod2vec_spark.ml.clustering import kmeans_semdedup
-    from prod2vec_spark.operators.simsearch import semdedup
-
-    df = _planted_embeddings(spark)
-    out = kmeans_semdedup(df, dims=64, n_clusters=4, threshold=0.9)
-    rows = out.collect()
-    assert len(rows) == df.count() and len({r["id"] for r in rows}) == len(rows)
-    kept = {r["id"] for r in rows if r["kept"]}
-    assert 0 in kept and 1 not in kept and 2 not in kept
-    assert 10 in kept and 11 not in kept
-
-    with pytest.raises(ValueError, match="zero"):
-        semdedup(df, dims=64, centroids=[[0.0] * 64, [0.0] * 64])
 
 
 def test_winnowing_detects_random_planted_spans_property(spark):

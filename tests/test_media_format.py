@@ -130,25 +130,24 @@ def test_dag_media_format_audit_artifact(spark, tmp_path):
 
 
 def test_media_format_golden_dims_match_live_parser():
-    """Honesty lock for the r16 header-feature golden columns: the
-    persisted dec_format/width/height must equal a fresh
-    decode_media pass over the raw blobs — the oracle replays goldens
-    only because this test pins them to the live parser."""
+    """The planted lossy-WebP rows carry well-formed key-frame
+    headers: the live header parser reads back exactly the dims the
+    generator planted (tools/gen_media_format_fixture.py: width
+    33 + id % 64, height 17 + id % 48), while the decode door keeps
+    their pixels the unsupported boundary."""
     import pandas as pd
 
-    from prod2vec_spark.operators.multimodal import decode_media
+    from prod2vec_spark.operators.webp import _vp8l_payload, webp_info
     from prod2vec_spark.queries.common import _media_format_fixture_path
 
     df = pd.read_parquet(_media_format_fixture_path())
-    for r in df.itertuples():
-        d = decode_media("media", bytes(r.blob))
-        assert d["format"] == r.dec_format, r.media_id
-        assert d.get("width") == (
-            None if pd.isna(r.width) else int(r.width)
+    webp = df[df.fmt == "webp"]
+    lossy = [r for r in webp.itertuples() if _vp8l_payload(bytes(r.blob)) is None]
+    assert len(lossy) > 0
+    for r in lossy:
+        assert r.status == "unsupported_format", r.media_id
+        d = webp_info(bytes(r.blob))
+        assert (d["width"], d["height"]) == (
+            33 + r.media_id % 64,
+            17 + r.media_id % 48,
         ), r.media_id
-        assert d.get("height") == (
-            None if pd.isna(r.height) else int(r.height)
-        ), r.media_id
-    # the lossy rows really carry dims now (the r16 point)
-    lossy = df[df.dec_format == "webp_lossy"]
-    assert len(lossy) > 0 and lossy["width"].notna().all()

@@ -10,7 +10,7 @@ import struct
 import pytest
 
 from prod2vec_spark.operators.mediainfo import mp3_info, mp4_info
-from prod2vec_spark.operators.multimodal import decode_blob, decode_media
+from prod2vec_spark.operators.multimodal import decode_blob
 
 
 def _box(btype: bytes, payload: bytes) -> bytes:
@@ -104,19 +104,19 @@ def test_mp3_info_tables_and_duration_estimate():
 
 def test_classify_and_decode_media_mp4_mp3():
     """decode_blob sniffs the new containers (payloads stay the
-    unsupported boundary); decode_media emits metadata feature rows
-    instead of raw byte stats; truncation classifies corrupt."""
+    unsupported boundary); the metadata walks read their header
+    fields; truncation classifies corrupt."""
+    from prod2vec_spark.operators.mediainfo import mp3_info, mp4_info
+
     mp4 = make_mp4(480, 270, 5_000)
     assert decode_blob(mp4)[:2] == ("mp4", "unsupported_format")
-    d = decode_media("video", mp4)
-    assert d["format"] == "mp4_meta"
+    d = mp4_info(mp4)
     assert (d["width"], d["height"], d["duration_ms"]) == (480, 270, 5_000)
     assert decode_blob(mp4[:40])[:2] == ("mp4", "corrupt")
 
     mp3 = make_mp3(4_000)
     assert decode_blob(mp3)[:2] == ("mp3", "unsupported_format")
-    d3 = decode_media("audio", mp3)
-    assert d3["format"] == "mp3_meta" and d3["sample_rate"] == 44100
+    assert mp3_info(mp3)["sample_rate"] == 44100
     # ID3 prefix with a broken frame -> corrupt (strong magic)
     broken = b"ID3\x04\x00\x00\x00\x00\x00\x00" + b"\x00\x00\x00\x00"
     assert decode_blob(broken)[:2] == ("mp3", "corrupt")
@@ -169,8 +169,7 @@ def test_flac_info_exact_duration():
         flac_info(b"fLaC\x00\x00\x00")
     assert decode_blob(make_flac())[:2] == ("flac", "unsupported_format")
     assert decode_blob(b"fLaC" + b"\x00" * 3)[:2] == ("flac", "corrupt")
-    d = decode_media("audio", make_flac())
-    assert d["format"] == "flac_meta" and d["sample_rate"] == 44100
+    assert flac_info(make_flac())["sample_rate"] == 44100
 
 
 def test_adts_info_frame_walk():
@@ -186,8 +185,6 @@ def test_adts_info_frame_walk():
         adts_info(blob[:-5])
     # classification: ADTS and MP3 never both claim (layer bits 00)
     assert decode_blob(blob)[:2] == ("aac", "unsupported_format")
-    d = decode_media("audio", blob)
-    assert d["format"] == "aac_meta" and d["duration_ms"] == inf["duration_ms"]
     from tests.test_mediainfo import make_mp3 as _mk  # self-import ok
     assert decode_blob(_mk(1000))[:2] == ("mp3", "unsupported_format")
 
@@ -251,5 +248,4 @@ def test_ogg_info_opus_and_vorbis():
         ogg_info(b"OggS" + b"\x00" * 5)  # truncated page header
     assert decode_blob(make_opus())[:2] == ("ogg", "unsupported_format")
     assert decode_blob(b"OggS" + b"\x00" * 3)[:2] == ("ogg", "corrupt")
-    d = decode_media("audio", make_opus(duration_ms=1000))
-    assert d["format"] == "ogg_meta" and d["duration_ms"] == 1000
+    assert ogg_info(make_opus(duration_ms=1000))["duration_ms"] == 1000

@@ -18,8 +18,7 @@ import prod2vec_spark.operators.jpeg as J
 from prod2vec_spark.operators.jpeg import decode_jpeg_gray, encode_jpeg_gray
 from prod2vec_spark.operators.multimodal import (
     avi_frames,
-    decode_avi,
-    decode_media,
+    decode_blob,
     encode_avi_gray8,
     encode_avi_mjpeg,
 )
@@ -186,12 +185,11 @@ def test_mjpeg_avi_roundtrip_bounded_error():
 def test_mjpeg_decode_avi_features_and_dispatch():
     frames = _clip(9, n_frames=10)
     blob = encode_avi_mjpeg(frames, W, H, fps=5)
-    d = decode_avi(blob)
-    assert d["format"] == "avi"
-    assert (d["width"], d["height"], d["n_frames"]) == (W, H, 10)
-    assert d["duration_ms"] == 2000.0
-    assert decode_media("video", blob)["format"] == "avi"
-    assert decode_media("video", blob[:60])["format"] == "corrupt"
+    got, m = avi_frames(blob)
+    assert (m["width"], m["height"], m["n_frames"]) == (W, H, 10)
+    assert m["n_frames"] / m["fps"] * 1000.0 == 2000.0
+    assert decode_blob(blob)[:3] == ("avi", "decoded", "video")
+    assert decode_blob(blob[:60])[:2] == ("avi", "corrupt")
 
 
 def test_mjpeg_frame_dims_must_match_header():

@@ -1,6 +1,6 @@
 """Multimodal plumbing: schema contract, Arrow batch shape, REAL
-stdlib PNG/WAV decode with golden values (round-6 — only video decode
-remains stubbed), and the Spark-side dataflow end-to-end."""
+stdlib PNG/WAV decode with golden values, and the Spark-side dataflow
+end-to-end."""
 
 from __future__ import annotations
 
@@ -13,15 +13,14 @@ import zlib
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.multimodal import (
-    FEATURE_SCHEMA,
     PNG_SIG,
     attach_blobs,
-    decode_media,
-    decode_png,
-    decode_wav,
-    extract_features,
+    decode_blob,
     frame_sample_plan,
+    media_format_rows,
     png_header,
+    png_pixels,
+    wav_samples,
 )
 from prod2vec_spark.sources.io import read_table
 from tests.conftest import SF_SMOKE
@@ -95,21 +94,21 @@ def test_png_decode_golden_all_filters():
             bytes([15, 25, 35, 45, 55, 65, 75, 85, 95])]
     expected = hashlib.md5(b"".join(rows)).hexdigest()
     for filters in [(0, 0), (1, 2), (3, 4), (4, 4), (2, 3), (1, 4), (4, 1)]:
-        d = decode_png(make_png(3, 2, rows, filters))
-        assert (d["width"], d["height"], d["bit_depth"], d["color_type"]) == (3, 2, 8, 2)
-        assert d["pixel_digest"] == expected, filters
-        assert abs(d["mean_pixel_byte"] - (sum(b"".join(rows)) / 18)) < 1e-9
+        px, hdr = png_pixels(make_png(3, 2, rows, filters))
+        assert (hdr["width"], hdr["height"], hdr["bit_depth"], hdr["color_type"]) == (3, 2, 8, 2)
+        assert hashlib.md5(px).hexdigest() == expected, filters
+        assert abs(sum(px) / len(px) - (sum(b"".join(rows)) / 18)) < 1e-9
 
 
 def test_png_decode_grayscale_and_rgba():
     gray = [bytes([0, 128, 255])]
-    d = decode_png(make_png(3, 1, gray, (4,), channels=1))
-    assert (d["channels"], d["color_type"]) == (1, 0)
-    assert d["pixel_digest"] == hashlib.md5(gray[0]).hexdigest()
+    px, hdr = png_pixels(make_png(3, 1, gray, (4,), channels=1))
+    assert (hdr["channels"], hdr["color_type"]) == (1, 0)
+    assert hashlib.md5(px).hexdigest() == hashlib.md5(gray[0]).hexdigest()
     rgba = [bytes(range(16)), bytes(range(100, 116))]
-    d = decode_png(make_png(4, 2, rgba, (2, 4), channels=4))
-    assert (d["channels"], d["color_type"]) == (4, 6)
-    assert d["pixel_digest"] == hashlib.md5(b"".join(rgba)).hexdigest()
+    px, hdr = png_pixels(make_png(4, 2, rgba, (2, 4), channels=4))
+    assert (hdr["channels"], hdr["color_type"]) == (4, 6)
+    assert hashlib.md5(px).hexdigest() == hashlib.md5(b"".join(rgba)).hexdigest()
 
 
 def test_png_decode_reference_assets():
@@ -124,32 +123,36 @@ def test_png_decode_reference_assets():
     for name, (w, h, digest) in expected.items():
         blob = open(f"{REF_IMG}/{name}", "rb").read()
         hdr = png_header(blob)
-        d = decode_png(blob)
-        assert (d["width"], d["height"]) == (hdr["width"], hdr["height"]) == (w, h)
-        assert (d["bit_depth"], d["color_type"]) == (8, 6)
-        assert d["pixel_digest"] == digest
+        px, m = png_pixels(blob)
+        assert (m["width"], m["height"]) == (hdr["width"], hdr["height"]) == (w, h)
+        assert (m["bit_depth"], m["color_type"]) == (8, 6)
+        assert hashlib.md5(px).hexdigest() == digest
+
+
+def _rms(samples) -> float:
+    return (sum(s * s for s in samples) / len(samples)) ** 0.5
 
 
 def test_wav_decode_golden():
     """Square wave of amplitude 1000 → RMS exactly 1000; duration and
     rate from the container header."""
-    d = decode_wav(make_wav([1000, -1000] * 2000))
-    assert d == {
-        "format": "wav", "sample_rate": 8000, "n_channels": 1,
-        "bit_depth": 16, "duration_ms": 500.0, "rms": 1000.0,
-    }
+    samples, m = wav_samples(make_wav([1000, -1000] * 2000))
+    assert (m["framerate"], m["n_channels"], m["sampwidth"] * 8) == (8000, 1, 16)
+    assert m["n_frames"] / m["framerate"] * 1000.0 == 500.0
+    assert _rms(samples) == 1000.0
     # 8-bit unsigned: constant 128 is digital silence (RMS 0)
-    d8 = decode_wav(make_wav([128] * 100, sample_rate=4000, sampwidth=1))
-    assert (d8["rms"], d8["bit_depth"], d8["duration_ms"]) == (0.0, 8, 25.0)
+    s8, m8 = wav_samples(make_wav([128] * 100, sample_rate=4000, sampwidth=1))
+    assert (_rms(s8), m8["sampwidth"] * 8) == (0.0, 8)
+    assert m8["n_frames"] / m8["framerate"] * 1000.0 == 25.0
 
 
 def test_decode_media_dispatch():
     png = make_png(1, 1, [bytes([7, 8, 9])], (0,))
-    assert decode_media("image", png)["format"] == "png"
-    assert decode_media("audio", make_wav([0] * 10))["format"] == "wav"
-    assert decode_media("video", b"opaque video bytes")["format"] == "raw"
-    assert decode_media("image", PNG_SIG + b"truncated")["format"] == "corrupt"
-    assert decode_media("audio", b"RIFF\x00\x00\x00\x00WAVEjunk")["format"] == "corrupt"
+    assert decode_blob(png)[:2] == ("png", "decoded")
+    assert decode_blob(make_wav([0] * 10))[:2] == ("wav", "decoded")
+    assert decode_blob(b"opaque video bytes")[:2] == ("unknown", "unsupported_format")
+    assert decode_blob(PNG_SIG + b"truncated")[:2] == ("png", "corrupt")
+    assert decode_blob(b"RIFF\x00\x00\x00\x00WAVEjunk")[:2] == ("wav", "corrupt")
 
 
 def test_feature_extraction_contract(spark):
@@ -157,31 +160,21 @@ def test_feature_extraction_contract(spark):
     # the raw scan — file-order-dependent by construction
     docs = read_table(spark, SF_SMOKE, "documents", spread=False).limit(50)
     media = attach_blobs(docs)
-    feats = extract_features(media)
-    rows = feats.collect()
+    rows_df = media_format_rows(media)
+    rows = rows_df.collect()
     assert len(rows) == 50
-    assert feats.schema.simpleString() == (
-        "struct<media_id:bigint,media_type:string,n_bytes:int,"
-        "blob_digest:string,format:string,width:int,height:int,"
-        "bit_depth:int,sample_rate:int,duration_ms:double,rms:double,"
-        "pixel_digest:string,feature:array<float>>"
+    assert rows_df.schema.simpleString() == (
+        "struct<media_id:bigint,fmt:string,status:string>"
     )
-    by_id = {r["media_id"]: r for r in rows}
-    src = {r["doc_id"]: r["text"] for r in docs.collect()}
-    for mid, r in by_id.items():
-        blob = src[mid].encode()
-        assert r["n_bytes"] == len(blob)
-        assert r["blob_digest"] == hashlib.md5(blob).hexdigest()
-        assert r["format"] == "raw"  # text blobs are not PNG/WAV
-        assert r["width"] is None and r["rms"] is None
-        assert len(r["feature"]) == 4
-        assert r["feature"][0] == float(len(blob))
+    assert {r["media_id"] for r in rows} == {r["doc_id"] for r in docs.collect()}
+    for r in rows:  # text blobs are not media
+        assert (r["fmt"], r["status"]) == ("unknown", "unsupported_format")
 
 
 def test_extract_features_decodes_real_blobs(spark):
-    """End-to-end through Spark: PNG, WAV, video, and corrupt blobs in
+    """End-to-end through Spark: PNG, WAV, opaque and corrupt blobs in
     one DataFrame — the mapInPandas stage dispatches the real decoders
-    and the typed metadata columns come back per-format."""
+    per blob; the decoded payloads carry the per-format values."""
     rows = [bytes([10, 20, 30, 40, 50, 60]), bytes([1, 2, 3, 4, 5, 6])]
     png = make_png(2, 2, rows, (1, 4))
     wav = make_wav([500, -500] * 400, sample_rate=16000)
@@ -194,18 +187,22 @@ def test_extract_features_decodes_real_blobs(spark):
     media = spark.createDataFrame(
         data, "media_id long, media_type string, width int, height int, "
         "duration_ms int, blob binary")
-    out = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert (out[1]["format"], out[1]["width"], out[1]["height"], out[1]["bit_depth"]) == (
-        "png", 2, 2, 8)
-    assert out[1]["pixel_digest"] == hashlib.md5(b"".join(rows)).hexdigest()
-    assert out[1]["rms"] is None
-    assert (out[2]["format"], out[2]["sample_rate"], out[2]["duration_ms"]) == (
-        "wav", 16000, 50.0)
-    assert out[2]["rms"] == 500.0 and out[2]["width"] is None
-    assert out[3]["format"] == "raw" and out[3]["pixel_digest"] is None
-    assert out[4]["format"] == "corrupt"
-    for r in out.values():  # generic byte-stats features always present
-        assert len(r["feature"]) == 4 and r["feature"][0] == float(r["n_bytes"])
+    out = {r["media_id"]: (r["fmt"], r["status"])
+           for r in media_format_rows(media).collect()}
+    assert out == {
+        1: ("png", "decoded"),
+        2: ("wav", "decoded"),
+        3: ("unknown", "unsupported_format"),
+        4: ("png", "corrupt"),
+    }
+    px, hdr = png_pixels(png)
+    assert (hdr["width"], hdr["height"], hdr["bit_depth"]) == (2, 2, 8)
+    assert hashlib.md5(px).hexdigest() == hashlib.md5(b"".join(rows)).hexdigest()
+    d = decode_blob(png)
+    assert d.gray.shape == (2, 2) and d.audio is None
+    signal, rate = decode_blob(wav).audio
+    assert (rate, signal.size / rate * 1000.0) == (16000, 50.0)
+    assert _rms(signal) == 500.0
 
 
 def test_metadata_filter_avoids_blob_read(spark):
@@ -233,26 +230,3 @@ def test_frame_sample_plan(spark):
     # every video with nonzero duration contributes frames
     vids = {m for m, d in durations.items() if m % 3 == 2}
     assert vids == {r["media_id"] for r in rows} | {m for m in vids if durations[m] == 0}
-
-
-def test_extract_features_leaves_session_conf_alone(spark):
-    """batch_hint must NOT leak into session conf (round-2 side
-    effect); arrow_batch_scope restores the previous value."""
-    from prod2vec_spark.operators.multimodal import (
-        arrow_batch_scope,
-        attach_blobs,
-        extract_features,
-    )
-    from prod2vec_spark.sources.io import read_table
-    from tests.conftest import SF_SMOKE
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    before = spark.conf.get(key, None)
-    media = attach_blobs(read_table(spark, SF_SMOKE, "documents").limit(40))
-    out = extract_features(media, batch_hint=7)
-    assert out.count() == 40
-    assert spark.conf.get(key, None) == before
-    with arrow_batch_scope(spark, 16):
-        assert spark.conf.get(key) == "16"
-        assert extract_features(media).count() == 40
-    assert spark.conf.get(key, None) == before

@@ -317,30 +317,6 @@ def test_salted_join_equals_plain_join(spark):
     assert got == plain and len(got) == 501
 
 
-def test_arrow_cosine_matches_hof_path(spark):
-    """The pandas_udf cosine variant must return the same neighbor
-    sets and ranks as the exact interpreted-fold path (float drift is
-    ~1 ulp — only sub-1e-12 ties could flip, none in the testdata)."""
-    import pytest as _pytest
-
-    from prod2vec_spark.operators.simsearch import (
-        brute_force_topk,
-        brute_force_topk_arrow,
-    )
-    from tests.conftest import SF_SMOKE
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-             for r in brute_force_topk(emb, q, k=5).collect()}
-    arrow = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-             for r in brute_force_topk_arrow(emb, q, k=5).collect()}
-    assert set(exact) == set(arrow)
-    for key in exact:
-        assert exact[key][0] == arrow[key][0]
-        assert exact[key][1] == _pytest.approx(arrow[key][1], abs=1e-5)
-
-
 def test_bin_range_join_left_keeps_unmatched(spark):
     """how='left' must null-extend unmatched points (round-2 bug:
     post-join residual filter silently dropped them = inner)."""
@@ -521,44 +497,6 @@ def test_connected_components_rounds_bound_on_lsh_graph(spark):
     labels, rounds = connected_components_with_rounds(pairs, src="doc_a", dst="doc_b")
     assert labels.count() > 0
     assert rounds <= 4, f"LSH dedup graph took {rounds} rounds — near-clique claim broken"
-
-
-def test_star_cc_matches_propagation(spark):
-    """Large-star/small-star CC must produce the identical
-    (node, comp) labeling as min-label propagation on an arbitrary
-    mixed graph (cliques + chains + a singleton pair)."""
-    from prod2vec_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    edges = spark.createDataFrame(
-        [(5, 9), (9, 7), (7, 5), (100, 101), (3, 11), (11, 2), (2, 40)],
-        "src: long, dst: long",
-    )
-    want = {(r["node"], r["comp"]) for r in connected_components(edges).collect()}
-    labels, _ = connected_components_star(edges)
-    got = {(r["node"], r["comp"]) for r in labels.collect()}
-    assert got == want
-
-
-@pytest.mark.slow  # driver-budget suite skips (VERDICT r16 ask #3)
-def test_star_cc_beats_diameter_on_long_chain(spark):
-    """The reason the two-phase algorithm exists: on a path graph of
-    diameter 63, min-label propagation needs ~63 rounds while
-    large-star/small-star must finish in O(log² n) — assert ≤ 10
-    rounds AND a correct single component."""
-    from prod2vec_spark.operators.graph import connected_components_star
-
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src: long, dst: long"
-    )
-    labels, rounds = connected_components_star(edges)
-    rows = labels.collect()
-    assert len(rows) == n
-    assert {r["comp"] for r in rows} == {0}, "chain must collapse to one component"
-    assert rounds <= 10, f"two-phase CC took {rounds} rounds on a 64-chain"
 
 
 def test_kmeans_assignment_is_nearest_centroid(spark):
@@ -748,22 +686,16 @@ def test_skew_safe_count_distinct_exact(spark):
 def test_cc_raises_on_max_iter_exhaustion(spark):
     """A truncated run must not masquerade as a fixed point (ADVICE
     r5): a diameter-7 chain cannot converge in 2 propagation rounds,
-    and both CC variants must raise rather than return partial
-    labels."""
+    and CC must raise rather than return partial labels."""
     import pytest
 
-    from prod2vec_spark.operators.graph import (
-        connected_components_star,
-        connected_components_with_rounds,
-    )
+    from prod2vec_spark.operators.graph import connected_components_with_rounds
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "src: long, dst: long"
     )
     with pytest.raises(RuntimeError, match="no fixed point"):
         connected_components_with_rounds(edges, max_iter=2)
-    with pytest.raises(RuntimeError, match="no fixed point"):
-        connected_components_star(edges, max_iter=1)
     # with enough budget the same graphs converge fine
     labels, _ = connected_components_with_rounds(edges, max_iter=25)
     assert {r["comp"] for r in labels.collect()} == {0}
@@ -812,17 +744,12 @@ def test_kmeans_ivf_all_zero_corpus_raises(spark):
 @pytest.mark.slow  # driver-budget suite skips (VERDICT r16 ask #3)
 def test_cc_both_algorithms_match_union_find_property(spark):
     """Property (hypothesis): on arbitrary random graphs (self-loops,
-    duplicates, multi-component, chains) BOTH distributed CC
-    implementations must produce exactly the component partition of a
-    driver-side union-find reference — label propagation and
-    large-star/small-star are interchangeable correctness-wise, they
-    differ only in round complexity."""
+    duplicates, multi-component, chains) distributed CC must produce
+    exactly the component partition of a driver-side union-find
+    reference."""
     from hypothesis import given, settings, strategies as st
 
-    from prod2vec_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from prod2vec_spark.operators.graph import connected_components
 
     @settings(max_examples=8, deadline=None)
     @given(
@@ -856,23 +783,20 @@ def test_cc_both_algorithms_match_union_find_property(spark):
             r = find(n)
             comp_min[r] = min(comp_min.get(r, n), n)
         want = {n: comp_min[find(n)] for n in parent}
-        # nodes whose ONLY edges are self-loops: propagation keeps them
-        # as singletons, star drops them (documented — self-loops are
-        # filtered; callers union singletons back).  Compare on the
-        # common domain, and require any extra node to be a singleton.
+        # nodes whose ONLY edges are self-loops stay singletons:
+        # compare on the real-edge domain, and require any extra node
+        # to be a singleton.
         real = {n for a, b in edges if a != b for n in (a, b)}
 
         e = spark.createDataFrame(edges, "src long, dst long")
-        for fn in (connected_components, connected_components_star):
-            out = fn(e, src="src", dst="dst")
-            labels = out[0] if isinstance(out, tuple) else out
-            got = {r["node"]: r["comp"] for r in labels.collect()}
-            assert {n: c for n, c in got.items() if n in real} == {
-                n: c for n, c in want.items() if n in real
-            }, fn.__name__
-            for n, c in got.items():
-                if n not in real:
-                    assert c == n, fn.__name__
+        labels = connected_components(e, src="src", dst="dst")
+        got = {r["node"]: r["comp"] for r in labels.collect()}
+        assert {n: c for n, c in got.items() if n in real} == {
+            n: c for n, c in want.items() if n in real
+        }
+        for n, c in got.items():
+            if n not in real:
+                assert c == n
 
     check()
 
@@ -963,14 +887,11 @@ def test_cc_reliable_checkpoint_equivalence(spark, tmp_path):
     """VERDICT r14 ask #7: passing checkpoint_dir switches the
     per-round lineage breaks to RELIABLE checkpoints (survive executor
     loss on a real cluster) — labels and rounds must be identical to
-    the localCheckpoint path on both CC variants, and the checkpoint
-    dir must actually receive data."""
+    the localCheckpoint path, and the checkpoint dir must actually
+    receive data."""
     import os
 
-    from prod2vec_spark.operators.graph import (
-        connected_components_star,
-        connected_components_with_rounds,
-    )
+    from prod2vec_spark.operators.graph import connected_components_with_rounds
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9), (10, 11), (11, 12), (12, 13)],
@@ -986,13 +907,6 @@ def test_cc_reliable_checkpoint_equivalence(spark, tmp_path):
     assert any(files for _, _, files in os.walk(ckpt)), (
         "reliable checkpoint dir received no data"
     )
-    want_s, _ = connected_components_star(edges)
-    got_s, _ = connected_components_star(
-        edges, checkpoint_dir=str(tmp_path / "star_ckpt")
-    )
-    assert {(r["node"], r["comp"]) for r in got_s.collect()} == {
-        (r["node"], r["comp"]) for r in want_s.collect()
-    }
 
 
 def test_break_lineage_warns_on_checkpoint_root_repoint(spark, tmp_path):

@@ -243,11 +243,9 @@ def test_register_query_views_sql_surface(spark):
 
 def test_file_audit_and_compaction(spark, tmp_path):
     """file_audit reports per-file rows/bytes + the small flag over a
-    deliberately fragmented dataset; compact_parquet rewrites it into
-    one right-sized file with identical content and no shuffle."""
-    from pyspark.sql import functions as F
-
-    from prod2vec_spark.sources.io import compact_parquet, file_audit, read_table
+    deliberately fragmented dataset — the signal that decides when a
+    table needs compacting."""
+    from prod2vec_spark.sources.io import file_audit, read_table
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents")
@@ -261,73 +259,3 @@ def test_file_audit_and_compaction(spark, tmp_path):
     # 50 docs over 16 files: every file is far below 32MB
     assert all(r["is_small"] == 1 for r in audit)
 
-    out = str(tmp_path / "compacted")
-    n = compact_parquet(spark, frag, out, target_file_bytes=32 * 1024 * 1024)
-    assert n == 1
-    after = file_audit(spark, out).collect()
-    assert len(after) == 1
-    # content identical (order-insensitive)
-    a = sorted(map(tuple, spark.read.parquet(out).collect()))
-    b = sorted(map(tuple, docs.collect()))
-    assert a == b
-
-
-def test_zorder_layout_tightens_ranges_on_both_columns(spark, tmp_path):
-    """Data-skipping claim verified from parquet footers: after a
-    Z-order write on (user_id, value), BOTH columns' average per-file
-    min/max range is a small fraction of the global range; a
-    single-column sort leaves the other column's per-file ranges at
-    ~the full global span."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from prod2vec_spark.operators.layout import write_zordered
-    from prod2vec_spark.sources.io import read_table
-    from tests.conftest import SF_SMOKE
-
-    ev = read_table(spark, SF_SMOKE, "events").select("user_id", "value")
-    g = ev.agg(
-        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
-    ).first()
-    lo = {"user_id": (g[0], g[1]), "value": (g[2], g[3])}
-
-    def avg_range_fraction(path, col):
-        gmn, gmx = lo[col]
-        span = float(gmx) - float(gmn)
-        fracs = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            cmn, cmx = None, None
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    c = md.row_group(rg).column(ci)
-                    if c.path_in_schema == col and c.statistics:
-                        s = c.statistics
-                        cmn = s.min if cmn is None else min(cmn, s.min)
-                        cmx = s.max if cmx is None else max(cmx, s.max)
-            if cmn is not None:
-                fracs.append((float(cmx) - float(cmn)) / span)
-        assert fracs
-        return sum(fracs) / len(fracs)
-
-    zpath = str(tmp_path / "zorder")
-    write_zordered(ev, zpath, ["user_id", "value"], n_files=8)
-    spath = str(tmp_path / "single")
-    (
-        ev.repartitionByRange(8, "user_id")
-        .sortWithinPartitions("user_id")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-
-    # single-column sort: user_id tight, value near-full span per file
-    assert avg_range_fraction(spath, "user_id") < 0.3
-    assert avg_range_fraction(spath, "value") > 0.7
-    # z-order: BOTH columns substantially tighter than full span
-    # (measured ~0.41/0.35 on the fixture)
-    zu = avg_range_fraction(zpath, "user_id")
-    zv = avg_range_fraction(zpath, "value")
-    assert zu < 0.55 and zv < 0.55, (zu, zv)
-    # and content survives the relayout
-    assert spark.read.parquet(zpath).count() == ev.count()

@@ -22,10 +22,7 @@ from pyspark.ml.linalg import Vectors
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators import text as TX
-from prod2vec_spark.operators.graph import (
-    connected_components_star,
-    connected_components_with_rounds,
-)
+from prod2vec_spark.operators.graph import connected_components_with_rounds
 from prod2vec_spark.pipeline import PipelineConfig, Prod2VecPipeline
 from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
 from prod2vec_spark.sources.io import checkpoint
@@ -225,8 +222,8 @@ CC_EDGES = (
 @pytest.mark.parametrize(
     "cc, rounds, setup",
     # setup: the one SQL execution outside the rounds, the edge-list break
-    [(connected_components_with_rounds, 10, 1), (connected_components_star, 5, 1)],
-    ids=["propagation", "star"],
+    [(connected_components_with_rounds, 10, 1)],
+    ids=["propagation"],
 )
 @pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
 def test_cc_labels_rounds_and_one_execution_per_round(

@@ -96,74 +96,6 @@ def test_streaming_sessions_match_batch(spark, events_dir):
     assert stream_rows == batch_rows
 
 
-def test_stateful_user_totals_match_batch(spark, events_dir):
-    """applyInPandasWithState running totals: after draining the whole
-    stream, the final emitted state per user equals the batch
-    groupBy totals."""
-    import pytest as _pytest
-
-    from prod2vec_spark.sources.io import read_table
-    from prod2vec_spark.streaming.events import streaming_user_totals
-    from tests.conftest import SF_SMOKE
-
-    stream = read_events_stream(spark, events_dir)
-    run_to_memory(streaming_user_totals(stream), "stream_totals", output_mode="update")
-    # availableNow over one file = one micro-batch -> one row per user
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_value"])
-        for r in spark.table("stream_totals").collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in read_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert set(got) == set(batch)
-    for uid in got:
-        assert got[uid][0] == batch[uid][0]
-        assert got[uid][1] == _pytest.approx(batch[uid][1], rel=1e-9)
-
-
-def test_stream_stream_join_matches_batch(spark, events_dir):
-    """streaming_conversions (stream-stream time-range join) drained
-    over the files equals the identical batch join."""
-    from prod2vec_spark.sources.io import read_table
-    from prod2vec_spark.streaming.events import streaming_conversions
-
-    stream = read_events_stream(spark, events_dir)
-    run_to_memory(streaming_conversions(stream), "stream_conv")
-    got = {
-        (r["user_id"], r["view_id"], r["buy_id"])
-        for r in spark.table("stream_conv").collect()
-    }
-
-    ev = read_table(spark, SF_SMOKE, "events")
-    v = ev.where(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    b = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("b_user"),
-        F.col("event_id").alias("buy_id"),
-        F.col("ts").alias("buy_ts"),
-    )
-    want = {
-        (r["v_user"], r["view_id"], r["buy_id"])
-        for r in v.join(
-            b,
-            F.expr(
-                "v_user = b_user AND buy_ts >= view_ts "
-                "AND buy_ts <= view_ts + INTERVAL 1 HOUR"
-            ),
-        ).collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
 def test_checkpointed_parquet_sink_exactly_once(spark, tmp_path):
     """write_stream_parquet: the production file-sink path.  Drain a
     projection to parquet, then RESTART the query with the same
@@ -211,23 +143,14 @@ def test_checkpointed_parquet_sink_exactly_once(spark, tmp_path):
 
 def test_stream_starts_on_empty_dir_with_explicit_schema(spark, tmp_path):
     """ADVICE r5: an initially-empty landing directory is a normal
-    streaming-source pattern — the explicit ts_is_nanos override must
-    let the stream START with no footer to sniff, then pick up files
-    that land later; without the override the sniff still raises."""
+    streaming-source pattern — the declared events schema lets the
+    stream START with no file to read, then pick up files that land
+    later."""
     import shutil
-
-    import pytest
 
     src = tmp_path / "landing"
     src.mkdir()
-    with pytest.raises(FileNotFoundError):
-        read_events_stream(spark, str(src))
-
-    # sniff the real fixture's layout once, then declare it explicitly
-    from prod2vec_spark.streaming.events import _events_ts_is_nanos_long
-
-    nanos = _events_ts_is_nanos_long(f"{SF_SMOKE}/events.parquet")
-    stream = read_events_stream(spark, str(src), ts_is_nanos=nanos)
+    stream = read_events_stream(spark, str(src))
     agg = stream.groupBy("event_type").count()
 
     q = (
@@ -257,27 +180,16 @@ def test_stream_starts_on_empty_dir_with_explicit_schema(spark, tmp_path):
 
 
 def test_events_footer_sniff_reads_file_uri(spark, events_dir, tmp_path):
-    """The ts-layout sniff lists files through the Hadoop FS API: a
-    ``file://`` URI of a seeded directory gives the plain path's answer
-    and drains the same stream, and an empty directory still raises in
-    both forms."""
+    """A ``file://`` URI of a seeded directory drains the same stream
+    as the plain path."""
     from pathlib import Path
 
-    from prod2vec_spark.streaming.events import _events_ts_is_nanos_long
-
     uri = Path(events_dir).as_uri()
-    assert _events_ts_is_nanos_long(uri) == _events_ts_is_nanos_long(events_dir)
     for name, path in (("sniff_plain", events_dir), ("sniff_uri", uri)):
         stream = windowed_event_counts(read_events_stream(spark, path))
         run_to_memory(stream, name, output_mode="complete")
     rows = {n: sorted(map(tuple, spark.table(n).collect())) for n in ("sniff_plain", "sniff_uri")}
     assert rows["sniff_uri"] == rows["sniff_plain"] != []
-
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    for path in (str(empty), empty.as_uri()):
-        with pytest.raises(FileNotFoundError):
-            _events_ts_is_nanos_long(path)
 
 
 def test_stage_output_dir_created_through_file_uri(spark, tmp_path, monkeypatch):
@@ -295,3 +207,28 @@ def test_stage_output_dir_created_through_file_uri(spark, tmp_path, monkeypatch)
         assert df.schema.simpleString() == "struct<doc_id:bigint>"
         assert path.is_dir()
     assert not (tmp_path / "file:").exists()
+
+
+def test_nanosecond_events_file_raises(spark, tmp_path):
+    """The declared events schema reads µs timestamps only: a
+    TIMESTAMP(NANOS) file fails the drain with Spark's own type
+    mismatch on ``ts`` (as ``read_table`` refuses it), never a
+    silently reinterpreted column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "nanos"
+    src.mkdir()
+    events = pa.table(
+        {
+            "event_id": pa.array([1], pa.int64()),
+            "ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns")),
+            "user_id": pa.array([7], pa.int64()),
+            "event_type": ["view"],
+            "value": [1.0],
+            "props": ["{}"],
+        }
+    )
+    pq.write_table(events, src / "part-000.parquet")
+    with pytest.raises(Exception, match=r"MISMATCH.*\[ts\]"):
+        run_to_memory(read_events_stream(spark, str(src)), "nanos_events")

@@ -15,10 +15,9 @@ from pyspark.sql import functions as F
 from prod2vec_spark.operators import phash as PH
 from prod2vec_spark.operators.multimodal import (
     avi_frames,
-    decode_avi,
-    decode_media,
+    decode_blob,
     encode_avi_gray8,
-    extract_features,
+    media_format_rows,
 )
 
 
@@ -51,20 +50,21 @@ def test_avi_roundtrip_nonaligned_width():
 def test_decode_avi_features():
     frames = _clip(3, n_frames=10)
     blob = encode_avi_gray8(frames, 16, 16, fps=5)
-    d = decode_avi(blob)
-    assert d["format"] == "avi"
-    assert (d["width"], d["height"], d["n_frames"]) == (16, 16, 10)
-    assert d["duration_ms"] == 2000.0  # 10 frames at 5 fps
-    assert d["pixel_digest"] == hashlib.md5(b"".join(frames)).hexdigest()
+    got, m = avi_frames(blob)
+    assert (m["width"], m["height"], m["n_frames"]) == (16, 16, 10)
+    assert m["n_frames"] / m["fps"] * 1000.0 == 2000.0  # 10 frames at 5 fps
+    assert hashlib.md5(b"".join(got)).hexdigest() == (
+        hashlib.md5(b"".join(frames)).hexdigest()
+    )
 
 
 def test_decode_media_dispatches_avi_and_flags_corrupt():
     blob = encode_avi_gray8(_clip(4), 16, 16)
-    assert decode_media("video", blob)["format"] == "avi"
+    assert decode_blob(blob)[:3] == ("avi", "decoded", "video")
     # a truncated AVI is 'corrupt', never mis-decoded
-    assert decode_media("video", blob[:40])["format"] == "corrupt"
-    # non-RIFF stays the raw byte-stats path
-    assert decode_media("video", b"mp4 is not parsed")["format"] == "raw"
+    assert decode_blob(blob[:40])[:2] == ("avi", "corrupt")
+    # unknown magic decodes nothing
+    assert decode_blob(b"mp4 is not parsed")[:2] == ("unknown", "unsupported_format")
 
 
 def test_avi_rejects_compressed_and_malformed():
@@ -88,12 +88,13 @@ def test_extract_features_populates_video_columns(spark):
         "media_id long, media_type string, width int, height int, "
         "duration_ms int, blob binary",
     )
-    row = extract_features(media).collect()[0]
-    assert row["format"] == "avi"
-    assert (row["width"], row["height"]) == (16, 16)
-    assert row["duration_ms"] == 500.0  # 4 frames at 8 fps
-    assert row["pixel_digest"] is not None
-    assert row["sample_rate"] is None  # audio-only field stays null
+    row = media_format_rows(media).collect()[0]
+    assert (row["media_id"], row["fmt"], row["status"]) == (1, "avi", "decoded")
+    d = decode_blob(blob)
+    frames, m = d.video
+    assert (m["width"], m["height"]) == (16, 16)
+    assert m["n_frames"] / m["fps"] * 1000.0 == 500.0  # 4 frames at 8 fps
+    assert d.audio is None and d.gray is None  # audio-only field stays null
 
 
 # ------------------------------------------------------- fingerprint

@@ -17,7 +17,6 @@ import pytest
 from prod2vec_spark.operators import phash as PH
 from prod2vec_spark.operators.multimodal import (
     decode_blob,
-    decode_media,
     encode_png_gray8,
 )
 from prod2vec_spark.operators.webp import (
@@ -27,6 +26,7 @@ from prod2vec_spark.operators.webp import (
     _prefix_decode,
     _write_simple_code,
     encode_webp_lossless_gray8,
+    webp_info,
     webp_pixels,
 )
 
@@ -98,14 +98,14 @@ def test_classify_media_webp_classes():
     # lossy VP8 chunk -> the remaining declared boundary
     vp8 = b"RIFF" + struct.pack("<I", 20) + b"WEBP" + b"VP8 " + struct.pack("<I", 8) + bytes(8)
     assert decode_blob(vp8)[:2] == ("webp", "unsupported_format")
-    # VP8L-decodable blob flows through decode_media as a feature row
-    row = decode_media("image", good)
-    assert row["format"] == "webp" and (row["width"], row["height"]) == (16, 16)
-    # r16: a degenerate 8-byte lossy payload is structurally TRUNCATED
-    # (a VP8 key-frame header needs >= 10 bytes) — corrupt, no longer
-    # the silent 'raw' fall-through; well-formed lossy headers get
-    # real feature rows (test_decode_media_lossy_webp_feature_row)
-    assert decode_media("image", vp8)["format"] == "corrupt"
+    # the VP8L-decodable blob yields its 16x16 gray plane
+    assert decode_blob(good).gray.shape == (16, 16)
+    # a degenerate 8-byte lossy payload is structurally TRUNCATED (a
+    # VP8 key-frame header needs >= 10 bytes): the header parser
+    # rejects it; well-formed lossy headers parse
+    # (test_decode_media_lossy_webp_feature_row)
+    with pytest.raises(ValueError):
+        webp_info(vp8)
 
 
 def test_media_hashes_webp_joins_image_plane(spark):
@@ -688,19 +688,17 @@ def test_webp_info_corrupt_headers_raise():
 
 
 def test_decode_media_lossy_webp_feature_row():
-    """decode_media: lossy WebP no longer falls to 'raw' byte stats —
-    it carries a header-level feature row (format='webp_lossy' with
-    real dims); pixels remain the classified unsupported boundary."""
-    from prod2vec_spark.operators.multimodal import decode_blob, decode_media
-
+    """Lossy WebP: the key-frame header parses to real dims while the
+    pixels remain the classified unsupported boundary."""
     blob = make_lossy_webp(320, 200)
-    d = decode_media("image", blob)
-    assert d["format"] == "webp_lossy"
+    d = webp_info(blob)
+    assert d["variant"] == "lossy"
     assert (d["width"], d["height"]) == (320, 200)
-    assert "pixel_digest" not in d  # no pixels were decoded, honestly
-    # the classifier still reports the pixel boundary
-    assert decode_blob(blob)[:2] == ("webp", "unsupported_format")
-    # structurally corrupt lossy header -> corrupt, not webp_lossy
+    # the decode door still reports the pixel boundary, with no pixels
+    dec = decode_blob(blob)
+    assert dec[:2] == ("webp", "unsupported_format") and dec.gray is None
+    # structurally corrupt lossy header -> the header parser raises
     bad = bytearray(blob)
     bad[bad.index(b"\x9d\x01\x2a")] = 0x00
-    assert decode_media("image", bytes(bad))["format"] == "corrupt"
+    with pytest.raises(ValueError):
+        webp_info(bytes(bad))

@@ -107,10 +107,9 @@ def planted_media_blob(media_id: int) -> bytes:
             return encode_webp_lossless_gray8(_bytes(f"wl{i}", 256), 16, 16)
         if sub == 1:
             # lossy VP8 -> pixels stay the unsupported boundary, but
-            # since r16 the KEY-FRAME HEADER is well-formed (RFC 6386
-            # §9.1 frame tag + start code + 14-bit dims) so the
-            # header-feature plane (webp_info / decode_media
-            # 'webp_lossy' rows) has real dimensions to audit
+            # the KEY-FRAME HEADER is well-formed (RFC 6386 §9.1
+            # frame tag + start code + 14-bit dims), so webp_info
+            # reads real dimensions from it
             w, h = 33 + (i % 64), 17 + (i % 48)
             tag3 = (0) | (2 << 1) | (1 << 4) | (24 << 5)
             hdr = (
@@ -281,32 +280,14 @@ def _make_mp3(n_audio_bytes: int) -> bytes:
 def main() -> None:
     import pandas as pd
 
-    from prod2vec_spark.operators.multimodal import decode_blob, decode_media
+    from prod2vec_spark.operators.multimodal import decode_blob
 
     rows = []
     for i in range(N_ROWS):
         blob = planted_media_blob(i)
         d = decode_blob(blob)
-        fmt, status = d.fmt, d.status
-        # r16 golden columns for the header-feature plane: the
-        # decode_media feature-row format plus dims (None where the
-        # decoder reports none) — DuckDB replays these, the honesty
-        # pytest re-derives them from the blobs
-        dec = decode_media("media", blob)
-        rows.append(
-            {
-                "media_id": i,
-                "blob": blob,
-                "fmt": fmt,
-                "status": status,
-                "dec_format": dec["format"],
-                "width": dec.get("width"),
-                "height": dec.get("height"),
-            }
-        )
+        rows.append({"media_id": i, "blob": blob, "fmt": d.fmt, "status": d.status})
     df = pd.DataFrame(rows)
-    df["width"] = df["width"].astype("Int32")
-    df["height"] = df["height"].astype("Int32")
     df.to_parquet(FIXTURE, index=False)
     print(df.groupby(["fmt", "status"]).size())
     print(f"wrote {len(df)} rows to {FIXTURE}")
