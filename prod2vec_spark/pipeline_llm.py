@@ -3,92 +3,48 @@ dedup / text-analysis / quality operator family (SURVEY.md §2.14-2.16)
 composed into one runnable, checkpointed dataflow — the data-prep
 counterpart of the Prod2VecPipeline DAG (pipeline.py).
 
-Stage graph (the canonical web-corpus curation shape, round-6
-extension adds the four starred stages):
-
-    gates → [line_filter⁹ᵇ →] pii_scrub* [→ url_curation⁹ ¹²]
-          [→ adaptive_block⁹ᵇ] → exact_dedup
-          [→ segment_dedup°] → quality_filter(+repetition*)
-          [→ lm_gate°] → near_dedup [→ semantic_dedup*]
-          [→ media_dedup⁹] → decontaminate* → chunk*
-          [→ pack_input_ids⁹ᵇ] → stats
-
-(⁹ᵇ = optional round-9b stages: C4 rule-based line filtering
-(operators/linefilters.py) fused into the input scan — row-local
-like the PII scrub, per-row deterministic so incremental_update
-supports it unchanged; all-junk pages drop, empty docs pass.
-adaptive_block mines the corpus's own top-K repeated n-grams and
-cuts matching lines (mine → block, checkpointed — a CORPUS-WIDE
-aggregate, so incremental_update rejects it; the mined blocklist
-persists as a work_dir artifact).)
-
-(⁹ = optional round-9 stages: url_curation applies the C4/RefinedWeb
-ingestion filters — registered-domain blocklist + per-domain doc cap,
-plus round-12's canonical-URL exact dedup (``url_dedup``: RFC 3986
-normalization then min-id survivor per canonical key, the crawl-
-frontier dedup) — before exact dedup when the corpus carries a url
-column
-(``domain_blocklist`` / ``domain_cap_k``); media_dedup runs
-perceptual near-dup over per-document media attachments — mixed
-PNG/WAV/AVI blobs hashed per modality and collapsed through the same
-banded-Hamming + connected-components machinery as the text LSH
-plane; enabled by ``media_path``.)
-
-(° = optional round-7 stages: CCNet segment dedup before quality
-scoring so quality judges boilerplate-free text; bigram-LM perplexity
-gate after it; plus the canonical_policy="quality" near-dup survivor
-option — keep each cluster's best-quality member.  Round-7 wave B
-adds three more optional stages: edit-distance verification of LSH
-candidate pairs before cluster formation (editdist_verify), a
-deterministic train/val/test hash split of the final corpus with
-chunking restricted to the train side (holdout_split), and a
-temperature-scaled per-source mixing recipe report (mix_report), and
-epoch-0 shuffle shards of the training chunks (epoch_shards > 0).)
-
-Every stage hand-off is a parquet checkpoint under ``work_dir`` so a
-failed 100 TB run resumes at the last stage, and each stage reuses the
-already-tested operators — this module adds composition, not new
-relational logic.
+The stage order is written once, in ``STAGES``: each entry names a
+stage, the ``CorpusConfig`` predicate that turns it on, and its
+checkpoint dir under ``work_dir`` — or none for a row-local stage,
+which fuses into the input scan (no shuffle boundary earns no
+checkpoint).  ``run()``, ``drop_ledger()``, ``incremental_update()``
+and the input scan ``_scrubbed`` all read that table.  After its last
+stage the final corpus is optionally split, chunked into training
+sequences, packed and sharded, and ``stats()`` writes the curation
+report.  A failed 100 TB run resumes at the last checkpoint, and each
+stage reuses already-tested operators — this module adds composition,
+not new relational logic.
 
 Scale notes per stage:
   * gates — one aggregate scan (operators/quality.py).
+  * row-local stages — regexp rewrites and per-row screens fused into
+    the exact-dedup scan; the PII scrub runs BEFORE exact dedup so two
+    docs differing only in their PII collapse.
   * exact_dedup — one shuffle on 32-byte content digests, keep the
     min-id doc per digest (operators/dedup.exact_dup_groups).
-  * quality_filter — row-local scoring; the global percentile
-    threshold is a 1-row aggregate broadcast back (never a corpus-wide
-    window) — identical shape to the oracle-checked quality_filter
-    catalog query.
+  * quality_filter — row-local scoring (the repetition signals join
+    the same scan); the global percentile threshold is a 1-row
+    aggregate broadcast back (never a corpus-wide window) — identical
+    shape to the oracle-checked quality_filter catalog query.
   * near_dedup — minhash bands → banded equi-join candidates (capped
     + auditable) → connected components (2 shuffles/round, ~2 rounds
     on LSH near-clique graphs) → drop non-canonical members.  The
     non-canonical id set is usually a small fraction of the corpus; it
     broadcasts into a left-anti join so the corpus never shuffles for
     the final subtraction.
-  * stats — per-stage counts + final token budget, a handful of
-    1-row aggregates unioned driver-side; since round 11 also one
-    ``t_ms_<stage>`` row per executed stage (checkpoint-delimited
-    wall time, VERDICT r9 ask #4) so a 175 s macro run attributes
-    its cost without re-instrumenting anything.
-
-Round-6 stage notes:
-  * pii_scrub — row-local regexp redaction (operators/pii.py); fused
-    into the exact-dedup scan rather than checkpointed: a stage with
-    no shuffle boundary earns no checkpoint.  Scrubbing runs BEFORE
-    exact dedup so two docs differing only in their PII collapse.
-  * repetition gate — joins the quality_filter scan (one pass scores
-    quality AND the Gopher repetition signals; operators/repetition).
   * decontaminate — drops training docs whose word-n-gram collision
     fraction against the held-out split exceeds the threshold
     (operators/decontam.py); the bench gram set broadcasts, the
     corpus never shuffles.
-  * chunk — the curated corpus re-expressed as fixed-length training
-    sequences (operators/chunking.py), the pipeline's final product
-    alongside the per-language curated docs.
+  * stats — per-stage counts + final token budget, observed on the
+    checkpoint writes, plus one ``t_ms_<stage>`` row per executed
+    stage (checkpoint-delimited wall time).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,7 +102,7 @@ class CorpusConfig:
     decon_n: int = 5  # decontamination word-n-gram order
     decon_bench_frac: float = 0.1  # held-out split fraction
     decon_min_frac: float = 0.2  # collision fraction that drops a doc
-    # round-14: ALSO run the fuzzy (MinHash + exact-Jaccard) screen —
+    # ALSO run the fuzzy (MinHash + exact-Jaccard) screen —
     # paraphrased/partial eval overlap the exact n-gram rule misses
     # (operators/decontam.fuzzy_contamination_report); drops union
     # into the same anti-join set.  The screen uses FINER banding than
@@ -162,45 +118,36 @@ class CorpusConfig:
     chunk_len: int = 32
     chunk_stride: int = 24
     chunk_min: int = 8
-    # optional semantic dedup (SemDeDup) between near-dedup and
-    # decontamination: drops docs whose embedding is a within-cluster
-    # cosine near-duplicate of a smaller-id doc.  Off by default —
-    # it requires the embeddings table (vec_id == doc_id) to cover
-    # the corpus; docs without an embedding are kept unconditionally.
+    # semantic dedup (SemDeDup): drops docs whose embedding is a
+    # within-cluster cosine near-duplicate of a smaller-id doc.  It
+    # requires the embeddings table (vec_id == doc_id) to cover the
+    # corpus; docs without an embedding are kept unconditionally.
     semantic_dedup: bool = False
     semantic_clusters: int = 8
     semantic_threshold: float = 0.4
-    # optional round-7 stages, all off by default:
-    # canonical text normalization fused into the input scan (like
-    # PII scrub — row-local, no shuffle boundary, no checkpoint):
-    # control chars stripped, whitespace collapsed, casefolded, so
-    # exact dedup collapses whitespace/case variants of one document.
+    # canonical text normalization (control chars, whitespace, case)
     normalize: bool = False
-    # segment (line) dedup between exact dedup and quality scoring —
-    # CCNet order: quality is judged on boilerplate-free text.  Docs
-    # that lose more than seg_max_dropped_frac of their windows drop
-    # entirely (mostly-boilerplate pages).
+    # segment (line) dedup, CCNet order: quality is judged on
+    # boilerplate-free text.  Docs that lose more than
+    # seg_max_dropped_frac of their windows drop entirely.
     segment_dedup: bool = False
     seg_width: int = 10
     seg_min_docs: int = 2
     seg_max_dropped_frac: float = 0.5
-    # round-9b: repeated-segment survivor policy — "drop_all" (CCNet:
+    # repeated-segment survivor policy — "drop_all" (CCNet:
     # shared windows vanish everywhere) or "keep_first" (ExactSubstr:
     # the min-id doc containing a window keeps it, one copy survives)
     seg_policy: str = "drop_all"
-    # round-16: sentence-level dedup (the segment plane at SENTENCE
-    # granularity, operators/linedup.sentence_dedup) — cross-document
-    # repeated sentences cut per sent_policy; docs losing more than
-    # sent_max_dropped_frac of their sentences drop entirely.
-    # Independent of segment_dedup (both can run; sentences after
-    # windows — the finer screen judges the coarser screen's output).
+    # sentence-level dedup (the segment plane at SENTENCE granularity,
+    # operators/linedup.sentence_dedup); independent of segment_dedup
+    # (both can run: the finer screen judges the coarser one's output)
     sentence_dedup: bool = False
     sent_min_docs: int = 2
     sent_min_chars: int = 12
     sent_max_dropped_frac: float = 0.5
     sent_policy: str = "drop_all"
-    # bigram-LM perplexity gate after the quality filter: drop the
-    # highest-ppl tail (lm_drop_pct) — the KenLM-style fluency screen.
+    # LM perplexity gate: drop the highest-ppl tail (lm_drop_pct) —
+    # the KenLM-style fluency screen.
     lm_gate: bool = False
     lm_drop_pct: float = 0.1
     lm_train_frac: float = 0.8
@@ -231,7 +178,6 @@ class CorpusConfig:
     # near-dup survivor policy: "min_id" (dedup_clusters default) or
     # "quality" (keep each cluster's best-quality member)
     canonical_policy: str = "min_id"
-    # round-7 wave-B options, all off by default:
     # edit-distance confirmation of LSH candidate pairs BEFORE cluster
     # formation — only character-level-confirmed pairs join clusters,
     # so a single chance band collision can no longer merge two
@@ -246,7 +192,7 @@ class CorpusConfig:
     # — eval text never leaks into training sequences.
     holdout_split: bool = False
     split_seed: int = 42
-    # round-9b: leakage-safe holdout — when set, the split label is a
+    # leakage-safe holdout — when set, the split label is a
     # pure function of THIS column (e.g. a domain or source key
     # carried on the row) instead of doc_id, so every member of a
     # group lands in one split and near-duplicate pages from one
@@ -258,40 +204,32 @@ class CorpusConfig:
     mix_report: bool = False
     mix_alpha: float = 0.7
     mix_budget: int = 1_000_000
-    # write the training chunks as epoch-0 shuffle shards (> 0 turns
-    # the stage on and sets the shard count; operators/shards.py —
-    # the on-disk row order is the epoch permutation)
+    # > 0 writes the training chunks as that many epoch-0 shuffle
+    # shards (operators/shards.py)
     epoch_shards: int = 0
     # zlib compression-ratio gate fused into the quality stage: drop
     # docs compressing below the floor (template/machine text the
     # token-level repetition signals miss; functions/compress.py).
     compression_gate: bool = False
     compression_floor: float = 0.35
-    # round-9: media near-dup stage — path to a (doc_id, blob) parquet
-    # of per-document media attachments (PNG/WAV/AVI, mixed).  When
-    # set, docs whose attached media is a perceptual near-dup of a
-    # kept doc's media drop after text near-dedup, with the same
-    # drop-set subtraction shape as the LSH/SemDeDup stages
-    # (operators/phash.py media_hashes/media_neardup_pairs).  Docs
-    # with no attachment or undecodable media are kept.
+    # media near-dup stage — path to a (doc_id, blob) parquet of
+    # per-document media attachments (mixed formats).  When set, docs
+    # whose attached media is a perceptual near-dup of a kept doc's
+    # media drop (operators/phash.py); docs with no attachment or
+    # undecodable media are kept.
     media_path: str | None = None
     media_max_distance: int = 3
     media_bands: int = 4
-    # round-14: also write a per-(format, status) media_format_audit
-    # artifact (operators/multimodal.media_format_audit) next to the
-    # dedup outputs — decoded / corrupt / unsupported_format counts,
-    # the boundary's blind spot as a reported number.  Optional (a
-    # second Arrow-batched decode pass over the blob column).
+    # also write a per-(format, status) media_format_audit artifact
+    # next to the dedup outputs — decoded / corrupt /
+    # unsupported_format counts, the codec boundary's blind spot as a
+    # reported number.
     media_format_audit: bool = False
-    # round-12: also collapse PARTIAL-image duplicates (a doc whose
-    # image is a stride-aligned crop/letterbox of another doc's —
-    # whole-image hashes diverge on those): phash.span_pairs' matched-
-    # tile pairs (IMAGE_PLANE) union into the same connected-components
-    # pass.  round-13: the same switch now ALSO unions partial-AUDIO
-    # spans (AUDIO_PLANE — a doc whose clip embeds another doc's
-    # jingle at a hop-aligned offset collapses even across PCM↔ADPCM)
-    # — one switch per the span-triad principle: partial-media dedup
-    # is one policy, not three.
+    # also collapse PARTIAL-media duplicates: image crops/letterboxes
+    # (IMAGE_PLANE matched tiles) and clips embedding another doc's
+    # audio at a hop-aligned offset (AUDIO_PLANE, even across
+    # PCM↔ADPCM) union into the same connected-components pass — one
+    # switch: partial-media dedup is one policy.
     media_span_dedup: bool = False
     media_tile_px: int = 16
     media_tile_stride: int = 8
@@ -299,25 +237,20 @@ class CorpusConfig:
     media_window_ms: int = 1000
     media_hop_ms: int = 500
     media_audio_min_shared: int = 2
-    # round-9: URL curation stage (the C4/RefinedWeb ingestion
-    # filters) — active only when the corpus carries ``url_col``.
-    # domain_blocklist drops whole registered domains (broadcast
-    # anti-join); domain_cap_k > 0 keeps at most K docs per domain
-    # (seeded md5 rank window — the mega-domain skew valve).  Runs
-    # BEFORE exact dedup: the cheapest filters go first, and per-
-    # domain pressure is an ingestion property, not a content one.
+    # URL curation (the C4/RefinedWeb ingestion filters) over
+    # ``url_col``: domain_blocklist drops whole registered domains;
+    # domain_cap_k > 0 keeps at most K docs per domain (seeded md5
+    # rank window — the mega-domain skew valve).
     url_col: str = "url"
     domain_blocklist: tuple[str, ...] = ()
     domain_cap_k: int = 0
-    # round-12: URL-level exact dedup AFTER canonicalization
+    # URL-level exact dedup AFTER canonicalization
     # (operators/domains.canonical_url) — the crawl-frontier dedup
     # that catches the SAME page fetched under different tracking
-    # params / casing / default ports before any text machinery runs;
-    # min-doc_id survivor per canonical key, unparseable-URL rows all
-    # pass (NULL keys never collapse together).  Corpus-wide group →
-    # incremental_update rejects it like the other corpus-wide stages.
+    # params / casing / default ports; min-doc_id survivor per
+    # canonical key, unparseable-URL rows all pass.
     url_dedup: bool = False
-    # round-9: train a BPE merge table on the CURATED corpus and
+    # train a BPE merge table on the CURATED corpus and
     # report the final token budget in MODEL tokens next to the
     # whitespace/lexer counts (> 0 turns the stage on and sets the
     # merge count).  Train = one word-count shuffle + a bounded
@@ -325,9 +258,9 @@ class CorpusConfig:
     # Column replace chain via bpe_counter.
     bpe_merges: int = 0
     bpe_vocab_words: int = 5000
-    # round-9b: materialize trainable shards — when > 0 (and
-    # bpe_merges > 0, which supplies the merge table), the TRAIN side
-    # of the curated corpus is packed into per-bin ``input_ids``
+    # materialize trainable shards — when > 0 (and the tokenizer's
+    # size field > 0), the TRAIN side of the curated corpus is packed
+    # into per-bin ``input_ids``
     # training examples under the corpus's own tokenizer
     # (operators/chunking.pack_token_ids: doc_lens boundary metadata
     # + UNK=0-reserved vocab persisted alongside) and written to
@@ -335,28 +268,21 @@ class CorpusConfig:
     # loader reads, not just cleaned text.
     pack_budget: int = 0
     pack_shards: int = 1
-    # round-12: tokenizer FAMILY for the pack stage and the
-    # final_model_tokens stat — "bpe" (merge table, bpe_merges > 0
-    # sets the size) or "unigram" (SentencePiece-style piece table,
-    # operators/unigram.py; unigram_vocab_size sets the size).  Both
-    # train on the curated corpus itself and share the same
-    # token_vocab / pack_token_ids plumbing via the tokens_fn seam.
+    # tokenizer FAMILY for the pack stage and the final_model_tokens
+    # stat, each trained on the curated corpus itself: "bpe" (merge
+    # table, sized by bpe_merges), "unigram" (SentencePiece-style
+    # piece table, operators/unigram.py; unigram_vocab_size) or
+    # "wordpiece" (BERT WordPiece, operators/wordpiece.py;
+    # wordpiece_merges)
     tokenizer: str = "bpe"
     unigram_vocab_size: int = 200
-    # round-13: third tokenizer family — BERT WordPiece (greedy
-    # longest-match over a likelihood-trained ##-marked vocab,
-    # operators/wordpiece.py); wordpiece_merges sets the trainer's
-    # merge budget when tokenizer='wordpiece'.
     wordpiece_merges: int = 50
-    # round-9b: C4 rule-based line filtering (Raffel et al. 2020
-    # §2.2) fused into the input scan after normalization and before
-    # the PII scrub — row-local, no shuffle boundary, no checkpoint,
-    # and per-row deterministic so incremental_update supports it
-    # unchanged.  Lines violating the rules are cut from each doc;
-    # docs that lose EVERY line (all-junk pages), or more than
-    # lf_max_dropped_frac of their lines, leave the corpus.  Docs
-    # with no lines at all (empty/NULL text) pass through — the DQ
-    # gates and exact dedup own that class.
+    # C4 rule-based line filtering (Raffel et al. 2020 §2.2): lines
+    # violating the rules are cut from each doc; docs that lose EVERY
+    # line (all-junk pages), or more than lf_max_dropped_frac of
+    # their lines, leave the corpus.  Docs with no lines at all
+    # (empty/NULL text) pass through — the DQ gates and exact dedup
+    # own that class.
     line_filter: bool = False
     lf_mode: str = "window"  # "newline" for real web documents
     lf_width: int = 10
@@ -365,28 +291,22 @@ class CorpusConfig:
     lf_require_punct: bool = False
     lf_drop_braces: bool = False
     lf_max_dropped_frac: float = 1.0  # 1.0 = only all-junk docs drop
-    # round-9b: corpus-adaptive boilerplate stage (> 0 turns it on and
-    # sets how many mined grams to block) — the top-K most-repeated
-    # n-grams are MINED from the scrubbed corpus and every line
-    # containing one is cut (operators/linefilters.
-    # adaptive_boilerplate_filter).  Unlike the static line_filter
-    # this is a CORPUS-WIDE aggregate (the mined blocklist depends on
-    # every document), so it runs as a checkpointed stage before
-    # exact dedup and incremental_update REJECTS it loudly — crawl
-    # N+1 would mine a different blocklist than the archive saw.
+    # corpus-adaptive boilerplate stage (> 0 turns it on and sets how
+    # many mined grams to block) — the top-K most-repeated n-grams are
+    # MINED from the scrubbed corpus and every line containing one is
+    # cut (operators/linefilters.adaptive_boilerplate_filter).  A
+    # CORPUS-WIDE aggregate: crawl N+1 would mine a different
+    # blocklist than the archive saw.
     adaptive_block_k: int = 0
     adaptive_gram_n: int = 3
     adaptive_min_count: int = 100
-    # round-14: document-level toxicity/badwords screen (C4 §2.2 —
-    # 'any page containing a word on the list is removed') fused into
-    # the input scan after line_filter: category→words map (None =
-    # off); a doc drops when its badword fraction exceeds
+    # document-level toxicity/badwords screen (C4 §2.2 — 'any page
+    # containing a word on the list is removed'): category→words map
+    # (None = off); a doc drops when its badword fraction exceeds
     # badwords_max_frac (0.0 = ANY hit drops, the C4 policy).
-    # Row-local + per-row deterministic (operators/badwords.py), so
-    # incremental_update supports it unchanged.
     badwords_cats: "dict[str, tuple[str, ...]] | None" = None
     badwords_max_frac: float = 0.0
-    # round-16: per-LANGUAGE blocklists (C4 ships ~25 language files) —
+    # per-LANGUAGE blocklists (C4 ships ~25 language files) —
     # lang -> {category -> words}, each doc screened against ITS
     # language's list (operators/badwords.badwords_by_lang); mutually
     # exclusive with badwords_cats.  Unlisted languages fall back to
@@ -395,14 +315,111 @@ class CorpusConfig:
     badwords_default_lang: "str | None" = None
 
 
+
+@dataclass(frozen=True)
+class Stage:
+    """One entry of the curation DAG's stage table.  ``name`` is the
+    pipeline method that applies the stage (``DataFrame ->
+    DataFrame``), its ``t_ms_<name>`` report row and its ``dropped_at``
+    ledger label."""
+
+    name: str
+    on: Callable[[CorpusConfig], bool] = lambda cfg: True
+    # checkpoint dir under work_dir, written by run() and observed
+    # (row count ``n`` + ``metrics``); None = row-local, fused into
+    # the input scan and replayed by the ledger and incremental path
+    out: str | None = None
+    partition_by: tuple[str, ...] = ()
+    metrics: Callable[[], tuple] = tuple
+    drops: bool = True  # can remove documents: a drop-ledger boundary
+    feeds: str | None = None  # report row taking this stage's row count
+    incremental: bool = True  # incremental_update accepts it
+
+
+STAGES: tuple[Stage, ...] = (
+    # row-local: control chars stripped, whitespace collapsed,
+    # casefolded BEFORE everything, so the line rules and the PII
+    # patterns see canonical text and exact dedup collapses variants
+    Stage("normalize", lambda c: c.normalize, drops=False),
+    Stage("line_filter", lambda c: c.line_filter),
+    Stage(
+        "badwords_gate", lambda c: bool(c.badwords_cats or c.badwords_lang_lists)
+    ),
+    Stage("pii_scrub", lambda c: c.scrub_pii, drops=False),
+    # corpus-wide stages, each a checkpoint.  incremental_update
+    # replays the row-local stages, exact dedup, the frozen quality
+    # threshold and the near-dup plane; it rejects the stages marked
+    # incremental=False (a corpus-wide result crawl N+1 would change)
+    Stage(
+        "url_curation",
+        lambda c: bool(c.domain_blocklist) or c.domain_cap_k > 0 or c.url_dedup,
+        out="url_curated",
+        incremental=False,
+    ),
+    Stage(
+        "adaptive_block",
+        lambda c: c.adaptive_block_k > 0,
+        out="adaptive_blocked",
+        incremental=False,
+    ),
+    Stage("exact_dedup", out="exact_deduped", feeds="after_exact_dedup"),
+    Stage(
+        "segment_dedup",
+        lambda c: c.segment_dedup,
+        out="segment_deduped",
+        incremental=False,
+    ),
+    Stage(
+        "sentence_dedup",
+        lambda c: c.sentence_dedup,
+        out="sentence_deduped",
+        incremental=False,
+    ),
+    Stage("quality_filter", out="quality_kept", feeds="after_quality_filter"),
+    Stage(
+        "lm_gate",
+        lambda c: c.lm_gate,
+        out="lm_kept",
+        feeds="after_quality_filter",
+        incremental=False,
+    ),
+    # hive-partitioned by language: per-language training reads prune
+    # whole directories (low-cardinality by the dq gate)
+    Stage(
+        "near_dedup",
+        out="curated",
+        partition_by=("lang",),
+        feeds="after_near_dedup",
+    ),
+    Stage(
+        "semantic_dedup",
+        lambda c: c.semantic_dedup,
+        out="semantic_deduped",
+        feeds="after_near_dedup",
+        incremental=False,
+    ),
+    Stage(
+        "media_dedup",
+        lambda c: c.media_path is not None,
+        out="media_deduped",
+        feeds="after_near_dedup",
+        incremental=False,
+    ),
+    Stage(
+        "decontaminate",
+        out="decontaminated",
+        partition_by=("lang",),
+        metrics=_budget_metrics,
+    ),
+)
+_STAGE = {s.name: s for s in STAGES}
+
+
 class CorpusCurationPipeline:
     def __init__(self, spark: SparkSession, cfg: CorpusConfig):
         self.spark = spark
         self.cfg = cfg
-        self._merges = None  # run() stashes the trained table so the
-        # pack stage and the stats report share ONE training pass
-        self._uni_model = None  # unigram twin of _merges
-        self._wp_vocab = None  # wordpiece twin (round-13)
+        self._tok = None  # the tokenizer _tokenizer() trained this run
         self._stage_notes: dict[str, float] = {}  # derived scalars the
         # last run() surfaced (e.g. the estimated KN discount) — for
         # tests and operational introspection
@@ -412,13 +429,15 @@ class CorpusCurationPipeline:
         # -> the aggregates its checkpoint write observed (_observed_out)
         self._tables: dict[tuple[str, str], DataFrame] = {}  # _table cache
 
+    def _enabled(self) -> list[Stage]:
+        """The table's stages this config runs, in order."""
+        return [s for s in STAGES if s.on(self.cfg)]
+
     def _timed(self, name: str, fn, *args, **kw):
-        """Checkpoint-delimited wall-time attribution (VERDICT r9 ask
-        #4): every stage method ends in a blocking parquet checkpoint
-        write, so timing the call measures the stage's real cost —
-        including the lineage it forces — with zero changes to the hot
-        path.  Disabled stages are lazy pass-throughs that time ~0 ms
-        and are filtered out of the report."""
+        """Checkpoint-delimited wall-time attribution: every timed step
+        ends in a blocking parquet write, so timing the call measures
+        the step's real cost — including the lineage it forces — with
+        zero changes to the hot path."""
         import time
 
         t0 = time.monotonic()
@@ -481,58 +500,58 @@ class CorpusCurationPipeline:
             ),
         )
 
-    # -- stage 0.5: PII scrub (row-local, fused — no checkpoint) -------
+    # -- the input scan: row-local stages, fused (no checkpoint) ------
     def scrubbed_input(self) -> DataFrame:
         return self._scrubbed(self.cfg.sf_dir)
 
-    def _scrubbed(self, sf_dir: str, badwords: bool = True) -> DataFrame:
+    def _scrubbed(self, sf_dir: str) -> DataFrame:
+        """``documents`` of ``sf_dir`` with every enabled row-local
+        stage fused onto it, in table order."""
         docs = self._table(sf_dir, "documents")
-        if self.cfg.normalize:
-            from prod2vec_spark.operators.text import normalize_text
+        for st in self._enabled():
+            if st.out is None:
+                docs = getattr(self, st.name)(docs)
+        return docs
 
-            # BEFORE the PII scrub: the scrub's patterns then see
-            # canonical whitespace/case
-            docs = docs.withColumn("text", normalize_text(F.col("text")))
-        if self.cfg.line_filter:
-            # AFTER normalize (rules see canonical whitespace/case),
-            # BEFORE the PII scrub (the scrub then rewrites only
-            # surviving lines).  The keep/rewrite policy lives in
-            # apply_line_filter — ONE code path shared with the
-            # streaming corpus pipeline, so batch and stream can
-            # never drift.
-            from prod2vec_spark.operators.linefilters import apply_line_filter
+    def normalize(self, docs: DataFrame) -> DataFrame:
+        from prod2vec_spark.operators.text import normalize_text
 
-            docs = apply_line_filter(
-                docs,
-                mode=self.cfg.lf_mode,
-                width=self.cfg.lf_width,
-                min_words=self.cfg.lf_min_words,
-                blocklist=self.cfg.lf_blocklist,
-                require_terminal_punct=self.cfg.lf_require_punct,
-                drop_brace_lines=self.cfg.lf_drop_braces,
-                max_dropped_frac=self.cfg.lf_max_dropped_frac,
-            )
-        if badwords and (
-            self.cfg.badwords_cats or self.cfg.badwords_lang_lists
-        ):
-            # round-14 (per-language round-16): the C4 §2.2 doc-level
-            # badwords screen — AFTER line_filter (the gate judges
-            # surviving text), BEFORE the PII scrub (scrub tokens
-            # carry no list words, so order is immaterial for hits;
-            # cheapest-first wins).  Row-local and per-row
-            # deterministic: incremental_update supports it unchanged
-            # and the drop ledger replays it, both like line_filter.
-            from prod2vec_spark.operators.badwords import badwords_screen
+        return docs.withColumn("text", normalize_text(F.col("text")))
 
-            docs = badwords_screen(
-                docs,
-                cats=self.cfg.badwords_cats,
-                lang_lists=self.cfg.badwords_lang_lists,
-                max_frac=self.cfg.badwords_max_frac,
-                default_lang=self.cfg.badwords_default_lang,
-            )
-        if not self.cfg.scrub_pii:
-            return docs
+    def line_filter(self, docs: DataFrame) -> DataFrame:
+        """C4 rule-based line filtering: lines violating the rules are
+        cut; docs losing every line (or more than lf_max_dropped_frac
+        of them) leave the corpus.  The keep/rewrite policy lives in
+        apply_line_filter — ONE code path shared with the streaming
+        corpus pipeline, so batch and stream can never drift."""
+        from prod2vec_spark.operators.linefilters import apply_line_filter
+
+        return apply_line_filter(
+            docs,
+            mode=self.cfg.lf_mode,
+            width=self.cfg.lf_width,
+            min_words=self.cfg.lf_min_words,
+            blocklist=self.cfg.lf_blocklist,
+            require_terminal_punct=self.cfg.lf_require_punct,
+            drop_brace_lines=self.cfg.lf_drop_braces,
+            max_dropped_frac=self.cfg.lf_max_dropped_frac,
+        )
+
+    def badwords_gate(self, docs: DataFrame) -> DataFrame:
+        """The C4 §2.2 doc-level badwords screen — after the line
+        filter (the gate judges surviving text), before the PII scrub
+        (scrub tokens carry no list words; cheapest-first wins)."""
+        from prod2vec_spark.operators.badwords import badwords_screen
+
+        return badwords_screen(
+            docs,
+            cats=self.cfg.badwords_cats,
+            lang_lists=self.cfg.badwords_lang_lists,
+            max_frac=self.cfg.badwords_max_frac,
+            default_lang=self.cfg.badwords_default_lang,
+        )
+
+    def pii_scrub(self, docs: DataFrame) -> DataFrame:
         from prod2vec_spark.operators.pii import scrub, scrub_cc
 
         out = docs.withColumn("text", scrub(F.col("text")))
@@ -542,32 +561,20 @@ class CorpusCurationPipeline:
             out = out.withColumn("text", scrub_cc(F.col("text")))
         return out
 
-    def _url_curation_active(self) -> bool:
-        """ONE definition of 'the url_curation stage runs (and thus
-        checkpoints its output)' — adaptive_block keys its own
-        materialization decision off this, so the two can't drift."""
-        return (
-            bool(self.cfg.domain_blocklist)
-            or self.cfg.domain_cap_k > 0
-            or self.cfg.url_dedup
-        )
-
-    # -- stage 0.75: URL curation (optional, round 9) ------------------
+    # -- stage 0.75: URL curation (optional) ---------------------------
     def url_curation(self, docs: DataFrame) -> DataFrame:
         """C4/RefinedWeb ingestion filters, active only when the
-        corpus carries ``url_col``: registered-domain blocklist
-        (broadcast anti-join) then the per-domain doc cap (ONE rank
-        window).  NULL-domain rows (unparseable urls) pass both —
-        validity is the DQ gate's job, not this stage's.  Raises if
-        the options are set but the column is absent (silent no-op
-        would read as coverage)."""
+        corpus carries ``url_col``: canonical-URL exact dedup, the
+        registered-domain blocklist (broadcast anti-join) then the
+        per-domain doc cap (ONE rank window).  NULL-domain rows
+        (unparseable urls) pass all three — validity is the DQ gate's
+        job, not this stage's.  Raises if the options are set but the
+        column is absent (silent no-op would read as coverage)."""
         from prod2vec_spark.operators.domains import (
             domain_cap,
             filter_blocked_domains,
         )
 
-        if not self._url_curation_active():
-            return docs
         if self.cfg.url_col not in docs.columns:
             raise ValueError(
                 f"url curation configured but column {self.cfg.url_col!r} "
@@ -606,30 +613,26 @@ class CorpusCurationPipeline:
             out = domain_cap(
                 out, self.cfg.domain_cap_k, url_col=self.cfg.url_col
             ).drop("host", "domain", "domain_rk")
-        # next stage mines/cuts or digests text per row — floor the read
-        return spread_scan(checkpoint(out, f"{self.cfg.work_dir}/url_curated"))
+        return out
 
-    # -- stage 0.8: adaptive boilerplate (optional, round 9b) ----------
+    # -- stage 0.8: adaptive boilerplate (optional) --------------------
     def adaptive_block(self, docs: DataFrame) -> DataFrame:
         """Mine the corpus's own top-K repeated n-grams and cut every
         line containing one (mine → block); docs whose every line
         carried mined boilerplate leave the corpus, the mined gram
         table persists as a work_dir artifact for audit.  One hash-agg
         + TakeOrdered for the mine, then the row-local cut."""
-        if self.cfg.adaptive_block_k <= 0:
-            return docs
         from prod2vec_spark.operators.linefilters import (
             adaptive_boilerplate_filter,
         )
         from prod2vec_spark.operators.repetition import corpus_ngram_hotspots
 
-        # Round-11 (found by the t_ms_* attribution this round added):
-        # this stage's input is the FUSED scrub/line-filter lineage
-        # unless url_curation checkpointed it, and the stage reads its
-        # input twice (mine + cut) — so materialize it ONCE; a parquet
-        # write is far cheaper than re-running the corpus-wide regex
-        # rewrite per pass (was 75% of the r9b macro's 194 s).
-        if not self._url_curation_active():
+        # this stage reads its input twice (mine + cut), and its input
+        # is the FUSED input scan unless url_curation checkpointed it —
+        # so materialize it ONCE; a parquet write is far cheaper than
+        # re-running the corpus-wide regex rewrite per pass (was 75% of
+        # an all-stages macro's 194 s).
+        if not _STAGE["url_curation"].on(self.cfg):
             # both consumers (mine + cut) are per-row HOF chains
             docs = spread_scan(
                 checkpoint(docs, f"{self.cfg.work_dir}/adaptive_input")
@@ -651,7 +654,7 @@ class CorpusCurationPipeline:
             width=self.cfg.lf_width,
             hotspots=checkpoint(hot, f"{self.cfg.work_dir}/adaptive_blocklist"),
         )
-        out = (
+        return (
             rep.where((F.col("n_lines") == 0) | (F.col("n_kept") > 0))
             .withColumn(
                 "text",
@@ -661,43 +664,26 @@ class CorpusCurationPipeline:
             )
             .drop("hot_grams", "n_lines", "n_kept", "kept_text")
         )
-        return spread_scan(
-            checkpoint(out, f"{self.cfg.work_dir}/adaptive_blocked")
-        )
 
     # -- stage 1: exact dedup ------------------------------------------
-    def exact_dedup(self) -> DataFrame:
-        import time
-
-        docs = self._timed(
-            "url_curation", self.url_curation, self.scrubbed_input()
-        )
-        docs = self._timed("adaptive_block", self.adaptive_block, docs)
-        t0 = time.monotonic()
-        # Round-16 (guide §2.4): keep the min-id doc per content digest
-        # via ONE row_number window over the digest — one corpus
-        # shuffle and one evaluation of the (possibly still-fused)
-        # scrub lineage.  The previous agg + left-semi shape shuffled
-        # the corpus twice (digest hash-agg, then the doc_id join) and
-        # re-evaluated the input lineage once per leg.  Survivors are
-        # identical (min doc_id per digest — exact_dup_groups'
-        # keep_doc_id rule; pytest-pinned via the pipeline e2e and
-        # drop-ledger partition contract).
+    def exact_dedup(self, docs: DataFrame | None = None) -> DataFrame:
+        """Keep the min-id doc per content digest (``docs`` defaults to
+        the scrubbed input) via ONE row_number window over the digest —
+        one corpus shuffle and one evaluation of the (possibly still
+        fused) input scan, where an agg + left-semi shape shuffles the
+        corpus twice and re-evaluates the scan once per leg.  Survivors
+        follow exact_dup_groups' keep_doc_id rule."""
         from pyspark.sql import Window
 
+        if docs is None:
+            docs = self.scrubbed_input()
         w = Window.partitionBy("_th").orderBy("doc_id")
-        out = (
+        return (
             docs.withColumn("_th", DD.text_digest(F.col("text")))
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_th", "_rn")
         )
-        # consumers tokenize/score/shingle the corpus per row
-        out = self._observed_out(out, "exact_deduped")
-        self._stage_ms["exact_dedup"] = self._stage_ms.get(
-            "exact_dedup", 0
-        ) + int((time.monotonic() - t0) * 1000)
-        return out
 
     # -- stage 1.5: segment (line) dedup (optional) --------------------
     def segment_dedup(self, docs: DataFrame) -> DataFrame:
@@ -720,12 +706,9 @@ class CorpusCurationPipeline:
         ).select("doc_id", F.col("kept_text").alias("text"))
         # re-attach metadata columns by doc_id; text is replaced by
         # the reassembled segment-deduped version
-        out = docs.drop("text").join(kept, "doc_id")
-        return spread_scan(
-            checkpoint(out, f"{self.cfg.work_dir}/segment_deduped")
-        )
+        return docs.drop("text").join(kept, "doc_id")
 
-    # -- stage 1.6: sentence dedup (optional, round 16) ----------------
+    # -- stage 1.6: sentence dedup (optional) --------------------------
     def sentence_dedup(self, docs: DataFrame) -> DataFrame:
         """Cross-document repeated-SENTENCE removal (the segment plane
         at sentence granularity): sentences >= sent_min_chars chars
@@ -754,7 +737,7 @@ class CorpusCurationPipeline:
         # zero-sentence docs keep their ORIGINAL text (kept_text would
         # be '' — the sentences contract scopes out unterminated text)
         kept = kept.select("doc_id", "n_sentences", "kept_text")
-        out = (
+        return (
             docs.join(kept, "doc_id")
             .withColumn(
                 "text",
@@ -763,9 +746,6 @@ class CorpusCurationPipeline:
                 ),
             )
             .drop("n_sentences", "kept_text")
-        )
-        return spread_scan(
-            checkpoint(out, f"{self.cfg.work_dir}/sentence_deduped")
         )
 
     # -- stage 2: quality filter ---------------------------------------
@@ -840,8 +820,7 @@ class CorpusCurationPipeline:
                 f"quality_scope must be 'global' or 'per_source', "
                 f"got {self.cfg.quality_scope!r}"
             )
-        # consumers: LM-gate scoring / minhash banding — per-row heavy
-        return self._observed_out(kept, "quality_kept")
+        return kept
 
     # -- stage 2.5: LM perplexity gate (optional) ----------------------
     def lm_gate(self, docs: DataFrame) -> DataFrame:
@@ -928,9 +907,7 @@ class CorpusCurationPipeline:
             .where(F.col("ppl") <= F.col("ppl_thr"))
             .select("doc_id")
         )
-        return self._observed_out(
-            docs.join(keep, "doc_id", "left_semi"), "lm_kept"
-        )
+        return docs.join(keep, "doc_id", "left_semi")
 
     # -- stage 3: near dedup -------------------------------------------
     def near_dedup(self, docs: DataFrame) -> DataFrame:
@@ -985,12 +962,8 @@ class CorpusCurationPipeline:
             )
         # the drop set is the non-canonical fraction — broadcast it so
         # the corpus-side anti join never shuffles
-        out = docs.join(F.broadcast(drop), "doc_id", "left_anti")
         write_parquet(clusters, f"{self.cfg.work_dir}/near_dup_clusters")
-        # hive-partition the curated corpus by language: downstream
-        # per-language training reads prune whole directories (the
-        # partition column is low-cardinality by the dq gate)
-        return self._observed_out(out, "curated", partition_by=["lang"])
+        return docs.join(F.broadcast(drop), "doc_id", "left_anti")
 
     # -- stage 3.5: semantic dedup (optional) --------------------------
     def semantic_dedup(self, docs: DataFrame) -> DataFrame:
@@ -1010,10 +983,7 @@ class CorpusCurationPipeline:
         drop = flags.where(~F.col("kept")).select(
             F.col("id").alias("doc_id")
         )
-        return self._observed_out(
-            docs.join(F.broadcast(drop), "doc_id", "left_anti"),
-            "semantic_deduped",
-        )
+        return docs.join(F.broadcast(drop), "doc_id", "left_anti")
 
     # -- stage 3.7: media near-dup (optional, round 9) -----------------
     def media_dedup(self, docs: DataFrame) -> DataFrame:
@@ -1102,13 +1072,9 @@ class CorpusCurationPipeline:
                 F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
             )
         )
-        drop = clusters.where(F.col("is_canonical") == 0).select("doc_id")
-        out = self._observed_out(
-            docs.join(F.broadcast(drop), "doc_id", "left_anti"),
-            "media_deduped",
-        )
         write_parquet(clusters, f"{self.cfg.work_dir}/media_dup_clusters")
-        return out
+        drop = clusters.where(F.col("is_canonical") == 0).select("doc_id")
+        return docs.join(F.broadcast(drop), "doc_id", "left_anti")
 
     # -- stage 4: benchmark decontamination ----------------------------
     def decontaminate(self, docs: DataFrame) -> DataFrame:
@@ -1155,13 +1121,7 @@ class CorpusCurationPipeline:
                 .select("doc_id")
             )
             bad = bad.unionByName(fuzzy_bad).distinct()
-        # consumers: chunk tokenize, pack encode, stats token aggs
-        return self._observed_out(
-            train.join(F.broadcast(bad), "doc_id", "left_anti"),
-            "decontaminated",
-            partition_by=["lang"],
-            metrics=_budget_metrics(),
-        )
+        return train.join(F.broadcast(bad), "doc_id", "left_anti")
 
     # -- stage 5: training-sequence chunking ---------------------------
     def chunk(self, docs: DataFrame) -> DataFrame:
@@ -1181,114 +1141,127 @@ class CorpusCurationPipeline:
             ),
         )
 
+
+    # -- the corpus's own tokenizer ------------------------------------
+    def _tokenizer(self, final: DataFrame, required: bool = False):
+        """``cfg.tokenizer``'s model trained on the final corpus, at
+        most once per run(): ``(merges, tokens_fn, count_fn)`` —
+        ``merges`` is the BPE merge table, empty for the unigram and
+        wordpiece families, whose segmenter rides ``tokens_fn``.  None
+        when the family is unknown or its size field is not positive;
+        ``required`` (the pack stage) raises instead.  The BPE merge
+        table is persisted whenever it is trained, the unigram piece
+        table and the wordpiece vocab alongside the packed shards."""
+        cfg = self.cfg
+        sizes = {
+            "bpe": "bpe_merges",
+            "unigram": "unigram_vocab_size",
+            "wordpiece": "wordpiece_merges",
+        }
+        if cfg.tokenizer not in sizes:
+            if required:
+                raise ValueError(
+                    f"unknown tokenizer {cfg.tokenizer!r} "
+                    "(expected 'bpe', 'unigram' or 'wordpiece')"
+                )
+            return None
+        size = sizes[cfg.tokenizer]
+        if getattr(cfg, size) <= 0:
+            if required:
+                raise ValueError(
+                    f"pack_budget requires {size} > 0 (tokenizer="
+                    f"{cfg.tokenizer!r}: the packed ids need the "
+                    "corpus-trained model)"
+                )
+            return None
+        if self._tok is not None:
+            return self._tok
+        kw = dict(max_vocab_words=cfg.bpe_vocab_words)
+        if cfg.tokenizer == "bpe":
+            from prod2vec_spark.operators.bpe import (
+                bpe_counter,
+                bpe_tokens,
+                train_bpe,
+            )
+
+            merges = train_bpe(final, n_merges=cfg.bpe_merges, **kw)
+            tokens_fn = lambda c: bpe_tokens(c, merges)  # noqa: E731
+            count_fn = bpe_counter(merges)
+            table = (
+                "bpe_merges",
+                [(i, a, b) for i, (a, b) in enumerate(merges)],
+                "merge_rank int, left string, right string",
+            )
+        elif cfg.tokenizer == "unigram":
+            from prod2vec_spark.operators.unigram import (
+                train_unigram,
+                unigram_counter,
+                unigram_tokens,
+            )
+
+            model = train_unigram(final, vocab_size=cfg.unigram_vocab_size, **kw)
+            merges = []
+            tokens_fn = lambda c: unigram_tokens(c, model)  # noqa: E731
+            count_fn = unigram_counter(model)
+            table = (
+                "unigram_pieces",
+                [(p, lp) for p, lp in model],
+                "piece string, logprob double",
+            )
+        else:
+            from prod2vec_spark.operators.wordpiece import (
+                train_wordpiece,
+                wordpiece_counter,
+                wordpiece_tokens,
+            )
+
+            vocab = train_wordpiece(final, n_merges=cfg.wordpiece_merges, **kw)
+            merges = []
+            tokens_fn = lambda c: wordpiece_tokens(c, vocab)  # noqa: E731
+            count_fn = wordpiece_counter(vocab)
+            table = ("wordpiece_vocab", [(p,) for p in vocab], "piece string")
+        if cfg.tokenizer == "bpe" or cfg.pack_budget > 0:
+            name, rows, schema = table
+            write_parquet(
+                self.spark.createDataFrame(rows, schema),
+                f"{cfg.work_dir}/{name}",
+            )
+        self._tok = (merges, tokens_fn, count_fn)
+        return self._tok
+
     # -- stage 6: stats report -----------------------------------------
     def stats(
-        self,
-        n_input: int,
-        n_exact: int,
-        n_quality: int,
-        n_neardedup: int,
-        final: DataFrame,
-        chunks: DataFrame,
+        self, counts: dict[str, int], final: DataFrame, chunks: DataFrame
     ) -> DataFrame:
-        """The curation report.  ``final`` and ``chunks`` are stage
-        outputs of this pipeline: their budget and chunk aggregates
-        were observed on the checkpoint writes that produced them."""
+        """The curation report: ``counts`` (the input and the stage-row
+        counts run() gathered), then the final corpus's budget and
+        chunk aggregates, observed on the checkpoint writes that
+        produced ``final`` and ``chunks``."""
         budget = self._observed[final]
         cagg = self._observed[chunks]
         rows = [
-            ("input", n_input),
-            ("after_exact_dedup", n_exact),
-            ("after_quality_filter", n_quality),
-            ("after_near_dedup", n_neardedup),
+            *counts.items(),
             ("final", budget["n"]),
             ("final_ws_tokens", budget["n_ws_tokens"]),
             ("final_bpe_tokens", budget["n_bpe_tokens"]),
             ("final_chunks", cagg["n"]),
             ("final_chunk_tokens", cagg["n_chunk_tokens"]),
         ]
-        if self.cfg.tokenizer == "wordpiece":
-            # wordpiece family: report final_model_tokens in ITS model
-            # tokens (train here when pack didn't run — the unigram
-            # rule: a configured family never falls through to BPE)
-            from prod2vec_spark.operators.wordpiece import (
-                train_wordpiece,
-                wordpiece_counter,
-            )
-
-            if self._wp_vocab is None and self.cfg.wordpiece_merges > 0:
-                self._wp_vocab = train_wordpiece(
-                    final,
-                    n_merges=self.cfg.wordpiece_merges,
-                    max_vocab_words=self.cfg.bpe_vocab_words,
-                )
-            if self._wp_vocab is not None:
-                n_model = final.agg(
-                    F.coalesce(
-                        F.sum(
-                            wordpiece_counter(self._wp_vocab)(F.col("text"))
-                        ),
-                        F.lit(0),
-                    ).alias("n")
-                ).first()["n"]
-                rows.append(("final_model_tokens", int(n_model)))
-        elif self.cfg.tokenizer == "unigram":
-            # unigram family: report the final budget in ITS model
-            # tokens.  run()'s pack stage usually trained the piece
-            # table; with pack_budget=0 train it here so the stats
-            # never silently fall through to the BPE branch (a
-            # 'unigram' config must never report BPE-token counts).
-            from prod2vec_spark.operators.unigram import (
-                train_unigram,
-                unigram_counter,
-            )
-
-            if self._uni_model is None and self.cfg.unigram_vocab_size > 0:
-                self._uni_model = train_unigram(
-                    final,
-                    vocab_size=self.cfg.unigram_vocab_size,
-                    max_vocab_words=self.cfg.bpe_vocab_words,
-                )
-            if self._uni_model is not None:
-                n_model = final.agg(
-                    F.coalesce(
-                        F.sum(
-                            unigram_counter(self._uni_model)(F.col("text"))
-                        ),
-                        F.lit(0),
-                    ).alias("n")
-                ).first()["n"]
-                rows.append(("final_model_tokens", int(n_model)))
-        elif self.cfg.tokenizer == "bpe" and self.cfg.bpe_merges > 0:
-            # the corpus's OWN trained tokenizer: the final budget in
-            # model tokens (merge table persisted for downstream use);
-            # run() may hand the table in so pack + stats train once
-            from prod2vec_spark.operators.bpe import bpe_counter, train_bpe
-
-            merges = self._merges if self._merges is not None else train_bpe(
-                final,
-                n_merges=self.cfg.bpe_merges,
-                max_vocab_words=self.cfg.bpe_vocab_words,
-            )
-            mt = self.spark.createDataFrame(
-                [(i, a, b) for i, (a, b) in enumerate(merges)],
-                "merge_rank int, left string, right string",
-            )
-            write_parquet(mt, f"{self.cfg.work_dir}/bpe_merges")
+        tok = self._tokenizer(final)
+        if tok is not None:
+            # the final budget in the corpus's own MODEL tokens
+            _, _, count_fn = tok
             n_model = final.agg(
-                F.coalesce(
-                    F.sum(bpe_counter(merges)(F.col("text"))), F.lit(0)
-                ).alias("n")
+                F.coalesce(F.sum(count_fn(F.col("text"))), F.lit(0)).alias("n")
             ).first()["n"]
             rows.append(("final_model_tokens", int(n_model)))
         # holdout_split on: the non-empty splits' sizes
         rows += sorted(
             (k, v) for k, v in budget.items() if k.startswith("final_") and v > 0
         )
-        # per-stage wall time of this run (VERDICT r9 ask #4): the
-        # checkpoints delimit the stages, so each t_ms_* row is the
-        # real cost of that stage including the lineage it forced;
-        # disabled stages (lazy pass-throughs, ~0 ms) are filtered
+        # per-stage wall time of this run: the checkpoints delimit the
+        # stages, so each t_ms_* row is the real cost of that stage
+        # including the lineage it forced
         rows += sorted(
             (f"t_ms_{k}", v) for k, v in self._stage_ms.items() if v > 0
         )
@@ -1312,253 +1285,118 @@ class CorpusCurationPipeline:
 
         Scale shape: one id-only left-anti join per stage boundary
         (the probe side shrinks monotonically; shuffles carry a single
-        long column) + a union of the per-stage drop sets.  The fused
-        line-filter stage has no checkpoint — its survivors are
-        recomputed via the deterministic row-local ``_scrubbed`` scan,
-        the same replay ``incremental_update`` relies on.
+        long column) + a union of the per-stage drop sets.  A row-local
+        stage has no checkpoint: its boundary is the input scan up to
+        and including it, recomputed (deterministic, row-local) — the
+        same replay ``incremental_update`` relies on.
         """
         cfg = self.cfg
+        docs = self._table(cfg.sf_dir, "documents")
         chain: list[tuple[str, DataFrame]] = []
-        if cfg.line_filter:
-            # badwords=False isolates the line filter's own drops;
-            # the badwords entry below then attributes the rest
-            chain.append(
-                ("line_filter", self._scrubbed(cfg.sf_dir, badwords=False))
-            )
-        if cfg.badwords_cats or cfg.badwords_lang_lists:
-            chain.append(("badwords_gate", self._scrubbed(cfg.sf_dir)))
-        if self._url_curation_active():
-            chain.append(
-                ("url_curation",
-                 self.spark.read.parquet(f"{cfg.work_dir}/url_curated"))
-            )
-        if cfg.adaptive_block_k > 0:
-            chain.append(
-                ("adaptive_block",
-                 self.spark.read.parquet(f"{cfg.work_dir}/adaptive_blocked"))
-            )
-        chain.append(
-            ("exact_dedup",
-             self.spark.read.parquet(f"{cfg.work_dir}/exact_deduped"))
-        )
-        if cfg.segment_dedup:
-            chain.append(
-                ("segment_dedup",
-                 self.spark.read.parquet(f"{cfg.work_dir}/segment_deduped"))
-            )
-        if cfg.sentence_dedup:
-            chain.append(
-                ("sentence_dedup",
-                 self.spark.read.parquet(f"{cfg.work_dir}/sentence_deduped"))
-            )
-        chain.append(
-            ("quality_filter",
-             self.spark.read.parquet(f"{cfg.work_dir}/quality_kept"))
-        )
-        if cfg.lm_gate:
-            chain.append(
-                ("lm_gate", self.spark.read.parquet(f"{cfg.work_dir}/lm_kept"))
-            )
-        chain.append(
-            ("near_dedup", self.spark.read.parquet(f"{cfg.work_dir}/curated"))
-        )
-        if cfg.semantic_dedup:
-            chain.append(
-                ("semantic_dedup",
-                 self.spark.read.parquet(f"{cfg.work_dir}/semantic_deduped"))
-            )
-        if cfg.media_path is not None:
-            chain.append(
-                ("media_dedup",
-                 self.spark.read.parquet(f"{cfg.work_dir}/media_deduped"))
-            )
-        chain.append(
-            ("decontaminate",
-             self.spark.read.parquet(f"{cfg.work_dir}/decontaminated"))
-        )
-
+        for st in self._enabled():
+            if st.out is None:
+                docs = getattr(self, st.name)(docs)
+            else:
+                docs = self.spark.read.parquet(f"{cfg.work_dir}/{st.out}")
+            if st.drops:
+                chain.append((st.name, docs))
         ledger = fold_drop_ledger(self._table(cfg.sf_dir, "documents"), chain)
         return checkpoint(ledger, f"{cfg.work_dir}/drop_ledger")
 
     # -- full run -------------------------------------------------------
-    def run(self) -> DataFrame:
-        import time
+    def _run_stage(self, st: Stage, docs: DataFrame) -> DataFrame:
+        return self._observed_out(
+            getattr(self, st.name)(docs),
+            st.out,
+            list(st.partition_by),
+            st.metrics(),
+        )
 
-        self._stage_ms = {}
-        self._observed = {}
-        t0 = time.monotonic()
-        self.gates()
-        # stamp gates BEFORE the input scan so the initial documents
-        # read + count() is attributed to its own 'input' row, not
-        # inflated into the gates wall-time
-        self._stage_ms["gates"] = int((time.monotonic() - t0) * 1000)
-        t0 = time.monotonic()
-        n_input = self._table(self.cfg.sf_dir, "documents").count()
-        self._stage_ms["input"] = int((time.monotonic() - t0) * 1000)
-        exact = self.exact_dedup()  # times url_curation/adaptive_block/itself
-        # stage row counts were observed on the checkpoint writes
-        n_exact = self._observed[exact]["n"]
-        if self.cfg.segment_dedup:
-            exact = self._timed("segment_dedup", self.segment_dedup, exact)
-        if self.cfg.sentence_dedup:
-            exact = self._timed("sentence_dedup", self.sentence_dedup, exact)
-        quality = self._timed("quality_filter", self.quality_filter, exact)
-        if self.cfg.lm_gate:
-            quality = self._timed("lm_gate", self.lm_gate, quality)
-        n_quality = self._observed[quality]["n"]
-        deduped = self._timed("near_dedup", self.near_dedup, quality)
-        if self.cfg.semantic_dedup:
-            deduped = self._timed("semantic_dedup", self.semantic_dedup, deduped)
-        if self.cfg.media_path is not None:
-            deduped = self._timed("media_dedup", self.media_dedup, deduped)
-        n_neardedup = self._observed[deduped]["n"]
-        final = self._timed("decontaminate", self.decontaminate, deduped)
-        if self.cfg.holdout_split:
+    def run(self) -> DataFrame:
+        """Gates, then every enabled stage of ``STAGES`` over the input
+        scan (each checkpointed stage timed as one ``t_ms_*`` row),
+        then the final corpus's split, mix report, chunks, packed ids
+        and shards; returns the curation report."""
+        cfg = self.cfg
+        self._stage_ms, self._observed, self._tok = {}, {}, None
+        self._timed("gates", self.gates)
+        # the input count keeps its own row, apart from the gates
+        counts = {
+            "input": self._timed(
+                "input", self._table(cfg.sf_dir, "documents").count
+            )
+        }
+        docs = self._scrubbed(cfg.sf_dir)
+        for st in self._enabled():
+            if st.out is not None:
+                docs = self._timed(st.name, self._run_stage, st, docs)
+                if st.feeds:
+                    # stage row counts were observed on the checkpoint
+                    counts[st.feeds] = self._observed[docs]["n"]
+        final = train = docs
+        if cfg.holdout_split:
             final = self._timed("holdout_split", self.split_holdout, final)
             train = final.where(F.col("split") == "train").drop("split")
-        else:
-            train = final
-        if self.cfg.mix_report:
+        if cfg.mix_report:
             self._timed("mix_report", self.write_mix_report, final)
         chunks = self._timed("chunk", self.chunk, train)
-        if self.cfg.pack_budget > 0:
-            # trainable shards: pack the TRAIN side into per-bin
-            # input_ids under the corpus's own tokenizer (family
-            # chosen by cfg.tokenizer — both ride the tokens_fn seam)
-            if self.cfg.tokenizer not in ("bpe", "unigram", "wordpiece"):
-                raise ValueError(
-                    f"unknown tokenizer {self.cfg.tokenizer!r} "
-                    "(expected 'bpe', 'unigram' or 'wordpiece')"
-                )
-            from prod2vec_spark.operators.bpe import token_vocab
-            from prod2vec_spark.operators.chunking import pack_token_ids
+        if cfg.pack_budget > 0:
+            self._timed("pack", self.pack, final, train)
+        if cfg.epoch_shards > 0:
+            self._timed("epoch_shards", self.write_epoch_shards, chunks)
+        return self.stats(counts, final, chunks)
 
-            t0 = time.monotonic()
-            if self.cfg.tokenizer == "wordpiece":
-                if self.cfg.wordpiece_merges <= 0:
-                    raise ValueError(
-                        "pack_budget with tokenizer='wordpiece' requires "
-                        "wordpiece_merges > 0"
-                    )
-                from prod2vec_spark.operators.wordpiece import (
-                    train_wordpiece,
-                    wordpiece_counter,
-                    wordpiece_tokens,
-                )
+    # -- trainable shards (optional) -----------------------------------
+    def pack(self, final: DataFrame, train: DataFrame) -> None:
+        """The TRAIN side packed into per-bin ``input_ids`` under the
+        corpus's own tokenizer (trained on ``final``).  The tokenizer
+        runs over the train corpus EXACTLY ONCE and its token arrays
+        persist; the vocab aggregation and the packer then read columns
+        instead of re-encoding (the wordpiece/unigram encoders are
+        pandas_udf boundaries — otherwise paid 3× per pack: vocab +
+        count + ids).  The identity tokens_fn over the staged array
+        column keeps both operators' dataflow unchanged."""
+        from prod2vec_spark.operators.bpe import token_vocab
+        from prod2vec_spark.operators.chunking import pack_token_ids
 
-                self._wp_vocab = train_wordpiece(
-                    final,
-                    n_merges=self.cfg.wordpiece_merges,
-                    max_vocab_words=self.cfg.bpe_vocab_words,
-                )
-                wpv = self._wp_vocab
-                write_parquet(
-                    self.spark.createDataFrame(
-                        [(p,) for p in wpv], "piece string"
-                    ),
-                    f"{self.cfg.work_dir}/wordpiece_vocab",
-                )
-                merges = []
-                tokens_fn = lambda c: wordpiece_tokens(c, wpv)  # noqa: E731
-                count_fn = wordpiece_counter(wpv)
-            elif self.cfg.tokenizer == "unigram":
-                if self.cfg.unigram_vocab_size <= 0:
-                    raise ValueError(
-                        "pack_budget with tokenizer='unigram' requires "
-                        "unigram_vocab_size > 0"
-                    )
-                from prod2vec_spark.operators.unigram import (
-                    train_unigram,
-                    unigram_counter,
-                    unigram_tokens,
-                )
-
-                self._uni_model = train_unigram(
-                    final,
-                    vocab_size=self.cfg.unigram_vocab_size,
-                    max_vocab_words=self.cfg.bpe_vocab_words,
-                )
-                model = self._uni_model
-                pieces = self.spark.createDataFrame(
-                    [(p, lp) for p, lp in model],
-                    "piece string, logprob double",
-                )
-                write_parquet(pieces, f"{self.cfg.work_dir}/unigram_pieces")
-                merges: list = []
-                tokens_fn = lambda c: unigram_tokens(c, model)  # noqa: E731
-                count_fn = unigram_counter(model)
-            else:
-                if self.cfg.bpe_merges <= 0:
-                    raise ValueError(
-                        "pack_budget requires bpe_merges > 0 (the packed "
-                        "ids need the corpus-trained merge table)"
-                    )
-                from prod2vec_spark.operators.bpe import train_bpe
-
-                self._merges = train_bpe(
-                    final,
-                    n_merges=self.cfg.bpe_merges,
-                    max_vocab_words=self.cfg.bpe_vocab_words,
-                )
-                merges = self._merges
-                tokens_fn = None
-                count_fn = None
-            # Round-16 (guide §4.2/§8 decode-once): run the tokenizer
-            # over the train corpus EXACTLY ONCE and persist the token
-            # arrays; the vocab aggregation and the packer then read
-            # columns instead of re-encoding (the wordpiece/unigram
-            # encoders are pandas_udf boundaries — previously paid 3×
-            # per pack: vocab + count + ids; measured 39 s → the
-            # dominant __curation_all__ stage).  Identity tokens_fn
-            # over the staged array column keeps both operators'
-            # dataflow unchanged.
-            from prod2vec_spark.operators.bpe import bpe_tokens
-
-            tf = tokens_fn if tokens_fn is not None else (
-                lambda c: bpe_tokens(c, merges)
-            )
-            staged = spread_scan(
-                checkpoint(
-                    train.select(
-                        "doc_id", "lang", tf(F.col("text")).alias("_toks")
-                    ),
-                    f"{self.cfg.work_dir}/train_tokens",
-                )
-            )
-            ident = lambda c: c  # noqa: E731
-            vocab = token_vocab(
-                staged, merges, text_col="_toks", tokens_fn=ident
-            )
-            vocab = checkpoint(vocab, f"{self.cfg.work_dir}/token_vocab")
-            packed = pack_token_ids(
-                staged,
-                merges,
-                vocab,
-                budget=self.cfg.pack_budget,
-                n_shards=self.cfg.pack_shards,
-                text_col="_toks",
-                tokens_fn=ident,
-                count_fn=lambda c: F.size(c),
-            )
-            write_parquet(packed, f"{self.cfg.work_dir}/input_ids")
-            self._stage_ms["pack"] = int((time.monotonic() - t0) * 1000)
-        if self.cfg.epoch_shards > 0:
-            from prod2vec_spark.operators.shards import write_epoch_shards
-
-            t0 = time.monotonic()
-            write_epoch_shards(
-                chunks.withColumn(
-                    "chunk_key",
-                    F.col("doc_id") * F.lit(100000) + F.col("chunk_idx"),
+        merges, tokens_fn, _ = self._tokenizer(final, required=True)
+        staged = spread_scan(
+            checkpoint(
+                train.select(
+                    "doc_id", "lang", tokens_fn(F.col("text")).alias("_toks")
                 ),
-                f"{self.cfg.work_dir}/epoch0",
-                epoch=0,
-                n_shards=self.cfg.epoch_shards,
-                id_col="chunk_key",
+                f"{self.cfg.work_dir}/train_tokens",
             )
-            self._stage_ms["epoch_shards"] = int((time.monotonic() - t0) * 1000)
-        return self.stats(
-            n_input, n_exact, n_quality, n_neardedup, final, chunks
+        )
+        ident = lambda c: c  # noqa: E731
+        vocab = token_vocab(staged, merges, text_col="_toks", tokens_fn=ident)
+        vocab = checkpoint(vocab, f"{self.cfg.work_dir}/token_vocab")
+        packed = pack_token_ids(
+            staged,
+            merges,
+            vocab,
+            budget=self.cfg.pack_budget,
+            n_shards=self.cfg.pack_shards,
+            text_col="_toks",
+            tokens_fn=ident,
+            count_fn=lambda c: F.size(c),
+        )
+        write_parquet(packed, f"{self.cfg.work_dir}/input_ids")
+
+    def write_epoch_shards(self, chunks: DataFrame) -> None:
+        """The training chunks as epoch-0 shuffle shards: the on-disk
+        row order is the epoch permutation (operators/shards.py)."""
+        from prod2vec_spark.operators.shards import write_epoch_shards
+
+        write_epoch_shards(
+            chunks.withColumn(
+                "chunk_key",
+                F.col("doc_id") * F.lit(100000) + F.col("chunk_idx"),
+            ),
+            f"{self.cfg.work_dir}/epoch0",
+            epoch=0,
+            n_shards=self.cfg.epoch_shards,
+            id_col="chunk_key",
         )
 
     # -- stage 5.5: held-out split (optional) --------------------------
@@ -1638,26 +1476,21 @@ class CorpusCurationPipeline:
 
         Row-local scans of the prior stores (digest, quality score)
         do run — those are cheap; what never re-runs is the
-        shingle/minhash/pair machinery for unchanged documents.
+        shingle/minhash/pair machinery for unchanged documents.  A
+        config running a stage marked ``incremental=False``, or an
+        option this replay does not model, is rejected before any
+        Spark work.
         """
         cfg = self.cfg
-        unsupported = [
+        unsupported = [st.name for st in self._enabled() if not st.incremental]
+        unsupported += [
             name
             for name, on in [
                 ("canonical_policy!=min_id", cfg.canonical_policy != "min_id"),
                 ("quality_scope!=global", cfg.quality_scope != "global"),
-                ("segment_dedup", cfg.segment_dedup),
-                ("sentence_dedup", cfg.sentence_dedup),
-                ("lm_gate", cfg.lm_gate),
-                ("semantic_dedup", cfg.semantic_dedup),
                 ("editdist_verify", cfg.editdist_verify),
                 ("compression_gate", cfg.compression_gate),
-                ("media_path", cfg.media_path is not None),
-                ("domain_blocklist", bool(cfg.domain_blocklist)),
-                ("domain_cap_k", cfg.domain_cap_k > 0),
-                ("adaptive_block_k", cfg.adaptive_block_k > 0),
                 ("pack_budget", cfg.pack_budget > 0),
-                ("url_dedup", cfg.url_dedup),
             ]
             if on
         ]
@@ -1670,6 +1503,9 @@ class CorpusCurationPipeline:
 
         spark = self.spark
         incr = f"{cfg.work_dir}/incr"
+        exact, quality, near = (
+            _STAGE[n] for n in ("exact_dedup", "quality_filter", "near_dedup")
+        )
         old = self._scrubbed(cfg.sf_dir)
         new = self._scrubbed(new_sf_dir)
         diff = DD.snapshot_diff(old, new)
@@ -1682,7 +1518,7 @@ class CorpusCurationPipeline:
 
         # exact plane: prior survivors minus departures, plus the
         # delta's min-id-per-digest survivors whose digest is unseen
-        prior_exact = spark.read.parquet(f"{cfg.work_dir}/exact_deduped")
+        prior_exact = spark.read.parquet(f"{cfg.work_dir}/{exact.out}")
         kept_prior = prior_exact.join(F.broadcast(gone_ids), "doc_id", "left_anti")
         delta = new.join(F.broadcast(delta_ids), "doc_id", "left_semi")
         dsurv = delta.join(
@@ -1720,7 +1556,7 @@ class CorpusCurationPipeline:
                     F.size(F.col("_g2")),
                 )
             ).drop("_toks", "_g2", "_g3")
-        exact2 = checkpoint(kept_prior.unionByName(dsurv), f"{incr}/exact_deduped")
+        exact2 = checkpoint(kept_prior.unionByName(dsurv), f"{incr}/{exact.out}")
 
         # quality plane: the FROZEN batch threshold, applied row-locally
         thr = spark.read.parquet(f"{cfg.work_dir}/quality_thr")
@@ -1730,7 +1566,7 @@ class CorpusCurationPipeline:
             .where(F.col("q") >= F.col("q_thr"))
             .drop("q_thr", "q")
         )
-        kept2 = checkpoint(kept2, f"{incr}/quality_kept")
+        kept2 = checkpoint(kept2, f"{incr}/{quality.out}")
 
         # near-dup plane: stored bands for the surviving archive, the
         # delta banded fresh inside incremental_lsh_candidates; prior
@@ -1760,4 +1596,6 @@ class CorpusCurationPipeline:
         write_parquet(clusters, f"{incr}/near_dup_clusters")
         drop = clusters.where(F.col("is_canonical") == 0).select("doc_id")
         curated2 = kept2.join(F.broadcast(drop), "doc_id", "left_anti")
-        return checkpoint(curated2, f"{incr}/curated", partition_by=["lang"])
+        return checkpoint(
+            curated2, f"{incr}/{near.out}", partition_by=list(near.partition_by)
+        )

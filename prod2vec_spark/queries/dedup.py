@@ -435,9 +435,10 @@ def q_neardup_modal_agreement(spark, sf_dir):
     Scale shape: both inputs are the OUTPUTS of already-bucketed
     operators (candidate pair lists, orders of magnitude smaller than
     the corpus); the agreement join runs on those lists only."""
-    txt = q_lsh_candidates(spark, sf_dir).select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    )
+    docs = read_table(spark, sf_dir, "documents")
+    txt = DD.lsh_candidate_pairs(
+        DD.minhash_bands(docs), max_group=LSH_MAX_GROUP
+    ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     emb = q_embedding_neardup(spark, sf_dir).select(
         F.col("vec_a").alias("a"), F.col("vec_b").alias("b")
     )

@@ -3,10 +3,13 @@ deleted with its tests: the feature-row media decode fork (a second
 magic-byte table beside ``multimodal.sniff_format``), its one query
 (``webp_header_audit``), nine library paths only tests called, and the
 events-stream footer sniff.  None of these names may come back in the
-program files.  No Spark session needed."""
+program files.  Also: the batch curation DAG's stage order is written
+once, in ``pipeline_llm.STAGES``, and so is the tokenizer family
+switch.  No Spark session needed."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -52,3 +55,88 @@ def test_deleted_modules_stay_gone():
     for rel in ("prod2vec_spark/operators/layout.py",
                 "prod2vec_spark/functions/vector_arrow.py"):
         assert not (ROOT / rel).exists(), rel
+
+
+# -- pipeline_llm: one stage table -----------------------------------------
+PIPELINE_LLM = ROOT / "prod2vec_spark" / "pipeline_llm.py"
+
+
+def _tree() -> ast.Module:
+    return ast.parse(PIPELINE_LLM.read_text())
+
+
+def _methods(tree: ast.Module) -> dict[str, ast.FunctionDef]:
+    cls = next(
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "CorpusCurationPipeline"
+    )
+    return {f.name: f for f in cls.body if isinstance(f, ast.FunctionDef)}
+
+
+def _stage_table(tree: ast.Module) -> ast.AST:
+    return next(
+        n.value for n in tree.body
+        if isinstance(n, ast.AnnAssign) and n.target.id == "STAGES"
+    )
+
+
+def _strings(tree: ast.Module) -> list[str]:
+    """Every string constant except docstrings."""
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    return [
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and id(n) not in docs
+    ]
+
+
+def test_each_stage_checkpoint_dir_is_spelled_once():
+    from prod2vec_spark.pipeline_llm import STAGES
+
+    strings = _strings(_tree())
+    for st in STAGES:
+        if st.out is None:
+            continue
+        hits = [s for s in strings if re.search(rf"(^|/){st.out}($|/)", s)]
+        assert hits == [st.out], (st.name, hits)
+
+
+def test_stage_switches_are_read_only_by_the_table():
+    """run(), drop_ledger(), incremental_update() and the input scan
+    read no config field that a stage predicate reads."""
+    tree = _tree()
+    switches = {
+        n.attr for lam in ast.walk(_stage_table(tree))
+        if isinstance(lam, ast.Lambda)
+        for n in ast.walk(lam.body) if isinstance(n, ast.Attribute)
+    }
+    assert {"line_filter", "url_dedup", "lm_gate", "media_path"} <= switches
+    methods = _methods(tree)
+    for name in ("run", "drop_ledger", "incremental_update", "_scrubbed"):
+        read = {
+            n.attr for n in ast.walk(methods[name])
+            if isinstance(n, ast.Attribute)
+        }
+        assert not read & switches, (name, read & switches)
+
+
+def test_scrubbed_takes_no_stage_switch():
+    args = _methods(_tree())["_scrubbed"].args
+    assert [a.arg for a in args.args] == ["self", "sf_dir"]
+
+
+def test_tokenizer_family_is_branched_in_one_method():
+    readers = [
+        name for name, fn in _methods(_tree()).items()
+        if any(
+            isinstance(n, ast.Attribute) and n.attr == "tokenizer"
+            for n in ast.walk(fn)
+        )
+    ]
+    assert readers == ["_tokenizer"]

@@ -952,9 +952,7 @@ def test_corpus_pipeline_url_dedup_stage(spark, tmp_path):
     """Round-12 canonical-URL dedup: six surface variants of the same
     page (tracking params, casing, default port, fragment, param
     order) collapse to the min-id survivor BEFORE any text machinery;
-    unparseable-URL docs all pass (NULL keys never collapse); and
-    incremental_update rejects the corpus-wide stage loudly."""
-    import pytest
+    unparseable-URL docs all pass (NULL keys never collapse)."""
     from pyspark.sql import functions as F
 
     from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
@@ -998,8 +996,6 @@ def test_corpus_pipeline_url_dedup_stage(spark, tmp_path):
     assert kept & set(range(30)) == {min(page_docs)} | (junk & set(range(30)))
     # unique-url docs all survive
     assert set(range(30, 60)) - junk <= kept
-    with pytest.raises(ValueError, match="url_dedup"):
-        pipe.incremental_update(sf_dir)
 
 
 def test_corpus_pipeline_lm_gate_under_kneser_ney(spark, tmp_path):
@@ -1345,8 +1341,7 @@ def test_corpus_pipeline_adaptive_block_stage(spark, tmp_path):
     """Round-9b adaptive boilerplate stage: the DAG mines its own
     top gram, persists the blocklist artifact, cuts matching lines
     before exact dedup, and the drop ledger attributes all-boiler
-    pages to the stage; incremental_update rejects the option."""
-    import pytest
+    pages to the stage."""
     from pyspark.sql import functions as F
 
     from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
@@ -1387,9 +1382,6 @@ def test_corpus_pipeline_adaptive_block_stage(spark, tmp_path):
 
     ledger = {r["doc_id"]: r["dropped_at"] for r in p.drop_ledger().collect()}
     assert ledger[1] == "adaptive_block"
-
-    with pytest.raises(ValueError, match="unsupported options"):
-        p.incremental_update(sf_dir)
 
 
 def test_corpus_pipeline_segment_keep_first_policy(spark, tmp_path):

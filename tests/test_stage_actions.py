@@ -3,7 +3,11 @@
 * ``sources/io.checkpoint`` reads back with the schema a parquet scan
   would infer, and opening that read-back runs no job;
 * the curation report's counts and aggregates, observed on the
-  checkpoint writes, equal a fresh count of each checkpoint;
+  checkpoint writes, equal a fresh count of each checkpoint, and the
+  drop ledger partitions the input between the final corpus and the
+  stages of ``STAGES``;
+* ``incremental_update`` rejects every unsupported stage and option
+  before it runs any SQL execution;
 * connected components keeps its labels and rounds, with one SQL
   execution per round;
 * the SQL-execution totals of ``CorpusCurationPipeline.run()`` and
@@ -24,7 +28,7 @@ from pyspark.sql import functions as F
 from prod2vec_spark.operators import text as TX
 from prod2vec_spark.operators.graph import connected_components_with_rounds
 from prod2vec_spark.pipeline import PipelineConfig, Prod2VecPipeline
-from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
+from prod2vec_spark.pipeline_llm import STAGES, CorpusConfig, CorpusCurationPipeline
 from prod2vec_spark.sources.io import checkpoint
 from tests.conftest import SF_SMOKE
 
@@ -176,11 +180,34 @@ def _assert_report_matches_checkpoints(spark, cfg, by_stage):
     assert got == want
 
 
+def _assert_ledger_partitions_the_input(spark, cfg):
+    """The drop ledger over a finished run: input ids = final ids ∪
+    ledger ids, disjoint, one row per dropped id, each naming a table
+    stage."""
+    wd = cfg.work_dir
+    ids = lambda df: [r["doc_id"] for r in df.select("doc_id").collect()]  # noqa: E731
+    rows = CorpusCurationPipeline(spark, cfg).drop_ledger().collect()
+    ledger = [r["doc_id"] for r in rows]
+    final = set(ids(spark.read.parquet(
+        f"{wd}/{'final_split' if cfg.holdout_split else 'decontaminated'}"
+    )))
+    assert len(ledger) == len(set(ledger))
+    assert set(ledger) | final == set(
+        ids(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+    )
+    assert set(ledger) & final == set()
+    assert {r["dropped_at"] for r in rows} <= {s.name for s in STAGES}
+
+
 def test_curation_report_equals_fresh_checkpoint_counts(spark, default_curation):
     cfg, by_stage, _ = default_curation
     _assert_report_matches_checkpoints(spark, cfg, by_stage)
     # the input stage keeps its own count and wall-time row
     assert by_stage["t_ms_input"] > 0
+
+
+def test_drop_ledger_partitions_the_default_run(spark, default_curation):
+    _assert_ledger_partitions_the_input(spark, default_curation[0])
 
 
 def test_curation_report_equals_fresh_counts_with_optional_stages(spark, tmp_path):
@@ -195,6 +222,45 @@ def test_curation_report_equals_fresh_counts_with_optional_stages(spark, tmp_pat
     by_stage = {r["stage"]: r["n"] for r in report.collect()}
     assert {"final_train", "t_ms_lm_gate", "t_ms_semantic_dedup"} <= set(by_stage)
     _assert_report_matches_checkpoints(spark, cfg, by_stage)
+    _assert_ledger_partitions_the_input(spark, cfg)
+
+
+# -- incremental_update: unsupported configs fail before any work ---------
+INCREMENTAL_REJECTS = [
+    # (the stage or option the error names, the config that enables it)
+    ("url_curation", {"domain_blocklist": ("spam.example",)}),
+    ("url_curation", {"domain_cap_k": 2}),
+    ("url_curation", {"url_dedup": True}),
+    ("adaptive_block", {"adaptive_block_k": 1}),
+    ("segment_dedup", {"segment_dedup": True}),
+    ("sentence_dedup", {"sentence_dedup": True}),
+    ("lm_gate", {"lm_gate": True}),
+    ("semantic_dedup", {"semantic_dedup": True}),
+    ("media_dedup", {"media_path": "media"}),
+    ("canonical_policy", {"canonical_policy": "quality"}),
+    ("quality_scope", {"quality_scope": "per_source"}),
+    ("editdist_verify", {"editdist_verify": True}),
+    ("compression_gate", {"compression_gate": True}),
+    ("pack_budget", {"pack_budget": 64}),
+]
+
+
+def test_incremental_rejects_cover_every_unsupported_stage():
+    named = {name for name, _ in INCREMENTAL_REJECTS}
+    assert {s.name for s in STAGES if not s.incremental} <= named
+
+
+@pytest.mark.parametrize(
+    "name, kw",
+    INCREMENTAL_REJECTS,
+    ids=[next(iter(kw)) for _, kw in INCREMENTAL_REJECTS],
+)
+def test_incremental_update_rejects_before_any_execution(spark, tmp_path, name, kw):
+    cfg = CorpusConfig(sf_dir=SF_SMOKE, work_dir=str(tmp_path / "w"), **kw)
+    with Ledger(spark, f"incr-reject-{tmp_path.name}") as led:
+        with pytest.raises(ValueError, match=name):
+            CorpusCurationPipeline(spark, cfg).incremental_update(SF_SMOKE)
+    assert led.executions == 0
 
 
 # -- connected components: one SQL execution per round --------------------
