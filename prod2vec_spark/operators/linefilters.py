@@ -299,10 +299,11 @@ def apply_line_filter(
     drop_brace_lines: bool = False,
     max_dropped_frac: float = 1.0,
 ) -> DataFrame:
-    """``line_filter`` + the standard keep/rewrite policy, shared by
-    the batch curation DAG and the streaming corpus pipeline (one
-    code path ⇒ zero batch/stream semantic gap — every expression is
-    row-local and stateless, so it is stream-safe by construction):
+    """``line_filter`` + the standard keep/rewrite policy.  Every
+    expression is row-local and stateless, so it is stream-safe by
+    construction; both curation DAGs call it through the batch DAG's
+    ``line_filter`` stage, which passes all seven knobs from the
+    config fields the two DAGs share:
 
     * docs with no lines at all (empty/NULL text) pass through with
       their text untouched;

@@ -38,9 +38,7 @@ band table (``span_signatures``: (media_id, unit, hash, band, slice)
 rows) and an incremental probe against that table
 (``incremental_span_pairs``).  Whole-media hashes have the same pair:
 ``media_signatures`` ((media_id, modality, band, slice, mhash) rows)
-and ``incremental_media_pairs``.  The streaming gates
-(streaming/span_gate.py, streaming/media.py) derive their signatures
-from the same two functions.
+and ``incremental_media_pairs``.
 
 Palette-type PNGs (color type 3) hash their palette indices — fine
 for near-identical detection (same palette ⇒ same indices) but two
@@ -954,9 +952,8 @@ def media_signatures(
     signature of every decodable media row — the PERSISTABLE band
     table the incremental probe reads back (the text plane's
     minhash_bands store, media edition; the hash rides along so the
-    archive is never re-decoded) and the streaming media gate's
-    per-batch signatures.  Undecodable blobs emit no rows (auditable
-    upstream)."""
+    archive is never re-decoded).  Undecodable blobs emit no rows
+    (auditable upstream)."""
     hashes = media_hashes(media, id_col=id_col, blob_col=blob_col)
     return (
         hashes.where(F.col("mhash").isNotNull())
@@ -989,9 +986,8 @@ def incremental_media_pairs(
     probed against a prior snapshot's persisted
     :func:`media_signatures` table — the incremental twin of
     :func:`media_neardup_pairs` (and the media leg of the
-    snapshot-diff plane), completing the media triad next to the
-    batch stage (pipeline_llm.media_dedup) and the streaming gate
-    (streaming/media.py).
+    snapshot-diff plane), next to the batch stage
+    (pipeline_llm.media_dedup).
 
     At 100 TB the point is what does NOT happen: the archived corpus
     is never re-decoded or re-hashed — only its band table is read

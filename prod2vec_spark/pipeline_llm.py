@@ -88,19 +88,55 @@ def _budget_metrics() -> tuple:
     )
 
 
-@dataclass
-class CorpusConfig:
-    sf_dir: str
+@dataclass(kw_only=True)
+class CurationConfig:
+    """The fields both curation DAGs read: ``CorpusConfig`` (batch)
+    and the streaming ``StreamCorpusConfig`` extend it, so a stage the
+    two share reads the same field with the same default.  The
+    defaults of ``repetition_gate`` and ``lm_smoothing`` are the
+    batch DAG's; the stream overrides both."""
+
     work_dir: str
-    quality_pct: float = 0.25  # drop the worst quartile
-    quality_scope: str = "global"  # or "per_source": percentile within source
-    lsh_max_group: int = 64  # degenerate-band cap (queries/common.py LSH_MAX_GROUP)
     shingle_k: int = 3
-    scrub_pii: bool = True
-    scrub_cc: bool = False  # + Luhn-verified card redaction (pii.scrub_cc)
     repetition_gate: bool = True
+    # C4 rule-based line filtering (Raffel et al. 2020 §2.2): lines
+    # violating the rules are cut from each doc; docs that lose EVERY
+    # line (all-junk pages), or more than lf_max_dropped_frac of
+    # their lines, leave the corpus.  Docs with no lines at all
+    # (empty/NULL text) pass through — the DQ gates and exact dedup
+    # own that class.
+    line_filter: bool = False
+    lf_mode: str = "window"  # "newline" for real web documents
+    lf_width: int = 10
+    lf_min_words: int = 3
+    lf_blocklist: tuple[str, ...] = ("lorem ipsum", "javascript")
+    lf_require_punct: bool = False
+    lf_drop_braces: bool = False
+    lf_max_dropped_frac: float = 1.0  # 1.0 = only all-junk docs drop
+    # document-level toxicity/badwords screen (C4 §2.2 — 'any page
+    # containing a word on the list is removed'): category→words map
+    # (None = off); a doc drops when its badword fraction exceeds
+    # badwords_max_frac (0.0 = ANY hit drops, the C4 policy).
+    badwords_cats: "dict[str, tuple[str, ...]] | None" = None
+    badwords_max_frac: float = 0.0
+    # per-LANGUAGE blocklists (C4 ships ~25 language files) —
+    # lang -> {category -> words}, each doc screened against ITS
+    # language's list (operators/badwords.badwords_by_lang); mutually
+    # exclusive with badwords_cats.  Unlisted languages fall back to
+    # badwords_default_lang's list when set, else pass unscreened.
+    badwords_lang_lists: "dict[str, dict[str, tuple[str, ...]]] | None" = None
+    badwords_default_lang: "str | None" = None
+    # segment windows: width in words, and the number of docs sharing
+    # a window that makes it boilerplate
+    seg_width: int = 10
+    seg_min_docs: int = 2
+    lm_gate: bool = False
+    # smoothing family of the LM gate's model — "stupid_backoff"
+    # (bigram, Brants et al. 2007) or "kneser_ney" (interpolated KN,
+    # Chen & Goodman 1998 — the continuation-count family;
+    # operators/lm.fit_knn + score_docs_knn)
+    lm_smoothing: str = "stupid_backoff"
     decon_n: int = 5  # decontamination word-n-gram order
-    decon_bench_frac: float = 0.1  # held-out split fraction
     decon_min_frac: float = 0.2  # collision fraction that drops a doc
     # ALSO run the fuzzy (MinHash + exact-Jaccard) screen —
     # paraphrased/partial eval overlap the exact n-gram rule misses
@@ -115,6 +151,17 @@ class CorpusConfig:
     decon_fuzzy_jaccard: float = 0.3
     decon_fuzzy_hashes: int = 16
     decon_fuzzy_band: int = 2
+
+
+@dataclass(kw_only=True)
+class CorpusConfig(CurationConfig):
+    sf_dir: str
+    quality_pct: float = 0.25  # drop the worst quartile
+    quality_scope: str = "global"  # or "per_source": percentile within source
+    lsh_max_group: int = 64  # degenerate-band cap (queries/common.py LSH_MAX_GROUP)
+    scrub_pii: bool = True
+    scrub_cc: bool = False  # + Luhn-verified card redaction (pii.scrub_cc)
+    decon_bench_frac: float = 0.1  # held-out split fraction
     chunk_len: int = 32
     chunk_stride: int = 24
     chunk_min: int = 8
@@ -131,8 +178,6 @@ class CorpusConfig:
     # boilerplate-free text.  Docs that lose more than
     # seg_max_dropped_frac of their windows drop entirely.
     segment_dedup: bool = False
-    seg_width: int = 10
-    seg_min_docs: int = 2
     seg_max_dropped_frac: float = 0.5
     # repeated-segment survivor policy — "drop_all" (CCNet:
     # shared windows vanish everywhere) or "keep_first" (ExactSubstr:
@@ -147,16 +192,10 @@ class CorpusConfig:
     sent_max_dropped_frac: float = 0.5
     sent_policy: str = "drop_all"
     # LM perplexity gate: drop the highest-ppl tail (lm_drop_pct) —
-    # the KenLM-style fluency screen.
-    lm_gate: bool = False
+    # the KenLM-style fluency screen.  Both smoothing families share
+    # the md5-uniform split and the percentile-cut shape.
     lm_drop_pct: float = 0.1
     lm_train_frac: float = 0.8
-    # smoothing family for the gate's LM — "stupid_backoff" (bigram,
-    # Brants et al. 2007, the default) or "kneser_ney" (interpolated
-    # KN, Chen & Goodman 1998 — the continuation-count family;
-    # operators/lm.fit_knn + score_docs_knn at lm_order).  Both share
-    # the md5-uniform split and the percentile-cut shape.
-    lm_smoothing: str = "stupid_backoff"
     # derive the KN discounts from the fitted tables' counts-of-counts
     # instead of the 0.75 default: at lm_order 2 one absolute D =
     # n1/(n1+2·n2) (Ney-Essen-Kneser, operators/lm.estimate_discount);
@@ -277,20 +316,6 @@ class CorpusConfig:
     tokenizer: str = "bpe"
     unigram_vocab_size: int = 200
     wordpiece_merges: int = 50
-    # C4 rule-based line filtering (Raffel et al. 2020 §2.2): lines
-    # violating the rules are cut from each doc; docs that lose EVERY
-    # line (all-junk pages), or more than lf_max_dropped_frac of
-    # their lines, leave the corpus.  Docs with no lines at all
-    # (empty/NULL text) pass through — the DQ gates and exact dedup
-    # own that class.
-    line_filter: bool = False
-    lf_mode: str = "window"  # "newline" for real web documents
-    lf_width: int = 10
-    lf_min_words: int = 3
-    lf_blocklist: tuple[str, ...] = ("lorem ipsum", "javascript")
-    lf_require_punct: bool = False
-    lf_drop_braces: bool = False
-    lf_max_dropped_frac: float = 1.0  # 1.0 = only all-junk docs drop
     # corpus-adaptive boilerplate stage (> 0 turns it on and sets how
     # many mined grams to block) — the top-K most-repeated n-grams are
     # MINED from the scrubbed corpus and every line containing one is
@@ -300,20 +325,6 @@ class CorpusConfig:
     adaptive_block_k: int = 0
     adaptive_gram_n: int = 3
     adaptive_min_count: int = 100
-    # document-level toxicity/badwords screen (C4 §2.2 — 'any page
-    # containing a word on the list is removed'): category→words map
-    # (None = off); a doc drops when its badword fraction exceeds
-    # badwords_max_frac (0.0 = ANY hit drops, the C4 policy).
-    badwords_cats: "dict[str, tuple[str, ...]] | None" = None
-    badwords_max_frac: float = 0.0
-    # per-LANGUAGE blocklists (C4 ships ~25 language files) —
-    # lang -> {category -> words}, each doc screened against ITS
-    # language's list (operators/badwords.badwords_by_lang); mutually
-    # exclusive with badwords_cats.  Unlisted languages fall back to
-    # badwords_default_lang's list when set, else pass unscreened.
-    badwords_lang_lists: "dict[str, dict[str, tuple[str, ...]]] | None" = None
-    badwords_default_lang: "str | None" = None
-
 
 
 @dataclass(frozen=True)
@@ -324,7 +335,7 @@ class Stage:
     ledger label."""
 
     name: str
-    on: Callable[[CorpusConfig], bool] = lambda cfg: True
+    on: Callable[[CurationConfig], bool] = lambda cfg: True
     # checkpoint dir under work_dir, written by run() and observed
     # (row count ``n`` + ``metrics``); None = row-local, fused into
     # the input scan and replayed by the ledger and incremental path
@@ -415,7 +426,46 @@ STAGES: tuple[Stage, ...] = (
 _STAGE = {s.name: s for s in STAGES}
 
 
-class CorpusCurationPipeline:
+class RowStages:
+    """The row-local stages the batch DAG and the stream share: each
+    reads only ``CurationConfig`` fields, so ``CorpusCurationPipeline``
+    and the streaming ``StreamingCorpusPipeline`` run the same code."""
+
+    cfg: CurationConfig
+
+    def line_filter(self, docs: DataFrame) -> DataFrame:
+        """C4 rule-based line filtering: lines violating the rules are
+        cut; docs losing every line (or more than lf_max_dropped_frac
+        of them) leave the corpus (operators/linefilters.py)."""
+        from prod2vec_spark.operators.linefilters import apply_line_filter
+
+        return apply_line_filter(
+            docs,
+            mode=self.cfg.lf_mode,
+            width=self.cfg.lf_width,
+            min_words=self.cfg.lf_min_words,
+            blocklist=self.cfg.lf_blocklist,
+            require_terminal_punct=self.cfg.lf_require_punct,
+            drop_brace_lines=self.cfg.lf_drop_braces,
+            max_dropped_frac=self.cfg.lf_max_dropped_frac,
+        )
+
+    def badwords_gate(self, docs: DataFrame) -> DataFrame:
+        """The C4 §2.2 doc-level badwords screen — after the line
+        filter (the gate judges surviving text), before the PII scrub
+        (scrub tokens carry no list words; cheapest-first wins)."""
+        from prod2vec_spark.operators.badwords import badwords_screen
+
+        return badwords_screen(
+            docs,
+            cats=self.cfg.badwords_cats,
+            lang_lists=self.cfg.badwords_lang_lists,
+            max_frac=self.cfg.badwords_max_frac,
+            default_lang=self.cfg.badwords_default_lang,
+        )
+
+
+class CorpusCurationPipeline(RowStages):
     def __init__(self, spark: SparkSession, cfg: CorpusConfig):
         self.spark = spark
         self.cfg = cfg
@@ -517,39 +567,6 @@ class CorpusCurationPipeline:
         from prod2vec_spark.operators.text import normalize_text
 
         return docs.withColumn("text", normalize_text(F.col("text")))
-
-    def line_filter(self, docs: DataFrame) -> DataFrame:
-        """C4 rule-based line filtering: lines violating the rules are
-        cut; docs losing every line (or more than lf_max_dropped_frac
-        of them) leave the corpus.  The keep/rewrite policy lives in
-        apply_line_filter — ONE code path shared with the streaming
-        corpus pipeline, so batch and stream can never drift."""
-        from prod2vec_spark.operators.linefilters import apply_line_filter
-
-        return apply_line_filter(
-            docs,
-            mode=self.cfg.lf_mode,
-            width=self.cfg.lf_width,
-            min_words=self.cfg.lf_min_words,
-            blocklist=self.cfg.lf_blocklist,
-            require_terminal_punct=self.cfg.lf_require_punct,
-            drop_brace_lines=self.cfg.lf_drop_braces,
-            max_dropped_frac=self.cfg.lf_max_dropped_frac,
-        )
-
-    def badwords_gate(self, docs: DataFrame) -> DataFrame:
-        """The C4 §2.2 doc-level badwords screen — after the line
-        filter (the gate judges surviving text), before the PII scrub
-        (scrub tokens carry no list words; cheapest-first wins)."""
-        from prod2vec_spark.operators.badwords import badwords_screen
-
-        return badwords_screen(
-            docs,
-            cats=self.cfg.badwords_cats,
-            lang_lists=self.cfg.badwords_lang_lists,
-            max_frac=self.cfg.badwords_max_frac,
-            default_lang=self.cfg.badwords_default_lang,
-        )
 
     def pii_scrub(self, docs: DataFrame) -> DataFrame:
         from prod2vec_spark.operators.pii import scrub, scrub_cc
@@ -802,7 +819,7 @@ class CorpusCurationPipeline:
             kept = (
                 scored.join(F.broadcast(thr), "source")
                 .where(F.col("q") >= F.col("q_thr"))
-                .drop("q_thr")
+                .drop("q_thr", "q")
             )
         elif self.cfg.quality_scope == "global":
             thr = scored.agg(
@@ -813,7 +830,7 @@ class CorpusCurationPipeline:
             kept = (
                 scored.crossJoin(F.broadcast(thr))
                 .where(F.col("q") >= F.col("q_thr"))
-                .drop("q_thr")
+                .drop("q_thr", "q")
             )
         else:
             raise ValueError(
@@ -1541,21 +1558,9 @@ class CorpusCurationPipeline:
             # incremental: prior survivors already passed it in the
             # batch run (their texts are unchanged); only the delta
             # needs the predicate
-            from prod2vec_spark.operators import repetition as RP
-            from prod2vec_spark.operators.text import tokens as _tokens
+            from prod2vec_spark.operators.repetition import repetition_keep
 
-            staged = (
-                dsurv.withColumn("_toks", _tokens(F.col("text")))
-                .withColumn("_g2", RP.word_ngrams(F.col("_toks"), 2))
-                .withColumn("_g3", RP.word_ngrams(F.col("_toks"), 3))
-            )
-            dsurv = staged.where(
-                RP.repetition_gate(
-                    RP.top_gram_fraction(F.col("_g2")),
-                    RP.dup_gram_fraction(F.col("_g3")),
-                    F.size(F.col("_g2")),
-                )
-            ).drop("_toks", "_g2", "_g3")
+            dsurv = dsurv.where(repetition_keep(F.col("text")))
         exact2 = checkpoint(kept_prior.unionByName(dsurv), f"{incr}/{exact.out}")
 
         # quality plane: the FROZEN batch threshold, applied row-locally

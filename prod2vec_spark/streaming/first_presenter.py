@@ -1,19 +1,17 @@
-"""The ONE streaming first-presenter gate behind the text, media and
-span dedup planes — every per-signature step a JVM expression, no
-Python state.
+"""The streaming first-presenter gate behind the text near-dedup gate
+(streaming/neardup.py) — every per-signature step a JVM expression,
+no Python state.
 
 The rule: each arriving row derives its signatures row-locally (LSH
-bands for text, perceptual-hash bands for media and spans); a
-signature is OWNED by the first row ever to present it — the minimum
-owner id within the earliest micro-batch that presented it — and
-ownership never changes, so a row colliding only with an earlier
-DROPPED row still drops.  Each plane folds ownership into keep/drop
-decisions with its own ``decide`` (text and media: kept iff it owns
-every signature it presented; spans: a verified foreign-claim count).
+bands for text); a signature is OWNED by the first row ever to
+present it — the minimum owner id within the earliest micro-batch
+that presented it — and ownership never changes, so a row colliding
+only with an earlier DROPPED row still drops.  ``decide`` folds
+ownership into keep/drop decisions (``owns_all``: kept iff the row
+owns every signature it presented).
 
-The registry: one row per distinct signature — the key columns,
-``owner`` and one ``owner_<c>`` per ``carry`` column — stored as
-``registry_dir/batch_id=N`` partials holding only the signatures first
+The registry: one row per distinct signature — the key columns and
+``owner`` — stored as ``registry_dir/batch_id=N`` partials holding only the signatures first
 presented by batch N.  Decisions land the same way at
 ``out_dir/batch_id=N``.  Both are written through the one micro-batch
 door, ``sources/io.start_batch_stage``: a batch reads the registry
@@ -21,7 +19,7 @@ EXCLUDING its own batch id, so a replayed batch recomputes
 byte-identical partials, and a checkpoint whose registry or decision
 dir was lost refuses to resume (``read_decisions`` with the gate's
 checkpoint refuses to read it).  Rows that present no signature (too
-short to shingle, undecodable) get no decision row and are kept by
+short to shingle) get no decision row and are kept by
 the caller.
 
 Cost shape: per micro-batch one hash-agg over the signatures and one
@@ -51,53 +49,42 @@ def start_first_presenter_gate(
     registry_dir: str,
     out_dir: str,
     checkpoint: str,
-    carry: Sequence[str] = (),
 ):
     """Start the gate as an availableNow drain and return the query.
 
     ``signatures(batch)`` maps a micro-batch to one row per presented
-    signature (``key_cols`` + ``owner_col`` + ``carry`` + whatever
-    ``decide`` reads); ``decide`` receives those rows joined with
-    their ``owner``/``owner_<c>`` columns and returns the batch's
-    decision rows.  The registry stores only ``key_cols``, ``owner``
-    and ``owner_<c>``: other signature columns reach ``decide`` and
-    nothing else.
+    signature (``key_cols`` + ``owner_col`` + whatever ``decide``
+    reads); ``decide`` receives those rows joined with their ``owner``
+    column and returns the batch's decision rows.  The registry stores
+    only ``key_cols`` and ``owner``: other signature columns reach
+    ``decide`` and nothing else.
 
     Raises if ``checkpoint`` has committed batches but ``registry_dir``
     or ``out_dir`` holds no partial: resuming would silently re-own
     every signature the lost registry held."""
     keys = list(key_cols)
-    owned = ["owner"] + [f"owner_{c}" for c in carry]
 
     def per_batch(batch_df: DataFrame, batch_id: int):
         # signatures feed two consumers (ownership agg + the decision
         # fold): lazy lineage break so the derivation evaluates once
         sigs = signatures(batch_df).localCheckpoint(eager=False)
-        batch_own = sigs.groupBy(*keys).agg(
-            F.min(owner_col).alias("_b_owner"),
-            *[F.min_by(c, owner_col).alias(f"_b_owner_{c}") for c in carry],
-        )
+        batch_own = sigs.groupBy(*keys).agg(F.min(owner_col).alias("_b_owner"))
         schema = T.StructType(
             [sigs.schema[k] for k in keys]
-            + [
-                T.StructField(o, sigs.schema[c].dataType)
-                for o, c in zip(owned, [owner_col, *carry])
-            ]
+            + [T.StructField("owner", sigs.schema[owner_col].dataType)]
         )
         old = (
             read_partials(batch_df.sparkSession, registry_dir, schema)
             .where(F.col("batch_id") != batch_id)
-            .select(*keys, *owned)
+            .select(*keys, "owner")
         )
-        earlier = F.col("owner").isNotNull()
         sig_owner = (
             batch_own.join(old, keys, "left")
             .select(
                 *keys,
-                *[
-                    F.when(earlier, F.col(o)).otherwise(F.col(f"_b_{o}")).alias(o)
-                    for o in owned
-                ],
+                F.when(F.col("owner").isNotNull(), F.col("owner"))
+                .otherwise(F.col("_b_owner"))
+                .alias("owner"),
             )
             .localCheckpoint(eager=False)  # read by decisions + new-sig legs
         )

@@ -1,17 +1,16 @@
-"""Streaming curation pipeline (ENGINE scope, VERDICT r5 stretch #7):
-the incremental counterpart of pipeline_llm.py's batch stages over the
-documents plane, composed from the already-parity-tested streaming
-operators and the checkpointed parquet sink.
+"""Streaming curation pipeline: the incremental counterpart of
+pipeline_llm.py's batch stages over the documents plane.
 
-``StreamingCorpusPipeline`` runs its exact dedup on the checkpointed
-parquet file sink (``write_stream_parquet``); every later stage — LM
-gate, segment CMS, token stats, decon, the near-dedup gate — is a
-batch operator handed to the one micro-batch door,
-``sources/io.start_batch_stage``, which writes idempotent
-``batch_id=N`` partials.  Every read of those partials
-(``curated()``, ``drop_ledger()``, ``token_stats()``) passes the
-stage's checkpoint, so a partial dir lost after a commit raises
-instead of reading as empty.
+The stage order is written once, in ``STREAM_STAGES``.  The row-local
+stages fuse into the exact stage's input scan (the line filter and the
+badwords gate are the batch DAG's own ``STAGES`` entries and code);
+exact dedup runs on the checkpointed parquet file sink
+(``write_stream_parquet``); every later stage is a batch operator
+handed to the one micro-batch door, ``sources/io.start_batch_stage``,
+which writes idempotent ``batch_id=N`` partials.  ``exact_stage()``,
+``run()``, ``curated()`` and ``drop_ledger()`` all read the table.
+Every read of the partials passes the stage's checkpoint, so a partial
+dir lost after a commit raises instead of reading as empty.
 """
 
 from __future__ import annotations
@@ -19,7 +18,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from prod2vec_spark.pipeline_llm import (
+    _STAGE,
+    CurationConfig,
+    RowStages,
+    Stage,
+    fold_drop_ledger,
+)
 from prod2vec_spark.sources.artifacts import make_dirs
 from prod2vec_spark.sources.io import read_partials, start_batch_stage
 from prod2vec_spark.streaming.events import write_stream_parquet
@@ -37,124 +44,45 @@ def _read_output(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-# ---------------------------------------------------------------------
-# Streaming CORPUS curation: pipeline_llm.py's batch stages as
-# incremental streaming queries.
-# ---------------------------------------------------------------------
-
 _DOCS_SCHEMA = "doc_id long, text string, lang string"
 _EXACT_SCHEMA = _DOCS_SCHEMA + ", text_hash string"
 
 
-@dataclass
-class StreamCorpusConfig:
+@dataclass(kw_only=True)
+class StreamCorpusConfig(CurationConfig):
+    """The stream's own fields; the ones it shares with the batch DAG
+    come from ``CurationConfig``.  A stream has no finished corpus to
+    take a percentile over, so its thresholds are frozen config
+    (typically the percentile computed offline on the archived
+    corpus): ``quality_min`` for the quality gate and ``lm_max_ppl``
+    for the LM gate, whose model is trained batch-side and persisted
+    at ``lm_model_dir``.  The decontamination bench side is a static
+    parquet of eval documents at ``decon_bench_dir``."""
+
     landing_dir: str
-    work_dir: str
-    shingle_k: int = 3
     num_hashes: int = 8
     band_size: int = 4
-    # row-local quality gate applied before dedup; 0.0 disables.  The
-    # batch pipeline derives its threshold as a corpus percentile
-    # (pipeline_llm.quality_filter) — a stream has no finished corpus
-    # to take a percentile over, so the streaming gate takes the
-    # threshold as config (typically the percentile computed offline
-    # on the archived corpus, refreshed per deployment).
-    quality_min: float = 0.0
-    # Gopher repetition gate (operators/repetition.py) — row-local and
-    # stateless like the quality gate, so it is stream-safe with NO
-    # semantic gap vs batch: a doc's verdict never depends on other
-    # docs.  Runs before dedup so looped spam never occupies state.
+    quality_min: float = 0.0  # 0.0 = off
     repetition_gate: bool = False
-    # streaming boilerplate gate (round-7 twin of the batch segment
-    # dedup): a count-min sketch over per-doc DISTINCT window hashes
-    # is maintained incrementally (one operators/sketches.cms_sketch
-    # partial per micro-batch) over the exact-dedup output, so each
-    # distinct content counts once; at curated() time, docs whose
-    # fraction of ≥seg_min_docs-estimated windows exceeds
-    # seg_max_frac are dropped.  CMS only OVERestimates, so the gate
-    # errs toward dropping (one-sided, like every sketch gate here).
-    # A stream cannot re-edit already-committed text, so the streaming
-    # semantic is drop-the-doc, not rewrite-the-doc (the batch
-    # operator's reassembly remains the lossless variant).
     segment_gate: bool = False
-    seg_width: int = 10
-    seg_min_docs: int = 2
+    # drop a doc when more than this fraction of its windows is
+    # boilerplate under the committed count-min sketch
     seg_max_frac: float = 0.5
-    # round-9b: C4 line filter (operators/linefilters.py) — row-local
-    # and stateless like the quality gate, applied FIRST so junk
-    # lines never reach the digest (a doc whose only difference is
-    # cut boilerplate then exact-dedups against its clean twin).
-    # Shares apply_line_filter with the batch DAG: one code path,
-    # zero batch/stream semantic gap.
-    line_filter: bool = False
-    lf_mode: str = "window"  # "newline" for real web documents
-    lf_width: int = 10
-    lf_min_words: int = 3
-    lf_blocklist: tuple[str, ...] = ("lorem ipsum", "javascript")
-    # round-15: the batch DAG's doc-level badwords screen (C4 §2.2,
-    # operators/badwords.py) in the streaming gate chain — row-local
-    # and per-row deterministic, so stream-safe with no semantic gap;
-    # None/empty disables (the batch default).
-    badwords_cats: "dict[str, tuple[str, ...]] | None" = None
-    badwords_max_frac: float = 0.0
-    # round-16: per-language lists (operators/badwords.badwords_by_lang),
-    # mutually exclusive with badwords_cats — same dispatch as the
-    # batch DAG via the shared badwords_screen gate
-    badwords_lang_lists: "dict[str, dict[str, tuple[str, ...]]] | None" = None
-    badwords_default_lang: "str | None" = None
-    # round-14 (VERDICT r13 ask #6): the batch lm_gate's streaming
-    # twin.  A BATCH-TRAINED model persisted at lm_model_dir (fit on
-    # the vetted archive — BigramLM.save or KNnModel.save at any
-    # order) scores each micro-batch of the exact-dedup output with
-    # the batch scorer (operators/lm.score_docs / score_docs_knn);
-    # docs whose ppl exceeds lm_max_ppl — or that are too short to
-    # score, the batch gate's semi-join semantic — drop at curated()
-    # time.  The threshold is FROZEN config (the percentile computed
-    # offline on the archived corpus, the quality_min convention): a
-    # stream has no finished corpus to take a percentile over.
-    # round-14 stretch (VERDICT r13 ask #9): streaming TOKEN STATS —
-    # a running (n_docs, n_tokens) total over the exact-dedup output,
-    # maintained as idempotent per-batch partials (the LM-scorer
-    # pattern: a replayed batch overwrites its own partition, so
-    # totals are exactly-once across restarts).  ``stats_count_fn``
-    # is the tokenizer seam: any text-Column → count closure
-    # (bpe_counter / unigram_counter / wordpiece_counter — trained
-    # BATCH-side on the vetted archive); None = whitespace tokens.
     token_stats: bool = False
+    # text Column -> token count (bpe_counter / unigram_counter /
+    # wordpiece_counter, trained batch-side); None = whitespace tokens
     stats_count_fn: "object | None" = None
-    lm_gate: bool = False
     lm_model_dir: str | None = None
     # 'stupid_backoff' (BigramLM) | 'kneser_ney' (KNnModel, at the
     # order its saved meta records)
     lm_smoothing: str = "kneser_ney"
     lm_max_ppl: float = float("inf")
     lm_discount: float | None = None  # None = operators/lm.DEFAULT_DISCOUNT
-    # optional per-level modified-KN (D1, D2, D3+) triples, levels
-    # 2..order — replaces the single lm_discount when set
+    # per-level modified-KN (D1, D2, D3+) triples, levels 2..order —
+    # replaces the single lm_discount when set
     lm_discounts_n: "dict[int, tuple] | None" = None
-    # round-15 (VERDICT r14 ask #8): streaming benchmark
-    # decontamination — the batch decontaminate stage's streaming
-    # twin.  The BENCH SIDE IS STATIC config (a parquet of eval
-    # documents at decon_bench_dir, prepared batch-side — eval suites
-    # are a few MB and don't arrive on the stream), so each
-    # micro-batch runs a stream-static broadcast screen: the exact
-    # word-n-gram collision rule (operators/decontam.
-    # contamination_report) plus, when decon_fuzzy, the MinHash-banded
-    # + exact-Jaccard fuzzy screen (fuzzy_contamination_report) —
-    # catching the paraphrased overlap the exact rule misses, the same
-    # union-of-drops the batch DAG applies.  Decisions land as
-    # idempotent batch_id partials (the LM-gate pattern), so replays
-    # are exactly-once.  A bench doc_id colliding with a stream
-    # doc_id is harmless by construction: the bench side contributes
-    # only its distinct gram/shingle sets, never ids, to the screen.
     decon_gate: bool = False
     decon_bench_dir: str | None = None
-    decon_n: int = 5
-    decon_min_frac: float = 0.2
-    decon_fuzzy: bool = False
-    decon_fuzzy_jaccard: float = 0.3
-    decon_fuzzy_hashes: int = 16
-    decon_fuzzy_band: int = 2
     decon_shingle_k: int = 3
 
     @property
@@ -186,34 +114,71 @@ class StreamCorpusConfig:
         return f"{self.work_dir}/decon_decisions"
 
 
-class StreamingCorpusPipeline:
-    """landing docs ──stream──> exact dedup ──parquet+ckpt──>
-    near-dedup gate ──decisions──> curated corpus.
+@dataclass(frozen=True)
+class StreamStage:
+    """One entry of the stream's stage table.  ``stage`` gives the
+    ledger label, the config predicate and whether the stage can drop
+    documents; the pipeline method of that name maps the previous
+    stage's survivors to this one's.  ``how`` says where it runs:
 
-      * stage 1 — exact dedup: the content digest (dedup.text_digest,
-        row-local) keys a streaming ``dropDuplicates``; the first
-        arrival per digest survives, replayed/duplicated documents are
-        dropped across restarts by the checkpointed state store.  The
-        batch counterpart keeps min doc_id per digest
-        (exact_dup_groups); a stream has arrival order instead — both
-        keep exactly one doc per distinct content.
-      * stage 2 — near-dedup: the first-presenter MinHash/LSH gate
-        (streaming/neardup.py) over stage 1's committed output.
-      * curated corpus — stage-1 survivors minus gate-dropped docs
-        (docs too short to shingle have no decision row and are kept),
-        materialized on read: both inputs are parquet tables, so the
-        subtraction is a plain batch join at read time rather than a
-        third stateful stage.
-      * optional decon gate (round 15) — benchmark decontamination
-        decisions per micro-batch against a STATIC bench parquet
-        (exact n-gram + optional fuzzy MinHash/Jaccard screens, the
-        batch decontaminate stage's operators); contaminated docs
-        leave at curated() time, preserving the batch DAG's
-        decon-after-near-dedup ordering.
+      * ``scan`` — fused into the exact stage's input scan;
+      * ``sink`` — the exact stage's checkpointed file sink;
+      * ``door`` — a per-batch operator through ``start_batch_stage``,
+        started by ``_<label>_door`` over the committed output of the
+        stage named by ``reads`` (a disabled one is read through to
+        its own input).
 
-    Every stage after exact dedup goes through
-    ``sources/io.start_batch_stage``; ``curated()`` and
-    ``drop_ledger()`` fold one boundary chain (``_boundaries``).
+    ``out`` names the config dir holding the stage's committed
+    survivor rows, for the doors that read them."""
+
+    stage: Stage
+    how: str = "scan"
+    reads: str | None = None
+    out: str | None = None
+
+
+STREAM_STAGES: tuple[StreamStage, ...] = (
+    StreamStage(_STAGE["line_filter"]),
+    StreamStage(_STAGE["badwords_gate"]),
+    # low-quality docs and looped spam never occupy digest state
+    StreamStage(Stage("quality_gate", lambda c: c.quality_min > 0.0)),
+    StreamStage(Stage("repetition_gate", lambda c: c.repetition_gate)),
+    StreamStage(Stage("exact_dedup"), "sink", out="exact_dir"),
+    StreamStage(
+        Stage("token_stats", lambda c: c.token_stats, drops=False),
+        "door",
+        "exact_dedup",
+    ),
+    StreamStage(
+        Stage("lm_gate", lambda c: c.lm_gate), "door", "exact_dedup", "lmkept_dir"
+    ),
+    StreamStage(Stage("segment_gate", lambda c: c.segment_gate), "door", "exact_dedup"),
+    # first-presenter ownership is decided among the LM gate's
+    # survivors: the batch DAG's lm_gate → near_dedup order
+    StreamStage(Stage("near_dedup"), "door", "lm_gate"),
+    StreamStage(Stage("decon_gate", lambda c: c.decon_gate), "door", "exact_dedup"),
+)
+_STREAM = {e.stage.name: e for e in STREAM_STAGES}
+
+
+class StreamingCorpusPipeline(RowStages):
+    """landing docs ──stream──> row-local gates → exact dedup
+    ──parquet+ckpt──> door stages ──partials──> curated corpus.
+
+      * exact dedup: the content digest (dedup.text_digest, row-local)
+        keys a streaming ``dropDuplicates``; the first arrival per
+        digest survives, replayed/duplicated documents are dropped
+        across restarts by the checkpointed state store.  The batch
+        counterpart keeps min doc_id per digest (exact_dup_groups); a
+        stream has arrival order instead — both keep exactly one doc
+        per distinct content.
+      * near-dedup: the first-presenter MinHash/LSH gate
+        (streaming/neardup.py) over the committed survivors.
+      * curated corpus: each dropping stage's survivors in table
+        order, materialized on read from the committed outputs — a
+        plain batch join at read time rather than another stateful
+        stage.  Contaminated docs leave after near-dedup, the batch
+        DAG's order.
 
     Scale notes: digest state is one row per distinct content (the
     same cardinality the batch digest shuffle carries), bounded in
@@ -224,6 +189,10 @@ class StreamingCorpusPipeline:
     def __init__(self, spark: SparkSession, cfg: StreamCorpusConfig):
         self.spark = spark
         self.cfg = cfg
+
+    def _enabled(self) -> list[StreamStage]:
+        """The table's stages this config runs, in order."""
+        return [e for e in STREAM_STAGES if e.stage.on(self.cfg)]
 
     def _ckpt(self, stage: str) -> str:
         """The checkpoint of ``stage`` — written by its stream, read by
@@ -255,75 +224,55 @@ class StreamingCorpusPipeline:
             return df.repartition(floor)
         return df
 
-    def _row_gates(self, docs: DataFrame, stages: list | None = None) -> DataFrame:
-        """The pre-dedup ROW-LOCAL gate chain (line filter → badwords
-        → quality → repetition), shared by the streaming stage and the
-        batch drop-ledger replay — one code path, zero batch/stream
-        drift (the apply_line_filter precedent).  ``stages``: optional
-        list the caller hands in to receive (stage_name, survivors)
-        pairs — the ledger's attribution boundaries."""
-        from pyspark.sql import functions as F
+    def _stream(self, path: str) -> DataFrame:
+        """A stream over a stage's committed output dir."""
+        make_dirs(self.spark, path)
+        return self.spark.readStream.schema(_EXACT_SCHEMA).parquet(path)
 
+    def _source(self, e: StreamStage) -> StreamStage:
+        """The enabled stage whose committed survivors door ``e``
+        streams."""
+        src = _STREAM[e.reads]
+        while not src.stage.on(self.cfg):
+            src = _STREAM[src.reads]
+        return src
+
+    def _fold(
+        self, docs: DataFrame | None, hows: tuple[str, ...] = ("scan",)
+    ) -> "tuple[DataFrame, list[tuple[str, DataFrame]]]":
+        """``docs`` through every enabled stage run ``hows``, in table
+        order: the last survivors, and (label, survivors) per dropping
+        stage — the ledger's boundaries.  A door that drops nothing
+        (token stats) leaves the survivors as they are."""
+        chain = []
+        for e in self._enabled():
+            if e.how in hows and (e.how == "scan" or e.stage.drops):
+                docs = getattr(self, e.stage.name)(docs)
+                if e.stage.drops:
+                    chain.append((e.stage.name, docs))
+        return docs, chain
+
+    # -- scan stages (line_filter and badwords_gate: RowStages) ---------
+    def quality_gate(self, docs: DataFrame) -> DataFrame:
         from prod2vec_spark.operators.text import quality_score
 
-        if self.cfg.line_filter:
-            from prod2vec_spark.operators.linefilters import apply_line_filter
+        return docs.where(quality_score(F.col("text")) >= self.cfg.quality_min)
 
-            docs = apply_line_filter(
-                docs,
-                mode=self.cfg.lf_mode,
-                width=self.cfg.lf_width,
-                min_words=self.cfg.lf_min_words,
-                blocklist=self.cfg.lf_blocklist,
-            )
-            if stages is not None:
-                stages.append(("line_filter", docs))
-        if self.cfg.badwords_cats or self.cfg.badwords_lang_lists:
-            # round-15 (per-language round-16): the batch DAG's C4
-            # §2.2 doc-level badwords screen joins the streaming gate
-            # chain — row-local and per-row deterministic like
-            # line_filter, so it is stream-safe with ZERO batch/stream
-            # semantic gap; same position (after line_filter: the gate
-            # judges surviving text), same shared badwords_screen
-            # gate, same drop-ledger replay
-            from prod2vec_spark.operators.badwords import badwords_screen
+    def repetition_gate(self, docs: DataFrame) -> DataFrame:
+        from prod2vec_spark.operators.repetition import repetition_keep
 
-            docs = badwords_screen(
-                docs,
-                cats=self.cfg.badwords_cats,
-                lang_lists=self.cfg.badwords_lang_lists,
-                max_frac=self.cfg.badwords_max_frac,
-                default_lang=self.cfg.badwords_default_lang,
-            )
-            if stages is not None:
-                stages.append(("badwords_gate", docs))
-        # quality gate first (row-local, stateless) so low-quality docs
-        # never occupy digest state
-        if self.cfg.quality_min > 0.0:
-            docs = docs.where(
-                quality_score(F.col("text")) >= self.cfg.quality_min
-            )
-            if stages is not None:
-                stages.append(("quality_gate", docs))
-        if self.cfg.repetition_gate:
-            from prod2vec_spark.operators.repetition import repetition_keep
+        return docs.where(repetition_keep(F.col("text")))
 
-            # single-evaluation let-bound form (see pipeline_llm's
-            # quality stage note) — identical survivors, ~10× cheaper
-            docs = docs.where(repetition_keep(F.col("text")))
-            if stages is not None:
-                stages.append(("repetition_gate", docs))
-        return docs
-
+    # -- the sink ---------------------------------------------------------
     def exact_stage(self) -> None:
+        """The scan stages over the landing stream, then exact dedup
+        through the checkpointed parquet file sink."""
         from prod2vec_spark.operators.dedup import text_digest
 
-        docs = self._row_gates(
+        landing = self.cfg.landing_dir
+        docs, _ = self._fold(
             self._spread_stream(
-                self.spark.readStream.schema(_DOCS_SCHEMA).parquet(
-                    self.cfg.landing_dir
-                ),
-                self.cfg.landing_dir,
+                self.spark.readStream.schema(_DOCS_SCHEMA).parquet(landing), landing
             )
         )
         deduped = docs.withColumn(
@@ -332,22 +281,92 @@ class StreamingCorpusPipeline:
         q = write_stream_parquet(deduped, self.cfg.exact_dir, self._ckpt("exact"))
         q.awaitTermination()
 
-    def neardup_stage(self) -> None:
-        self._start_neardup().awaitTermination()
+    # -- doors: each starts its drain over a committed dir ---------------
+    def _token_stats_door(self, src: str):
+        """Per-batch (n_docs, n_tokens) partials under the configured
+        counter; ``token_stats()`` sums them."""
+        from prod2vec_spark.operators.text import tokens
 
-    def _start_neardup(self):
+        cf = self.cfg.stats_count_fn or (lambda c: F.size(tokens(c)).cast("long"))
+        return start_batch_stage(
+            self._stream(src),
+            lambda batch, _: (
+                batch.select(cf(F.col("text")).cast("long").alias("_n")).agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.coalesce(F.sum("_n"), F.lit(0)).alias("n_tokens"),
+                ),
+            ),
+            (self.cfg.tokenstats_dir,),
+            self._ckpt("tokenstats"),
+        )
+
+    def _lm_gate_door(self, src: str):
+        """Score each micro-batch with the batch scorer matching
+        cfg.lm_smoothing against the persisted model and materialize
+        the kept rows: scores land at lmscores_dir/batch_id=N, the
+        survivors (ppl <= lm_max_ppl via semi join — unscored and
+        too-short docs drop, the batch semantic) at
+        lmkept_dir/batch_id=N."""
+        from prod2vec_spark.operators import lm as LM
+
+        cfg = self.cfg
+        if cfg.lm_model_dir is None:
+            raise ValueError("lm_gate needs lm_model_dir (a persisted model)")
+        if cfg.lm_smoothing == "kneser_ney":
+            model = LM.KNnModel.load(self.spark, cfg.lm_model_dir)
+            d = LM.DEFAULT_DISCOUNT if cfg.lm_discount is None else cfg.lm_discount
+
+            def score(df):
+                return LM.score_docs_knn(
+                    df, model, discount=d, discounts=cfg.lm_discounts_n
+                )
+
+        elif cfg.lm_smoothing == "stupid_backoff":
+            model = LM.BigramLM.load(self.spark, cfg.lm_model_dir)
+
+            def score(df):
+                return LM.score_docs(df, model)
+
+        else:
+            raise ValueError(
+                f"unknown lm_smoothing {cfg.lm_smoothing!r} (expected "
+                "'stupid_backoff' or 'kneser_ney')"
+            )
+
+        def per_batch(batch_df: DataFrame, _):
+            # the kept rows derive from the scores: lazy lineage break
+            # so each batch is scored once for both partials
+            scores = score(batch_df).localCheckpoint(eager=False)
+            keep = scores.where(F.col("ppl") <= F.lit(cfg.lm_max_ppl)).select("doc_id")
+            return scores, batch_df.join(keep, "doc_id", "left_semi")
+
+        return start_batch_stage(
+            self._stream(src),
+            per_batch,
+            (cfg.lmscores_dir, cfg.lmkept_dir),
+            self._ckpt("lm"),
+        )
+
+    def _segment_gate_door(self, src: str):
+        """The boilerplate-window CMS over the exact-dedup output (each
+        distinct content counts once): per-doc DISTINCT window hashes,
+        one ``cms_sketch`` partial per batch (summed on read by
+        ``operators/sketches.read_cms``)."""
+        from prod2vec_spark.operators.linedup import doc_distinct_segment_hashes
+        from prod2vec_spark.operators.sketches import cms_sketch
+
+        return start_batch_stage(
+            doc_distinct_segment_hashes(self._stream(src), self.cfg.seg_width),
+            lambda batch, _: (cms_sketch(batch, col="seg_h"),),
+            (self.cfg.segcms_dir,),
+            self._ckpt("segcms"),
+        )
+
+    def _near_dedup_door(self, src: str):
         from prod2vec_spark.streaming.neardup import start_near_dedup_registry
 
-        # with the LM gate on, first-presenter ownership is decided
-        # among GATE SURVIVORS (the batch lm_gate → near_dedup order);
-        # otherwise over the exact-dedup output as before
-        src = self.cfg.lmkept_dir if self.cfg.lm_gate else self.cfg.exact_dir
-        make_dirs(self.spark, src)
-        survivors = self._spread_stream(
-            self.spark.readStream.schema(_EXACT_SCHEMA).parquet(src), src
-        )
         return start_near_dedup_registry(
-            survivors,
+            self._spread_stream(self._stream(src), src),
             f"{self.cfg.work_dir}/band_registry",
             self.cfg.decisions_dir,
             self._ckpt("neardup"),
@@ -356,130 +375,30 @@ class StreamingCorpusPipeline:
             band_size=self.cfg.band_size,
         )
 
-    def segment_cms_stage(self) -> None:
-        self._start_segment_cms().awaitTermination()
-
-    def _start_segment_cms(self):
-        """Maintain the boilerplate-window CMS over the exact-dedup
-        output (so each distinct content contributes once): stream the
-        committed stage-1 parquet, project per-doc DISTINCT window
-        hashes row-locally, land one ``cms_sketch`` partial per batch
-        (summed on read by ``operators/sketches.read_cms``)."""
-        from prod2vec_spark.operators.linedup import (
-            doc_distinct_segment_hashes,
-        )
-        from prod2vec_spark.operators.sketches import cms_sketch
-
-        docs = self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
-            self.cfg.exact_dir
-        )
-        return start_batch_stage(
-            doc_distinct_segment_hashes(docs, self.cfg.seg_width),
-            lambda batch, _: (cms_sketch(batch, col="seg_h"),),
-            (self.cfg.segcms_dir,),
-            self._ckpt("segcms"),
-        )
-
-    def _lm_scorer(self):
-        """(score_fn, model): the batch scorer matching cfg.lm_smoothing
-        against the loaded persisted model — one definition shared by
-        the stage and any introspection."""
-        if self.cfg.lm_model_dir is None:
-            raise ValueError("lm_gate needs lm_model_dir (a persisted model)")
-        from prod2vec_spark.operators import lm as LM
-
-        d = (
-            LM.DEFAULT_DISCOUNT
-            if self.cfg.lm_discount is None
-            else self.cfg.lm_discount
-        )
-        if self.cfg.lm_smoothing == "kneser_ney":
-            model = LM.KNnModel.load(self.spark, self.cfg.lm_model_dir)
-            return (
-                lambda df: LM.score_docs_knn(
-                    df, model, discount=d, discounts=self.cfg.lm_discounts_n
-                ),
-                model,
-            )
-        if self.cfg.lm_smoothing == "stupid_backoff":
-            model = LM.BigramLM.load(self.spark, self.cfg.lm_model_dir)
-            return (lambda df: LM.score_docs(df, model), model)
-        raise ValueError(
-            f"unknown lm_smoothing {self.cfg.lm_smoothing!r} (expected "
-            "'stupid_backoff' or 'kneser_ney')"
-        )
-
-    def lm_stage(self) -> None:
-        """Score the exact-dedup output against the batch-trained LM
-        and MATERIALIZE the kept rows: per micro-batch, the scores
-        land at lmscores_dir/batch_id=N and the gate's survivors
-        (ppl <= lm_max_ppl via semi join — unscored/too-short docs
-        drop, the batch semantic) land at lmkept_dir/batch_id=N, both
-        idempotent by path across restarts.  The near-dedup stage then
-        streams the SURVIVORS, so first-presenter ownership is decided
-        among gate-passing docs only — matching the batch DAG's
-        lm_gate → near_dedup ordering (code-review r14: with the gate
-        applied after pre-gate decisions, a cluster whose canonical
-        failed the gate would vanish entirely instead of re-electing
-        a surviving member)."""
-        self._start_lm().awaitTermination()
-
-    def _start_lm(self):
-        from pyspark.sql import functions as F
-
-        score_fn, _ = self._lm_scorer()
-        make_dirs(self.spark, self.cfg.exact_dir)
-        thr = self.cfg.lm_max_ppl
-
-        def per_batch(batch_df: DataFrame, _):
-            # the kept rows derive from the scores: lazy lineage break
-            # so each batch is scored once for both partials
-            scores = score_fn(batch_df).localCheckpoint(eager=False)
-            keep = scores.where(F.col("ppl") <= F.lit(thr)).select("doc_id")
-            return scores, batch_df.join(keep, "doc_id", "left_semi")
-
-        return start_batch_stage(
-            self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
-                self.cfg.exact_dir
-            ),
-            per_batch,
-            (self.cfg.lmscores_dir, self.cfg.lmkept_dir),
-            self._ckpt("lm"),
-        )
-
-    def decon_stage(self) -> None:
-        """Benchmark-decontamination decisions over the exact-dedup
-        output (round 15 — the batch decontaminate stage's streaming
-        twin): per micro-batch, tag the arriving docs is_bench=False,
-        union the STATIC bench parquet tagged is_bench=True, and run
-        the SAME operators the batch DAG runs — the exact n-gram
-        collision report, plus the fuzzy MinHash/exact-Jaccard screen
-        when decon_fuzzy — then land (doc_id, keep) decisions
-        idempotently at decon_dir/batch_id=N.  The bench side is a
-        few MB (broadcast inside both reports), so every micro-batch
-        is a stream-static broadcast screen; the corpus side streams
-        once.  Contaminated docs drop at curated() time — the batch
-        ordering (decontamination after near-dedup) preserved."""
-        self._start_decon().awaitTermination()
-
-    def _start_decon(self):
-        from pyspark.sql import functions as F
-
+    def _decon_gate_door(self, src: str):
+        """Benchmark-decontamination decisions: per micro-batch, the
+        arriving docs (is_bench=False) unioned with the STATIC bench
+        parquet (is_bench=True) run the batch decontaminate stage's
+        operators — the exact n-gram collision report, plus the fuzzy
+        MinHash/exact-Jaccard screen when decon_fuzzy — and (doc_id,
+        keep) decisions land at decon_dir/batch_id=N.  The bench side
+        is a few MB, broadcast inside both reports; it contributes
+        only its gram/shingle sets, never ids, so a bench doc_id
+        colliding with a stream doc_id is harmless."""
         from prod2vec_spark.operators.decontam import (
             contamination_report,
             fuzzy_contamination_report,
         )
 
-        if not self.cfg.decon_bench_dir:
+        cfg = self.cfg
+        if not cfg.decon_bench_dir:
             raise ValueError("decon_gate needs decon_bench_dir set")
         bench = (
             self.spark.read.schema(_DOCS_SCHEMA)
-            .parquet(self.cfg.decon_bench_dir)
+            .parquet(cfg.decon_bench_dir)
             .select("doc_id", "text")
             .withColumn("is_bench", F.lit(True))
         )
-        make_dirs(self.spark, self.cfg.exact_dir)
-        cfg = self.cfg
 
         def per_batch(batch_df: DataFrame, _):
             tagged = batch_df.select("doc_id", "text").withColumn(
@@ -523,95 +442,32 @@ class StreamingCorpusPipeline:
             )
 
         return start_batch_stage(
-            self.spark.readStream.schema(_EXACT_SCHEMA).parquet(cfg.exact_dir),
-            per_batch,
-            (cfg.decon_dir,),
-            self._ckpt("decon"),
+            self._stream(src), per_batch, (cfg.decon_dir,), self._ckpt("decon")
         )
 
-    def _drops(self, decisions_dir: str, stage: str) -> DataFrame:
-        """doc_ids a decision stage (``neardup`` or ``decon``) dropped,
-        over its committed partials; empty before the first commit,
-        ``RuntimeError`` once the partials are lost after one."""
-        from pyspark.sql import functions as F
+    # -- survivors over the committed outputs ----------------------------
+    def exact_dedup(self, docs: DataFrame | None) -> DataFrame:
+        """The exact stage's committed rows (``docs`` is the input scan
+        the sink already consumed)."""
+        return _read_output(self.spark, self.cfg.exact_dir, _EXACT_SCHEMA)
 
-        return (
-            read_decisions(
-                self.spark, decisions_dir, checkpoint=self._ckpt(stage)
-            )
-            .where(F.col("keep") == 0)
-            .select("doc_id")
-        )
-
-    def token_stats_stage(self) -> None:
-        """Maintain per-batch (n_docs, n_tokens) partials over the
-        exact-dedup output under the configured tokenizer counter —
-        each partial lands idempotently at tokenstats_dir/batch_id=N
-        (a replayed batch overwrites its own partition), so the
-        summed totals are exactly-once across restarts."""
-        self._start_token_stats().awaitTermination()
-
-    def _start_token_stats(self):
-        from pyspark.sql import functions as F
-
-        from prod2vec_spark.operators.text import tokens as _ws_tokens
-
-        cf = self.cfg.stats_count_fn or (
-            lambda c: F.size(_ws_tokens(c)).cast("long")
-        )
-        make_dirs(self.spark, self.cfg.exact_dir)
-        return start_batch_stage(
-            self.spark.readStream.schema(_EXACT_SCHEMA).parquet(
-                self.cfg.exact_dir
-            ),
-            lambda batch, _: (
-                batch.select(cf(F.col("text")).cast("long").alias("_n")).agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.coalesce(F.sum("_n"), F.lit(0)).alias("n_tokens"),
-                ),
-            ),
-            (self.cfg.tokenstats_dir,),
-            self._ckpt("tokenstats"),
-        )
-
-    def token_stats(self) -> "tuple[int, int]":
-        """(n_docs, n_tokens) summed over the committed partials —
-        0/0 before the first commit; ``RuntimeError`` once the
-        partials are lost after one."""
-        from pyspark.sql import functions as F
-
-        schema = "n_docs long, n_tokens long"
-        row = (
-            read_partials(
-                self.spark,
-                self.cfg.tokenstats_dir,
-                schema,
-                self._ckpt("tokenstats"),
-            )
-            .agg(F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t"))
-            .first()
-        )
-        return (int(row["d"] or 0), int(row["t"] or 0))
-
-    def _lm_kept(self) -> DataFrame:
-        """The LM gate's committed survivor rows (full _EXACT_SCHEMA
-        columns) — the materialized output the near-dedup stage
-        streams.  Empty typed frame before the first commit."""
+    def lm_gate(self, docs: DataFrame) -> DataFrame:
+        """The LM gate's committed survivor rows; they replace
+        ``docs``, the set near-dup decisions were computed over."""
         return read_partials(
             self.spark, self.cfg.lmkept_dir, _EXACT_SCHEMA, self._ckpt("lm")
         ).drop("batch_id")
 
-    def _segment_gate_drop(self, docs: DataFrame) -> DataFrame:
-        """doc_ids whose fraction of boilerplate-estimated windows
-        exceeds seg_max_frac under the CURRENT committed sketch.  The
-        probe set is the distinct window universe of the gated docs;
-        estimates come from one broadcast join against the bounded
-        (≤ depth × width rows) sketch."""
-        from pyspark.sql import functions as F
-
-        from prod2vec_spark.operators.linedup import (
-            doc_distinct_segment_hashes,
-        )
+    def segment_gate(self, docs: DataFrame) -> DataFrame:
+        """``docs`` minus those whose fraction of boilerplate-estimated
+        windows exceeds seg_max_frac under the CURRENT committed
+        sketch.  The probe set is the distinct window universe of
+        ``docs``; estimates come from one broadcast join against the
+        bounded (≤ depth × width rows) sketch.  CMS only
+        overestimates, so the gate errs toward dropping; a stream
+        cannot re-edit committed text, so it drops the doc where the
+        batch segment dedup rewrites it."""
+        from prod2vec_spark.operators.linedup import doc_distinct_segment_hashes
         from prod2vec_spark.operators.sketches import cms_estimate, read_cms
 
         sketch = read_cms(
@@ -634,108 +490,94 @@ class StreamingCorpusPipeline:
                 ).alias("boiler_frac")
             )
         )
-        return frac.where(
+        drop = frac.where(
             F.col("boiler_frac") > F.lit(self.cfg.seg_max_frac)
         ).select("doc_id")
+        return docs.join(F.broadcast(drop), "doc_id", "left_anti")
 
-    def _boundaries(self) -> "list[tuple[str, DataFrame]]":
-        """The stateful stage chain over the committed outputs, in the
-        batch DAG's order: (stage, survivors) for exact dedup → LM gate
-        → segment gate → near-dedup → decon, each entry ⊆ the one
-        before.  The LM gate's materialized survivors replace the exact
-        output (near-dup decisions were computed over that same set);
-        each drop set — the near-dup or contaminated fraction, usually
-        small — is broadcast into a left-anti join, so the corpus side
-        never shuffles (pipeline_llm.near_dedup's final subtraction);
-        docs with no decision row (too short to shingle) are kept."""
-        from pyspark.sql import functions as F
+    def near_dedup(self, docs: DataFrame) -> DataFrame:
+        return self._decided(docs, self.cfg.decisions_dir, "neardup")
 
-        chain = [
-            (
-                "exact_dedup",
-                _read_output(self.spark, self.cfg.exact_dir, _EXACT_SCHEMA),
+    def decon_gate(self, docs: DataFrame) -> DataFrame:
+        return self._decided(docs, self.cfg.decon_dir, "decon")
+
+    def _decided(self, docs: DataFrame, decisions_dir: str, stage: str) -> DataFrame:
+        """``docs`` minus the ids a decision stage dropped (keep == 0)
+        over its committed partials.  The drop set — usually a small
+        fraction — is broadcast into a left-anti join, so the corpus
+        side never shuffles; docs with no decision row (too short to
+        shingle) are kept."""
+        drop = (
+            read_decisions(self.spark, decisions_dir, checkpoint=self._ckpt(stage))
+            .where(F.col("keep") == 0)
+            .select("doc_id")
+        )
+        return docs.join(F.broadcast(drop), "doc_id", "left_anti")
+
+    def token_stats(self) -> "tuple[int, int]":
+        """(n_docs, n_tokens) summed over the committed partials —
+        0/0 before the first commit; ``RuntimeError`` once the
+        partials are lost after one."""
+        schema = "n_docs long, n_tokens long"
+        row = (
+            read_partials(
+                self.spark,
+                self.cfg.tokenstats_dir,
+                schema,
+                self._ckpt("tokenstats"),
             )
-        ]
-        if self.cfg.lm_gate:
-            chain.append(("lm_gate", self._lm_kept()))
-
-        def minus(stage: str, drop: DataFrame) -> None:
-            kept = chain[-1][1].join(F.broadcast(drop), "doc_id", "left_anti")
-            chain.append((stage, kept))
-
-        if self.cfg.segment_gate:
-            minus("segment_gate", self._segment_gate_drop(chain[-1][1]))
-        minus("near_dedup", self._drops(self.cfg.decisions_dir, "neardup"))
-        if self.cfg.decon_gate:
-            minus("decon_gate", self._drops(self.cfg.decon_dir, "decon"))
-        return chain
+            .agg(F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t"))
+            .first()
+        )
+        return (int(row["d"] or 0), int(row["t"] or 0))
 
     def curated(self) -> DataFrame:
-        """The curated corpus: the last boundary's survivors."""
-        return self._boundaries()[-1][1]
+        """The curated corpus: the last stage's survivors over the
+        committed outputs."""
+        return self._fold(None, ("sink", "door"))[0]
 
     def drop_ledger(self) -> DataFrame:
         """Per-document provenance over the stream's COMMITTED outputs
-        (VERDICT r9 ask #7 — the streaming twin of
-        pipeline_llm.drop_ledger): one row (doc_id, dropped_at) for
-        every landed document that is not in ``curated()``, naming the
-        stage that removed it.
+        (the streaming twin of pipeline_llm.drop_ledger): one row
+        (doc_id, dropped_at) for every landed document that is not in
+        ``curated()``, naming the stage that removed it.
 
-        Partition contract (pytest-locked, mirroring the batch ledger
-        test): landing ids = curated ids ∪ ledger ids, disjoint — each
-        drop is attributed to exactly one stage.  Monotonicity is by
-        construction: the row-local gates are replayed batch-side over
-        the landing dir through the SAME ``_row_gates`` code path the
-        stream ran (deterministic, so replay survivors ⊇ exact-dedup
-        survivors), and the stateful stages are ``curated()``'s own
-        boundary chain over their committed artifacts.
-
-        Scale shape: id-only left-anti joins per boundary, probe side
-        shrinking monotonically — the batch ledger's own fold."""
-        from prod2vec_spark.pipeline_llm import fold_drop_ledger
-
+        Partition contract: landing ids = curated ids ∪ ledger ids,
+        disjoint.  The scan stages are replayed batch-side over the
+        landing dir (deterministic, so replay survivors ⊇ exact-dedup
+        survivors), and the later stages are ``curated()``'s own
+        survivors over their committed outputs."""
         landing = self.spark.read.schema(_DOCS_SCHEMA).parquet(
             self.cfg.landing_dir
         )
-        chain: list[tuple[str, DataFrame]] = []
-        self._row_gates(landing, stages=chain)
-        chain += self._boundaries()
+        _, chain = self._fold(landing, ("scan", "sink", "door"))
         return fold_drop_ledger(landing, chain)
 
     def run(self) -> DataFrame:
-        """Drain everything available, overlapping the independent
-        post-exact stages (guide §2.6 — actions are only sequential
-        when the driver calls them sequentially): the segment-CMS,
-        LM-score, token-stats and decon streams all read stage 1's
-        COMMITTED output and write disjoint artifacts, so they run
-        CONCURRENTLY; only near-dedup orders after the LM gate (it
-        streams the gate's survivors).  Each query keeps its own
-        checkpoint — restart/idempotency semantics are unchanged, the
-        drain is just no longer serialized on per-stream startup.  When
-        a later stage refuses to start, the queries already started are
-        stopped before the error propagates."""
+        """Drain everything available: the exact stage, then every
+        enabled door.  The doors over the exact output run
+        concurrently (guide §2.6 — actions are only sequential when
+        the driver calls them sequentially); a door over another
+        door's output starts when that drain ends.  When a door
+        refuses to start or a drain fails, the queries already started
+        are stopped before the error propagates; an interrupted batch
+        has no commit and replays on the next run."""
         self.exact_stage()
-        qs = []
+        doors = [e for e in self._enabled() if e.how == "door"]
+        running = {}
         try:
-            if self.cfg.segment_gate:
-                qs.append(self._start_segment_cms())
-            if self.cfg.token_stats:
-                qs.append(self._start_token_stats())
-            if self.cfg.decon_gate:
-                qs.append(self._start_decon())
-            if self.cfg.lm_gate:
-                # near-dedup consumes the gate's survivors: await the LM
-                # stream (it overlaps the independent gates above) before
-                # starting the dependent stage
-                self._start_lm().awaitTermination()
-            qs.append(self._start_neardup())
+            # the doors over the exact output start first, so a door
+            # that waits on another's drain never delays them
+            for e in sorted(doors, key=lambda e: self._source(e).how == "door"):
+                src = self._source(e)
+                if src.how == "door":
+                    running.pop(src.stage.name).awaitTermination()
+                door = getattr(self, f"_{e.stage.name}_door")
+                running[e.stage.name] = door(getattr(self.cfg, src.out))
         except BaseException:
-            # a later door refused to start (or the LM drain failed):
-            # stop the queries already running before re-raising; an
-            # interrupted batch has no commit and replays on the next run
-            for q in qs:
+            for q in running.values():
                 q.stop()
             raise
-        for q in qs:
+        for q in running.values():
             q.awaitTermination()
         return self.curated()

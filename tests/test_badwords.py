@@ -304,7 +304,7 @@ def test_badwords_screen_empty_mapping_is_off(spark, tmp_path):
             badwords_lang_lists=lists,
         ),
     )
-    assert ids(stream._row_gates(docs)) == [2]
+    assert ids(stream._fold(docs)[0]) == [2]  # the stream's scan stages
     sf_dir = str(tmp_path / "sf")
     # the documents table carries every declared column
     docs.withColumn("source", F.lit("s")).withColumn(

@@ -260,6 +260,94 @@ def test_score_docs_through_the_door_matches_batch(spark, tmp_path):
     assert sorted(scores().collect()) == sorted(got.collect())
 
 
+# ------------------------------------------ the stream's stage table
+LF = dict(
+    lf_mode="newline",
+    lf_width=7,
+    lf_min_words=2,
+    lf_blocklist=("spam phrase",),
+    lf_require_punct=True,
+    lf_drop_braces=True,
+    lf_max_dropped_frac=0.5,
+)
+
+
+def test_stream_line_filter_matches_the_batch_stage(spark, tmp_path):
+    """With all seven line-filter fields off their defaults, the
+    stream's exact stage keeps the docs, and the texts, that the batch
+    ``line_filter`` stage keeps."""
+    from prod2vec_spark.operators.linefilters import apply_line_filter
+    from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
+
+    rows = [
+        (1, "The first line has words.\nsecond line lacks punct\nThird one ends.", "en"),
+        (2, "function f() { return 1; }\nA clean sentence is here.", "en"),
+        (3, "no punct one\nno punct two\nGood line at the end.", "en"),
+        (4, "Short.\nThis line names a spam phrase here.\nAnother good line.", "en"),
+        (5, "All good lines are here.\nYes they really are.", "en"),
+        (6, "javascript is only a default blocklist word.\nIt stays.", "en"),
+    ]
+    _land(spark, rows, tmp_path / "landing", "a")
+    cfg = StreamCorpusConfig(
+        landing_dir=str(tmp_path / "landing"),
+        work_dir=str(tmp_path / "w"),
+        line_filter=True,
+        **LF,
+    )
+    StreamingCorpusPipeline(spark, cfg).exact_stage()
+    docs = spark.createDataFrame(rows, DOCS)
+    batch = CorpusCurationPipeline(
+        spark, CorpusConfig(sf_dir="unused", work_dir="unused", line_filter=True, **LF)
+    ).line_filter(docs)
+
+    def texts(df):
+        return {r["doc_id"]: r["text"] for r in df.collect()}
+
+    got = texts(spark.read.parquet(cfg.exact_dir))
+    assert got == texts(batch)
+    # the three knobs a four-knob stream dropped change the outcome
+    four = apply_line_filter(
+        docs, mode="newline", width=7, min_words=2, blocklist=("spam phrase",)
+    )
+    assert got != texts(four)
+
+
+def test_stream_drop_ledger_partitions_two_waves(spark, tmp_path):
+    """Two waves through the stream — a scan gate, exact dedup (within
+    and across waves), near-dedup and a door that drops nothing:
+    landing ids = curated ids ∪ ledger ids, disjoint, one ledger row
+    per id, each naming a stage of the table."""
+    from prod2vec_spark.streaming.pipeline import STREAM_STAGES
+
+    wave_a = _wave(0, 8)
+    wave_b = _wave(100, 5) + [
+        (200, "this page says forbidden " + " ".join(f"p{j}" for j in range(20)), "en"),
+        (201, wave_a[1][1], "en"),  # an exact copy of a committed doc
+    ]
+    cfg = StreamCorpusConfig(
+        landing_dir=str(tmp_path / "landing"),
+        work_dir=str(tmp_path / "w"),
+        line_filter=True,
+        token_stats=True,
+        badwords_cats={"x": ("forbidden",)},
+    )
+    pipe = StreamingCorpusPipeline(spark, cfg)
+    for rows, name in ((wave_a, "a"), (wave_b, "b")):
+        _land(spark, rows, tmp_path / "landing", name)
+        pipe.run()
+
+    curated = {r["doc_id"] for r in pipe.curated().select("doc_id").collect()}
+    ledger = {}
+    for r in pipe.drop_ledger().collect():
+        assert r["doc_id"] not in ledger
+        ledger[r["doc_id"]] = r["dropped_at"]
+    assert set(ledger) | curated == {r[0] for r in wave_a + wave_b}
+    assert not set(ledger) & curated
+    assert ledger[200] == "badwords_gate" and ledger[201] == "exact_dedup"
+    assert {"exact_dedup", "near_dedup"} <= set(ledger.values())
+    assert set(ledger.values()) <= {e.stage.name for e in STREAM_STAGES}
+
+
 # ------------------------------------------------------ structure lock
 def _program_files() -> list[Path]:
     return [

@@ -2,10 +2,14 @@
 deleted with its tests: the feature-row media decode fork (a second
 magic-byte table beside ``multimodal.sniff_format``), its one query
 (``webp_header_audit``), nine library paths only tests called, and the
-events-stream footer sniff.  None of these names may come back in the
-program files.  Also: the batch curation DAG's stage order is written
-once, in ``pipeline_llm.STAGES``, and so is the tokenizer family
-switch.  No Spark session needed."""
+events-stream footer sniff, the streaming media and span gates, and
+the streaming DAG's hand-ordered stage methods.  None of these names
+may come back in the program files.  Also: each curation DAG's stage
+order is written once — the batch one in ``pipeline_llm.STAGES``, the
+stream's in ``streaming/pipeline.STREAM_STAGES``, whose row-local
+stages shared with the batch DAG are the batch entries and code — and
+so is the tokenizer family switch; no config field is declared by both
+DAGs' configs.  No Spark session needed."""
 
 from __future__ import annotations
 
@@ -28,6 +32,12 @@ DELETED = (
     "kmeans_pq_codebooks", "compact_parquet", "connected_components_star",
     # the events-stream footer sniff and its override
     "_events_ts_is_nanos_long", "ts_is_nanos",
+    # the streaming media and span gates
+    "start_media_near_dedup_registry", "start_span_gate",
+    # the stream's hand-ordered stage chain and per-stage wrappers
+    "_row_gates", "_boundaries", "neardup_stage", "segment_cms_stage",
+    "lm_stage", "decon_stage", "token_stats_stage", "_start_neardup",
+    "_start_segment_cms", "_start_lm", "_start_decon", "_start_token_stats",
 )
 
 
@@ -53,7 +63,9 @@ def test_deleted_names_stay_gone():
 
 def test_deleted_modules_stay_gone():
     for rel in ("prod2vec_spark/operators/layout.py",
-                "prod2vec_spark/functions/vector_arrow.py"):
+                "prod2vec_spark/functions/vector_arrow.py",
+                "prod2vec_spark/streaming/media.py",
+                "prod2vec_spark/streaming/span_gate.py"):
         assert not (ROOT / rel).exists(), rel
 
 
@@ -61,23 +73,37 @@ def test_deleted_modules_stay_gone():
 PIPELINE_LLM = ROOT / "prod2vec_spark" / "pipeline_llm.py"
 
 
-def _tree() -> ast.Module:
-    return ast.parse(PIPELINE_LLM.read_text())
+STREAM = ROOT / "prod2vec_spark" / "streaming" / "pipeline.py"
 
 
-def _methods(tree: ast.Module) -> dict[str, ast.FunctionDef]:
+def _tree(path: Path = PIPELINE_LLM) -> ast.Module:
+    return ast.parse(path.read_text())
+
+
+def _methods(
+    tree: ast.Module, cls_name: str = "CorpusCurationPipeline"
+) -> dict[str, ast.FunctionDef]:
     cls = next(
         n for n in tree.body
-        if isinstance(n, ast.ClassDef) and n.name == "CorpusCurationPipeline"
+        if isinstance(n, ast.ClassDef) and n.name == cls_name
     )
     return {f.name: f for f in cls.body if isinstance(f, ast.FunctionDef)}
 
 
-def _stage_table(tree: ast.Module) -> ast.AST:
+def _stage_table(tree: ast.Module, name: str = "STAGES") -> ast.AST:
     return next(
         n.value for n in tree.body
-        if isinstance(n, ast.AnnAssign) and n.target.id == "STAGES"
+        if isinstance(n, ast.AnnAssign) and n.target.id == name
     )
+
+
+def _switches(table: ast.AST) -> set[str]:
+    """Every config field a stage predicate of ``table`` reads."""
+    return {
+        n.attr for lam in ast.walk(table)
+        if isinstance(lam, ast.Lambda)
+        for n in ast.walk(lam.body) if isinstance(n, ast.Attribute)
+    }
 
 
 def _strings(tree: ast.Module) -> list[str]:
@@ -111,11 +137,7 @@ def test_stage_switches_are_read_only_by_the_table():
     """run(), drop_ledger(), incremental_update() and the input scan
     read no config field that a stage predicate reads."""
     tree = _tree()
-    switches = {
-        n.attr for lam in ast.walk(_stage_table(tree))
-        if isinstance(lam, ast.Lambda)
-        for n in ast.walk(lam.body) if isinstance(n, ast.Attribute)
-    }
+    switches = _switches(_stage_table(tree))
     assert {"line_filter", "url_dedup", "lm_gate", "media_path"} <= switches
     methods = _methods(tree)
     for name in ("run", "drop_ledger", "incremental_update", "_scrubbed"):
@@ -140,3 +162,75 @@ def test_tokenizer_family_is_branched_in_one_method():
         )
     ]
     assert readers == ["_tokenizer"]
+
+
+# -- streaming/pipeline: one stage table -----------------------------------
+def test_stream_stage_order_is_written_once():
+    """The stream's stage labels are spelled only in its table, where
+    each names one entry (the other spellings are ``reads`` edges): no
+    method orders the stages by hand."""
+    from prod2vec_spark.streaming.pipeline import STREAM_STAGES
+
+    tree = _tree(STREAM)
+    table = _stage_table(tree, "STREAM_STAGES")
+    in_table = {id(n) for n in ast.walk(table)}
+    labels = [e.stage.name for e in STREAM_STAGES]
+    assert len(labels) == len(set(labels))
+    outside = [
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and n.value in labels
+        and id(n) not in in_table
+    ]
+    assert not outside, outside
+    named = [
+        n.args[0].value if isinstance(n, ast.Call) else n.slice.value
+        for n in ast.walk(table)
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "Stage"
+        or isinstance(n, ast.Subscript) and getattr(n.value, "id", None) == "_STAGE"
+    ]
+    assert sorted(named) == sorted(labels)
+
+
+def test_stream_methods_read_no_stage_switch():
+    """exact_stage, run, curated, drop_ledger and the fold they share
+    read no config field that a stream stage predicate reads."""
+    switches = _switches(_stage_table(_tree(STREAM), "STREAM_STAGES"))
+    switches |= _switches(_stage_table(_tree()))
+    assert {"quality_min", "token_stats", "lm_gate", "decon_gate"} <= switches
+    methods = _methods(_tree(STREAM), "StreamingCorpusPipeline")
+    for name in ("exact_stage", "run", "curated", "drop_ledger", "_fold"):
+        read = {
+            n.attr for n in ast.walk(methods[name])
+            if isinstance(n, ast.Attribute)
+        }
+        assert not read & switches, (name, read & switches)
+
+
+def test_stream_runs_the_batch_row_local_stages():
+    """The stream's line-filter and badwords entries are the batch
+    table's own entries, applied by the batch DAG's own methods."""
+    from prod2vec_spark.pipeline_llm import STAGES, CorpusCurationPipeline
+    from prod2vec_spark.streaming.pipeline import (
+        STREAM_STAGES,
+        StreamingCorpusPipeline,
+    )
+
+    batch = {s.name: s for s in STAGES}
+    stream = {e.stage.name: e for e in STREAM_STAGES}
+    for name in ("line_filter", "badwords_gate"):
+        assert stream[name].stage is batch[name]
+        assert stream[name].how == "scan"
+        assert getattr(StreamingCorpusPipeline, name) is getattr(
+            CorpusCurationPipeline, name
+        )
+
+
+def test_no_field_is_declared_by_both_configs():
+    from prod2vec_spark.pipeline_llm import CorpusConfig, CurationConfig
+    from prod2vec_spark.streaming.pipeline import StreamCorpusConfig
+
+    batch = set(CorpusConfig.__annotations__)
+    stream = set(StreamCorpusConfig.__annotations__)
+    assert not batch & stream, batch & stream
+    shared = set(CurationConfig.__annotations__)
+    assert {"work_dir", "lf_require_punct", "lf_max_dropped_frac"} <= shared

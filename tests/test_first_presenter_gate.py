@@ -1,7 +1,7 @@
 """Default-suite locks on the first-presenter gate
-(streaming/first_presenter.py): one single-wave oracle-parity drain
-per plane (text, media, image span), a ``file://`` registry
-round-trip, and the stale-checkpoint guard."""
+(streaming/first_presenter.py): a single-wave oracle-parity drain of
+the text gate, a ``file://`` registry round-trip, and the
+stale-checkpoint guard."""
 
 from __future__ import annotations
 
@@ -12,18 +12,10 @@ from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.dedup import minhash_bands
 from prod2vec_spark.streaming.first_presenter import read_decisions
-from prod2vec_spark.operators.phash import (
-    IMAGE_PLANE,
-    media_signatures,
-    span_signatures,
-)
-from prod2vec_spark.streaming.media import start_media_near_dedup_registry
 from prod2vec_spark.streaming.neardup import start_near_dedup_registry
-from prod2vec_spark.streaming.span_gate import start_span_gate
-from tests.first_presenter_oracle import assert_gate_matches_oracle, span_keep
+from tests.first_presenter_oracle import assert_gate_matches_oracle
 
 DOCS = "doc_id long, text string, lang string"
-MEDIA = "media_id long, blob binary"
 
 
 def _land(spark, rows, schema, landing, name):
@@ -73,63 +65,6 @@ def test_text_gate_single_wave_matches_oracle(spark, tmp_path):
     )
     assert 30 not in got  # too short to shingle: no decision row
     assert 0 in got and 0 in got.values()
-
-
-def test_media_gate_single_wave_matches_oracle(spark, tmp_path):
-    from tests.test_phash import _media_rows
-
-    rows = _media_rows()
-    landing = tmp_path / "landing"
-    _land(spark, rows, MEDIA, landing, "a")
-    reg, out = str(tmp_path / "reg"), str(tmp_path / "out")
-    stream = spark.readStream.schema(MEDIA).parquet(str(landing))
-    start_media_near_dedup_registry(
-        stream, reg, out, str(tmp_path / "ckpt")
-    ).awaitTermination()
-
-    got = assert_gate_matches_oracle(
-        spark,
-        [media_signatures(spark.createDataFrame(rows, MEDIA))],
-        ("modality", "band", "slice"),
-        "media_id",
-        reg,
-        out,
-        id_col="media_id",
-    )
-    assert 0 in got.values() and rows[-1][0] not in got  # undecodable
-    # the signatures carry mhash for the batch probe; the registry
-    # stores only the key and owner columns
-    assert sorted(spark.read.parquet(reg).columns) == [
-        "band", "batch_id", "modality", "owner", "slice",
-    ]
-
-
-def test_image_span_gate_single_wave_matches_oracle(spark, tmp_path):
-    from tests.test_streaming_image_span import KW, _rows
-
-    rows = _rows()
-    landing = tmp_path / "landing"
-    _land(spark, rows, MEDIA, landing, "a")
-    reg, out = str(tmp_path / "reg"), str(tmp_path / "out")
-    stream = spark.readStream.schema(MEDIA).parquet(str(landing))
-    start_span_gate(
-        IMAGE_PLANE, stream, reg, out, str(tmp_path / "ckpt"), **KW
-    ).awaitTermination()
-
-    got = assert_gate_matches_oracle(
-        spark,
-        [span_signatures(IMAGE_PLANE, spark.createDataFrame(rows, MEDIA), **KW)],
-        ("band", "slice"),
-        "unit",
-        reg,
-        out,
-        id_col="media_id",
-        carry="hash",
-        keep=lambda r, g: span_keep(
-            r, g, IMAGE_PLANE.id_base, IMAGE_PLANE.min_shared
-        ),
-    )
-    assert got[0] == 1 and got[1] == 0  # a family's crop drops
 
 
 def test_uri_registry_round_trips(spark, tmp_path):

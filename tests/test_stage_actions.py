@@ -210,6 +210,15 @@ def test_drop_ledger_partitions_the_default_run(spark, default_curation):
     _assert_ledger_partitions_the_input(spark, default_curation[0])
 
 
+def test_checkpoints_carry_no_quality_score(spark, default_curation):
+    """The quality stage drops its scoring column at its boundary, so
+    the batch checkpoints after it have the incremental corpus's
+    schema."""
+    wd = default_curation[0].work_dir
+    for name in ("quality_kept", "curated", "decontaminated"):
+        assert "q" not in spark.read.parquet(f"{wd}/{name}").columns, name
+
+
 def test_curation_report_equals_fresh_counts_with_optional_stages(spark, tmp_path):
     cfg = CorpusConfig(
         sf_dir=SF_SMOKE,

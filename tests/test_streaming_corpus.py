@@ -308,8 +308,9 @@ def test_streaming_segment_gate_one_sided_vs_batch(spark, tmp_path):
     # salted variants share most windows) must exercise the gate
     assert exact_drop, "fixture produced no boilerplate-heavy docs"
     # stream-gate drop set ⊇ exact drop set (CMS never underestimates)
-    stream_drop = {
-        r["doc_id"] for r in pipe._segment_gate_drop(exact).collect()
+    exact_ids = {r["doc_id"] for r in exact.select("doc_id").collect()}
+    stream_drop = exact_ids - {
+        r["doc_id"] for r in pipe.segment_gate(exact).select("doc_id").collect()
     }
     assert exact_drop <= stream_drop
 
@@ -498,9 +499,8 @@ def test_streaming_drop_ledger_partition_contract(spark, tmp_path):
     """Round-11 (VERDICT r9 ask #7) — the streaming twin of the batch
     drop-ledger partition contract: landing ids = curated ids ∪ ledger
     ids, DISJOINT, with every drop attributed to exactly one stage —
-    the row-local gates replayed through the shared _row_gates path,
-    the stateful stages read from their committed idempotent
-    artifacts."""
+    the scan stages replayed from the stage table, the stateful stages
+    read from their committed idempotent artifacts."""
     import shutil
 
     docs = (
@@ -722,8 +722,8 @@ def test_streaming_decontamination_matches_batch_and_replays(spark, tmp_path):
     assert 7 in exp_fuzzy and 7 not in exp_exact, (
         "paraphrase must be fuzzy-only"
     )
-    got_drop = {
-        r["doc_id"] for r in pipe._drops(cfg.decon_dir, "decon").collect()
+    got_drop = {r["doc_id"] for r in exact.select("doc_id").collect()} - {
+        r["doc_id"] for r in pipe.decon_gate(exact).select("doc_id").collect()
     }
     assert got_drop == (exp_exact | exp_fuzzy)
 

@@ -169,7 +169,7 @@ def test_streaming_token_stats_match_batch_counter(spark, tmp_path):
     got_a = pipe.token_stats()
     assert got_a == batch_totals(exact) and got_a[0] > 0
 
-    pipe.token_stats_stage()  # no new input: exactly-once
+    pipe.run()  # no new input: exactly-once
     assert pipe.token_stats() == got_a
 
     shutil.copy(
