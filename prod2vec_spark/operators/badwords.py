@@ -170,7 +170,7 @@ def badwords_by_lang(
     C4 blocklist is per-language in production (the public list ships
     ~25 language files) — ``lists`` maps lang -> {category -> words}
     and each document is screened against ITS OWN language's list,
-    selected row-locally by ``lang_col`` (the lm_by_lang
+    selected row-locally by ``lang_col`` (the operators/lm keyed-model
     one-grouped-computation rule: one pass, no per-language frame
     split, no shuffle).
 

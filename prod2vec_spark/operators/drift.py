@@ -130,7 +130,7 @@ def distribution_drift_by_lang(
 ) -> DataFrame:
     """CCNet-deployment edition of :func:`distribution_drift` — ONE
     drift summary row per language, in a single grouped computation
-    (the lm_perplexity_by_lang rule: the language column simply joins
+    (the operators/lm ``group_col`` rule: the language column simply joins
     every count key, so 100 languages cost the same two hash-agg
     shuffles as one).  Per-language totals are a languages-sized
     table → broadcast back.  A language present in only one snapshot

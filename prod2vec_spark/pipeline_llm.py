@@ -132,9 +132,9 @@ class CurationConfig:
     seg_min_docs: int = 2
     lm_gate: bool = False
     # smoothing family of the LM gate's model — "stupid_backoff"
-    # (bigram, Brants et al. 2007) or "kneser_ney" (interpolated KN,
-    # Chen & Goodman 1998 — the continuation-count family;
-    # operators/lm.fit_knn + score_docs_knn)
+    # (bigram, Brants et al. 2007; operators/lm.BigramLM) or
+    # "kneser_ney" (interpolated/modified KN at order lm_order, Chen &
+    # Goodman 1998 — the continuation-count family; operators/lm.KNnModel)
     lm_smoothing: str = "stupid_backoff"
     decon_n: int = 5  # decontamination word-n-gram order
     decon_min_frac: float = 0.2  # collision fraction that drops a doc

@@ -142,7 +142,8 @@ BPE_FIXED_MERGES: list[tuple[str, str]] = [
     ("a", "n"), ("an", "d"), ("o", "n"), ("the", "▁"),
 ]
 
-KN_TRAIN_FRAC = 0.8
+# the md5 "lm" train split every n-gram LM query fits on
+LM_TRAIN_FRAC = 0.8
 KN_DISCOUNT = 0.75
 
 # documents.doc_id -> synthetic url, host and registrable domain

@@ -14,7 +14,7 @@ from prod2vec_spark.operators import text as TX
 from prod2vec_spark.queries.common import (
     BPE_FIXED_MERGES,
     KN_DISCOUNT,
-    KN_TRAIN_FRAC,
+    LM_TRAIN_FRAC,
     _SENT_PAT,
     _SQL_SENT_CORPUS,
     _TOKS,
@@ -123,7 +123,6 @@ register(q_pack_audit, _sql_pack_audit())
 
 
 # ------------------------------------------------- LM perplexity
-LM_TRAIN_FRAC = 0.8
 LM_ALPHA = 0.4
 
 
@@ -178,83 +177,18 @@ FROM sc GROUP BY doc_id
 register(q_lm_perplexity, _sql_lm_perplexity())
 
 
-# ----------------------------------------------- trigram perplexity
-def q_trigram_perplexity(spark, sf_dir):
-    """Per-document trigram Stupid-Backoff score: the order-3 upgrade
-    of lm_perplexity (trigram → bigram → smoothed-unigram backoff
-    chain, backoff-level counts surfaced).  Both high-order count
-    tables probe via honest shuffle joins (operators/lm.py
-    trigram_perplexity scale notes)."""
-    from prod2vec_spark.operators.lm import trigram_perplexity
-
-    docs = read_table(spark, sf_dir, "documents")
-    return trigram_perplexity(
-        docs, train_frac=LM_TRAIN_FRAC, alpha=LM_ALPHA, seed="lm"
-    )
-
-
-def _sql_trigram_perplexity() -> str:
-    a = LM_ALPHA
-    return f"""
-WITH sp AS (SELECT doc_id, text,
-    (('0x' || substr(md5('lm|' || doc_id), 1, 8))::BIGINT / 4294967296.0)
-      < {LM_TRAIN_FRAC} AS is_train
-  FROM documents),
-t AS (SELECT doc_id, is_train, {_TOKS} AS toks FROM sp),
-tr AS (SELECT doc_id, is_train,
-        toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2,
-        toks[CAST(i AS INT) + 2] AS w3
-      FROM t, unnest(range(1, len(toks) - 1)) AS u(i)),
-c3 AS (SELECT w1, w2, w3, count(*) AS c3 FROM tr WHERE is_train
-       GROUP BY 1, 2, 3),
-p2 AS (SELECT doc_id, is_train,
-        toks[CAST(i AS INT)] AS w1, toks[CAST(i AS INT) + 1] AS w2
-      FROM t, unnest(range(1, len(toks))) AS u(i)),
-c2 AS (SELECT w1, w2, count(*) AS c2 FROM p2 WHERE is_train GROUP BY 1, 2),
-c1 AS (SELECT w, count(*) AS c1
-       FROM (SELECT unnest(toks) AS w FROM t WHERE is_train) GROUP BY 1),
-tot AS (SELECT CAST(sum(c1) AS BIGINT) AS t_tokens,
-               count(*) AS v_vocab FROM c1),
-sc AS (SELECT tr.doc_id, tr.is_train,
-    CASE WHEN c3.c3 IS NOT NULL
-           THEN CAST(c3.c3 AS DOUBLE) / cx.c2
-         WHEN cb.c2 IS NOT NULL
-           THEN {a} * cb.c2 / cu.c1
-         ELSE {a * a} * (COALESCE(cf.c1, 0) + 1)
-              / (tot.t_tokens + tot.v_vocab) END AS prob,
-    CASE WHEN c3.c3 IS NULL THEN 1 ELSE 0 END AS bo1,
-    CASE WHEN c3.c3 IS NULL AND cb.c2 IS NULL THEN 1 ELSE 0 END AS bo2
-  FROM tr
-  LEFT JOIN c3 ON tr.w1 = c3.w1 AND tr.w2 = c3.w2 AND tr.w3 = c3.w3
-  LEFT JOIN c2 cx ON tr.w1 = cx.w1 AND tr.w2 = cx.w2
-  LEFT JOIN c2 cb ON tr.w2 = cb.w1 AND tr.w3 = cb.w2
-  LEFT JOIN c1 cu ON tr.w2 = cu.w
-  LEFT JOIN c1 cf ON tr.w3 = cf.w
-  CROSS JOIN tot)
-SELECT doc_id, max(CAST(is_train AS BIGINT)) AS is_train,
-       count(*) AS n_triples,
-       CAST(sum(bo1) AS BIGINT) AS n_bo1,
-       CAST(sum(bo2) AS BIGINT) AS n_bo2,
-       round(avg(-ln(prob)), 4) AS avg_nll,
-       round(exp(avg(-ln(prob))), 4) AS ppl
-FROM sc GROUP BY doc_id
-"""
-
-
-register(q_trigram_perplexity, _sql_trigram_perplexity())
-
-
 # ------------------------------------------ per-language perplexity
 def q_lm_by_lang(spark, sf_dir):
     """CCNet-shape per-language LM scoring: one bigram model per
     language estimated in a single grouped computation (lang joins
     every count key), per-doc scores against the doc's own language
-    model (operators/lm.py lm_perplexity_by_lang)."""
-    from prod2vec_spark.operators.lm import lm_perplexity_by_lang
+    model (operators/lm.py lm_perplexity keyed by lang)."""
+    from prod2vec_spark.operators.lm import lm_perplexity
 
     docs = read_table(spark, sf_dir, "documents")
-    return lm_perplexity_by_lang(
-        docs, train_frac=LM_TRAIN_FRAC, alpha=LM_ALPHA, seed="lm"
+    return lm_perplexity(
+        docs, train_frac=LM_TRAIN_FRAC, alpha=LM_ALPHA, seed="lm",
+        group_col="lang",
     )
 
 
@@ -655,7 +589,7 @@ def q_kn_perplexity(spark, sf_dir):
 
     docs = read_table(spark, sf_dir, "documents")
     return knn_perplexity(
-        docs, order=2, train_frac=KN_TRAIN_FRAC, discount=KN_DISCOUNT,
+        docs, order=2, train_frac=LM_TRAIN_FRAC, discount=KN_DISCOUNT,
         seed="lm",
     ).select(
         "doc_id", "is_train", F.col("n_grams").alias("n_pairs"),
@@ -667,7 +601,7 @@ def _sql_kn_perplexity() -> str:
     return f"""
 WITH sp AS (SELECT doc_id, text,
     (('0x' || substr(md5('lm|' || doc_id), 1, 8))::BIGINT / 4294967296.0)
-      < {KN_TRAIN_FRAC} AS is_train
+      < {LM_TRAIN_FRAC} AS is_train
   FROM documents),
 t AS (SELECT doc_id, is_train, {_TOKS} AS toks FROM sp),
 p AS (SELECT doc_id, is_train,
@@ -715,13 +649,17 @@ def q_kn_by_lang(spark, sf_dir):
     """Per-language interpolated Kneser-Ney scoring (CCNet deployment
     shape): one KN model per language in a single grouped computation
     — the lang column joins every count key; languages with no
-    training bigrams are absent (inner totals join, the lm_by_lang
-    convention)."""
-    from prod2vec_spark.operators.lm import kn_perplexity_by_lang
+    training bigrams are absent (inner totals join;
+    operators/lm.knn_perplexity keyed by lang)."""
+    from prod2vec_spark.operators.lm import knn_perplexity
 
     docs = read_table(spark, sf_dir, "documents")
-    return kn_perplexity_by_lang(
-        docs, train_frac=KN_TRAIN_FRAC, discount=KN_DISCOUNT, seed="lm"
+    return knn_perplexity(
+        docs, order=2, train_frac=LM_TRAIN_FRAC, discount=KN_DISCOUNT,
+        seed="lm", group_col="lang",
+    ).select(
+        "doc_id", "lang", "is_train", F.col("n_grams").alias("n_pairs"),
+        F.col("n_bo").alias("n_unseen"), "avg_nll", "ppl",
     )
 
 
@@ -729,7 +667,7 @@ def _sql_kn_by_lang() -> str:
     return f"""
 WITH sp AS (SELECT doc_id, lang, text,
     (('0x' || substr(md5('lm|' || doc_id), 1, 8))::BIGINT / 4294967296.0)
-      < {KN_TRAIN_FRAC} AS is_train
+      < {LM_TRAIN_FRAC} AS is_train
   FROM documents),
 t AS (SELECT doc_id, lang, is_train, {_TOKS} AS toks FROM sp),
 p AS (SELECT doc_id, lang, is_train,
@@ -786,7 +724,7 @@ def _kn3_report(spark, sf_dir, discounts=None):
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    tagged = with_train_split(docs, KN_TRAIN_FRAC, seed="lm")
+    tagged = with_train_split(docs, LM_TRAIN_FRAC, seed="lm")
     model = fit_knn(tagged.where(F.col("is_train")), order=3)
     c3_absent = F.col("c3").isNull()
     return (
@@ -836,7 +774,7 @@ def _sql_kn3_perplexity() -> str:
     return f"""
 WITH sp AS (SELECT doc_id, text,
     (('0x' || substr(md5('lm|' || doc_id), 1, 8))::BIGINT / 4294967296.0)
-      < {KN_TRAIN_FRAC} AS is_train
+      < {LM_TRAIN_FRAC} AS is_train
   FROM documents),
 t AS (SELECT doc_id, is_train, {_TOKS} AS toks FROM sp),
 tr AS (SELECT doc_id, is_train,
@@ -1061,7 +999,7 @@ def _sql_kn3m_perplexity() -> str:
     return f"""
 WITH sp AS (SELECT doc_id, text,
     (('0x' || substr(md5('lm|' || doc_id), 1, 8))::BIGINT / 4294967296.0)
-      < {KN_TRAIN_FRAC} AS is_train
+      < {LM_TRAIN_FRAC} AS is_train
   FROM documents),
 t AS (SELECT doc_id, is_train, {_TOKS} AS toks FROM sp),
 tr AS (SELECT doc_id, is_train,
@@ -1261,7 +1199,7 @@ def q_kn5m_perplexity(spark, sf_dir):
 
     docs = read_table(spark, sf_dir, "documents")
     return knn_perplexity(
-        docs, order=5, train_frac=KN_TRAIN_FRAC, discounts=KN5M_D
+        docs, order=5, train_frac=LM_TRAIN_FRAC, discounts=KN5M_D
     )
 
 
@@ -1356,7 +1294,7 @@ def _sql_knm_perplexity(order: int, discounts: dict) -> str:
     return f"""
 WITH sp AS (SELECT doc_id, text,
     (('0x' || substr(md5('lm|' || doc_id), 1, 8))::BIGINT / 4294967296.0)
-      < {KN_TRAIN_FRAC} AS is_train
+      < {LM_TRAIN_FRAC} AS is_train
   FROM documents),
 t AS (SELECT doc_id, is_train, {_TOKS} AS toks FROM sp),
 gr AS (SELECT doc_id, is_train, {gram_cols}

@@ -998,7 +998,7 @@ register(q_corpus_drift, _sql_corpus_drift())
 
 def q_drift_by_lang(spark, sf_dir):
     """Per-language drift summary in ONE grouped computation (the
-    lm_by_lang rule: lang joins every count key) between crawl N and
+    operators/lm group_col rule: lang joins every count key) between crawl N and
     the derived N+1 — the CCNet ops view of distribution shift
     (operators/drift.distribution_drift_by_lang)."""
     from prod2vec_spark.operators.drift import distribution_drift_by_lang

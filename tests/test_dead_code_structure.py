@@ -38,6 +38,9 @@ DELETED = (
     "_row_gates", "_boundaries", "neardup_stage", "segment_cms_stage",
     "lm_stage", "decon_stage", "token_stats_stage", "_start_neardup",
     "_start_segment_cms", "_start_lm", "_start_decon", "_start_token_stats",
+    # the per-language and trigram copies of the two n-gram LMs
+    "kn_perplexity_by_lang", "lm_perplexity_by_lang", "trigram_perplexity",
+    "q_trigram_perplexity", "token_triples", "token_pairs", "doc_pairs",
 )
 
 

@@ -106,8 +106,6 @@ def test_kn_by_lang_models_are_independent(spark):
     """Per-language KN: the same pair scores differently under two
     languages' different count tables; a language with no training
     bigrams is absent from the report (inner totals join)."""
-    from prod2vec_spark.operators.lm import kn_perplexity_by_lang
-
     tagged = spark.createDataFrame(
         [
             (1, "a b a b", "en", True),
@@ -123,8 +121,9 @@ def test_kn_by_lang_models_are_independent(spark):
     # docs only for the independence half:
     out = {
         (r["doc_id"], r["lang"]): r
-        for r in kn_perplexity_by_lang(
-            tagged.drop("is_train"), train_frac=0.5, seed="s-kn"
+        for r in knn_perplexity(
+            tagged.drop("is_train"), order=2, train_frac=0.5, seed="s-kn",
+            group_col="lang",
         ).collect()
     }
     langs = {k[1] for k in out}

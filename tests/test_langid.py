@@ -109,10 +109,10 @@ def test_langid_labels_survive_in_scoring(spark):
 
 def test_langid_feeds_lm_and_temperature_mix(spark):
     """Integration: learned labels drive the per-language LM
-    (lm_perplexity_by_lang) and the temperature mixer — the CCNet
+    (lm_perplexity keyed by lang) and the temperature mixer — the CCNet
     deployment chain lang-id -> per-lang LM -> mix, end to end on
     learned predictions instead of the corpus label column."""
-    from prod2vec_spark.operators.lm import lm_perplexity_by_lang
+    from prod2vec_spark.operators.lm import lm_perplexity
     from prod2vec_spark.operators.mixing import temperature_mix
 
     train = _frame(spark, _corpus(seed=7))
@@ -126,7 +126,7 @@ def test_langid_feeds_lm_and_temperature_mix(spark):
     )
     # per-language LM over learned labels: every language present,
     # every scored doc carries a finite perplexity
-    ppl = lm_perplexity_by_lang(labeled, train_frac=0.7, seed="lid")
+    ppl = lm_perplexity(labeled, train_frac=0.7, seed="lid", group_col="lang")
     langs_seen = {r["lang"] for r in ppl.select("lang").distinct().collect()}
     assert langs_seen == set(_LANGS)
     assert ppl.where((F.col("ppl") <= 0) | F.isnan("ppl")).count() == 0

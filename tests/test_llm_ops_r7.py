@@ -633,37 +633,6 @@ def test_fit_lm_rejects_empty_train(spark):
         fit_lm(empty)
 
 
-# ------------------------------------------------ trigram LM backoff
-def test_trigram_backoff_chain_exact(spark):
-    """Hand-computed chain: trigram hit, trigram→bigram backoff, and
-    the double-backoff smoothed floor, each with exact values."""
-    from prod2vec_spark.operators.lm import trigram_perplexity
-
-    tagged = spark.createDataFrame(
-        [
-            (1, "a b c a b c", True),   # train
-            (2, "a b c", False),        # trigram hit: p = 2/2 = 1
-            (3, "x b c", False),        # bigram backoff: 0.4*2/2 = 0.4
-            (4, "b c zz", False),       # floor: 0.16*(0+1)/(6+3)
-        ],
-        "doc_id long, text string, is_train boolean",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in trigram_perplexity(tagged, tagged=tagged).collect()
-    }
-    assert out[2]["avg_nll"] == 0.0 and out[2]["ppl"] == 1.0
-    assert (out[2]["n_bo1"], out[2]["n_bo2"]) == (0, 0)
-    assert out[3]["avg_nll"] == round(-math.log(0.4), 4)
-    assert (out[3]["n_bo1"], out[3]["n_bo2"]) == (1, 0)
-    assert out[4]["avg_nll"] == round(-math.log(0.16 / 9), 4)
-    assert (out[4]["n_bo1"], out[4]["n_bo2"]) == (1, 1)
-    # train doc scores its own triples: (a,b,c)=2/2, (b,c,a)=1/2,
-    # (c,a,b)=1/1, (a,b,c)=2/2
-    expect = round(-(math.log(1) + math.log(0.5) + math.log(1) + math.log(1)) / 4, 4)
-    assert out[1]["avg_nll"] == expect
-
-
 def test_bm25_ranks_planted_relevant_doc_first(spark):
     """Relevance sanity: a doc stuffed with the query terms must
     outrank fixture docs that mention them incidentally."""
@@ -686,11 +655,29 @@ def test_bm25_ranks_planted_relevant_doc_first(spark):
     assert len(out) == 1
 
 
-def test_lm_by_lang_models_are_independent(spark):
-    """Per-language models: adding documents in language B must not
-    change language A's scores (the models share nothing)."""
-    from prod2vec_spark.operators.lm import lm_perplexity_by_lang
+def _sb_by_lang(docs, **kw):
+    from prod2vec_spark.operators.lm import lm_perplexity
 
+    return lm_perplexity(docs, group_col="lang", **kw).select(
+        "doc_id", "n_pairs", "n_backoff", "avg_nll"
+    )
+
+
+def _kn_by_lang(docs, **kw):
+    from prod2vec_spark.operators.lm import knn_perplexity
+
+    return knn_perplexity(docs, order=2, group_col="lang", **kw).select(
+        "doc_id", "n_grams", "n_bo", "avg_nll"
+    )
+
+
+@pytest.mark.parametrize(
+    "by_lang", [_sb_by_lang, _kn_by_lang], ids=["stupid_backoff", "kneser_ney"]
+)
+def test_lm_by_lang_models_are_independent(spark, by_lang):
+    """Per-language models (both smoothing families keyed by lang):
+    adding documents in language B must not change language A's
+    scores (the models share nothing)."""
     base = spark.createDataFrame(
         [(1, "a b a b a b", "en"), (2, "a b a", "en")],
         "doc_id long, text string, lang string",
@@ -700,20 +687,47 @@ def test_lm_by_lang_models_are_independent(spark):
         "doc_id long, text string, lang string",
     )
     only_en = {
-        r["doc_id"]: (r["n_pairs"], r["n_backoff"], r["avg_nll"])
-        for r in lm_perplexity_by_lang(base, train_frac=1.0).collect()
+        r[0]: tuple(r[1:]) for r in by_lang(base, train_frac=1.0).collect()
     }
     both = {
-        r["doc_id"]: (r["n_pairs"], r["n_backoff"], r["avg_nll"])
-        for r in lm_perplexity_by_lang(
-            base.unionByName(extra), train_frac=1.0
-        ).collect()
+        r[0]: tuple(r[1:])
+        for r in by_lang(base.unionByName(extra), train_frac=1.0).collect()
     }
     for d in (1, 2):
         assert both[d] == only_en[d]
     # the de docs scored against the de model only: 'a b' in de train
     # has different counts than in en
     assert 100 in both and 101 in both
+
+
+@pytest.mark.parametrize("family", ["stupid_backoff", "kneser_ney"])
+def test_keyed_lm_save_raises_and_unkeyed_round_trips(spark, tmp_path, family):
+    """A keyed model's tables would reload as ONE unkeyed model that
+    scores across languages, so its save raises before writing
+    anything; the unkeyed save/load round trip scores identically."""
+    from prod2vec_spark.operators import lm as LM
+
+    if family == "stupid_backoff":
+        fit, score, load = LM.fit_lm, LM.score_docs, LM.BigramLM.load
+    else:
+        def fit(d, **kw):
+            return LM.fit_knn(d, order=2, **kw)
+
+        score, load = LM.score_docs_knn, LM.KNnModel.load
+    docs = spark.createDataFrame(
+        [(1, "a b a b", "en"), (2, "a b c a", "de"), (3, "b a zz a", "en")],
+        "doc_id long, text string, lang string",
+    )
+    keyed = fit(docs, group_col="lang")
+    with pytest.raises(ValueError, match="keyed by 'lang'"):
+        keyed.save(str(tmp_path / "keyed"))
+    assert not (tmp_path / "keyed").exists()
+    model = fit(docs)
+    model.save(str(tmp_path / "plain"))
+    reloaded = load(spark, str(tmp_path / "plain"))
+    assert sorted(map(tuple, score(docs, reloaded).collect())) == sorted(
+        map(tuple, score(docs, model).collect())
+    )
 
 
 def test_curriculum_buckets_are_balanced_quartiles(spark):

@@ -73,7 +73,6 @@ def test_rows_only_queries_nonempty(spark, name):
         "verbatim_span_pairs",      # conv() gram hashes + window min folds
         "segment_dedup_stats",      # ceil-division windowing + md5 digests
         "lm_perplexity",            # md5-uniform split + ln/exp + divisions
-        "trigram_perplexity",       # 3-level backoff chain arithmetic
         "bm25_topk",                # ln idf + saturation-division scoring
         "canonical_pick",           # CC decimal checksum + quality formula
         "lm_by_lang",               # per-lang grouped count arithmetic
