@@ -235,7 +235,6 @@ class BigramLM:
 
 def fit_lm(
     train_docs: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     group_col: "str | None" = None,
 ) -> BigramLM:
@@ -338,7 +337,6 @@ def lm_perplexity(
         tagged = with_train_split(docs, train_frac, seed=seed, id_col=id_col)
     model = fit_lm(
         tagged.where(F.col("is_train")),
-        id_col=id_col,
         text_col=text_col,
         group_col=group_col,
     )
@@ -601,7 +599,6 @@ class KNnModel:
 def fit_knn(
     train_docs: DataFrame,
     order: int = 5,
-    id_col: str = "doc_id",
     text_col: str = "text",
     lineage_break: bool = True,
     checkpoint_dir: "str | None" = None,
@@ -884,7 +881,6 @@ def knn_perplexity(
     model = fit_knn(
         tagged.where(F.col("is_train")),
         order=order,
-        id_col=id_col,
         text_col=text_col,
         group_col=group_col,
     )

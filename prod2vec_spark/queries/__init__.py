@@ -4,8 +4,9 @@
 Each family module registers its queries into ``ALL_QUERIES`` /
 ``ALL_ORACLES`` (``common.register``) where it defines them:
 
-  * ``relational`` — scans, aggregates, grouping sets, joins, windows,
-    set ops, events and mergeable sketches;
+  * ``relational`` — scans, aggregates, pivot and cube, joins,
+    windows, a union, events JSON and sessions, and mergeable
+    sketches;
   * ``quality``    — data-quality expectation gates;
   * ``embeddings`` — baskets, vocabulary, skip-gram, Word2Vec, KMeans;
   * ``text``       — text profiles, quality / language / line gates,

@@ -1,9 +1,9 @@
-"""Relational and events queries: scans and projections, global and
-grouping-set aggregates, joins (star, semi/anti, as-of, range and
-interval), window frames and ranks, set operations, the events
-table's JSON, tumbling/sliding and session windows, and the mergeable
-sketches (HyperLogLog bound, approx percentiles, count-min, Bloom,
-bottom-k) checked against their exact counterparts."""
+"""Relational and events queries: scans and projections, global,
+pivot and cube aggregates, joins (multi-way, semi, as-of, range and
+interval), window frames and ranks, a union, the events table's JSON
+and sessions, and the mergeable sketches (HyperLogLog bound, approx
+percentiles, count-min, Bloom, bottom-k) checked against their exact
+counterparts."""
 
 from __future__ import annotations
 
@@ -73,12 +73,11 @@ register(q_pricing_summary, SQL_PRICING_SUMMARY)
 def q_distinct_parts(spark, sf_dir):
     """A3+A5 and A3's 100 TB twin in one row: exact distinct products
     vs total rows (data_prep.py:254-259) PLUS the HyperLogLog++
-    approx_count_distinct error-bound assertion (the superset-only
-    approx_distinct_parts entry on its own).  The sketch value itself is
-    engine-specific, so the oracle-checkable output is the exact count
-    plus the DOCUMENTED BOUND: rsd=0.05 ⇒ |approx−exact|/exact < 0.15
-    (3σ) with overwhelming probability — both engines' own estimates
-    must satisfy it."""
+    approx_count_distinct error-bound assertion.  The sketch value
+    itself is engine-specific, so the oracle-checkable output is the
+    exact count plus the DOCUMENTED BOUND: rsd=0.05 ⇒
+    |approx−exact|/exact < 0.15 (3σ) with overwhelming probability —
+    both engines' own estimates must satisfy it."""
     li = read_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -105,24 +104,6 @@ FROM lineitem
 """
 
 register(q_distinct_parts, SQL_DISTINCT_PARTS)
-
-
-# ------------------------------------------------------------------- A4
-def q_null_counts(spark, sf_dir):
-    """A4/Q1: null counts for the key columns, one scan."""
-    li = read_table(spark, sf_dir, "lineitem")
-    nn = lambda c: F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}")  # noqa: E731
-    return li.agg(nn("l_orderkey"), nn("l_partkey"), nn("l_quantity"))
-
-
-SQL_NULL_COUNTS = """
-SELECT CAST(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_orderkey,
-       CAST(sum(CASE WHEN l_partkey  IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_partkey,
-       CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_quantity
-FROM lineitem
-"""
-
-register(q_null_counts, SQL_NULL_COUNTS)
 
 
 # ------------------------------------------------------------------- W2
@@ -162,37 +143,6 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 20
 """
 
 register(q_topk_orders, SQL_TOPK_ORDERS)
-
-
-# -------------------------------------------------------- events daily
-def q_events_daily(spark, sf_dir):
-    """Tumbling daily aggregate per event type with JSON prop
-    extraction — the batch form of the streaming windowed agg."""
-    ev = read_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format("ts", "yyyy-MM-dd").alias("day"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-            F.round(
-                F.avg(F.get_json_object("props", "$.k").cast("int")), 4
-            ).alias("avg_k"),
-        )
-    )
-
-
-SQL_EVENTS_DAILY = """
-SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-       round(avg(json_extract_string(props, '$.k')::INT), 4) AS avg_k
-FROM events GROUP BY 1, 2
-"""
-
-register(q_events_daily, SQL_EVENTS_DAILY)
 
 
 # --------------------------------------------------------- as-of join
@@ -318,48 +268,6 @@ ORDER BY revenue DESC, o_orderkey LIMIT 10
 register(q_revenue_topk, SQL_REVENUE_TOPK)
 
 
-# ----------------------------------------------------- region revenue
-def q_region_revenue(spark, sf_dir):
-    """TPC-H Q5-shaped star join: fact ⋈ orders ⋈ customer ⋈ nation ⋈
-    region with every dim broadcast — one fact shuffle (the orders
-    join), everything else map-side."""
-    li = read_table(spark, sf_dir, "lineitem")
-    orders = read_table(spark, sf_dir, "orders")
-    cust = read_table(spark, sf_dir, "customer")
-    nation = read_table(spark, sf_dir, "nation")
-    region = read_table(spark, sf_dir, "region")
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .groupBy("r_name")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-SQL_REGION_REVENUE = """
-SELECT r_name,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-
-register(q_region_revenue, SQL_REGION_REVENUE)
-
-
 # ------------------------------------------------------------- set ops
 def q_union_nation_counts(spark, sf_dir):
     """Set-op surface: stack customer and supplier by nation
@@ -383,117 +291,6 @@ GROUP BY side, nationkey
 """
 
 register(q_union_nation_counts, SQL_UNION_NATIONS)
-
-
-# ------------------------------------------------- set ops (§2.7 D1+)
-def q_intersect_parts(spark, sf_dir):
-    """INTERSECT (set semantics): part keys ordered at quantity 1 AND
-    at quantity 2 — distinct-based set op, one shuffle per side + the
-    distinct, exactly Catalyst's plan for INTERSECT.  (Quantity
-    predicates are selective enough that neither side nor the result
-    is the whole part universe.)"""
-    li = read_table(spark, sf_dir, "lineitem")
-    one = li.where(F.col("l_quantity") == 1).select("l_partkey")
-    two = li.where(F.col("l_quantity") == 2).select("l_partkey")
-    return one.intersect(two)
-
-
-SQL_INTERSECT_PARTS = """
-SELECT l_partkey FROM lineitem WHERE l_quantity = 1
-INTERSECT
-SELECT l_partkey FROM lineitem WHERE l_quantity = 2
-"""
-
-register(q_intersect_parts, SQL_INTERSECT_PARTS)
-
-
-def q_except_parts(spark, sf_dir):
-    """EXCEPT (set semantics): part keys ordered at quantity 1 but
-    never at quantity 2.  ``subtract`` is Spark's EXCEPT DISTINCT
-    (``exceptAll`` would be multiset-except: a key seen 3x on the
-    left and 1x on the right would wrongly survive)."""
-    li = read_table(spark, sf_dir, "lineitem")
-    one = li.where(F.col("l_quantity") == 1).select("l_partkey")
-    two = li.where(F.col("l_quantity") == 2).select("l_partkey")
-    return one.subtract(two)
-
-
-SQL_EXCEPT_PARTS = """
-SELECT l_partkey FROM lineitem WHERE l_quantity = 1
-EXCEPT
-SELECT l_partkey FROM lineitem WHERE l_quantity = 2
-"""
-
-register(q_except_parts, SQL_EXCEPT_PARTS)
-
-
-# ----------------------------------------- A3 at scale: approx distinct
-def q_approx_distinct_parts(spark, sf_dir):
-    """A3's 100 TB form (SURVEY §2.4): HyperLogLog++
-    approx_count_distinct beside the exact count.  The sketch value
-    itself is engine-specific (Spark HLL++ vs DuckDB HLL give
-    different estimates), so the oracle-checkable output is the exact
-    count plus the DOCUMENTED ERROR BOUND assertion: rsd=0.05 ⇒
-    |approx−exact|/exact < 0.15 (3σ) with overwhelming probability at
-    this cardinality — both engines' estimates must satisfy it."""
-    li = read_table(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.countDistinct("l_partkey").alias("exact_cnt"),
-        (
-            (
-                F.abs(
-                    F.approx_count_distinct("l_partkey", rsd=0.05)
-                    - F.countDistinct("l_partkey")
-                )
-                / F.countDistinct("l_partkey")
-            )
-            < 0.15
-        ).alias("approx_ok"),
-    )
-
-
-SQL_APPROX_DISTINCT = """
-SELECT count(DISTINCT l_partkey) AS exact_cnt,
-       (abs(approx_count_distinct(l_partkey) - count(DISTINCT l_partkey))
-        / CAST(count(DISTINCT l_partkey) AS DOUBLE)) < 0.15 AS approx_ok
-FROM lineitem
-"""
-
-register(q_approx_distinct_parts, SQL_APPROX_DISTINCT)
-
-
-# -------------------------------------------------------------- rollup
-def q_rollup_pricing(spark, sf_dir):
-    """Grouping sets: revenue rollup over (returnflag, linestatus) with
-    subtotals and grand total — free from Catalyst (SURVEY.md §2.4),
-    exposed as a first-class query."""
-    li = read_table(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n",
-            "sum_price",
-        )
-    )
-
-
-SQL_ROLLUP_PRICING = """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       count(*) AS n,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-"""
-
-register(q_rollup_pricing, SQL_ROLLUP_PRICING)
 
 
 # ------------------------------------------------- F9 ranked string agg
@@ -619,71 +416,6 @@ FROM events GROUP BY event_type
 register(q_events_json, SQL_EVENTS_JSON)
 
 
-# --------------------------------------------------- tumbling window (F-ext)
-def q_events_window(spark, sf_dir):
-    """Epoch-aligned 6-hour tumbling window aggregation — the batch
-    form of the Structured-Streaming windowed agg (streaming/events.py
-    uses the same F.window).  One shuffle on (window, event_type)."""
-    ev = read_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(_dec("value")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-# 6-hour buckets align to midnight, so day-trunc + floor(hour/6)*6 is
-# exactly Spark's epoch-aligned window start, timezone-free.
-SQL_EVENTS_WINDOW = """
-SELECT date_trunc('day', ts) + INTERVAL (CAST(floor(hour(ts) / 6) * 6 AS INT)) HOUR
-         AS window_start,
-       event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-register(q_events_window, SQL_EVENTS_WINDOW)
-
-
-# --------------------------------------------------- sliding window (F-ext)
-def q_events_sliding(spark, sf_dir):
-    """Overlapping 6-hour windows sliding every 3 hours: each event
-    lands in exactly size/slide = 2 windows.  Spark plans this as one
-    Expand (2x map-side, same machinery as cube) + one hash agg — the
-    overlap never re-reads the source."""
-    ev = read_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-
-# an event at ts belongs to the windows starting at floor_3h(ts) and
-# floor_3h(ts) - 3h (both epoch-aligned); unnest replays Spark's Expand
-SQL_EVENTS_SLIDING = """
-WITH s AS (
-  SELECT event_type,
-         date_trunc('day', ts)
-           + INTERVAL (CAST(floor(hour(ts) / 3) * 3 AS INT)) HOUR AS s0
-  FROM events)
-SELECT ws AS window_start, event_type, count(*) AS n_events
-FROM (SELECT event_type, unnest([s0, s0 - INTERVAL 3 HOUR]) AS ws FROM s)
-GROUP BY 1, 2
-"""
-
-register(q_events_sliding, SQL_EVENTS_SLIDING)
-
-
 # ------------------------------------------------------------- semi join (J)
 def q_semi_parts(spark, sf_dir):
     """Left-semi join: parts that ship in any high-quantity line item.
@@ -706,34 +438,6 @@ WHERE EXISTS (SELECT 1 FROM lineitem l
 """
 
 register(q_semi_parts, SQL_SEMI_PARTS)
-
-
-# ------------------------------------------------------------- anti join (J)
-def q_anti_customers(spark, sf_dir):
-    """Left-anti join: customers with no urgent orders — the blocklist /
-    contamination-exclusion shape of an LLM data pipeline (drop every
-    document whose key appears in the exclusion set).  The key set is
-    filtered, distinct-collapsed and broadcast."""
-    cust = read_table(spark, sf_dir, "customer")
-    urgent = (
-        read_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("c_custkey"))
-        .distinct()
-    )
-    return cust.join(F.broadcast(urgent), "c_custkey", "left_anti").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-
-
-SQL_ANTI_CUSTOMERS = """
-SELECT c_custkey, c_name, c_nationkey FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-"""
-
-register(q_anti_customers, SQL_ANTI_CUSTOMERS)
 
 
 # ----------------------------------------------------------------- pivot (A)
@@ -790,35 +494,6 @@ FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 register(q_cube_pricing, SQL_CUBE_PRICING)
 
 
-# ---------------------------------------------------------- percentiles (A)
-def q_order_percentiles(spark, sf_dir):
-    """Exact linear-interpolation percentiles per priority class
-    (Spark `percentile` == DuckDB `quantile_cont`, both index
-    p*(n-1)).  At 100 TB the exact form becomes approx_percentile
-    (t-digest) — same call shape, documented error bound, mirroring
-    the A3 exact/approx pair."""
-    orders = read_table(spark, sf_dir, "orders")
-    pct = lambda p: F.round(  # noqa: E731
-        F.percentile("o_totalprice", F.lit(p)), 4
-    )
-    return orders.groupBy("o_orderpriority").agg(
-        pct(0.25).alias("p25"),
-        pct(0.50).alias("p50"),
-        pct(0.75).alias("p75"),
-    )
-
-
-SQL_ORDER_PERCENTILES = """
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.25), 4) AS p25,
-       round(quantile_cont(o_totalprice, 0.50), 4) AS p50,
-       round(quantile_cont(o_totalprice, 0.75), 4) AS p75
-FROM orders GROUP BY o_orderpriority
-"""
-
-register(q_order_percentiles, SQL_ORDER_PERCENTILES)
-
-
 # ------------------------------------------------------ window frames (W-ext)
 def q_running_revenue(spark, sf_dir):
     """Running per-customer revenue — explicit ROWS frame (SURVEY §2.5
@@ -850,104 +525,14 @@ FROM orders
 register(q_running_revenue, SQL_RUNNING_REVENUE)
 
 
-# -------------------------------------------------------- set algebra
-def q_setops_parts(spark, sf_dir):
-    """INTERSECT + EXCEPT (set semantics) in one tagged result: part
-    keys ordered at quantity 1 AND at quantity 2, and those at 1 but
-    never 2.  ``subtract`` is EXCEPT DISTINCT (exceptAll would be
-    multiset-except).  Each leg is Catalyst's native distinct-based
-    set-op plan; union of the two legs adds no extra shuffle over the
-    single-query forms."""
-    li = read_table(spark, sf_dir, "lineitem")
-    one = li.where(F.col("l_quantity") == 1).select("l_partkey")
-    two = li.where(F.col("l_quantity") == 2).select("l_partkey")
-    inter = one.intersect(two).select(F.lit("intersect").alias("op"), "l_partkey")
-    exc = one.subtract(two).select(F.lit("except").alias("op"), "l_partkey")
-    return inter.unionByName(exc)
-
-
-SQL_SETOPS_PARTS = """
-SELECT 'intersect' AS op, l_partkey FROM (
-  SELECT l_partkey FROM lineitem WHERE l_quantity = 1
-  INTERSECT
-  SELECT l_partkey FROM lineitem WHERE l_quantity = 2)
-UNION ALL
-SELECT 'except' AS op, l_partkey FROM (
-  SELECT l_partkey FROM lineitem WHERE l_quantity = 1
-  EXCEPT
-  SELECT l_partkey FROM lineitem WHERE l_quantity = 2)
-"""
-
-register(q_setops_parts, SQL_SETOPS_PARTS)
-
-
-# ------------------------------------------------------ event windows
-def q_events_windows(spark, sf_dir):
-    """Tumbling (6h) + sliding (6h every 3h) window aggregation in one
-    tagged result — the batch forms of the Structured-Streaming
-    windowed aggs.  Tumbling is one hash-agg shuffle; sliding is one
-    map-side Expand (2× rows, size/slide) + one hash agg — the overlap
-    never re-reads the source."""
-    ev = read_table(spark, sf_dir, "events")
-
-    def agg(windowed, kind):
-        return (
-            windowed.agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sum_value"),
-            )
-            .select(
-                F.lit(kind).alias("kind"),
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-        )
-
-    tumb = agg(
-        ev.groupBy(F.window("ts", "6 hours").alias("w"), "event_type"), "tumbling"
-    )
-    slide = agg(
-        ev.groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), "event_type"),
-        "sliding",
-    )
-    return tumb.unionByName(slide)
-
-
-# 6h/3h buckets align to midnight: day-trunc + floored hour is exactly
-# Spark's epoch-aligned window start; unnest replays the sliding Expand
-SQL_EVENTS_WINDOWS = """
-WITH s AS (
-  SELECT event_type, value,
-         date_trunc('day', ts) + INTERVAL (CAST(floor(hour(ts) / 6) * 6 AS INT)) HOUR AS t0,
-         date_trunc('day', ts) + INTERVAL (CAST(floor(hour(ts) / 3) * 3 AS INT)) HOUR AS s0
-  FROM events)
-SELECT 'tumbling' AS kind, t0 AS window_start, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM s GROUP BY 1, 2, 3
-UNION ALL
-SELECT 'sliding' AS kind, ws AS window_start, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM (SELECT event_type, value, unnest([s0, s0 - INTERVAL 3 HOUR]) AS ws FROM s)
-GROUP BY 1, 2, 3
-"""
-
-register(q_events_windows, SQL_EVENTS_WINDOWS)
-
-
 # ------------------------------------------- approx-percentile twin
 def q_order_percentiles_approx(spark, sf_dir):
-    """The documented 100 TB swap for order_percentiles
-    (order_percentiles: 'the exact form becomes approx_percentile') as a
-    CHECKED claim, mirroring the A3 exact/HLL twin: each engine
-    computes its own t-digest/approx estimate and asserts it lands
-    between the exact quantiles at p±0.05 — sketch values differ
-    across engines, the bound must hold in both."""
+    """The 100 TB swap of exact per-key percentiles (the exact form
+    becomes approx_percentile, t-digest) as a CHECKED claim, mirroring
+    the A3 exact/HLL twin: each engine computes its own approx
+    estimate and asserts it lands between the exact quantiles at
+    p±0.05 — sketch values differ across engines, the bound must hold
+    in both."""
     orders = read_table(spark, sf_dir, "orders")
     ex = lambda p: F.percentile("o_totalprice", F.lit(p))  # noqa: E731
     ap = lambda p: F.approx_percentile(  # noqa: E731

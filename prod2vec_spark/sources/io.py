@@ -20,6 +20,10 @@ Pipeline stage hand-offs use ``checkpoint``: the parquet sink plus a
 read-back that reuses the schema just written, so a stage never pays a
 footer-inference job to reopen its own output, and the write can
 observe row counts or other aggregates on the way out.
+
+The streaming sinks live here too: ``write_stream_parquet``, the
+checkpointed parquet file sink of a row stream, and
+``start_batch_stage``, the one micro-batch door of a stateful stage.
 """
 
 from __future__ import annotations
@@ -428,60 +432,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     return list(TABLES)
 
 
-def file_audit(
-    spark: SparkSession, path: str, small_bytes: int = 32 * 1024 * 1024
-) -> DataFrame:
-    """Small-files / layout audit for a parquet dataset — the ops
-    check that decides when a 100 TB table needs compaction (many
-    small files tank scan throughput: per-file open cost, starved
-    vectorized readers, metadata pressure).  One metadata-only pass:
-    row counts come from ``input_file_name()`` grouped per file (scan
-    of the count-pushdown columns only), byte sizes from the Hadoop
-    FileSystem listing (driver-side, no data read).
-
-    Returns one row per file: (file, rows, bytes, is_small 0/1), plus
-    the dataset-level verdict is a trivial agg for the caller.
-    ENGINE scope — the reference has no storage-ops surface."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("file"))
-        .groupBy("file")
-        .agg(F.count(F.lit(1)).alias("rows"))
-    )
-    # driver-side listing via the JVM Hadoop FS (works for file://,
-    # hdfs://, s3a:// alike); parquet data files only
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    sizes = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        f = st.getPath().toString()
-        if f.endswith(".parquet"):
-            sizes.append((f, int(st.getLen())))
-    sizes_df = spark.createDataFrame(sizes, "file string, bytes long")
-    # input_file_name() URIs ("file:///x") and Hadoop Path.toString
-    # ("file:/x") differ in slash count — normalize both to a bare
-    # path before joining
-    norm = lambda c: F.regexp_replace(c, "^[a-z0-9.+-]+:/+", "/")  # noqa: E731
-    rows = rows.withColumn("file", norm(F.col("file")))
-    sizes_df = sizes_df.withColumn("file", norm(F.col("file")))
-    return (
-        rows.join(F.broadcast(sizes_df), "file")
-        .select(
-            "file",
-            "rows",
-            "bytes",
-            (F.col("bytes") < small_bytes).cast("long").alias("is_small"),
-        )
-    )
-
-
 def _partial_files(spark: SparkSession, dir_path: str, checkpoint) -> list[str]:
     """The data files of the ``batch_id=N`` partials under ``dir_path``
     (the ``start_batch_stage`` sink layout), listed through the Hadoop
@@ -566,6 +516,35 @@ def start_batch_stage(stream: DataFrame, per_batch, out_dirs, checkpoint: str):
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def write_stream_parquet(
+    df: DataFrame,
+    path: str,
+    checkpoint: str,
+    output_mode: str = "append",
+):
+    """Checkpointed parquet streaming sink — the production file-sink
+    path (the memory sink is test-only).  Exactly-once across restarts:
+    the file sink records committed files in its _spark_metadata
+    transaction log and the checkpoint records consumed source offsets,
+    so re-starting the query with the same checkpoint neither re-reads
+    nor re-writes data already committed — the standard Structured
+    Streaming recovery contract (a kafka/delta sink swaps in with the
+    same options; those connectors aren't in this environment).
+
+    Drains with trigger(availableNow=True): process everything
+    currently available, then stop — the batch-parity testing mode and
+    the incremental-backfill production mode.  Returns the started
+    StreamingQuery; callers awaitTermination()."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )

@@ -5,9 +5,10 @@ The stage order is written once, in ``STREAM_STAGES``.  The row-local
 stages fuse into the exact stage's input scan (the line filter and the
 badwords gate are the batch DAG's own ``STAGES`` entries and code);
 exact dedup runs on the checkpointed parquet file sink
-(``write_stream_parquet``); every later stage is a batch operator
-handed to the one micro-batch door, ``sources/io.start_batch_stage``,
-which writes idempotent ``batch_id=N`` partials.  ``exact_stage()``,
+(``sources/io.write_stream_parquet``); every later stage is a batch
+operator handed to the one micro-batch door,
+``sources/io.start_batch_stage``, which writes idempotent
+``batch_id=N`` partials.  ``exact_stage()``,
 ``run()``, ``curated()`` and ``drop_ledger()`` all read the table.
 Every read of the partials passes the stage's checkpoint, so a partial
 dir lost after a commit raises instead of reading as empty.
@@ -28,8 +29,11 @@ from prod2vec_spark.pipeline_llm import (
     fold_drop_ledger,
 )
 from prod2vec_spark.sources.artifacts import make_dirs
-from prod2vec_spark.sources.io import read_partials, start_batch_stage
-from prod2vec_spark.streaming.events import write_stream_parquet
+from prod2vec_spark.sources.io import (
+    read_partials,
+    start_batch_stage,
+    write_stream_parquet,
+)
 from prod2vec_spark.streaming.first_presenter import read_decisions
 
 

@@ -2,9 +2,11 @@
 deleted with its tests: the feature-row media decode fork (a second
 magic-byte table beside ``multimodal.sniff_format``), its one query
 (``webp_header_audit``), nine library paths only tests called, and the
-events-stream footer sniff, the streaming media and span gates, and
-the streaming DAG's hand-ordered stage methods.  None of these names
-may come back in the program files.  Also: each curation DAG's stage
+events-stream footer sniff, the streaming media and span gates, the
+streaming DAG's hand-ordered stage methods, 13 relational superset
+queries, the events streams of ``streaming/events.py`` and the
+small-files audit.  None of these names may come back in the program
+files.  Also: each curation DAG's stage
 order is written once — the batch one in ``pipeline_llm.STAGES``, the
 stream's in ``streaming/pipeline.STREAM_STAGES``, whose row-local
 stages shared with the batch DAG are the batch entries and code — and
@@ -41,6 +43,15 @@ DELETED = (
     # the per-language and trigram copies of the two n-gram LMs
     "kn_perplexity_by_lang", "lm_perplexity_by_lang", "trigram_perplexity",
     "q_trigram_perplexity", "token_triples", "token_pairs", "doc_pairs",
+    # the relational superset queries no caller or catalog entry reached
+    "q_anti_customers", "q_approx_distinct_parts", "q_events_daily",
+    "q_events_window", "q_events_sliding", "q_events_windows",
+    "q_except_parts", "q_intersect_parts", "q_setops_parts",
+    "q_null_counts", "q_order_percentiles", "q_region_revenue",
+    "q_rollup_pricing",
+    # the events streams (streaming/events.py) and the small-files audit
+    "read_events_stream", "windowed_event_counts", "streaming_sessions",
+    "streaming_dedup", "run_to_memory", "file_audit",
 )
 
 
@@ -68,7 +79,8 @@ def test_deleted_modules_stay_gone():
     for rel in ("prod2vec_spark/operators/layout.py",
                 "prod2vec_spark/functions/vector_arrow.py",
                 "prod2vec_spark/streaming/media.py",
-                "prod2vec_spark/streaming/span_gate.py"):
+                "prod2vec_spark/streaming/span_gate.py",
+                "prod2vec_spark/streaming/events.py"):
         assert not (ROOT / rel).exists(), rel
 
 

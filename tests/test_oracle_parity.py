@@ -61,7 +61,7 @@ def test_rows_only_queries_nonempty(spark, name):
         "doc_signatures",           # bit shifts + modular rolling hash
         "minhash_jaccard_audit",    # conv() longs + ratio division
         "dedup_clusters",           # iterative checksum + min-label
-        "events_windows",           # interval / window arithmetic
+        "sessionize",               # unix_millis gaps over lag()
         "heavy_hitters",            # CMS conv() buckets + bound ratio
         "corpus_mix_sample",        # md5-uniform division threshold
         "doc_repetition",           # HOF count folds + ratio division

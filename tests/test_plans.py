@@ -54,11 +54,6 @@ def test_vocab_probe_is_broadcast_join(spark):
     assert has_broadcast_join(out)
 
 
-def test_region_star_join_broadcasts_dims(spark):
-    df = QUERIES["region_revenue"](spark, SF_SMOKE)
-    assert has_broadcast_join(df)
-
-
 def test_lineitem_agg_prunes_columns(spark):
     """pricing_summary reads only the 7 columns it needs of 11."""
     df = QUERIES["pricing_summary"](spark, SF_SMOKE)
@@ -189,15 +184,13 @@ def test_skipgram_subsampled_vocab_join_broadcasts(spark):
 
 
 def test_semi_anti_joins_broadcast(spark):
-    """semi_parts / anti_customers: the distinct key set broadcasts so
-    the probed table never shuffles (the 100 TB blocklist shape)."""
+    """semi_parts: the distinct key set broadcasts so the probed table
+    never shuffles (the 100 TB blocklist shape)."""
     from prod2vec_spark.plans.inspect import explain_str
 
-    for name in ["semi_parts", "anti_customers"]:
-        df = QUERIES[name](spark, SF_SMOKE)
-        plan = explain_str(df)
-        assert "BroadcastHashJoin" in plan, name
-        assert "SortMergeJoin" not in plan, name
+    plan = explain_str(QUERIES["semi_parts"](spark, SF_SMOKE))
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_pivot_two_bounded_shuffles_no_value_scan(spark):
@@ -237,19 +230,6 @@ def test_tfidf_corpus_count_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_sliding_window_expand_single_shuffle(spark):
-    """events_sliding: the 2x window overlap is one map-side Expand
-    feeding one hash-agg shuffle — the source is scanned once, never
-    re-read per overlapping window."""
-    from prod2vec_spark.plans.inspect import explain_str
-
-    df = QUERIES["events_sliding"](spark, SF_SMOKE)
-    plan = explain_str(df)
-    assert "Expand" in plan
-    assert count_exchanges(df) == 1
-    assert plan.count("Location: InMemoryFileIndex") == 1
-
-
 def test_text_profile_and_signatures_are_shuffle_free(spark):
     """The merged text-analysis queries must stay pure row-local maps:
     zero Exchange operators — the embarrassingly-parallel 100 TB claim
@@ -259,17 +239,6 @@ def test_text_profile_and_signatures_are_shuffle_free(spark):
     for name in ["text_profile", "doc_signatures"]:
         df = QUERIES[name](spark, SF_SMOKE)
         assert count_operator_exchanges(df) == 0, name
-
-
-def test_events_windows_two_legs_one_shuffle_each(spark):
-    """events_windows: tumbling + sliding union — one hash-agg shuffle
-    per leg, Expand (not a re-scan) for the sliding overlap."""
-    from prod2vec_spark.plans.inspect import explain_str
-
-    df = QUERIES["events_windows"](spark, SF_SMOKE)
-    plan = explain_str(df)
-    assert "Expand" in plan
-    assert count_exchanges(df) == 2
 
 
 def test_minhash_jaccard_audit_broadcasts_candidates(spark):

@@ -240,22 +240,3 @@ def test_register_query_views_sql_surface(spark):
         > 0
     )
 
-
-def test_file_audit_and_compaction(spark, tmp_path):
-    """file_audit reports per-file rows/bytes + the small flag over a
-    deliberately fragmented dataset — the signal that decides when a
-    table needs compacting."""
-    from prod2vec_spark.sources.io import file_audit, read_table
-    from tests.conftest import SF_SMOKE
-
-    docs = read_table(spark, SF_SMOKE, "documents")
-    frag = str(tmp_path / "frag")
-    docs.repartition(16).write.mode("overwrite").parquet(frag)
-
-    audit = file_audit(spark, frag, small_bytes=32 * 1024 * 1024).collect()
-    assert len(audit) == 16
-    assert sum(r["rows"] for r in audit) == docs.count()
-    assert all(r["bytes"] > 0 for r in audit)
-    # 50 docs over 16 files: every file is far below 32MB
-    assert all(r["is_small"] == 1 for r in audit)
-
